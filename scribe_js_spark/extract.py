@@ -11,8 +11,9 @@ the never-fatal per-document error contract
 
 from __future__ import annotations
 
+import gc
 import traceback
-from typing import Optional
+from contextlib import contextmanager
 
 from .export.text import write_text
 from .model import OcrPage
@@ -22,14 +23,24 @@ from .operators.detect import detect_document_format, split_pages
 from .operators.hocr import convert_page_hocr
 from .operators.paragraphs import assign_paragraphs
 from .operators.plaintext import convert_doc_text
+from .operators.stext import convert_page_stext
 
-#: Converters registered per format. Custom-recognition-model analog of
-#: the reference's pluggable ``convertPage`` registry
-#: (/root/reference/js/recognizeConvert.js:786-817).
-PAGE_CONVERTERS = {}
+#: Page converters by format: the one dispatch for formats that split
+#: into per-page strings, in whole-document and single-page extraction
+#: alike. Custom-recognition-model analog of the reference's pluggable
+#: ``convertPage`` registry (recognizeConvert.js:786-817).
+PAGE_CONVERTERS = {
+    "hocr": convert_page_hocr,
+    "abbyy": convert_page_abbyy,
+    "alto": convert_page_alto,
+    "stext": convert_page_stext,
+}
 
 
 def register_converter(fmt: str, fn) -> None:
+    """Register ``fn(page_str, n) -> (OcrPage, lang_set)`` for ``fmt``.
+    A built-in format name (hocr, abbyy, alto, stext) replaces the
+    built-in converter in whole-document and single-page extraction."""
     PAGE_CONVERTERS[fmt] = fn
 
 
@@ -66,24 +77,11 @@ def _convert_pages(s: str, fmt: str) -> list[OcrPage]:
             return pages
         page, _ = convert_page_google_vision(s, 0)
         return [page]
-    page_strs = split_pages(s, fmt)
-    pages = []
-    for i, page_str in enumerate(page_strs):
-        if fmt == "hocr":
-            page, _ = convert_page_hocr(page_str, i)
-        elif fmt == "abbyy":
-            page, _ = convert_page_abbyy(page_str, i)
-        elif fmt == "alto":
-            page, _ = convert_page_alto(page_str, i)
-        elif fmt == "stext":
-            from .operators.stext import convert_page_stext
-            page, _ = convert_page_stext(page_str, i)
-        elif fmt in PAGE_CONVERTERS:
-            page, _ = PAGE_CONVERTERS[fmt](page_str, i)
-        else:
-            raise ValueError(f"unsupported format: {fmt}")
-        pages.append(page)
-    return pages
+    convert = PAGE_CONVERTERS.get(fmt)
+    if convert is None:
+        raise ValueError(f"unsupported format: {fmt}")
+    return [convert(page_str, i)[0]
+            for i, page_str in enumerate(split_pages(s, fmt))]
 
 
 class DocResult:
@@ -206,17 +204,9 @@ def extract_single_page(fmt: str, page_str: str, page_n: int,
     texts with '\\n' reproduces the whole-document writeText fold, since
     a page boundary is always a paragraph boundary."""
     try:
-        if fmt == "hocr":
-            page, _ = convert_page_hocr(page_str, page_n)
-        elif fmt == "abbyy":
-            page, _ = convert_page_abbyy(page_str, page_n)
-        elif fmt == "alto":
-            page, _ = convert_page_alto(page_str, page_n)
-        elif fmt == "stext":
-            from .operators.stext import convert_page_stext
-            page, _ = convert_page_stext(page_str, page_n)
-        else:
+        if fmt not in PAGE_SPLITTABLE:
             raise ValueError(f"not page-splittable: {fmt}")
+        page, _ = PAGE_CONVERTERS[fmt](page_str, page_n)
         if not page.pars and page.lines:
             assign_paragraphs(page, page.angle or 0)
         pars_text = [
@@ -235,8 +225,36 @@ def extract_single_page(fmt: str, page_str: str, page_n: int,
                 "word_count": 0, "spans": []}
 
 
+@contextmanager
+def document_gc_scope():
+    """Cyclic-collector policy for one document's extraction.
+
+    The page model is cyclic (``word.line`` <-> ``line.words``,
+    ``line.par`` <-> ``par.lines``), so only the cyclic collector frees
+    it, and an automatic generation-2 pass walks the whole imported heap
+    as well as the model still being built. Inside the scope automatic
+    collection is off, so nothing is promoted; on exit one
+    young-generation pass walks what the document allocated, which
+    frees its model once the caller no longer holds it, and
+    ``gc.isenabled()`` is restored. Thresholds are left as they are."""
+    enabled = gc.isenabled()
+    gc.disable()
+    try:
+        yield
+    finally:
+        gc.collect(0)
+        if enabled:
+            gc.enable()
+
+
 def extract_with_spans(data: bytes, with_spans: bool = True) -> dict:
-    """Full extraction record for one document (pipeline row shape)."""
+    """Full extraction record for one document (pipeline row shape).
+    The page model is built and dropped inside ``document_gc_scope``."""
+    with document_gc_scope():
+        return _extraction_record(data, with_spans)
+
+
+def _extraction_record(data: bytes, with_spans: bool) -> dict:
     res = extract_document(data)
     spans = (collect_spans(res.pages)
              if (with_spans and res.error is None) else [])

@@ -33,7 +33,8 @@ _LIGATURE_RE = re.compile("[" + "".join(LIGATURE_MAP) + "]")
 def replace_ligatures(text: str) -> str:
     """Replace stylistic ligatures with component letters
     (ocrObjects.js:569-573)."""
-    if not _LIGATURE_RE.search(text):
+    # Every ligature codepoint is non-ASCII; isascii() is O(1).
+    if text.isascii() or not _LIGATURE_RE.search(text):
         return text
     return _LIGATURE_RE.sub(lambda m: LIGATURE_MAP[m.group(0)], text)
 

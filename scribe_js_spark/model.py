@@ -13,6 +13,15 @@ departures for a distributed engine:
   exist in-memory for the converters (as in the reference) but rows written
   to Spark carry keys ``(url, page_n, line_n, word_n)`` instead, mirroring
   removeCircularRefsOcr (ocrObjects.js:1033).
+
+Those backrefs (``word.line`` <-> ``line.words``, ``line.par`` <->
+``par.lines``, ``line.page`` <-> ``page.lines``) make a document's model
+cyclic, so reference counting never frees it. In the extraction job it
+is released at the end of each document: ``extract.extract_with_spans``
+builds and drops the model inside ``extract.document_gc_scope``, whose
+exit runs one young-generation collection over what the document
+allocated. A model returned to other callers (``extract_document``)
+lives until the cyclic collector finds it.
 """
 
 from __future__ import annotations

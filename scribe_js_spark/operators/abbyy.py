@@ -17,6 +17,13 @@ Port-fresh implementation of the semantics in
 - conf = 0 when any char ``suspicious`` else 100 (:390),
 
 then the shared ``pass3``.
+
+Each word piece of a line is one ``findall`` over ``_CHAR_RE``, one
+tuple per char. A single scan over those tuples applies the orientation
+transform and keeps the word and line box unions, so a character costs
+one tuple, one ``Bbox`` and one ``OcrChar``. Coordinates are integers,
+so the reference's per-char ``Math.round`` is the identity and is not
+applied.
 """
 
 from __future__ import annotations
@@ -41,7 +48,6 @@ _BLANK_AFTER_FMT_RE = re.compile(
 _BLANK_BEFORE_FMT_RE = re.compile(
     r"<charParams[^>]*>\s*</charParams>(\s*</formatting><formatting[^>]*>\s*)",
     re.I)
-_LEADING_FMT_RE = re.compile(r"(<formatting[^>]+>\s*)", re.I)
 _DROPCAP_RE = re.compile(r"<par dropCapCharsCount=['\"](\d*)", re.I)
 _LINEBOX_RE = re.compile(
     r"<line baseline=['\"](\d*)['\"] l=['\"](\d*)['\"] t=['\"](\d*)['\"]"
@@ -52,6 +58,10 @@ _SPLIT_RE = re.compile(
     r"(?:<charParams[^>]*>\s*</charParams>)|(?:</formatting>\s*(?=<formatting))",
     re.I,
 )
+_WORD_CONTENT_RE = re.compile(r">([^<>]+?)(?=</charParams>)")
+_LEADING_FMT_RE = re.compile(r"(<formatting[^>]+>\s*)", re.I)
+# One tuple per char: leading <formatting> tag or "", l, t, r, b,
+# suspicious, content.
 _CHAR_RE = re.compile(
     r"(<formatting[^>]+>\s*)?<charParams l=['\"](\d*)['\"] t=['\"](\d*)['\"]"
     r" r=['\"](\d*)['\"] b=['\"](\d*)['\"](?: suspicious=['\"](\w*)['\"])?[^>]*>"
@@ -63,7 +73,8 @@ _ITALIC_ATTR_RE = re.compile(r"italic=['\"](1|true)", re.I)
 _BOLD_ATTR_RE = re.compile(r"bold=['\"](1|true)", re.I)
 _UNDERLINE_ATTR_RE = re.compile(r"underline=['\"](1|true)", re.I)
 _SMALLCAPS_ATTR_RE = re.compile(r"smallcaps=['\"](1|true)", re.I)
-_WORD_CONTENT_RE = re.compile(r">([^<>]+?)(?=</charParams>)")
+
+_ASC_X_CHARS = ASC_CHARS | X_CHARS
 
 # Formatting-attr verdicts memoized by the leading formatting string —
 # a document reuses a handful of formatting shapes but the converter
@@ -86,35 +97,23 @@ def _fmt_flags(fmt: str) -> tuple:
     return v
 
 
-def _orient_bbox(raw_l, raw_t, raw_r, raw_b, orientation, page_w, page_h,
-                 _f=math.floor):
-    # js_round inlined (Math.round = floor(x + 0.5)); once per charParams.
-    if orientation == 0:
-        return Bbox(_f(raw_l + 0.5), _f(raw_t + 0.5),
-                    _f(raw_r + 0.5), _f(raw_b + 0.5))
-    if orientation == 1:
-        return Bbox(
-            _f(raw_t + 0.5),
-            _f(page_w - max(raw_r, raw_l) + 0.5),
-            _f(raw_b + 0.5),
-            _f(page_w - raw_l + 0.5),
-        )
-    if orientation == 2:
-        return Bbox(
-            _f(page_w - raw_r + 0.5),
-            _f(page_h - raw_b + 0.5),
-            _f(page_w - raw_l + 0.5),
-            _f(page_h - raw_t + 0.5),
-        )
-    if orientation == 3:
-        return Bbox(
-            _f(page_h - raw_b + 0.5),
-            _f(raw_l + 0.5),
-            _f(page_h - raw_t + 0.5),
-            _f(max(raw_r, raw_r) + 0.5),
-        )
-    return Bbox(_f(raw_l + 0.5), _f(raw_t + 0.5),
-                _f(raw_r + 0.5), _f(raw_b + 0.5))
+def _line_words(xml_line: str) -> list:
+    """The line's words, each the ``_CHAR_RE`` tuples of its chars.
+
+    Words split on space chars and formatting changes; a piece without
+    char content is dropped, and a lone ``.`` joins the previous word
+    unless that word is superscript (:129-165)."""
+    word_strs: list = []
+    for piece in _SPLIT_RE.split(xml_line):
+        matches = _WORD_CONTENT_RE.findall(piece)
+        if not matches:
+            continue
+        if (len(matches) == 1 and matches[0] == "." and word_strs
+                and not _SUP_ATTR_RE.search(word_strs[-1])):
+            word_strs[-1] += _LEADING_FMT_RE.sub("", piece, count=1)
+            continue
+        word_strs.append(piece)
+    return [_CHAR_RE.findall(word_str) for word_str in word_strs]
 
 
 _TABLE_BLOCK_RE = re.compile(
@@ -218,6 +217,180 @@ def convert_table_layout_abbyy(ocr_str: str) -> list[dict]:
     return tables
 
 
+def _convert_line(xml_line: str, page_obj: OcrPage, n: int,
+                  orientation: int, page_w: int, page_h: int):
+    """One ``<line>`` -> (OcrLine appended to the page, raw baseline
+    slope), or None when it yields no word."""
+    pre_char = _PRE_CHARPARAMS_RE.match(xml_line)
+    fmt_tag = (
+        _FORMATTING_TAG_RE.search(pre_char.group(0))
+        if pre_char else None
+    )
+    font_name = None
+    if fmt_tag:
+        fm = _FF_ATTR_RE.search(fmt_tag.group(0))
+        if fm:
+            font_name = fm.group(1)
+
+    drop_cap = False
+    dc = _DROPCAP_RE.search(xml_line)
+    if dc and dc.group(1) and int(dc.group(1)) > 0:
+        drop_cap = True
+
+    lb = _LINEBOX_RE.search(xml_line)
+    if not lb:
+        return None
+    line_box_attr = [int(g) for g in lb.groups()]
+
+    # Tab chars become spaces so they split into separate words
+    # (:129). Gated on containment: each re.sub copies the line
+    # string, and most lines carry neither tabs nor mid-line
+    # formatting switches.
+    if "isTab" in xml_line:
+        xml_line = _ISTAB_RE.sub("> ", xml_line)
+    # Blank chars adjacent to formatting changes (:134-135).
+    if "</formatting><formatting" in xml_line:
+        xml_line = _BLANK_AFTER_FMT_RE.sub(r"\1", xml_line)
+        xml_line = _BLANK_BEFORE_FMT_RE.sub(r"\1", xml_line)
+
+    words = _line_words(xml_line)
+    if not words:
+        return None
+
+    unescape = "&" in xml_line or "\u00ad" in xml_line
+    line_obj = OcrLine(page_obj, None, ())
+    line_words = line_obj.words
+    id_prefix = f"word_{n + 1}_{len(page_obj.lines) + 1}_"
+    inf = math.inf
+    slopes: list = []
+    first_x = first_y = None  # first baseline char: left, bottom
+    # line union of the char edges > 0; 0 on the right/bottom means none
+    line_l = line_t = inf
+    line_r = line_b = 0
+    # style of the previous word, inherited by a word without formatting
+    p_it = p_bd = p_ul = p_sup = p_sc = p_dc = False
+    for i, letters in enumerate(words):
+        if not letters:
+            p_it = p_bd = p_ul = p_sup = p_sc = p_dc = False
+            continue
+        it = bd = ul = sup = sc = dcap = False
+        fmt = letters[0][0]
+        if fmt:
+            sup_f, it_f, bd_f, ul_f, sc = _fmt_flags(fmt)
+            if drop_cap and i == 0:
+                dcap = True
+            elif sup_f:
+                sup = True
+            else:
+                it, bd, ul = it_f, bd_f, ul_f
+        elif i > 0 and not p_dc:
+            it, bd, ul, sup, sc = p_it, p_bd, p_ul, p_sup, p_sc
+        drop_cap_fix = drop_cap and i == 1 and sc
+        if drop_cap_fix:
+            sc = False
+        p_it, p_bd, p_ul, p_sup, p_sc, p_dc = it, bd, ul, sup, sc, dcap
+        fits_baseline = not drop_cap_fix and not (drop_cap and i == 0)
+
+        word_susp = False
+        word_l = word_t = inf
+        word_r = word_b = 0
+        parts: list = []
+        chars: list = []
+        for _, sl, st, sr, sb, susp, ch in letters:
+            # Skip letters placed at coordinate 0 (:242).
+            if sl == "0":
+                continue
+            left, top, right, bottom = int(sl), int(st), int(sr), int(sb)
+            if orientation:
+                if orientation == 1:
+                    left, top, right, bottom = (
+                        top, page_w - max(right, left), bottom, page_w - left)
+                elif orientation == 2:
+                    left, top, right, bottom = (
+                        page_w - right, page_h - bottom,
+                        page_w - left, page_h - top)
+                else:
+                    left, top, right, bottom = (
+                        page_h - bottom, left, page_h - top, right)
+            if 0 < left < word_l:
+                word_l = left
+            if 0 < top < word_t:
+                word_t = top
+            if right > word_r:
+                word_r = right
+            if bottom > word_b:
+                word_b = bottom
+
+            letter_susp = susp == "1" or susp == "true"
+            if letter_susp:
+                word_susp = True
+            if drop_cap_fix:
+                ch = ch.upper()
+            if unescape:
+                ch = unescape_xml(ch)
+            if fits_baseline and not letter_susp and ch in _ASC_X_CHARS:
+                if first_x is None:
+                    first_x, first_y = left, bottom
+                elif left != first_x:
+                    slopes.append((bottom - first_y) / (left - first_x))
+            parts.append(ch)
+            chars.append(OcrChar(ch, Bbox(left, top, right, bottom)))
+
+        if word_l < line_l:
+            line_l = word_l
+        if word_t < line_t:
+            line_t = word_t
+        if word_r > line_r:
+            line_r = word_r
+        if word_b > line_b:
+            line_b = word_b
+        text = "".join(parts)
+        if not text.strip() or word_l == inf or word_t == inf \
+                or not word_r or not word_b:
+            continue
+        word_obj = OcrWord(line_obj, id_prefix + str(i + 1), text,
+                           Bbox(word_l, word_t, word_r, word_b))
+        word_obj.chars = chars
+        word_obj.conf = 0 if word_susp else 100
+        style = word_obj.style
+        if it:
+            style.italic = True
+        if bd:
+            style.bold = True
+        if ul:
+            style.underline = True
+        style.smallCaps = sc
+        if font_name:
+            style.font = font_name
+        if sup:
+            style.sup = True
+        elif dcap:
+            style.dropcap = True
+        line_words.append(word_obj)
+
+    if not line_words:
+        return None
+
+    baseline_slope = quantile(slopes, 0.5) or 0
+    if first_x is not None:
+        baseline_point = first_y - (line_b or line_box_attr[4])
+        if baseline_slope < 0:
+            baseline_point -= baseline_slope * (
+                first_x - (line_l if line_l != inf else line_box_attr[1]))
+    else:
+        baseline_point = 0
+    baseline_point = baseline_point or 0
+
+    if line_l != inf and line_t != inf and line_r and line_b:
+        line_obj.bbox = Bbox(line_l, line_t, line_r, line_b)
+    else:
+        line_obj.bbox = Bbox(*line_box_attr[1:])
+    line_obj.baseline = [round6(baseline_slope), js_round(baseline_point)]
+    line_obj.orientation = orientation
+    page_obj.lines.append(line_obj)
+    return line_obj, baseline_slope
+
+
 def convert_page_abbyy(ocr_str: str, n: int):
     page_attr = re.search(r"<page[^>]*>", ocr_str)
     width_m = re.search(r"width=['\"](\d+)['\"]", page_attr.group(0)) if page_attr else None
@@ -231,8 +404,8 @@ def convert_page_abbyy(ocr_str: str, n: int):
     page_orientation = {"RotatedClockwise": 3, "RotatedUpsidedown": 2,
                         "RotatedCounterclockwise": 1}.get(rotation, 0)
 
-    page_dims = {"height": int(height_m.group(1)), "width": int(width_m.group(1))}
-    page_obj = OcrPage(n, page_dims)
+    page_w, page_h = int(width_m.group(1)), int(height_m.group(1))
+    page_obj = OcrPage(n, {"height": page_h, "width": page_w})
     page_obj.textSource = "abbyy"
     page_obj.tables = convert_table_layout_abbyy(ocr_str)
 
@@ -240,8 +413,7 @@ def convert_page_abbyy(ocr_str: str, n: int):
         return page_obj, set()
 
     angle_rise_page = []
-
-    def convert_text(xml_text: str) -> None:
+    for xml_text in ocr_str.split("</text>"):
         text_attr = _TEXT_TAG_RE.search(xml_text)
         orient_m = (
             _ORIENT_ATTR_RE.search(text_attr.group(0))
@@ -250,232 +422,23 @@ def convert_page_abbyy(ocr_str: str, n: int):
         text_orientation = {"RotatedClockwise": 1, "RotatedUpsidedown": 2,
                             "RotatedCounterclockwise": 3}.get(
             orient_m.group(1) if orient_m else None, 0)
-        orientation_final = (page_orientation + text_orientation) % 4
+        orientation = (page_orientation + text_orientation) % 4
 
-        def convert_line(xml_line: str):
-            baseline_slopes = []
-            baseline_first = []
-
-            pre_char = _PRE_CHARPARAMS_RE.match(xml_line)
-            fmt_tag = (
-                _FORMATTING_TAG_RE.search(pre_char.group(0))
-                if pre_char else None
-            )
-            font_name = None
-            if fmt_tag:
-                fm = _FF_ATTR_RE.search(fmt_tag.group(0))
-                if fm:
-                    font_name = fm.group(1)
-
-            drop_cap = False
-            dc = _DROPCAP_RE.search(xml_line)
-            if dc and dc.group(1) and int(dc.group(1)) > 0:
-                drop_cap = True
-
-            lb = _LINEBOX_RE.search(xml_line)
-            if not lb:
-                return None
-            line_box_attr = [int(g) for g in lb.groups()]
-
-            # Tab chars become spaces so they split into separate words
-            # (:129). Gated on containment: each re.sub copies the line
-            # string, and most lines carry neither tabs nor mid-line
-            # formatting switches.
-            if "isTab" in xml_line:
-                xml_line = _ISTAB_RE.sub("> ", xml_line)
-            # Blank chars adjacent to formatting changes (:134-135).
-            if "</formatting><formatting" in xml_line:
-                xml_line = _BLANK_AFTER_FMT_RE.sub(r"\1", xml_line)
-                xml_line = _BLANK_BEFORE_FMT_RE.sub(r"\1", xml_line)
-
-            word_str_arr1 = _SPLIT_RE.split(xml_line)
-
-            word_str_arr = []
-            for piece in word_str_arr1:
-                matches = _WORD_CONTENT_RE.findall(piece)
-                if not matches:
-                    continue
-                if len(matches) == 1 and matches[0] == ".":
-                    if word_str_arr and not _SUP_ATTR_RE.search(word_str_arr[-1]):
-                        word_str_arr[-1] = word_str_arr[-1] + _LEADING_FMT_RE.sub(
-                            "", piece, count=1)
-                        continue
-                word_str_arr.append(piece)
-
-            if not word_str_arr:
-                return None
-
-            n_words = len(word_str_arr)
-            bboxes: list[list[Bbox]] = [[] for _ in range(n_words)]
-            texts = [""] * n_words
-            char_objs: list[list[OcrChar]] = [[] for _ in range(n_words)]
-            italic_arr = [False] * n_words
-            bold_arr = [False] * n_words
-            underline_arr = [False] * n_words
-            sup_arr = [False] * n_words
-            dropcap_arr = [False] * n_words
-            smallcaps_arr = [False] * n_words
-            word_susp = [False] * n_words
-
-            for i, word_str in enumerate(word_str_arr):
-                letter_arr = [m.groups() for m in _CHAR_RE.finditer(word_str)]
-                if not letter_arr:
-                    continue
-                fmt = letter_arr[0][0]
-                if fmt is not None:
-                    sup_f, it_f, bd_f, ul_f, sc_f = _fmt_flags(fmt)
-                    if drop_cap and i == 0:
-                        dropcap_arr[i] = True
-                    elif sup_f:
-                        sup_arr[i] = True
-                    else:
-                        if it_f:
-                            italic_arr[i] = True
-                        if bd_f:
-                            bold_arr[i] = True
-                        if ul_f:
-                            underline_arr[i] = True
-                    if sc_f:
-                        smallcaps_arr[i] = True
-                elif i > 0 and not dropcap_arr[i - 1]:
-                    italic_arr[i] = italic_arr[i - 1]
-                    bold_arr[i] = bold_arr[i - 1]
-                    underline_arr[i] = underline_arr[i - 1]
-                    sup_arr[i] = sup_arr[i - 1]
-                    smallcaps_arr[i] = smallcaps_arr[i - 1]
-
-                drop_cap_fix = False
-                if drop_cap and i == 1 and smallcaps_arr[i]:
-                    smallcaps_arr[i] = False
-                    drop_cap_fix = True
-
-                for letter in letter_arr:
-                    # Skip letters placed at coordinate 0 (:242).
-                    if letter[1] == "0":
-                        continue
-                    raw_l, raw_t = int(letter[1]), int(letter[2])
-                    raw_r, raw_b = int(letter[3]), int(letter[4])
-                    bbox = _orient_bbox(
-                        raw_l, raw_t, raw_r, raw_b, orientation_final,
-                        page_dims["width"], page_dims["height"])
-                    bboxes[i].append(bbox)
-
-                    letter_susp = False
-                    if letter[5] in ("1", "true"):
-                        word_susp[i] = True
-                        letter_susp = True
-
-                    ch = letter[6]
-                    if drop_cap_fix:
-                        ch = ch.upper()
-                    ch = unescape_xml(ch)
-
-                    asc_char = ch in ASC_CHARS
-                    x_char = ch in X_CHARS
-                    if (asc_char or x_char) and not letter_susp and not drop_cap_fix \
-                            and not (drop_cap and i == 0):
-                        if not baseline_first:
-                            baseline_first.extend([bbox.left, bbox.bottom])
-                        else:
-                            dx = bbox.left - baseline_first[0]
-                            if dx != 0:
-                                slope = (bbox.bottom - baseline_first[1]) / dx
-                                if math.isfinite(slope):
-                                    baseline_slopes.append(slope)
-
-                    texts[i] += ch
-                    char_objs[i].append(OcrChar(ch, bbox))
-
-            all_boxes = [b for word_boxes in bboxes for b in word_boxes]
-            calc_l = min((b.left for b in all_boxes if b.left > 0), default=math.inf)
-            calc_t = min((b.top for b in all_boxes if b.top > 0), default=math.inf)
-            calc_r = max((b.right for b in all_boxes if b.right > 0), default=-math.inf)
-            calc_b = max((b.bottom for b in all_boxes if b.bottom > 0), default=-math.inf)
-
-            baseline_slope = quantile(baseline_slopes, 0.5) or 0
-
-            if baseline_first:
-                baseline_point = baseline_first[1] - (
-                    calc_b if math.isfinite(calc_b) else line_box_attr[4])
-                if baseline_slope < 0:
-                    baseline_point -= baseline_slope * (
-                        baseline_first[0]
-                        - (calc_l if math.isfinite(calc_l) else line_box_attr[1]))
-            else:
-                baseline_point = 0
-            baseline_point = baseline_point or 0
-
-            if all(math.isfinite(v) for v in (calc_l, calc_t, calc_r, calc_b)):
-                line_bbox = Bbox(calc_l, calc_t, calc_r, calc_b)
-            else:
-                line_bbox = Bbox(
-                    line_box_attr[1], line_box_attr[2],
-                    line_box_attr[3], line_box_attr[4])
-
-            baseline_out = [round6(baseline_slope), js_round(baseline_point)]
-            line_obj = OcrLine(page_obj, line_bbox, baseline_out)
-            line_obj.orientation = orientation_final
-
-            letters_kept = 0
-            for i in range(n_words):
-                if texts[i].strip() == "":
-                    continue
-                lefts = [b.left for b in bboxes[i] if b.left > 0]
-                rights = [b.right for b in bboxes[i] if b.right > 0]
-                tops = [b.top for b in bboxes[i] if b.top > 0]
-                bottoms = [b.bottom for b in bboxes[i] if b.bottom > 0]
-                if not lefts or not rights or not tops or not bottoms:
-                    continue
-                bbox_word = Bbox(min(lefts), min(tops), max(rights), max(bottoms))
-                wid = f"word_{n + 1}_{len(page_obj.lines) + 1}_{i + 1}"
-                word_obj = OcrWord(line_obj, wid, texts[i], bbox_word)
-                word_obj.chars = char_objs[i]
-                word_obj.conf = 0 if word_susp[i] else 100
-                if italic_arr[i]:
-                    word_obj.style.italic = True
-                if bold_arr[i]:
-                    word_obj.style.bold = True
-                if underline_arr[i]:
-                    word_obj.style.underline = True
-                word_obj.style.smallCaps = smallcaps_arr[i]
-                if font_name:
-                    word_obj.style.font = font_name
-                if sup_arr[i]:
-                    word_obj.style.sup = True
-                elif dropcap_arr[i]:
-                    word_obj.style.dropcap = True
-                line_obj.words.append(word_obj)
-                letters_kept += 1
-
-            if letters_kept == 0:
-                return None
-
-            page_obj.lines.append(line_obj)
-            par_line_arr.append(line_obj)
-            return baseline_slope
-
-        def convert_par(xml_par: str) -> None:
-            nonlocal par_line_arr
-            par_line_arr = []
-            for line_str in xml_par.split("</line>"):
-                angle = convert_line(line_str)
-                if isinstance(angle, (int, float)) and not math.isnan(angle):
-                    angle_rise_page.append(angle)
-            if not par_line_arr:
-                return
-            par_bbox = bbox_union([l.bbox for l in par_line_arr])
-            par_obj = OcrPar(page_obj, par_bbox)
-            for l in par_line_arr:
+        for xml_par in xml_text.split("</par>"):
+            par_lines = []
+            for xml_line in xml_par.split("</line>"):
+                converted = _convert_line(xml_line, page_obj, n, orientation,
+                                          page_w, page_h)
+                if converted is not None:
+                    par_lines.append(converted[0])
+                    angle_rise_page.append(converted[1])
+            if not par_lines:
+                continue
+            par_obj = OcrPar(page_obj, bbox_union([l.bbox for l in par_lines]))
+            for l in par_lines:
                 l.par = par_obj
-            par_obj.lines = list(par_line_arr)
+            par_obj.lines = par_lines
             page_obj.pars.append(par_obj)
-
-        par_line_arr: list = []
-        for par_str in xml_text.split("</par>"):
-            convert_par(par_str)
-
-    for text_str in ocr_str.split("</text>"):
-        convert_text(text_str)
 
     rise_median = mean50(angle_rise_page) or 0
     page_obj.angle = math.asin(rise_median) * (180 / math.pi)

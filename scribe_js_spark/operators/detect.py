@@ -118,6 +118,19 @@ def split_hocr_str(hocr_all: str) -> list[str]:
     return parts
 
 
+_PAGE_RE = re.compile(r"<page")
+_ALTO_PAGE_RE = re.compile(r"<Page\s")
+
+
+def _split_before(pattern: re.Pattern, s: str) -> list[str]:
+    """``re.split("(?=pattern)", s)[1:]``: the pieces starting at each
+    (non-overlapping) match. A literal-led pattern finds its matches by
+    fast search, where a split on a bare lookahead tests every
+    position."""
+    starts = [m.start() for m in pattern.finditer(s)]
+    return [s[a:b] for a, b in zip(starts, starts[1:] + [len(s)])]
+
+
 def split_pages(ocr_str: str, fmt: str) -> list[str]:
     """Split a document string into per-page strings per format
     (importOCR.js:138-161)."""
@@ -126,9 +139,9 @@ def split_pages(ocr_str: str, fmt: str) -> list[str]:
     if fmt == "alto":
         styles = _STYLES_RE.search(ocr_str)
         styles_section = styles.group(0) if styles else ""
-        pages = re.split(r"(?=<Page\s)", ocr_str)[1:]
-        return [styles_section + p for p in pages]
+        return [styles_section + p
+                for p in _split_before(_ALTO_PAGE_RE, ocr_str)]
     if fmt in ("abbyy", "stext"):
-        return re.split(r"(?=<page)", ocr_str)[1:]
+        return _split_before(_PAGE_RE, ocr_str)
     # textract / google_vision / azure / text / docx: whole document
     return [ocr_str]

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import math
 import re
+import string
 
 from ..functions.stats import js_round, mean50, quantile
 from ..functions.textnorm import (
@@ -37,6 +38,10 @@ _ASC_LETTER_RE = re.compile(r"[a-pr-zA-PR-Z]")
 _TRAILING_NUM_RE = re.compile(r"\d+$")
 _ALNUM_RE = re.compile(r"[a-zA-Z\d]")
 _CLOSE_QUOTE_RE = re.compile(r"[a-zA-Z\d][.,!?;]?['\"]$")
+_QUOTES = frozenset("'\"")
+_DASHES = frozenset("-\u2013\u2014\u00ac")
+_SMALLCAPS_ASC_CHARS = frozenset(string.ascii_uppercase + string.digits)
+_SMALLCAPS_X_CHARS = frozenset(string.ascii_lowercase)
 
 
 def split_unicode_superscripts(line_obj) -> None:
@@ -237,9 +242,76 @@ def pass2(page_obj: OcrPage, rotate_angle: float = 0.0) -> None:
             i += 2
 
 
+def _smarten_quotes(text: str, chars) -> str:
+    """Directional quotes and apostrophes (:382-409); ``text`` holds a
+    straight quote and ``chars``, when present, matches it 1:1."""
+    letters = list(text)
+
+    # Opening quotes (:382-390).
+    if (
+        letters[0] in ('"', "'")
+        and len(letters) > 1
+        and _ALNUM_RE.match(letters[1])
+    ):
+        repl = "“" if letters[0] == '"' else "‘"
+        letters[0] = repl
+        if chars:
+            chars[0].text = repl
+
+    # Closing quotes (:393-401).
+    if letters[-1] in ('"', "'") and _CLOSE_QUOTE_RE.search(text):
+        repl = "”" if letters[-1] == '"' else "’"
+        letters[-1] = repl
+        if chars:
+            chars[len(letters) - 1].text = repl
+
+    # Apostrophes between letters (:404-409).
+    for k in range(1, len(letters) - 1):
+        if (
+            letters[k] == "'"
+            and _ALNUM_RE.match(letters[k + 1])
+            and _ALNUM_RE.match(letters[k - 1])
+        ):
+            letters[k] = "’"
+            if chars:
+                chars[k].text = "’"
+    return "".join(letters)
+
+
+def _normalize_dashes(text: str, chars, x_height) -> str:
+    """Dash glyph from its width relative to the line's x-height
+    (:463-507); ``chars`` matches ``text`` 1:1."""
+    letters = list(text)
+    for k, ch in enumerate(text):
+        if ch not in _DASHES:
+            continue
+        char_width = chars[k].bbox.right - chars[k].bbox.left
+        if k - 1 >= 0:
+            right_bound = (
+                chars[k + 1].bbox.left
+                if k + 1 < len(chars)
+                else chars[k].bbox.right
+            )
+            char_width2 = right_bound - chars[k - 1].bbox.right
+            char_width = min(char_width, char_width2)
+        norm = char_width / x_height
+        if norm > 1.5:
+            repl = "—"
+        elif norm > 0.9:
+            repl = "–"
+        else:
+            repl = "-"
+        letters[k] = repl
+        chars[k].text = repl
+    return "".join(letters)
+
+
 def pass3(page_obj: OcrPage) -> set:
     """Statistics + corrections for every format
-    (convertPageShared.js:342-517). Returns the detected language set."""
+    (convertPageShared.js:342-517). Returns the detected language set.
+
+    Words whose text holds no straight quote, dash or ligature skip
+    those rewrites; the char statistics are one pass over the chars."""
     lang_set = set()
 
     if not page_obj.angle:
@@ -257,67 +329,30 @@ def pass3(page_obj: OcrPage) -> set:
         line_all_heights = []
 
         for word_obj in line_obj.words:
-            letters = list(word_obj.text)
+            text = word_obj.text
             chars = word_obj.chars
             lang_set.add(word_obj.lang)
 
-            if chars is not None and len(chars) != len(word_obj.text):
+            if chars is not None and len(chars) != len(text):
                 continue
-
-            # Opening quotes (:382-390).
-            if (
-                letters
-                and letters[0] in ('"', "'")
-                and len(letters) > 1
-                and _ALNUM_RE.match(letters[1])
-            ):
-                repl = "“" if letters[0] == '"' else "‘"
-                letters[0] = repl
-                if chars:
-                    chars[0].text = repl
-
-            # Closing quotes (:393-401).
-            if (
-                letters
-                and letters[-1] in ('"', "'")
-                and _CLOSE_QUOTE_RE.search(word_obj.text)
-            ):
-                repl = "”" if letters[-1] == '"' else "’"
-                letters[-1] = repl
-                if chars:
-                    chars[len(letters) - 1].text = repl
-
-            # Apostrophes between letters (:404-409).
-            for k in range(1, len(letters) - 1):
-                if (
-                    letters[k] == "'"
-                    and _ALNUM_RE.match(letters[k + 1])
-                    and _ALNUM_RE.match(letters[k - 1])
-                ):
-                    letters[k] = "’"
-                    if chars:
-                        chars[k].text = "’"
+            if not _QUOTES.isdisjoint(text):
+                text = word_obj.text = _smarten_quotes(text, chars)
 
             # Char statistics (:412-434).
-            if chars is not None:
-                for k in range(len(letters)):
-                    if word_obj.style.sup or word_obj.style.dropcap:
-                        continue
-                    ch = letters[k]
-                    char_height = chars[k].bbox.bottom - chars[k].bbox.top
-                    if word_obj.style.smallCaps:
-                        asc_char = bool(re.match(r"[A-Z0-9]", ch))
-                        x_char = bool(re.match(r"[a-z]", ch))
-                    else:
-                        asc_char = ch in ASC_CHARS
-                        x_char = ch in X_CHARS
-                    line_all_heights.append(char_height)
-                    if asc_char:
-                        line_asc_heights.append(char_height)
-                    elif x_char:
-                        line_x_heights.append(char_height)
-
-            word_obj.text = "".join(letters)
+            style = word_obj.style
+            if chars is None or style.sup or style.dropcap:
+                continue
+            if style.smallCaps:
+                asc_set, x_set = _SMALLCAPS_ASC_CHARS, _SMALLCAPS_X_CHARS
+            else:
+                asc_set, x_set = ASC_CHARS, X_CHARS
+            heights = [c.bbox.bottom - c.bbox.top for c in chars]
+            line_all_heights += heights
+            for ch, char_height in zip(text, heights):
+                if ch in asc_set:
+                    line_asc_heights.append(char_height)
+                elif ch in x_set:
+                    line_x_heights.append(char_height)
 
         line_all_height = max(line_all_heights) if line_all_heights else None
         line_asc_height = quantile(line_asc_heights, 0.5)
@@ -347,34 +382,18 @@ def pass3(page_obj: OcrPage) -> set:
             line_obj.ascHeight = line_all_height
 
         # Dash-width normalization + ligatures (:463-513).
+        x_height = line_obj.xHeight
+        if not x_height:
+            continue
+        enough_words = len(line_obj.words) > 2
         for word_obj in line_obj.words:
-            if word_obj.chars is not None and len(word_obj.chars) != len(word_obj.text):
-                continue
-            letters = list(word_obj.text)
             chars = word_obj.chars
-            if not chars or not line_obj.xHeight:
+            text = word_obj.text
+            if not chars or len(chars) != len(text):
                 continue
-            for k in range(len(letters)):
-                enough_info = len(letters) > 2 or len(line_obj.words) > 2
-                if letters[k] in ("-", "–", "—", "¬") and enough_info:
-                    char_width = chars[k].bbox.right - chars[k].bbox.left
-                    if k - 1 >= 0:
-                        right_bound = (
-                            chars[k + 1].bbox.left
-                            if k + 1 < len(chars)
-                            else chars[k].bbox.right
-                        )
-                        char_width2 = right_bound - chars[k - 1].bbox.right
-                        char_width = min(char_width, char_width2)
-                    norm = char_width / line_obj.xHeight
-                    if norm > 1.5:
-                        repl = "—"
-                    elif norm > 0.9:
-                        repl = "–"
-                    else:
-                        repl = "-"
-                    letters[k] = repl
-                    chars[k].text = repl
-            word_obj.text = replace_ligatures("".join(letters))
+            if ((len(text) > 2 or enough_words)
+                    and not _DASHES.isdisjoint(text)):
+                text = _normalize_dashes(text, chars, x_height)
+            word_obj.text = replace_ligatures(text)
 
     return lang_set

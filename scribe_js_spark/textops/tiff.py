@@ -115,11 +115,12 @@ def decode_tiff(data: bytes):
         fmt = {1: "B", 3: "H", 4: "I", 7: "B"}.get(typ)
         if fmt is None:
             continue
-        try:
-            tags[tag] = list(struct.unpack_from(
-                endian + fmt * count, data, val_off))
-        except struct.error:
+        # Bounds first: ``count`` comes from the file and sizes the
+        # unpack, so a hostile count must fail before any allocation.
+        if val_off + size > len(data):
             raise ValueError("tiff: truncated tag data")
+        tags[tag] = list(struct.unpack_from(
+            f"{endian}{count}{fmt}", data, val_off))
 
     def one(tag, default=None):
         v = tags.get(tag)

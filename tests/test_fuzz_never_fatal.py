@@ -1,11 +1,19 @@
 """The never-fatal contract: extract_document and decode_media must
 return an error value on arbitrary corruption — never raise. At corpus
-scale every imaginable mutation shows up."""
+scale every imaginable mutation shows up.
+
+Every sweep runs in a forked child whose address space is capped
+(``_capped``), so an allocation bomb fails that one test with a
+MemoryError instead of exhausting the machine and killing the run."""
+
+import os
+import resource
+import traceback
 
 import numpy as np
 import pytest
 
-from scribe_js_spark.extract import extract_document
+from scribe_js_spark.extract import extract_document, extract_with_spans
 
 try:
     from hypothesis import given, settings
@@ -29,6 +37,53 @@ def _base_docs():
 
 DOCS = _base_docs()
 
+#: Address space a sweep may add on top of what the test process has
+#: mapped when it forks (RLIMIT_AS counts mappings, not resident pages).
+SWEEP_AS_HEADROOM = 2 << 30
+
+
+def _capped(sweep):
+    """Run ``sweep()`` as the test body in a forked child under
+    ``RLIMIT_AS``; the child's failure, skip or death fails (or skips)
+    the test in this process."""
+
+    def test():
+        rd, wr = os.pipe()
+        pid = os.fork()
+        if pid == 0:  # child: run the sweep, report, never return
+            os.close(rd)
+            status, msg = 1, b""
+            try:
+                with open("/proc/self/statm") as f:
+                    mapped = int(f.read().split()[0]) * resource.getpagesize()
+                cap = mapped + SWEEP_AS_HEADROOM
+                resource.setrlimit(resource.RLIMIT_AS, (cap, cap))
+                sweep()
+                status = 0
+            except pytest.skip.Exception as e:
+                status, msg = 2, str(e).encode()
+            except BaseException:
+                msg = traceback.format_exc().encode()
+            finally:
+                try:
+                    while msg:
+                        msg = msg[os.write(wr, msg):]
+                finally:
+                    os._exit(status)
+        os.close(wr)
+        with os.fdopen(rd, "rb") as f:
+            msg = f.read().decode(errors="replace")
+        _, wstatus = os.waitpid(pid, 0)
+        if os.WIFEXITED(wstatus) and os.WEXITSTATUS(wstatus) == 2:
+            pytest.skip(msg)
+        if wstatus != 0:
+            pytest.fail(msg or f"sweep child died: wait status {wstatus}",
+                        pytrace=False)
+
+    test.__name__ = sweep.__name__
+    test.__doc__ = sweep.__doc__
+    return test
+
 
 def _mutate(data: bytes, rng: np.random.RandomState) -> bytes:
     mode = rng.randint(4)
@@ -47,6 +102,7 @@ def _mutate(data: bytes, rng: np.random.RandomState) -> bytes:
     return bytes(b)
 
 
+@_capped
 def test_extract_never_raises_on_mutations():
     rng = np.random.RandomState(1234)
     failures = 0
@@ -58,18 +114,24 @@ def test_extract_never_raises_on_mutations():
             failures += 1
         else:
             assert isinstance(res.text, str)
+        # the pipeline path, which runs with automatic GC off
+        rec = extract_with_spans(mutated, with_spans=False)
+        assert rec["error"] == res.error
+        assert rec["text"] == res.text
     # sanity: mutations do produce both survivable and fatal inputs
     assert 0 < failures < 150
 
 
 if HAVE_HYP:
 
+    @_capped
     @settings(max_examples=40, deadline=None)
     @given(st.binary(min_size=0, max_size=300))
     def test_extract_never_raises_on_arbitrary_bytes(data):
         res = extract_document(data)
         assert (res.error is None) or isinstance(res.error, str)
 
+    @_capped
     @settings(max_examples=40, deadline=None)
     @given(st.binary(min_size=0, max_size=300))
     def test_media_decode_one_never_crashes(data):
@@ -86,6 +148,7 @@ if HAVE_HYP:
                 pass  # decode_media converts these to the error column
 
 
+@_capped
 def test_table_documents_never_raise_on_mutations():
     """The full detectPdfTables ladder (strict/segmented/row-band/
     header-rule/Phase-1/2 text engine) runs inside every PDF parse;
@@ -106,6 +169,7 @@ def test_table_documents_never_raise_on_mutations():
             assert res is not None  # error column or degraded output
 
 
+@_capped
 def test_fax_tiff_never_raises_in_media_path():
     """Corrupt fax payloads must surface in decode_media's error
     column — the ccitt forward-progress guards turn would-be hangs
@@ -127,6 +191,7 @@ def test_fax_tiff_never_raises_in_media_path():
                 pass  # any exception is fine; hanging is not
 
 
+@_capped
 def test_font_crypto_docs_never_raise_on_mutations():
     """The embedded-font-program parsers (CFF charset/charstrings,
     CMap) and the RC4/AES decryption layer see attacker-shaped bytes
@@ -151,6 +216,7 @@ def test_font_crypto_docs_never_raise_on_mutations():
             assert res is not None
 
 
+@_capped
 def test_subset_rewriter_never_hangs_on_mutations():
     """The entry-wise subset/merge rewriter walks xref, outlines,
     named dests and annots of arbitrary inputs; any exception is
@@ -174,6 +240,7 @@ def test_subset_rewriter_never_hangs_on_mutations():
             pass
 
 
+@_capped
 def test_jbig2_never_hangs_on_mutations():
     """Corrupt JBIG2: mutated valid streams and arbitrary prefixes
     must raise cleanly — the referred-to-count and dimension guards
@@ -197,6 +264,7 @@ def test_jbig2_never_hangs_on_mutations():
                 pass  # typed errors fine; hangs/allocation bombs not
 
 
+@_capped
 def test_arith_jpeg_never_hangs_on_mutations():
     """Corrupt SOF9 streams: the QM decoder zero-fills past markers
     and the magnitude guards bound every loop, so mutations decode to
@@ -229,6 +297,7 @@ def test_arith_jpeg_never_hangs_on_mutations():
                 pass  # exactly the types decode_media's net catches
 
 
+@_capped
 def test_lossless_jpeg_never_hangs_on_mutations():
     """Corrupt SOF3 streams: the marker loop advances per iteration
     and the bit reader zero-fills past scan markers, so mutations
@@ -249,6 +318,7 @@ def test_lossless_jpeg_never_hangs_on_mutations():
                 pass  # typed errors fine; hangs are the failure mode
 
 
+@_capped
 def test_jbig2_refinement_never_hangs_on_mutations():
     """Corrupt standalone-refinement streams (incl. TPGRON) decode to
     garbage or raise typed errors — never hang or allocation-bomb."""
@@ -271,6 +341,7 @@ def test_jbig2_refinement_never_hangs_on_mutations():
                 pass
 
 
+@_capped
 def test_decode_media_net_catches_all_codec_mutations():
     """Cross-format sweep of the decode_media never-fatal net: mutate
     a valid exemplar of every dispatchable container and require that
@@ -329,6 +400,7 @@ def test_decode_media_net_catches_all_codec_mutations():
                 pass  # decode_media's net turns these into a column
 
 
+@_capped
 def test_inline_images_never_raise_on_mutations():
     """BI/ID/EI parsing (tokenizer capture + dict normalization +
     pixel decode) across byte flips, truncations, slice deletes and
@@ -352,6 +424,7 @@ def test_inline_images_never_raise_on_mutations():
     assert decoded > 0  # some mutants keep a decodable inline image
 
 
+@_capped
 def test_gidmap_cid_docs_never_raise_on_mutations():
     """The Identity-H recovery ladder (TrueType cmap reverse map,
     sibling-BaseFont search, Mac-order fallback, non-CID CFF charset
@@ -371,6 +444,7 @@ def test_gidmap_cid_docs_never_raise_on_mutations():
             assert isinstance(res.text, str)
 
 
+@_capped
 def test_cmap_and_pfa_parsers_never_raise_on_garbage():
     from scribe_js_spark.operators.pdf.fontprog import (
         parse_cff_summary, truetype_code_to_gid, truetype_gid_to_unicode)
@@ -395,6 +469,7 @@ def test_cmap_and_pfa_parsers_never_raise_on_garbage():
         _parse_type1_pfa_encoding(m)
 
 
+@_capped
 def test_form_field_docs_never_raise_on_mutations():
     """Widget /V /DA /Rect /Ff see attacker-shaped bytes at corpus
     scale; the field-layout splice must degrade to skipped fields,
@@ -422,6 +497,7 @@ def test_form_field_docs_never_raise_on_mutations():
             assert isinstance(res.text, str)
 
 
+@_capped
 def test_hierarchical_jpeg_never_hangs_on_mutations():
     """Corrupt DHP-led hierarchical streams (T.81 Annex J): the frame
     slicer, EXP expansion, and both differential decoders must raise

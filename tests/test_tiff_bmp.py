@@ -40,6 +40,15 @@ def test_tiff_white_is_zero_and_rejects():
     assert np.array_equal(px[:, :, 0], 255 - gray)
     with pytest.raises(ValueError):
         decode_tiff(b"II*\x00\x10\x00\x00\x00")
+    # A mutated LZW TIFF whose IFD declares a huge tag count: rejected
+    # by the bounds check, not by allocating a count-long format string.
+    with pytest.raises(ValueError):
+        decode_tiff(bytes.fromhex(
+            "49492a00080000000a0000010400010000001400000001010400010000000c"
+            "0000000201030001000016010400010000000c000000170104000100000032"
+            "0000003d010300010000000200000000000000800000f03824160d0506c1e1"
+            "5070d42e1d0313c3e1c348942c83158513a31072dc6e0c688f414eb218220a"
+            "490347c9c0f010"))
     data = bytearray(encode_tiff(gray))
     # flip compression tag value to CCITT G4 (4): honest rejection
     i = data.find((259).to_bytes(2, "little"))
