@@ -23,6 +23,34 @@ class PdfError(ValueError):
     pass
 
 
+#: Most bytes one stream may decode to through FlateDecode or
+#: LZWDecode. Both filters can expand their input about a thousandfold,
+#: so a few MB of hostile stream could otherwise claim gigabytes; a
+#: stream past the budget raises PdfError instead. It sits above the
+#: largest legitimate stream expected (a 600 dpi CMYK letter-size page
+#: image is about 135 MB).
+STREAM_DECODE_BUDGET = 256 * 1024 * 1024
+
+
+def _over_budget(fname: str) -> PdfError:
+    return PdfError(
+        f"{fname}: stream exceeds the decode budget "
+        f"of {STREAM_DECODE_BUDGET} bytes")
+
+
+def _inflate(data: bytes) -> bytes:
+    """``zlib.decompress`` with the output capped at
+    STREAM_DECODE_BUDGET; a truncated stream raises as it does there."""
+    d = zlib.decompressobj()
+    out = d.decompress(data, STREAM_DECODE_BUDGET + 1)
+    if len(out) > STREAM_DECODE_BUDGET:
+        raise _over_budget("FlateDecode")
+    if not d.eof:
+        raise zlib.error("Error -5 while decompressing data: "
+                         "incomplete or truncated stream")
+    return out
+
+
 class PdfDocument:
     def __init__(self, data: bytes):
         self.data = data
@@ -279,7 +307,7 @@ class PdfDocument:
             fname = str(self.resolve(f))
             parm = self.resolve(parms[i]) if i < len(parms) else None
             if fname in ("FlateDecode", "Fl"):
-                out = zlib.decompress(out)
+                out = _inflate(out)
                 if isinstance(parm, dict) and int(
                         self.resolve(parm.get("Predictor", 1))) >= 10:
                     out = _png_predictor(
@@ -413,6 +441,8 @@ def _lzw_decode(data: bytes, early_change: int = 1) -> bytes:
                 table[next_code] = prev + entry[:1]
                 next_code += 1
             out += entry
+            if len(out) > STREAM_DECODE_BUDGET:
+                raise _over_budget("LZWDecode")
             prev = entry
             if (next_code + early_change >= (1 << code_bits)
                     and code_bits < 12):

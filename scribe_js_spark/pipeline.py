@@ -23,6 +23,10 @@ Design notes for 100 TB scale:
 - Resume: ``resume_against`` anti-joins previously committed urls so a
   restarted run only processes the remainder (per-partition lineage is
   the output table itself, keyed by run_id).
+- Commit: ``run_extraction_job`` is one write job plus a one-row
+  sidecar commit. The sidecar's aggregates are observed on the rows as
+  they are written, so the metrics cover this call's commit and the
+  output is never read back.
 - Arrow batch size: documents are large; cap records per batch via
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` (set in session_conf).
 """
@@ -33,13 +37,13 @@ import os
 from typing import Iterator, Optional
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
     DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -132,36 +136,6 @@ def _extract_batches(batches, with_spans: bool):
         yield pd.DataFrame(out)
 
 
-def _extract_batches_arrow(batches):
-    """Arrow-native extraction (no-spans path): consumes and produces
-    ``pyarrow.RecordBatch`` directly. Skips the pandas layer entirely —
-    the url column passes through zero-copy and the ~100KB document
-    blobs avoid one object-dtype boxing per direction, which is a
-    measurable share of the Spark-vs-multiprocessing overhead at high
-    core counts (BENCH/BASELINE.md)."""
-    import pyarrow as pa
-
-    from .extract import extract_with_spans
-
-    for rb in batches:
-        urls = rb.column(rb.schema.get_field_index("url"))
-        htmls = rb.column(rb.schema.get_field_index("html"))
-        text, fmt, err, pc, wc = [], [], [], [], []
-        for h in htmls:
-            rec = extract_with_spans(h.as_py(), with_spans=False)
-            text.append(rec["text"])
-            fmt.append(rec["format"])
-            err.append(rec["error"])
-            pc.append(rec["page_count"])
-            wc.append(rec["word_count"])
-        yield pa.RecordBatch.from_arrays(
-            [urls, pa.array(text, pa.string()),
-             pa.array(fmt, pa.string()), pa.array(err, pa.string()),
-             pa.array(pc, pa.int32()), pa.array(wc, pa.int32())],
-            names=["url", "text", "format", "error",
-                   "page_count", "word_count"])
-
-
 def salt_by_size(df: DataFrame, num_partitions: Optional[int] = None) -> DataFrame:
     """Spread large documents across partitions.
 
@@ -234,20 +208,11 @@ def extract_text(
 
     schema = EXTRACT_SPANS_SCHEMA if with_spans else EXTRACT_SCHEMA
 
-    # mapInArrow skips the pandas boxing layer, but an interleaved A/B
-    # at local[32] (tools/bench_arrow_ab.py: pandas 13.3s vs arrow
-    # 16.3s, best-of-3 alternating) measured it 22% SLOWER here — the
-    # per-value .as_py() calls cost more than pandas' bulk object
-    # conversion. It stays opt-in for re-measurement on other shapes.
-    use_arrow = (not with_spans
-                 and os.environ.get("SPARK_GRAFT_ARROW", "0") == "1")
-    if use_arrow:
-        small_res = small.mapInArrow(_extract_batches_arrow, schema=schema)
-    else:
-        def fn(batches: Iterator) -> Iterator:
-            return _extract_batches(batches, with_spans)
+    # mapInArrow measured 22% slower than this (A/B: 16.3 s vs 13.3 s).
+    def fn(batches: Iterator) -> Iterator:
+        return _extract_batches(batches, with_spans)
 
-        small_res = small.mapInPandas(fn, schema=schema)
+    small_res = small.mapInPandas(fn, schema=schema)
     if big is None:
         return small_res
     big_res = _extract_paged(big, with_spans, num_partitions)
@@ -457,18 +422,57 @@ def extract_par_roles(df: DataFrame) -> DataFrame:
     return df.select("url", "html").mapInPandas(fn, schema=schema)
 
 
+def _metric_aggs() -> list:
+    """The sidecar's aggregates over committed rows, shared by
+    ``extraction_metrics`` and the observation in ``run_extraction_job``."""
+    failed = F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))
+    return [
+        F.count("*").alias("docs_total"),
+        failed.alias("docs_failed"),
+        (failed / F.count("*")).alias("parse_failure_rate"),
+        F.sum("page_count").alias("pages_total"),
+        F.sum("word_count").alias("spans_total"),
+    ]
+
+
 def extraction_metrics(result: DataFrame) -> DataFrame:
     """Aggregate job metrics: docs, failure rate, span counts —
     the metrics sidecar committed alongside each output write
     (north rule). Pure DataFrame aggregation, no UDF."""
-    return result.agg(
-        F.count("*").alias("docs_total"),
-        F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("docs_failed"),
-        (F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)) / F.count("*"))
-        .alias("parse_failure_rate"),
-        F.sum("page_count").alias("pages_total"),
-        F.sum("word_count").alias("spans_total"),
-    )
+    return result.agg(*_metric_aggs())
+
+
+#: Sidecar columns in commit order, with their Spark SQL types.
+_SIDECAR_COLUMNS = (
+    ("run_id", "string"),
+    ("docs_total", "bigint"),
+    ("docs_failed", "bigint"),
+    ("parse_failure_rate", "double"),
+    ("pages_total", "bigint"),
+    ("spans_total", "bigint"),
+    ("partitions_total", "bigint"),
+    ("elapsed_sec", "double"),
+    ("docs_per_sec", "double"),
+)
+
+#: Read errors that mean "nothing committed yet": a missing output
+#: path, or an empty directory.
+_NO_PRIOR_OUTPUT = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
+def _prior_output(spark: SparkSession, output_path: str,
+                  fmt: str) -> Optional[DataFrame]:
+    """The committed output to resume against, or None when there is
+    none yet. Any other read failure (a corrupt footer, a schema
+    conflict, a permission error) raises: treating it as empty would
+    re-append every document."""
+    try:
+        return (spark.read.parquet(output_path) if fmt == "parquet"
+                else spark.read.table(output_path))
+    except AnalysisException as e:
+        if e.getCondition() in _NO_PRIOR_OUTPUT:
+            return None
+        raise
 
 
 def run_extraction_job(
@@ -482,7 +486,12 @@ def run_extraction_job(
     resume: bool = True,
 ) -> dict:
     """End-to-end job: read -> (resume anti-join) -> extract -> commit
-    output + metrics. Returns the collected metrics row as a dict.
+    output + metrics. Returns the committed metrics row as a dict.
+
+    The commit is one write job plus a one-row sidecar write. The
+    metrics are observed on the rows while they are written, so they
+    describe the rows *this call* committed (rows an earlier call
+    committed under the same ``run_id`` are not counted).
 
     With an Iceberg catalog configured, ``fmt='iceberg'`` writes to a
     table instead of a path; the parquet path is the sandbox stand-in
@@ -492,15 +501,7 @@ def run_extraction_job(
 
     df = spark.read.parquet(input_path) if fmt == "parquet" \
         else spark.read.table(input_path)
-
-    resume_against = None
-    if resume:
-        try:
-            prior = (spark.read.parquet(output_path) if fmt == "parquet"
-                     else spark.read.table(output_path))
-            resume_against = prior
-        except Exception:
-            resume_against = None
+    resume_against = _prior_output(spark, output_path, fmt) if resume else None
 
     t0 = time.time()
     result = extract_text(
@@ -511,44 +512,29 @@ def run_extraction_job(
     # run_id history) restarts exactly the unprocessed remainder
     result = result.withColumn("run_id", F.lit(run_id)) \
         .withColumn("lineage_partition", F.spark_partition_id())
+    # Observed after the salt shuffle, so the metrics are collected in
+    # the write's result stage, where a retried or speculative task
+    # attempt counts once. Unnamed: concurrent jobs cannot collide.
+    seen = Observation()
+    result = result.observe(
+        seen, *_metric_aggs(),
+        F.size(F.collect_set("lineage_partition")).alias("partitions_total"))
     if fmt == "parquet":
         result.write.mode("append").parquet(output_path)
     else:
         result.writeTo(output_path).append()
     elapsed = time.time() - t0
 
-    # mergeSchema: a resumed dataset may hold pre-lineage files whose
-    # footer (if picked arbitrarily) would hide the lineage_partition
-    # column; merging unions the schemas across commits.
-    committed = (spark.read.option("mergeSchema", "true")
-                 .parquet(output_path) if fmt == "parquet"
-                 else spark.read.table(output_path))
-    this_run = committed.filter(F.col("run_id") == run_id)
-    metrics_row = extraction_metrics(this_run).collect()[0].asDict()
-    if "lineage_partition" in this_run.columns:
-        metrics_row["partitions_total"] = this_run.select(
-            "lineage_partition").distinct().count()
-    else:
-        metrics_row["partitions_total"] = None
+    metrics_row = seen.get
     metrics_row["elapsed_sec"] = elapsed
     metrics_row["docs_per_sec"] = (
         metrics_row["docs_total"] / elapsed if elapsed > 0 else None)
     metrics_row["run_id"] = run_id
 
-    metrics_schema = StructType([
-        StructField("run_id", StringType()),
-        StructField("docs_total", LongType()),
-        StructField("docs_failed", LongType()),
-        StructField("parse_failure_rate", DoubleType()),
-        StructField("pages_total", LongType()),
-        StructField("spans_total", LongType()),
-        StructField("partitions_total", LongType()),
-        StructField("elapsed_sec", DoubleType()),
-        StructField("docs_per_sec", DoubleType()),
-    ])
-    metrics_df = spark.createDataFrame(
-        [tuple(metrics_row.get(f.name) for f in metrics_schema.fields)],
-        schema=metrics_schema)
+    # the row is built from literals in the JVM: no Python worker runs
+    metrics_df = spark.range(0, 1, 1, 1).select(*(
+        F.lit(metrics_row[name]).cast(dtype).alias(name)
+        for name, dtype in _SIDECAR_COLUMNS))
     if fmt == "parquet":
         metrics_df.write.mode("append").parquet(output_path + "_metrics")
     else:

@@ -28,14 +28,27 @@ are identical under any partitioning.
 
 from __future__ import annotations
 
+import functools
+import logging
 import os
 
 from pyspark.sql import DataFrame
+
+_log = logging.getLogger(__name__)
 
 #: Inputs estimated smaller than this are spread to default
 #: parallelism; env-overridable for other deployments.
 SPREAD_MAX_BYTES = int(os.environ.get(
     "SPARK_GRAFT_SPREAD_MAX_BYTES", str(256 * 1024 * 1024)))
+
+
+@functools.cache
+def _warn_no_estimate() -> None:
+    """Log the first missing size estimate of the process, with the
+    exception being handled; later calls are no-ops."""
+    _log.warning("no optimizer size estimate; size-gated plans "
+                 "(spread_input, embedding verify) take their unsized "
+                 "path", exc_info=True)
 
 
 def _estimated_bytes(df: DataFrame) -> int | None:
@@ -46,6 +59,7 @@ def _estimated_bytes(df: DataFrame) -> int | None:
         # fall back to its string form otherwise
         return size if isinstance(size, int) else int(size.toString())
     except Exception:
+        _warn_no_estimate()
         return None
 
 

@@ -9,6 +9,7 @@ MemoryError instead of exhausting the machine and killing the run."""
 import os
 import resource
 import traceback
+import zlib
 
 import numpy as np
 import pytest
@@ -85,6 +86,37 @@ def _capped(sweep):
     return test
 
 
+def _deflate_bomb_pdf(inflated: int) -> bytes:
+    """A one-page PDF whose FlateDecode content stream inflates to
+    ``inflated`` zero bytes from about a thousandth of that."""
+    chunk = bytes(1 << 20)
+    z = zlib.compressobj(9)
+    head = z.compress(chunk) + z.flush(zlib.Z_FULL_FLUSH)
+    # a full flush resets the compressor, so each further chunk
+    # compresses to the same bytes
+    body = z.compress(chunk) + z.flush(zlib.Z_FULL_FLUSH)
+    stream = head + body * (inflated // len(chunk) - 1)
+    objs = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+        b"/Contents 4 0 R >>",
+        b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(stream)
+        + stream + b"\nendstream",
+    ]
+    pdf = bytearray(b"%PDF-1.4\n")
+    offsets = []
+    for i, obj in enumerate(objs, 1):
+        offsets.append(len(pdf))
+        pdf += b"%d 0 obj\n" % i + obj + b"\nendobj\n"
+    xref = len(pdf)
+    pdf += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
+    pdf += b"".join(b"%010d 00000 n \n" % off for off in offsets)
+    pdf += b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n" % (
+        len(objs) + 1, xref)
+    return bytes(pdf)
+
+
 def _mutate(data: bytes, rng: np.random.RandomState) -> bytes:
     mode = rng.randint(4)
     b = bytearray(data)
@@ -120,6 +152,13 @@ def test_extract_never_raises_on_mutations():
         assert rec["text"] == res.text
     # sanity: mutations do produce both survivable and fatal inputs
     assert 0 < failures < 150
+    # a deflate bomb inflating past the sweep's whole memory headroom
+    # is refused at the per-stream decode budget
+    bomb = _deflate_bomb_pdf(SWEEP_AS_HEADROOM + (1 << 30))
+    res = extract_document(bomb)
+    assert "decode budget" in (res.error or ""), res.error
+    rec = extract_with_spans(bomb, with_spans=False)
+    assert rec["error"] == res.error
 
 
 if HAVE_HYP:

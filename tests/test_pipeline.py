@@ -1,10 +1,13 @@
 """Spark pipeline tests: byte-identity at the DataFrame level,
 determinism across runs, resume semantics, metrics."""
 
+import os
+
+import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
-from scribe_js_spark.fixtures import make_corpus_pandas
+from scribe_js_spark.fixtures import make_corpus_pandas, make_corrupt_rows
 from scribe_js_spark.pipeline import (
     extract_spans,
     extract_text,
@@ -84,6 +87,114 @@ def test_resume_job(spark, corpus_df, tmp_path):
     assert committed.count() == N_DOCS
     metrics = spark.read.parquet(outp + "_metrics")
     assert metrics.count() == 2
+
+
+#: The metrics sidecar's columns and types, as committed when the
+#: sidecar was computed by re-reading the output: the schema must not drift.
+SIDECAR_FIELDS = [
+    ("run_id", "string"),
+    ("docs_total", "bigint"),
+    ("docs_failed", "bigint"),
+    ("parse_failure_rate", "double"),
+    ("pages_total", "bigint"),
+    ("spans_total", "bigint"),
+    ("partitions_total", "bigint"),
+    ("elapsed_sec", "double"),
+    ("docs_per_sec", "double"),
+]
+
+
+def _reference_sidecar(committed, run_id):
+    """The sidecar as a re-read of the output computes it: the
+    ``extraction_metrics`` aggregates over the committed rows of
+    ``run_id``, plus the count of their distinct lineage partitions."""
+    this = committed.filter(F.col("run_id") == run_id)
+    failed = F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))
+    ref = this.agg(
+        F.count("*").alias("docs_total"),
+        failed.alias("docs_failed"),
+        (failed / F.count("*")).alias("parse_failure_rate"),
+        F.sum("page_count").alias("pages_total"),
+        F.sum("word_count").alias("spans_total"),
+    ).collect()[0].asDict()
+    ref["partitions_total"] = (
+        this.select("lineage_partition").distinct().count())
+    return ref
+
+
+def _job_stage_names(sc, group):
+    """Stage names of every job run under ``group``, one list per job."""
+    st = sc.statusTracker()
+    return [[st.getStageInfo(s).name for s in st.getJobInfo(j).stageIds]
+            for j in sorted(st.getJobIdsForGroup(group))]
+
+
+def test_sidecar_observed_during_write(spark, corpus_df, tmp_path):
+    inp = str(tmp_path / "input")
+    outp = str(tmp_path / "output")
+    n_bad = 8
+    corrupt = spark.createDataFrame(pd.DataFrame(make_corrupt_rows(n_bad)))
+    corpus_df.select("url", "html").unionByName(corrupt).write.parquet(inp)
+
+    sc = spark.sparkContext
+    returned, jobs = {}, {}
+    for run_id in ("s1", "s2"):  # s2 resumes: nothing left to extract
+        sc.setJobGroup(run_id, "run_extraction_job")
+        try:
+            returned[run_id] = run_extraction_job(
+                spark, inp, outp, run_id=run_id)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[run_id] = _job_stage_names(sc, run_id)
+
+    # One pass: the input's schema read, the salt shuffle's map stage,
+    # the output write (metrics observed in its result stage) and the
+    # one-row sidecar write. The resume run adds the read of the prior
+    # output and the anti-join's shuffle. Re-reading the output for the
+    # metrics took six more jobs: a schema merge, and two aggregations
+    # with their shuffle stages.
+    assert len(jobs["s1"]) == 4, jobs["s1"]
+    assert len(jobs["s2"]) == 6, jobs["s2"]
+    for names in jobs.values():
+        assert not any(n.startswith(("collect at", "count at"))
+                       for stage_names in names for n in stage_names), names
+
+    committed = spark.read.parquet(outp)
+    sidecar = spark.read.parquet(outp + "_metrics")
+    assert [(f.name, f.dataType.simpleString())
+            for f in sidecar.schema.fields] == SIDECAR_FIELDS
+    for run_id, m in returned.items():
+        want = _reference_sidecar(committed, run_id)
+        rows = sidecar.filter(F.col("run_id") == run_id).collect()
+        assert len(rows) == 1
+        got = rows[0].asDict()
+        assert {k: got[k] for k in want} == want, run_id
+        assert {k: m[k] for k in want} == want, run_id
+        assert got["elapsed_sec"] == m["elapsed_sec"] > 0
+        assert got["docs_per_sec"] == m["docs_per_sec"]
+    assert returned["s1"]["docs_total"] == N_DOCS + n_bad
+    assert returned["s1"]["docs_failed"] == n_bad
+    assert returned["s2"]["docs_total"] == 0
+
+
+def test_resume_refuses_unreadable_output(spark, corpus_df, tmp_path):
+    inp = str(tmp_path / "input")
+    out_dir = tmp_path / "output"
+    corpus_df.write.parquet(inp)
+
+    # An empty output directory holds no prior commit.
+    out_dir.mkdir()
+    m = run_extraction_job(spark, inp, str(out_dir), run_id="r1")
+    assert m["docs_total"] == N_DOCS
+
+    # A corrupt part file that sorts first, so the resume read's schema
+    # inference opens it. The job must fail, not append every url again.
+    (out_dir / "part-0.parquet").write_bytes(b"PAR1 not parquet PAR1")
+    before = sorted(os.listdir(out_dir))
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        run_extraction_job(spark, inp, str(out_dir), run_id="r2")
+    assert sorted(os.listdir(out_dir)) == before
+    assert spark.read.parquet(str(out_dir) + "_metrics").count() == 1
 
 
 def test_page_split_path_byte_identical(spark, corpus_df):

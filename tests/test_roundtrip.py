@@ -419,18 +419,45 @@ def test_lzw_and_runlength_content_streams():
         assert res.text == base.text, sf
 
 
-def test_lzw_decoder_edge_cases():
+def test_lzw_decoder_edge_cases(monkeypatch):
+    from scribe_js_spark.operators.pdf import document
     from scribe_js_spark.operators.pdf.document import (
-        _lzw_decode, _rle_decode)
+        PdfError, _lzw_decode, _rle_decode)
     from scribe_js_spark.render_pdf import _lzw_encode, _rle_encode
 
     # table growth past the 512/1024 width boundaries and a mid-stream
     # clear (encoder resets near 4096)
     data = bytes((i * 7 + (i >> 3)) % 4 for i in range(80000))
-    assert _lzw_decode(_lzw_encode(data)) == data
+    encoded = _lzw_encode(data)
+    assert _lzw_decode(encoded) == data
+    # one byte past the per-stream decode budget is refused
+    monkeypatch.setattr(document, "STREAM_DECODE_BUDGET", len(data) - 1)
+    with pytest.raises(PdfError, match="decode budget"):
+        _lzw_decode(encoded)
+    monkeypatch.undo()
     # RLE: runs, literals, 128-literal cap, EOD
     data2 = b"x" * 300 + bytes(range(200)) + b"y" * 2 + b"z"
     assert _rle_decode(_rle_encode(data2)) == data2
+
+
+def test_bounded_inflate_matches_zlib():
+    """Below the decode budget, FlateDecode returns and raises exactly
+    what ``zlib.decompress`` does: trailing bytes are ignored and a
+    truncated stream is an error."""
+    import zlib
+
+    from scribe_js_spark.operators.pdf.document import _inflate
+
+    good = zlib.compress(b"BT /F1 12 Tf (x) Tj ET\n" * 200)
+
+    def outcome(fn, data):
+        try:
+            return fn(data)
+        except zlib.error as e:
+            return repr(e)
+
+    for data in (good, good + b"junk", good[:-3], good[:5], b""):
+        assert outcome(_inflate, data) == outcome(zlib.decompress, data)
 
 
 def test_gzip_wrapped_documents_unwrap_transparently():
