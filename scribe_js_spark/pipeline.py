@@ -29,11 +29,13 @@ Design notes for 100 TB scale:
   output is never read back.
 - Arrow batch size: documents are large; cap records per batch via
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` (set in session_conf).
+- Worker start-up: session_conf forks the Python workers from
+  ``scribe_js_spark.daemon``, which imports the extraction stack once
+  per executor instead of once per worker.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Iterator, Optional
 
 import pyspark.sql.functions as F
@@ -85,9 +87,14 @@ EXTRACT_SPANS_SCHEMA = StructType(
 
 
 def session_conf(builder):
-    """Recommended extraction-job settings, applied to a SparkSession builder."""
+    """Recommended extraction-job settings, applied to a SparkSession
+    builder. A caller can override any of them with ``.config(...)``
+    after ``session_conf``."""
     return (
         builder
+        # Workers fork from a daemon that has already imported the
+        # extraction stack (see scribe_js_spark/daemon.py).
+        .config("spark.python.daemon.module", "scribe_js_spark.daemon")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Arrow batches are bounded by BYTES (the load-bearing cap for
@@ -97,9 +104,8 @@ def session_conf(builder):
         # secondary bound; 64 would fragment narrow-row Python stages
         # (e.g. 16-byte pair rows) into ~10 us-a-piece micro-batches,
         # so it sits at 4096 now that the byte cap carries the memory
-        # contract. Env-overridable for other deployments.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_MAX_RECORDS", "4096"))
+        # contract.
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(16 * 1024 * 1024))
         # Fine-grained input splits: document rows are heavy to *process*
         # relative to their bytes, so target many small scan partitions
@@ -455,22 +461,34 @@ _SIDECAR_COLUMNS = (
     ("docs_per_sec", "double"),
 )
 
-#: Read errors that mean "nothing committed yet": a missing output
-#: path, or an empty directory.
-_NO_PRIOR_OUTPUT = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+#: The read error of an existing output that holds no commit yet (an
+#: empty directory).
+_NO_PRIOR_OUTPUT = "UNABLE_TO_INFER_SCHEMA"
+
+
+def _output_exists(spark: SparkSession, output_path: str, fmt: str) -> bool:
+    if fmt != "parquet":
+        return spark.catalog.tableExists(output_path)
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(output_path)
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs.exists(path)
 
 
 def _prior_output(spark: SparkSession, output_path: str,
                   fmt: str) -> Optional[DataFrame]:
     """The committed output to resume against, or None when there is
-    none yet. Any other read failure (a corrupt footer, a schema
-    conflict, a permission error) raises: treating it as empty would
-    re-append every document."""
+    none yet. Existence is checked first: a failed read would reach the
+    session's query listeners, which log it as an error. Any other read
+    failure (a corrupt footer, a schema conflict, a permission error)
+    raises: treating it as empty would re-append every document."""
+    if not _output_exists(spark, output_path, fmt):
+        return None
     try:
         return (spark.read.parquet(output_path) if fmt == "parquet"
                 else spark.read.table(output_path))
     except AnalysisException as e:
-        if e.getCondition() in _NO_PRIOR_OUTPUT:
+        if e.getCondition() == _NO_PRIOR_OUTPUT:
             return None
         raise
 

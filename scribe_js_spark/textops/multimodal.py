@@ -68,6 +68,13 @@ _RIFF_MAGIC = b"RIFF"
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
+#: Most bytes one PNG may decode to, as filtered scanlines or as its
+#: pixel array. Both sizes follow from the IHDR alone, so a small file
+#: could otherwise claim gigabytes: past the budget decode_png raises
+#: ValueError before it inflates or allocates anything. A 600 dpi
+#: letter-size RGBA page is about 135 MB.
+PNG_DECODE_BUDGET = 256 * 1024 * 1024
+
 # Adam7 pass geometry: (x0, y0, dx, dy) per pass (PNG spec 4.5.2).
 _ADAM7 = [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
           (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2)]
@@ -161,9 +168,36 @@ def decode_png(data: bytes):
     if bit_depth < 8 and color_type not in (0, 3):
         raise ValueError(
             f"PNG color type {color_type} at depth {bit_depth}")
+    if not width or not height:
+        raise ValueError(f"PNG size {width}x{height}")
+    if interlace not in (0, 1):
+        raise ValueError(f"PNG interlace method {interlace}")
     sb = max(1, bit_depth // 8)    # bytes per sample (>= 1 byte)
     bpp = channels * sb            # filter left-offset, min 1 (spec 9.2)
-    raw = zlib.decompress(bytes(idat))
+
+    def rowbytes(w):
+        return (w * channels * bit_depth + 7) // 8
+
+    # every non-empty pass: (x0, y0, dx, dy, pass width, pass height)
+    passes = []
+    for x0, y0, dx, dy in (_ADAM7 if interlace else [(0, 0, 1, 1)]):
+        pw = (width - x0 + dx - 1) // dx
+        ph = (height - y0 + dy - 1) // dy
+        if pw > 0 and ph > 0:
+            passes.append((x0, y0, dx, dy, pw, ph))
+    expected = sum(ph * (rowbytes(pw) + 1) for *_, pw, ph in passes)
+    if max(expected, width * height * channels * sb) > PNG_DECODE_BUDGET:
+        raise ValueError(f"PNG {width}x{height} exceeds the decode "
+                         f"budget of {PNG_DECODE_BUDGET} bytes")
+    # Inflate only the bytes the scanlines take. A stream that ends
+    # before its terminator is truncated, as zlib.decompress reports.
+    inflater = zlib.decompressobj()
+    raw = inflater.decompress(bytes(idat), expected)
+    if not inflater.eof and not inflater.unconsumed_tail:
+        raise zlib.error("Error -5 while decompressing data: "
+                         "incomplete or truncated stream")
+    if len(raw) < expected:
+        raise ValueError("PNG truncated scanlines")
     # sub-byte gray levels replicate to 8-bit; palette keeps indices
     expand = (bit_depth < 8 and color_type == 0)
 
@@ -171,10 +205,10 @@ def decode_png(data: bytes):
         if bit_depth < 8:
             bits = np.unpackbits(byte_rows, axis=1)
             nsamp = bits.shape[1] // bit_depth
-            weights = 1 << np.arange(bit_depth - 1, -1, -1)
+            weights = (1 << np.arange(bit_depth - 1, -1, -1)).astype(
+                np.uint8)
             samples = (bits[:, : nsamp * bit_depth]
-                       .reshape(h, nsamp, bit_depth) @ weights)
-            samples = samples[:, :w].astype(np.uint8)
+                       .reshape(h, nsamp, bit_depth) @ weights)[:, :w]
             if expand:
                 samples = samples * (255 // ((1 << bit_depth) - 1))
             return samples.reshape(h, w, 1)
@@ -183,22 +217,13 @@ def decode_png(data: bytes):
         return (byte_rows.reshape(h, w, channels, 2).astype(np.uint16)[
             ..., 0] << 8) | byte_rows.reshape(h, w, channels, 2)[..., 1]
 
-    def rowbytes(w):
-        return (w * channels * bit_depth + 7) // 8
-
     if not interlace:
         rows, _ = _unfilter(raw, 0, height, rowbytes(width), bpp)
         return width, height, channels, to_pixels(rows, height, width)
-    if interlace != 1:
-        raise ValueError(f"PNG interlace method {interlace}")
     dtype = np.uint8 if sb == 1 else np.uint16
     out = np.zeros((height, width, channels), dtype=dtype)
     off = 0
-    for x0, y0, dx, dy in _ADAM7:
-        pw = (width - x0 + dx - 1) // dx
-        ph = (height - y0 + dy - 1) // dy
-        if pw <= 0 or ph <= 0:
-            continue
+    for x0, y0, dx, dy, pw, ph in passes:
         rows, off = _unfilter(raw, off, ph, rowbytes(pw), bpp)
         out[y0::dy, x0::dx] = to_pixels(rows, ph, pw)
     return width, height, channels, out

@@ -86,16 +86,22 @@ def _capped(sweep):
     return test
 
 
-def _deflate_bomb_pdf(inflated: int) -> bytes:
-    """A one-page PDF whose FlateDecode content stream inflates to
-    ``inflated`` zero bytes from about a thousandth of that."""
+def _deflate_bomb(inflated: int) -> bytes:
+    """A zlib stream that inflates to ``inflated`` zero bytes from about
+    a thousandth of that."""
     chunk = bytes(1 << 20)
     z = zlib.compressobj(9)
     head = z.compress(chunk) + z.flush(zlib.Z_FULL_FLUSH)
     # a full flush resets the compressor, so each further chunk
     # compresses to the same bytes
     body = z.compress(chunk) + z.flush(zlib.Z_FULL_FLUSH)
-    stream = head + body * (inflated // len(chunk) - 1)
+    return head + body * (inflated // len(chunk) - 1)
+
+
+def _deflate_bomb_pdf(inflated: int) -> bytes:
+    """A one-page PDF whose FlateDecode content stream is
+    ``_deflate_bomb(inflated)``."""
+    stream = _deflate_bomb(inflated)
     objs = [
         b"<< /Type /Catalog /Pages 2 0 R >>",
         b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
@@ -437,6 +443,27 @@ def test_decode_media_net_catches_all_codec_mutations():
                 assert rec["error"] or rec["kind"]
             except allowed:
                 pass  # decode_media's net turns these into a column
+
+    # Header-driven allocations. An 8-bit 20x12 image whose IDAT
+    # inflates to more than the cap: only its 252 scanline bytes are
+    # inflated, and they are valid (all zero). An interlaced
+    # 65535x65535 IHDR over a 12-byte IDAT: 4 GiB of pixels.
+    def png(ihdr, idat):
+        def chunk(ctype, body):
+            return (struct.pack(">I", len(body)) + ctype + body
+                    + struct.pack(">I", zlib.crc32(ctype + body)))
+        return (b"\x89PNG\r\n\x1a\n"
+                + chunk(b"IHDR", struct.pack(">IIBBBBB", *ihdr))
+                + chunk(b"IDAT", idat) + chunk(b"IEND", b""))
+
+    bomb = png((20, 12, 8, 0, 0, 0, 0),
+               _deflate_bomb(SWEEP_AS_HEADROOM + (1 << 30)))
+    rec = _decode_one(bomb)
+    assert (rec["kind"], rec["width"], rec["height"], rec["mean_byte"]) \
+        == ("png", 20, 12, 0.0)
+    huge = png((65535, 65535, 8, 0, 0, 0, 1), zlib.compress(bytes(12)))
+    with pytest.raises(ValueError, match="decode budget"):
+        _decode_one(huge)
 
 
 @_capped

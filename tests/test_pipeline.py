@@ -1,7 +1,10 @@
 """Spark pipeline tests: byte-identity at the DataFrame level,
 determinism across runs, resume semantics, metrics."""
 
+import gc
+import importlib
 import os
+import sys
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -9,6 +12,7 @@ import pytest
 
 from scribe_js_spark.fixtures import make_corpus_pandas, make_corrupt_rows
 from scribe_js_spark.pipeline import (
+    _prior_output,
     extract_spans,
     extract_text,
     extraction_metrics,
@@ -195,6 +199,63 @@ def test_resume_refuses_unreadable_output(spark, corpus_df, tmp_path):
         run_extraction_job(spark, inp, str(out_dir), run_id="r2")
     assert sorted(os.listdir(out_dir)) == before
     assert spark.read.parquet(str(out_dir) + "_metrics").count() == 1
+
+
+def test_prior_output_checks_existence_before_reading(
+        spark, tmp_path, monkeypatch):
+    # Once an Observation has run, a failed read reaches its listener,
+    # which logs the failure as an ERROR with a stack trace. A missing
+    # output must therefore never be read.
+    from pyspark.sql import DataFrameReader, Observation
+
+    seen = Observation()
+    spark.range(3).observe(seen, F.count("*").alias("n")).collect()
+    assert seen.get == {"n": 3}
+
+    def no_read(*args, **kwargs):
+        raise AssertionError("read a missing output")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
+    monkeypatch.setattr(DataFrameReader, "table", no_read)
+    assert _prior_output(spark, str(tmp_path / "missing"), "parquet") is None
+    assert _prior_output(spark, "no_such_output_table", "iceberg") is None
+
+
+def test_workers_fork_from_preloaded_daemon(spark):
+    # Observed from inside the workers: the daemon that forked them, and
+    # the frozen heap they inherited. Not sys.modules, which unpickling
+    # this function may itself fill.
+    def probe(batches):
+        import gc
+        import os
+
+        import pandas as pd
+
+        with open(f"/proc/{os.getppid()}/cmdline", "rb") as f:
+            parent = f.read().decode().split("\0")
+        for _ in batches:
+            yield pd.DataFrame({"frozen": [gc.get_freeze_count()],
+                                "parent": [" ".join(parent)]})
+
+    rows = (spark.range(8, numPartitions=4)
+            .mapInPandas(probe, "frozen long, parent string").collect())
+    assert len(rows) == 4
+    for row in rows:
+        assert row["frozen"] > 0
+        assert "scribe_js_spark.daemon" in row["parent"].split()
+
+
+def test_daemon_import_starts_no_manager(monkeypatch):
+    import pyspark.daemon
+
+    started = []
+    monkeypatch.setattr(pyspark.daemon, "manager",
+                        lambda: started.append(True))
+    monkeypatch.delitem(sys.modules, "scribe_js_spark.daemon", raising=False)
+    frozen = gc.get_freeze_count()
+    importlib.import_module("scribe_js_spark.daemon")
+    assert started == []
+    assert gc.get_freeze_count() == frozen
 
 
 def test_page_split_path_byte_identical(spark, corpus_df):

@@ -42,6 +42,9 @@ def run_level(cpus: int, corpus_path: str) -> dict:
         ["taskset", "-c", f"0-{cpus - 1}",
          "spark-submit", "--master", f"local[{cpus}]",
          "--py-files", os.path.join(REPO, "scribe_js_spark.zip"),
+         # the Python worker daemon imports the package before any task
+         "--conf", "spark.executorEnv.PYTHONPATH="
+         + os.path.join(REPO, "scribe_js_spark.zip"),
          "--driver-memory", "48g", WORKER],
         capture_output=True, text=True, env=env, timeout=3600)
     for line in out.stdout.splitlines():
