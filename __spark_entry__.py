@@ -64,12 +64,20 @@ def _q_extract_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
       <sup> markers stripped equals the reflow text byte-for-byte.
     - html_ws_md5: writeHtml tag-stripped, whitespace-collapsed.
     """
-    from typing import Iterator
+    import hashlib
+    import html as _h
+    import re as _re
 
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.pipeline import extract_text
+    from scribe_js_spark.export.alto import write_alto
+    from scribe_js_spark.export.docx import write_docx
+    from scribe_js_spark.export.hocr import write_hocr
+    from scribe_js_spark.export.html import write_html
+    from scribe_js_spark.export.markdown import write_markdown
+    from scribe_js_spark.extract import extract_document
+    from scribe_js_spark.pipeline import extract_text, per_document
 
     meta = extract_text(_corpus(spark, FIX_T2), salt=True).select(
         "url", "format",
@@ -85,57 +93,33 @@ def _q_extract_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("html_ws_md5", StringType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        import hashlib
-        import re as _re
+    def h(s: str) -> str:
+        return hashlib.md5(s.encode("utf-8")).hexdigest()
 
-        import pandas as pd
-
-        from scribe_js_spark.export.alto import write_alto
-        from scribe_js_spark.export.docx import write_docx
-        from scribe_js_spark.export.hocr import write_hocr
-        from scribe_js_spark.export.html import write_html
-        from scribe_js_spark.export.markdown import write_markdown
-        from scribe_js_spark.extract import extract_document
-
-        def h(s: str) -> str:
-            return hashlib.md5(s.encode("utf-8")).hexdigest()
-
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None:
-                    continue
-                fam = url.split("/")[-2]
-                if fam in ("docx", "text"):
-                    hocr_rt = alto_rt = None
-                else:
-                    hocr_rt = h(extract_document(
-                        write_hocr(res.pages).encode()).text)
-                    alto_rt = h(extract_document(
-                        write_alto(res.pages).encode()).text)
-                docx_rt = h(extract_document(
-                    write_docx(res.pages, reflow_text=True))
-                    .text.replace("\n", " "))
-                folded = write_markdown(res.pages).replace(
-                    "\n\n---\n\n\n", "\n")
-                md_fold = h(folded.replace("<sup>", "")
-                            .replace("</sup>", ""))
-                body = _re.sub(r"<[^>]+>", " ", write_html(res.pages))
-                import html as _h
-                html_ws = h(_re.sub(
-                    r"\s+", " ", _h.unescape(body)).strip())
-                out["url"].append(url)
-                out["hocr_rt_md5"].append(hocr_rt)
-                out["alto_rt_md5"].append(alto_rt)
-                out["docx_rt_md5"].append(docx_rt)
-                out["md_fold_md5"].append(md_fold)
-                out["html_ws_md5"].append(html_ws)
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        res = extract_document(bytes(html))
+        if res.error is not None:
+            return
+        fam = url.split("/")[-2]
+        if fam in ("docx", "text"):
+            hocr_rt = alto_rt = None
+        else:
+            hocr_rt = h(extract_document(
+                write_hocr(res.pages).encode()).text)
+            alto_rt = h(extract_document(
+                write_alto(res.pages).encode()).text)
+        docx_rt = h(extract_document(
+            write_docx(res.pages, reflow_text=True))
+            .text.replace("\n", " "))
+        folded = write_markdown(res.pages).replace(
+            "\n\n---\n\n\n", "\n")
+        md_fold = h(folded.replace("<sup>", "").replace("</sup>", ""))
+        body = _re.sub(r"<[^>]+>", " ", write_html(res.pages))
+        html_ws = h(_re.sub(r"\s+", " ", _h.unescape(body)).strip())
+        yield url, hocr_rt, alto_rt, docx_rt, md_fold, html_ws
 
     corpus = _corpus(spark, FIX_T2).select("url", "html")
-    return meta.join(corpus.mapInPandas(fn, schema=schema), "url")
+    return meta.join(per_document(corpus, rows, schema), "url")
 
 
 def _q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -685,11 +669,17 @@ def _q_combined_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority-box permutation (first min(4, n) lines reversed), and
     calcConf tallies. Oracle: fixtures/t2/combined.parquet, derived
     from the layer models (not by running the operators)."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType)
+
+    from scribe_js_spark.extract import extract_document
+    from scribe_js_spark.model import OcrPage
+    from scribe_js_spark.operators.combine import (
+        build_combined_pages, combine_ocr_page)
+    from scribe_js_spark.operators.compare import ocr_adds_new_text
+    from scribe_js_spark.operators.editing import (
+        calc_conf, reorder_ocr_page)
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -703,77 +693,55 @@ def _q_combined_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("conf_high", LongType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        from scribe_js_spark.extract import extract_document
-        from scribe_js_spark.model import OcrPage
-        from scribe_js_spark.operators.combine import (
-            build_combined_pages, combine_ocr_page)
-        from scribe_js_spark.operators.compare import ocr_adds_new_text
-        from scribe_js_spark.operators.editing import (
-            calc_conf, reorder_ocr_page)
+    def rows(url, h_truth, h_ocr):
+        truth = extract_document(bytes(h_truth))
+        ocr_a = extract_document(bytes(h_ocr))
+        if truth.error is not None or ocr_a.error is not None:
+            return
+        decisions = build_combined_pages(truth.pages, ocr_a.pages)
+        donor = extract_document(bytes(h_truth))
+        mutate = extract_document(bytes(h_truth))
+        for page_n, (t_page, a_page) in enumerate(
+                zip(truth.pages, ocr_a.pages)):
+            idx = len(mutate.pages[page_n].lines) // 2
+            page_m = mutate.pages[page_n]
+            del page_m.lines[idx]
+            new_page = OcrPage(page_n, dict(page_m.dims))
+            new_page.lines = [donor.pages[page_n].lines[idx]]
+            combine_ocr_page(new_page, page_m)
+            combined_lines = "\n".join(
+                " ".join(w.text for w in ln.words)
+                for ln in page_m.lines)
 
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, h_truth, h_ocr in zip(
-                    pdf["url"], pdf["html_truth"], pdf["html_ocr_a"]):
-                truth = extract_document(bytes(h_truth))
-                ocr_a = extract_document(bytes(h_ocr))
-                if truth.error is not None or ocr_a.error is not None:
-                    continue
-                decisions = build_combined_pages(truth.pages, ocr_a.pages)
-                donor = extract_document(bytes(h_truth))
-                mutate = extract_document(bytes(h_truth))
-                for page_n, (t_page, a_page) in enumerate(
-                        zip(truth.pages, ocr_a.pages)):
-                    idx = len(mutate.pages[page_n].lines) // 2
-                    page_m = mutate.pages[page_n]
-                    del page_m.lines[idx]
-                    new_page = OcrPage(page_n, dict(page_m.dims))
-                    new_page.lines = [donor.pages[page_n].lines[idx]]
-                    combine_ocr_page(new_page, page_m)
-                    combined_lines = "\n".join(
-                        " ".join(w.text for w in ln.words)
-                        for ln in page_m.lines)
+            r_page = extract_document(bytes(h_truth)).pages[page_n]
+            m_r = min(4, len(r_page.lines))
+            boxes = {
+                i: {"coords": r_page.lines[i].bbox,
+                    "type": "order", "order": m_r - 1 - i}
+                for i in range(m_r)}
+            reorder_ocr_page(r_page, boxes)
+            reorder_key = "|".join(
+                ln.words[0].text for ln in r_page.lines if ln.words)
 
-                    r_page = extract_document(bytes(h_truth)).pages[page_n]
-                    m_r = min(4, len(r_page.lines))
-                    boxes = {
-                        i: {"coords": r_page.lines[i].bbox,
-                            "type": "order", "order": m_r - 1 - i}
-                        for i in range(m_r)}
-                    reorder_ocr_page(r_page, boxes)
-                    reorder_key = "|".join(
-                        ln.words[0].text for ln in r_page.lines
-                        if ln.words)
-
-                    conf = calc_conf([a_page])
-                    out["url"].append(url)
-                    out["page_n"].append(page_n)
-                    out["adds_new"].append(
-                        ocr_adds_new_text(t_page, a_page))
-                    out["chosen"].append(decisions[page_n]["chosen"])
-                    out["keep_ocr"].append(decisions[page_n]["keep_ocr"])
-                    out["combined_lines"].append(combined_lines)
-                    out["reorder_key"].append(reorder_key)
-                    out["conf_total"].append(conf["total"])
-                    out["conf_high"].append(conf["highConf"])
-            yield pd.DataFrame(out)
+            conf = calc_conf([a_page])
+            yield (url, page_n, ocr_adds_new_text(t_page, a_page),
+                   decisions[page_n]["chosen"],
+                   decisions[page_n]["keep_ocr"], combined_lines,
+                   reorder_key, conf["total"], conf["highConf"])
 
     df = spark.read.parquet(os.path.join(FIX_T2, "layers.parquet"))
-    return df.select("url", "html_truth", "html_ocr_a") \
-        .mapInPandas(fn, schema=schema)
+    return per_document(
+        df.select("url", "html_truth", "html_ocr_a"), rows, schema)
 
 
 def _q_pdf_underline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Underline detection from PDF vector paths: word stream with the
     underline style flag over the pdf_underline family."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType)
 
     from scribe_js_spark.extract import extract_document
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -784,40 +752,32 @@ def _q_pdf_underline(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("underline", BooleanType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None:
-                    continue
-                for page in res.pages:
-                    for line_n, line in enumerate(page.lines):
-                        for word_n, w in enumerate(line.words):
-                            out["url"].append(url)
-                            out["page_n"].append(page.n)
-                            out["line_n"].append(line_n)
-                            out["word_n"].append(word_n)
-                            out["text"].append(w.text)
-                            out["underline"].append(
-                                bool(w.style.underline))
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        res = extract_document(bytes(html))
+        if res.error is not None:
+            return
+        for page in res.pages:
+            for line_n, line in enumerate(page.lines):
+                for word_n, w in enumerate(line.words):
+                    yield (url, page.n, line_n, word_n, w.text,
+                           bool(w.style.underline))
 
     df = spark.read.parquet(os.path.join(FIX_T2, "underline_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_pdf_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF-side ruled-grid table detection + cell extraction over the
     pdf_table family (detectPdfTables minimal core)."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
     from scribe_js_spark.extract import extract_document
+    from scribe_js_spark.operators.pdf.tables_pdf import (
+        columns_from_separators,
+    )
     from scribe_js_spark.operators.tables import extract_table_rows
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -827,51 +787,36 @@ def _q_pdf_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("cell", StringType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        from scribe_js_spark.operators.pdf.tables_pdf import (
-            columns_from_separators,
-        )
-
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None or not res.pages:
-                    continue
-                page = res.pages[0]
-                for t_n, t in enumerate(page.tables):
-                    # unruled tables extract through their inferred
-                    # separator structure; grids through the rules
-                    cols = (columns_from_separators(
-                        t["bbox"], t["col_separators"])
-                        if t["method"] in ("numeric", "header-rule",
-                                           "segmented-hline",
-                                           "row-band")
-                        and t["col_separators"] else None)
-                    matrix = extract_table_rows(page, t["bbox"], cols)
-                    for r, row in enumerate(matrix):
-                        for c, cell in enumerate(row):
-                            out["url"].append(url)
-                            out["table_n"].append(t_n)
-                            out["row_n"].append(r)
-                            out["col_n"].append(c)
-                            out["cell"].append(cell)
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        res = extract_document(bytes(html))
+        if res.error is not None or not res.pages:
+            return
+        page = res.pages[0]
+        for t_n, t in enumerate(page.tables):
+            # unruled tables extract through their inferred
+            # separator structure; grids through the rules
+            cols = (columns_from_separators(
+                t["bbox"], t["col_separators"])
+                if t["method"] in ("numeric", "header-rule",
+                                   "segmented-hline", "row-band")
+                and t["col_separators"] else None)
+            matrix = extract_table_rows(page, t["bbox"], cols)
+            for r, row in enumerate(matrix):
+                for c, cell in enumerate(row):
+                    yield url, t_n, r, c, cell
 
     df = spark.read.parquet(os.path.join(FIX_T2, "pdf_table_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_pdf_table_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Detected table regions per document: ruled grid + borderless
     numeric-cluster candidates, in page order."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
     from scribe_js_spark.extract import extract_document
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -882,26 +827,18 @@ def _q_pdf_table_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("title", StringType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None or not res.pages:
-                    continue
-                for t_n, t in enumerate(res.pages[0].tables):
-                    out["url"].append(url)
-                    out["table_n"].append(t_n)
-                    out["method"].append(t["method"])
-                    out["n_cols"].append(
-                        len(t.get("col_separators") or []) + 1)
-                    out["header"].append(t.get("header", "none"))
-                    out["title"].append(
-                        t["title"]["text"] if t.get("title") else None)
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        res = extract_document(bytes(html))
+        if res.error is not None or not res.pages:
+            return
+        for t_n, t in enumerate(res.pages[0].tables):
+            yield (url, t_n, t["method"],
+                   len(t.get("col_separators") or []) + 1,
+                   t.get("header", "none"),
+                   t["title"]["text"] if t.get("title") else None)
 
     df = spark.read.parquet(os.path.join(FIX_T2, "pdf_table_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_web_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -935,13 +872,11 @@ def _q_web_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_pdf_inline_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inline-math grouping exemptions: built-up fractions keep their
     visual line instead of shattering into stacked fragments."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType)
 
     from scribe_js_spark.extract import extract_document
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -951,37 +886,27 @@ def _q_pdf_inline_math(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("sup", BooleanType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None:
-                    continue
-                for page in res.pages:
-                    for line_n, line in enumerate(page.lines):
-                        for word_n, w in enumerate(line.words):
-                            out["url"].append(url)
-                            out["line_n"].append(line_n)
-                            out["word_n"].append(word_n)
-                            out["text"].append(w.text)
-                            out["sup"].append(bool(w.style.sup))
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        res = extract_document(bytes(html))
+        if res.error is not None:
+            return
+        for page in res.pages:
+            for line_n, line in enumerate(page.lines):
+                for word_n, w in enumerate(line.words):
+                    yield (url, line_n, word_n, w.text, bool(w.style.sup))
 
     df = spark.read.parquet(os.path.join(FIX_T2, "math_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_pdf_group_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """groupCharsIntoPage deferred rules: orphan-char merge, drop caps,
     reference-marker reattach, fake small caps, styleRuns."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType)
 
     from scribe_js_spark.extract import extract_document
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -995,44 +920,31 @@ def _q_pdf_group_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("n_style_runs", LongType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None:
-                    continue
-                for page in res.pages:
-                    for line_n, line in enumerate(page.lines):
-                        for word_n, w in enumerate(line.words):
-                            out["url"].append(url)
-                            out["line_n"].append(line_n)
-                            out["word_n"].append(word_n)
-                            out["text"].append(w.text)
-                            out["sup"].append(bool(w.style.sup))
-                            out["dropcap"].append(bool(w.style.dropcap))
-                            out["smallCaps"].append(
-                                bool(w.style.smallCaps))
-                            out["bold"].append(bool(w.style.bold))
-                            out["n_style_runs"].append(
-                                len(w.styleRuns or []))
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        res = extract_document(bytes(html))
+        if res.error is not None:
+            return
+        for page in res.pages:
+            for line_n, line in enumerate(page.lines):
+                for word_n, w in enumerate(line.words):
+                    yield (url, line_n, word_n, w.text,
+                           bool(w.style.sup), bool(w.style.dropcap),
+                           bool(w.style.smallCaps), bool(w.style.bold),
+                           len(w.styleRuns or []))
 
     df = spark.read.parquet(os.path.join(FIX_T2, "groupx_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_pdf_struct_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tagged-PDF structure tree: (page, MCID) -> block element tag via
     /StructTreeRoot + /ParentTree, RoleMap resolution, OCR-producer
     veto; untagged/vetoed docs emit no rows."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
     from scribe_js_spark.operators.pdf.structtree import pdf_struct_tags
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1041,38 +953,31 @@ def _q_pdf_struct_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("tag", StringType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    rows = pdf_struct_tags(bytes(html))
-                except Exception:
-                    continue
-                for page_n, mcid, tag in rows:
-                    out["url"].append(url)
-                    out["page_n"].append(page_n)
-                    out["mcid"].append(mcid)
-                    out["tag"].append(tag)
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        try:
+            tags = pdf_struct_tags(bytes(html))
+        except Exception:
+            return
+        for page_n, mcid, tag in tags:
+            yield url, page_n, mcid, tag
 
     df = spark.read.parquet(os.path.join(FIX_T2, "struct_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_pdf_annotations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed PDF annotation records (links, highlights, notes, form
     widgets) incl. AES-256-encrypted docs whose strings must decrypt."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType)
 
+    from scribe_js_spark.model import get_page_text
     from scribe_js_spark.operators.pdf.annots import (
         extract_pdf_annotations,
     )
     from scribe_js_spark.operators.pdf.document import PdfDocument
+    from scribe_js_spark.operators.pdf.parse import parse_pdf_document
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1086,48 +991,32 @@ def _q_pdf_annotations(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("field_text_ok", StringType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        from scribe_js_spark.model import get_page_text
-        from scribe_js_spark.operators.pdf.parse import (
-            parse_pdf_document)
-
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    doc = PdfDocument(bytes(html))
-                    pages = doc.get_pages()
-                except Exception:
-                    continue
-                # Filled form-field values must surface as page text
-                # (parsePdfDoc.js:1091-1176 via operators/pdf/
-                # formfields.py); hidden widgets must not.
-                try:
-                    page_texts = [get_page_text(p)
-                                  for p in parse_pdf_document(bytes(html))]
-                except Exception:
-                    page_texts = []
-                for pn, page in enumerate(pages):
-                    ptext = page_texts[pn] if pn < len(page_texts) else ""
-                    for an, rec in enumerate(
-                            extract_pdf_annotations(doc, page)):
-                        out["url"].append(url)
-                        out["page_n"].append(pn)
-                        out["annot_n"].append(an)
-                        out["subtype"].append(rec["subtype"])
-                        out["contents"].append(rec["contents"])
-                        out["uri"].append(rec["uri"])
-                        out["field_name"].append(rec["field_name"])
-                        fv = rec.get("field_value")
-                        out["field_value"].append(fv)
-                        out["field_text_ok"].append(
-                            None if not (fv and fv.strip()) else
-                            ("y" if all(tok in ptext
-                                        for tok in fv.split()) else "n"))
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        try:
+            doc = PdfDocument(bytes(html))
+            pages = doc.get_pages()
+        except Exception:
+            return
+        # Filled form-field values must surface as page text
+        # (parsePdfDoc.js:1091-1176 via operators/pdf/
+        # formfields.py); hidden widgets must not.
+        try:
+            page_texts = [get_page_text(p)
+                          for p in parse_pdf_document(bytes(html))]
+        except Exception:
+            page_texts = []
+        for pn, page in enumerate(pages):
+            ptext = page_texts[pn] if pn < len(page_texts) else ""
+            for an, rec in enumerate(extract_pdf_annotations(doc, page)):
+                fv = rec.get("field_value")
+                yield (url, pn, an, rec["subtype"], rec["contents"],
+                       rec["uri"], rec["field_name"], fv,
+                       None if not (fv and fv.strip()) else
+                       ("y" if all(tok in ptext for tok in fv.split())
+                        else "n"))
 
     df = spark.read.parquet(os.path.join(FIX_T2, "annot_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_pdf_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1135,13 +1024,13 @@ def _q_pdf_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     getMetadata): Info dict, /ID, XMP, OCG names, embedded files,
     actions, signatures, hidden info dicts, markup-annot authors,
     EXIF-bearing images, incremental-save revision count."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.operators.pdf.metadata import inspect_metadata
+    from scribe_js_spark.extract import extract_document
+    from scribe_js_spark.operators.pdf.metadata import (
+        inspect_metadata, scrub_metadata)
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1182,67 +1071,53 @@ def _q_pdf_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("scrub_revisions", LongType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        from scribe_js_spark.extract import extract_document
-        from scribe_js_spark.operators.pdf.metadata import scrub_metadata
-
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                data = bytes(html)
-                rep = inspect_metadata(data)
-                before = extract_document(data)
-                clean = scrub_metadata(data)
-                after = extract_document(clean)
-                srep = inspect_metadata(clean)
-                out["text_identical"].append(
-                    before.error is None and after.error is None
-                    and after.text == before.text)
-                out["info_clean"].append(
-                    not srep["info"] and not srep["custom_info_keys"])
-                out["xmp_clean"].append(
-                    srep["xmp_catalog_bytes"] == 0
-                    and srep["xmp_objects"] == 0
-                    and srep["piece_info"] == 0)
-                out["hidden_clean"].append(srep["hidden_info"] == 0)
-                out["authors_clean"].append(
-                    not srep["annotation_authors"])
-                out["actions_clean"].append(
-                    not srep["open_action"] and not srep["javascript"])
-                out["images_clean"].append(not srep["image_meta"])
-                out["ocg_leaks_clean"].append(all(
-                    ":" not in n and ".psd" not in n
-                    for n in srep["ocg_names"]))
-                out["decrypted"].append(not srep["encrypted"])
-                out["scrub_revisions"].append(srep["prior_revisions"])
-                out["url"].append(url)
-                out["title"].append(rep["info"].get("Title"))
-                out["author"].append(rep["info"].get("Author"))
-                out["producer"].append(rep["info"].get("Producer"))
-                out["n_custom_info"].append(len(rep["custom_info_keys"]))
-                out["has_doc_id"].append(rep["doc_id"] is not None)
-                out["encrypted"].append(rep["encrypted"])
-                out["has_xmp"].append(rep["xmp_catalog_bytes"] > 0)
-                out["n_xmp_objects"].append(rep["xmp_objects"])
-                out["n_piece_info"].append(rep["piece_info"])
-                out["ocg_names"].append(
-                    ",".join(sorted(rep["ocg_names"])))
-                out["n_embedded_files"].append(len(rep["embedded_files"]))
-                out["open_action"].append(rep["open_action"])
-                out["has_javascript"].append(rep["javascript"])
-                out["lang"].append(rep["lang"])
-                out["page_labels"].append(rep["page_labels"])
-                out["viewer_prefs"].append(rep["viewer_prefs"])
-                out["n_signatures"].append(len(rep["signatures"]))
-                out["n_hidden_info"].append(rep["hidden_info"])
-                out["annot_authors"].append(
-                    ",".join(sorted(rep["annotation_authors"])))
-                out["n_image_meta"].append(len(rep["image_meta"]))
-                out["prior_revisions"].append(rep["prior_revisions"])
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        data = bytes(html)
+        rep = inspect_metadata(data)
+        before = extract_document(data)
+        clean = scrub_metadata(data)
+        after = extract_document(clean)
+        srep = inspect_metadata(clean)
+        yield (
+            url,
+            rep["info"].get("Title"),
+            rep["info"].get("Author"),
+            rep["info"].get("Producer"),
+            len(rep["custom_info_keys"]),
+            rep["doc_id"] is not None,
+            rep["encrypted"],
+            rep["xmp_catalog_bytes"] > 0,
+            rep["xmp_objects"],
+            rep["piece_info"],
+            ",".join(sorted(rep["ocg_names"])),
+            len(rep["embedded_files"]),
+            rep["open_action"],
+            rep["javascript"],
+            rep["lang"],
+            rep["page_labels"],
+            rep["viewer_prefs"],
+            len(rep["signatures"]),
+            rep["hidden_info"],
+            ",".join(sorted(rep["annotation_authors"])),
+            len(rep["image_meta"]),
+            rep["prior_revisions"],
+            before.error is None and after.error is None
+            and after.text == before.text,
+            not srep["info"] and not srep["custom_info_keys"],
+            srep["xmp_catalog_bytes"] == 0 and srep["xmp_objects"] == 0
+            and srep["piece_info"] == 0,
+            srep["hidden_info"] == 0,
+            not srep["annotation_authors"],
+            not srep["open_action"] and not srep["javascript"],
+            not srep["image_meta"],
+            all(":" not in n and ".psd" not in n
+                for n in srep["ocg_names"]),
+            not srep["encrypted"],
+            srep["prior_revisions"],
+        )
 
     df = spark.read.parquet(os.path.join(FIX_T2, "metadata_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_outline_headings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1250,9 +1125,6 @@ def _q_outline_headings(spark: SparkSession, sf_dir: str) -> DataFrame:
     analyzeLayout.js:1783-1787): bookmarks name headings with body
     size/weight that geometry cannot detect; sentence-shaped and
     unmatched bookmarks and OCR-producer documents must not promote."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
@@ -1264,6 +1136,7 @@ def _q_outline_headings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scribe_js_spark.operators.pdf.outline import (
         build_outline_heading_index,
     )
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1272,26 +1145,18 @@ def _q_outline_headings(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("par_type", StringType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                data = bytes(html)
-                res = extract_document(data)
-                if res.error is not None:
-                    continue
-                analyze_layout_doc(
-                    res.pages,
-                    outline_headings=build_outline_heading_index(data))
-                for r in collect_par_roles(res.pages):
-                    out["url"].append(url)
-                    out["page_n"].append(r["page_n"])
-                    out["par_n"].append(r["par_n"])
-                    out["par_type"].append(r["par_type"])
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        data = bytes(html)
+        res = extract_document(data)
+        if res.error is not None:
+            return
+        analyze_layout_doc(
+            res.pages, outline_headings=build_outline_heading_index(data))
+        for r in collect_par_roles(res.pages):
+            yield url, r["page_n"], r["par_n"], r["par_type"]
 
     df = spark.read.parquet(os.path.join(FIX_T2, "heading_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1299,14 +1164,12 @@ def _q_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensions, bit depth, mask flag, resolved color space (Indexed
     hival, ICCBased by /N), filter chain + codec ext, /Decode
     inversion, /SMask + /Interpolate flags, raw stream size."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType)
 
     from scribe_js_spark.operators.pdf.images import (
         extract_images, extract_inline_images)
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1327,26 +1190,16 @@ def _q_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("inline", BooleanType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                recs = (extract_images(bytes(html), with_pixels=True)
-                        + extract_inline_images(bytes(html),
-                                                with_pixels=True))
-                for n, rec in enumerate(recs):
-                    out["url"].append(url)
-                    out["image_n"].append(n)
-                    for k in ("width", "height", "bpc", "image_mask",
-                              "colorspace", "palette_hival", "filter",
-                              "ext", "decode_invert", "has_smask",
-                              "interpolate", "n_raw_bytes",
-                              "pixels_mean_e6", "inline"):
-                        out[k].append(rec[k])
-            yield pd.DataFrame(out)
+    keys = schema.names[2:]
+
+    def rows(url, html):
+        recs = (extract_images(bytes(html), with_pixels=True)
+                + extract_inline_images(bytes(html), with_pixels=True))
+        for n, rec in enumerate(recs):
+            yield (url, n, *(rec[k] for k in keys))
 
     df = spark.read.parquet(os.path.join(FIX_T2, "image_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_struct_layout_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1355,9 +1208,6 @@ def _q_struct_layout_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     par to body against the title rule, /BlockQuote promotes without
     the geometric inset, /TD[/TH] pin body; OCR-producer and untagged
     docs fall back to pure geometry."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
@@ -1370,6 +1220,7 @@ def _q_struct_layout_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scribe_js_spark.operators.pdf.structtree import (
         build_struct_elem_map,
     )
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1378,30 +1229,23 @@ def _q_struct_layout_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("par_type", StringType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                data = bytes(html)
-                res = extract_document(data)
-                if res.error is not None:
-                    continue
-                try:
-                    elem_map = build_struct_elem_map(PdfDocument(data))
-                except Exception:
-                    elem_map = None
-                st = ({k: v["tag"] for k, v in elem_map.items()}
-                      if elem_map else None)
-                analyze_layout_doc(res.pages, struct_tags=st)
-                for r in collect_par_roles(res.pages):
-                    out["url"].append(url)
-                    out["page_n"].append(r["page_n"])
-                    out["par_n"].append(r["par_n"])
-                    out["par_type"].append(r["par_type"])
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        data = bytes(html)
+        res = extract_document(data)
+        if res.error is not None:
+            return
+        try:
+            elem_map = build_struct_elem_map(PdfDocument(data))
+        except Exception:
+            elem_map = None
+        st = ({k: v["tag"] for k, v in elem_map.items()}
+              if elem_map else None)
+        analyze_layout_doc(res.pages, struct_tags=st)
+        for r in collect_par_roles(res.pages):
+            yield url, r["page_n"], r["par_n"], r["par_type"]
 
     df = spark.read.parquet(os.path.join(FIX_T2, "struct_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_pdf_text_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1409,13 +1253,11 @@ def _q_pdf_text_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream color operators (parsePdfDoc.js:1692-1766, 3104-3112):
     device fills, Separation tint transforms (all four PDF function
     types), ExtGState /ca alpha, Tr 3 invisibility, Tr 2 stroking."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         DoubleType, LongType, StringType, StructField, StructType)
 
     from scribe_js_spark.extract import extract_document
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1428,29 +1270,19 @@ def _q_pdf_text_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("stroke_width", DoubleType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None:
-                    continue
-                for page in res.pages:
-                    for ln, line in enumerate(page.lines):
-                        for wn, w in enumerate(line.words):
-                            out["url"].append(url)
-                            out["line_n"].append(ln)
-                            out["word_n"].append(wn)
-                            out["text"].append(w.text)
-                            out["color"].append(w.style.color)
-                            out["opacity"].append(float(w.style.opacity))
-                            out["render_mode"].append(w.renderMode)
-                            out["stroke_width"].append(
-                                float(w.strokeWidth))
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        res = extract_document(bytes(html))
+        if res.error is not None:
+            return
+        for page in res.pages:
+            for line_n, line in enumerate(page.lines):
+                for word_n, w in enumerate(line.words):
+                    yield (url, line_n, word_n, w.text, w.style.color,
+                           float(w.style.opacity), w.renderMode,
+                           float(w.strokeWidth))
 
     df = spark.read.parquet(os.path.join(FIX_T2, "color_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_abbyy_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1464,9 +1296,6 @@ def _q_abbyy_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes, digested; the oracle holds the same digest of the
     independently-derived expected matrices, so a writer defect (lost
     cell, bad escaping, broken row numbering) breaks the match."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
@@ -1474,6 +1303,7 @@ def _q_abbyy_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         matrices_digest, read_xlsx_cells, write_xlsx)
     from scribe_js_spark.extract import extract_document
     from scribe_js_spark.operators.tables import extract_table_cells_fixed
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1484,49 +1314,37 @@ def _q_abbyy_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("xlsx_rt_md5", StringType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None:
-                    continue
-                matrices, flat = [], []
-                for page in res.pages:
-                    for table in page.tables:
-                        grid = extract_table_cells_fixed(page, table)
-                        t_n = len(matrices)
-                        matrices.append(grid)
-                        for r, row in enumerate(grid):
-                            for c, cell in enumerate(row):
-                                flat.append((t_n, r, c, cell))
-                rt = matrices_digest(read_xlsx_cells(
-                    write_xlsx(matrices)))
-                for t_n, r, c, cell in flat:
-                    out["url"].append(url)
-                    out["table_n"].append(t_n)
-                    out["row_n"].append(r)
-                    out["col_n"].append(c)
-                    out["cell"].append(cell)
-                    out["xlsx_rt_md5"].append(rt)
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        res = extract_document(bytes(html))
+        if res.error is not None:
+            return
+        matrices, flat = [], []
+        for page in res.pages:
+            for table in page.tables:
+                grid = extract_table_cells_fixed(page, table)
+                t_n = len(matrices)
+                matrices.append(grid)
+                for r, row in enumerate(grid):
+                    for c, cell in enumerate(row):
+                        flat.append((t_n, r, c, cell))
+        rt = matrices_digest(read_xlsx_cells(write_xlsx(matrices)))
+        for cell_row in flat:
+            yield (url, *cell_row, rt)
 
     df = spark.read.parquet(
         os.path.join(FIX_T2, "abbyy_table_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_list_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Numbering-scheme detection: enumerated lists authored at uniform
     pitch split into one paragraph per item."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
     from scribe_js_spark.extract import extract_document
     from scribe_js_spark.operators.layout_doc import analyze_layout_doc
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1536,41 +1354,30 @@ def _q_list_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("n_lines", LongType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None:
-                    continue
-                analyze_layout_doc(res.pages)
-                for page in res.pages:
-                    for pn, par in enumerate(page.pars):
-                        out["url"].append(url)
-                        out["page_n"].append(page.n)
-                        out["par_n"].append(pn)
-                        out["first_word"].append(
-                            par.lines[0].words[0].text
-                            if par.lines and par.lines[0].words else "")
-                        out["n_lines"].append(len(par.lines))
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        res = extract_document(bytes(html))
+        if res.error is not None:
+            return
+        analyze_layout_doc(res.pages)
+        for page in res.pages:
+            for pn, par in enumerate(page.pars):
+                yield (url, page.n, pn,
+                       par.lines[0].words[0].text
+                       if par.lines and par.lines[0].words else "",
+                       len(par.lines))
 
     df = spark.read.parquet(os.path.join(FIX_T2, "list_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_docx_numbering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DOCX numbering lifted to paragraph numbers (multilevel decimal
     with counter resets, paren-letter, lower-roman schemes)."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType)
+        BooleanType, LongType, StringType, StructField, StructType)
 
     from scribe_js_spark.extract import extract_document
-
-    from pyspark.sql.types import BooleanType
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1580,43 +1387,31 @@ def _q_docx_numbering(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("footnote_linked", BooleanType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None:
-                    continue
-                i = 0
-                for page in res.pages:
-                    for par in page.pars:
-                        linked = par.footnoteRefId is not None or any(
-                            w.footnoteParId is not None
-                            for line in par.lines for w in line.words)
-                        out["url"].append(url)
-                        out["par_n"].append(i)
-                        out["par_num"].append(par.parNum)
-                        out["par_type"].append(par.type)
-                        out["footnote_linked"].append(linked)
-                        i += 1
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        res = extract_document(bytes(html))
+        if res.error is not None:
+            return
+        pars = [par for page in res.pages for par in page.pars]
+        for i, par in enumerate(pars):
+            linked = par.footnoteRefId is not None or any(
+                w.footnoteParId is not None
+                for line in par.lines for w in line.words)
+            yield url, i, par.parNum, par.type, linked
 
     df = spark.read.parquet(os.path.join(FIX_T2, "docx_num_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_linenum_caseb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Case-B merged line numbers: the leading prefix word of each
     transcript line flags lineNum; a data-table index column (numeric
     first content word) must NOT flag."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType)
 
     from scribe_js_spark.extract import extract_document
     from scribe_js_spark.operators.layout_doc import analyze_layout_doc
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1625,39 +1420,30 @@ def _q_linenum_caseb(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("first_word_linenum", BooleanType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None:
-                    continue
-                analyze_layout_doc(res.pages)
-                for page in res.pages:
-                    for ln, line in enumerate(page.lines):
-                        out["url"].append(url)
-                        out["page_n"].append(page.n)
-                        out["line_n"].append(ln)
-                        out["first_word_linenum"].append(
-                            bool(line.words and line.words[0].lineNum))
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        res = extract_document(bytes(html))
+        if res.error is not None:
+            return
+        analyze_layout_doc(res.pages)
+        for page in res.pages:
+            for ln, line in enumerate(page.lines):
+                yield (url, page.n, ln,
+                       bool(line.words and line.words[0].lineNum))
 
     df = spark.read.parquet(
         os.path.join(FIX_T2, "linenum_b_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_toc_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense-TOC detection: dot-leader entry lines split into one
     paragraph per entry; prose pages stay fused."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
     from scribe_js_spark.extract import extract_document
     from scribe_js_spark.operators.layout_doc import analyze_layout_doc
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1666,24 +1452,17 @@ def _q_toc_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("n_lines", LongType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None:
-                    continue
-                analyze_layout_doc(res.pages)
-                for page in res.pages:
-                    for pn, par in enumerate(page.pars):
-                        out["url"].append(url)
-                        out["page_n"].append(page.n)
-                        out["par_n"].append(pn)
-                        out["n_lines"].append(len(par.lines))
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        res = extract_document(bytes(html))
+        if res.error is not None:
+            return
+        analyze_layout_doc(res.pages)
+        for page in res.pages:
+            for pn, par in enumerate(page.pars):
+                yield url, page.n, pn, len(par.lines)
 
     df = spark.read.parquet(os.path.join(FIX_T2, "toc_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_layout_roles2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1700,9 +1479,6 @@ def _q_layout_roles2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_ocr_pages_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-page OCR routing gates (selectOcrPages autoShallow/autoDeep
     + the PageStats predicates) over the mixed text/scan family."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType)
 
@@ -1717,6 +1493,7 @@ def _q_ocr_pages_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
         pdf_document_type,
         pdf_page_stats,
     )
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1729,32 +1506,22 @@ def _q_ocr_pages_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("has_broken_run", BooleanType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                data = bytes(html)
-                try:
-                    stats = pdf_page_stats(data)
-                    ptype = pdf_document_type(data)
-                except Exception:
-                    continue
-                sh = select_ocr_pages(stats, ptype, "autoShallow")
-                dp = select_ocr_pages(stats, ptype, "autoDeep")
-                for i, s in enumerate(stats):
-                    out["url"].append(url)
-                    out["page_n"].append(i)
-                    out["ocr_shallow"].append(sh[i])
-                    out["ocr_deep"].append(dp[i])
-                    out["is_scan"].append(is_scan_page(s))
-                    out["has_ocr_layer"].append(
-                        has_existing_ocr_layer(s))
-                    out["may_have_baked"].append(may_have_baked_text(s))
-                    out["has_broken_run"].append(has_broken_font_run(s))
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        data = bytes(html)
+        try:
+            stats = pdf_page_stats(data)
+            ptype = pdf_document_type(data)
+        except Exception:
+            return
+        sh = select_ocr_pages(stats, ptype, "autoShallow")
+        dp = select_ocr_pages(stats, ptype, "autoDeep")
+        for i, s in enumerate(stats):
+            yield (url, i, sh[i], dp[i], is_scan_page(s),
+                   has_existing_ocr_layer(s), may_have_baked_text(s),
+                   has_broken_font_run(s))
 
     df = spark.read.parquet(os.path.join(FIX_T2, "ocrsel_docs.parquet"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_pdf_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1830,14 +1597,12 @@ def _q_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-overlapping doc-wide phrase matches (getDocMatches): each
     document searched for its own first two words."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
     from scribe_js_spark.extract import extract_document
     from scribe_js_spark.operators.search import get_doc_matches
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1845,38 +1610,31 @@ def _q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("n_matches", LongType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {"url": [], "phrase": [], "n_matches": []}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None or not res.text:
-                    continue
-                toks = res.text.replace("\n", " ").split(" ")
-                phrase = " ".join(toks[:2]).lower()
-                out["url"].append(url)
-                out["phrase"].append(phrase)
-                out["n_matches"].append(
-                    len(get_doc_matches(phrase, res.pages)))
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        res = extract_document(bytes(html))
+        if res.error is not None or not res.text:
+            return
+        toks = res.text.replace("\n", " ").split(" ")
+        phrase = " ".join(toks[:2]).lower()
+        yield url, phrase, len(get_doc_matches(phrase, res.pages))
 
     # hocr family only: other families keep the same word stream, but
     # the oracle's text column spans page boundaries which word-window
     # search does not; single-page-safe families keep this exact.
     df = _corpus(spark, FIX_T2).filter(F.col("url").rlike("/(hocr|alto)/"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_page_angle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page skew angle from mean50 of baseline slopes (asin -> degrees),
     over the skew fixture family (slope 0.02 everywhere)."""
-    from typing import Iterator
+    import math
 
-    import pandas as pd
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
     from scribe_js_spark.extract import extract_document
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1884,36 +1642,26 @@ def _q_page_angle(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("angle_e6", LongType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        import math
-
-        for pdf in batches:
-            out = {"url": [], "page_n": [], "angle_e6": []}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None:
-                    continue
-                for page in res.pages:
-                    out["url"].append(url)
-                    out["page_n"].append(page.n)
-                    out["angle_e6"].append(math.floor(page.angle * 1e6))
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        res = extract_document(bytes(html))
+        if res.error is not None:
+            return
+        for page in res.pages:
+            yield url, page.n, math.floor(page.angle * 1e6)
 
     df = _corpus(spark, FIX_T2).filter(F.col("url").rlike("/hocr_skew/"))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_column_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column detection by left-edge peak clustering: 2 for the
     two-column family, 1 for plain hOCR (indent docs excluded — their
     hanging first lines legitimately form a second weak peak)."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from scribe_js_spark.extract import extract_document
     from scribe_js_spark.operators.layout_doc import detect_column_count
+    from scribe_js_spark.pipeline import per_document
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1921,23 +1669,17 @@ def _q_column_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("n_columns", LongType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {"url": [], "page_n": [], "n_columns": []}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None:
-                    continue
-                for page in res.pages:
-                    out["url"].append(url)
-                    out["page_n"].append(page.n)
-                    out["n_columns"].append(detect_column_count(page))
-            yield pd.DataFrame(out)
+    def rows(url, html):
+        res = extract_document(bytes(html))
+        if res.error is not None:
+            return
+        for page in res.pages:
+            yield url, page.n, detect_column_count(page)
 
     df = _corpus(spark, FIX_T2).filter(
         F.col("url").rlike("/(hocr|hocr_twocol)/")
         & (F.element_at(F.split("url", "/"), -1).cast("long") % 10 != 7))
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _q_corrupt_errors(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,7 +18,8 @@ explicit salting for skewed document sizes, per-partition
 checkpoint/resume, and extraction metrics.
 
 The heavy per-document operators are pure-Python functions (unit
-testable without Spark) wrapped in ``mapInPandas``; parallelism is
+testable without Spark); ``pipeline.per_document`` is the one
+Arrow-batched adapter that maps them over a DataFrame. Parallelism is
 across documents, matching the reference's worker-pool design
 (/root/reference/js/extractTextDir.js).
 """

@@ -17,6 +17,10 @@ from __future__ import annotations
 import argparse
 import sys
 
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from .pipeline import per_document
+
 
 def _spark(app: str):
     from pyspark.sql import SparkSession
@@ -39,32 +43,25 @@ def cmd_extract(args) -> int:
 
 
 def cmd_type(args) -> int:
-    import pyspark.sql.functions as F
-
     spark = _spark("scribe-type")
 
-    def fn(batches):
-        import pandas as pd
-
+    def rows(url, html):
         from .operators.detect import detect_document_format
         from .operators.pdf.parse import pdf_document_type
 
-        for pdf in batches:
-            out = {"url": [], "doc_type": []}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                data = bytes(html)
-                fmt = detect_document_format(data)
-                if fmt == "pdf":
-                    try:
-                        fmt = f"pdf:{pdf_document_type(data)}"
-                    except Exception:
-                        fmt = "pdf:error"
-                out["url"].append(url)
-                out["doc_type"].append(fmt)
-            yield pd.DataFrame(out)
+        data = bytes(html)
+        fmt = detect_document_format(data)
+        if fmt == "pdf":
+            try:
+                fmt = f"pdf:{pdf_document_type(data)}"
+            except Exception:
+                fmt = "pdf:error"
+        return [(url, fmt)]
 
+    schema = StructType([StructField("url", StringType()),
+                         StructField("doc_type", StringType())])
     df = spark.read.parquet(args.input).select("url", "html")
-    df.mapInPandas(fn, schema="url string, doc_type string") \
+    per_document(df, rows, schema) \
         .groupBy("doc_type").count().orderBy("doc_type").show(50, False)
     return 0
 
@@ -141,9 +138,7 @@ def cmd_tables(args) -> int:
 
     spark = _spark("scribe-tables")
 
-    def fn(batches):
-        import pandas as pd
-
+    def rows(url, html):
         from .export.xlsx import write_xlsx
         from .extract import extract_document
         from .operators.pdf.tables_pdf import columns_from_separators
@@ -151,42 +146,33 @@ def cmd_tables(args) -> int:
                                        render_table_markdown)
 
         os.makedirs(args.output, exist_ok=True)
-        for pdf in batches:
-            out = {"url": [], "n_tables": [], "n_cells": []}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                matrices = []
-                if res.error is None:
-                    for page in res.pages:
-                        for t in getattr(page, "tables", []) or []:
-                            cols = (columns_from_separators(
-                                t["bbox"], t["col_separators"])
-                                if t["method"] != "grid"
-                                and t.get("col_separators") else None)
-                            m = extract_table_rows(page, t["bbox"], cols)
-                            if m:
-                                matrices.append(m)
-                slug = url.rstrip("/").rsplit("/", 1)[-1] or "doc"
-                if matrices:
-                    with open(os.path.join(
-                            args.output, f"{slug}.xlsx"), "wb") as f:
-                        f.write(write_xlsx(matrices))
-                    md = "\n\n".join(
-                        render_table_markdown(m)
-                        for m in matrices)
-                    with open(os.path.join(
-                            args.output, f"{slug}.md"), "w") as f:
-                        f.write(md + "\n")
-                out["url"].append(url)
-                out["n_tables"].append(len(matrices))
-                out["n_cells"].append(
-                    sum(len(r) for m in matrices for r in m))
-            yield pd.DataFrame(out)
+        res = extract_document(bytes(html))
+        matrices = []
+        if res.error is None:
+            for page in res.pages:
+                for t in getattr(page, "tables", []) or []:
+                    cols = (columns_from_separators(
+                        t["bbox"], t["col_separators"])
+                        if t["method"] != "grid"
+                        and t.get("col_separators") else None)
+                    m = extract_table_rows(page, t["bbox"], cols)
+                    if m:
+                        matrices.append(m)
+        slug = url.rstrip("/").rsplit("/", 1)[-1] or "doc"
+        if matrices:
+            with open(os.path.join(args.output, f"{slug}.xlsx"), "wb") as f:
+                f.write(write_xlsx(matrices))
+            md = "\n\n".join(render_table_markdown(m) for m in matrices)
+            with open(os.path.join(args.output, f"{slug}.md"), "w") as f:
+                f.write(md + "\n")
+        return [(url, len(matrices),
+                 sum(len(r) for m in matrices for r in m))]
 
+    schema = StructType([StructField("url", StringType()),
+                         StructField("n_tables", LongType()),
+                         StructField("n_cells", LongType())])
     df = spark.read.parquet(args.input).select("url", "html")
-    res = df.mapInPandas(
-        fn, schema="url string, n_tables long, n_cells long")
-    res.orderBy("url").show(args.limit, False)
+    per_document(df, rows, schema).orderBy("url").show(args.limit, False)
     return 0
 
 

@@ -1,15 +1,13 @@
 """Spark wrappers for multi-layer comparison / consensus.
 
 The grouping key is the document (all pages of both layers live in one
-row), so the comparison is a zero-shuffle mapInPandas — the distributed
-analog of compareOCR's per-page worker jobs
+row), so the comparison is a zero-shuffle ``per_document`` map — the
+distributed analog of compareOCR's per-page worker jobs
 (/root/reference/js/recognizeConvert.js:221-276) with doc-level metric
 reduction (calcEvalStatsDoc, :139-160).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -19,6 +17,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .pipeline import per_document
 
 EVAL_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -64,74 +64,49 @@ def compare_layers(df: DataFrame, cand_col: str = "html_ocr_a",
     """Per-url eval metrics of a candidate layer vs a ground-truth
     layer: per-page compare, doc-level sums."""
 
-    def fn(batches: Iterator) -> Iterator:
-        import pandas as pd
+    keys = EVAL_SCHEMA.names[1:]
 
+    def rows(url, cand, truth):
         from .operators.compare import compare_ocr_page
 
-        keys = ("total", "correct", "incorrect", "missed", "extra",
-                "correctLowConf", "incorrectHighConf")
-        for pdf in batches:
-            out = {"url": []}
+        pages_a = _pages_of(cand)
+        pages_b = _pages_of(truth)
+        totals = dict.fromkeys(keys, 0)
+        for i in range(max(len(pages_a), len(pages_b))):
+            pa = pages_a[i] if i < len(pages_a) else None
+            pb = pages_b[i] if i < len(pages_b) else None
+            if pa is None or pb is None:
+                if pb is not None:
+                    totals["total"] += sum(len(l.words) for l in pb.lines)
+                    totals["missed"] += sum(len(l.words) for l in pb.lines)
+                continue
+            m = compare_ocr_page(pa, pb)
             for k in keys:
-                out[k] = []
-            for url, cand, truth in zip(
-                    pdf["url"], pdf[cand_col], pdf[truth_col]):
-                pages_a = _pages_of(cand)
-                pages_b = _pages_of(truth)
-                totals = dict.fromkeys(keys, 0)
-                for i in range(max(len(pages_a), len(pages_b))):
-                    pa = pages_a[i] if i < len(pages_a) else None
-                    pb = pages_b[i] if i < len(pages_b) else None
-                    if pa is None or pb is None:
-                        if pb is not None:
-                            totals["total"] += sum(
-                                len(l.words) for l in pb.lines)
-                            totals["missed"] += sum(
-                                len(l.words) for l in pb.lines)
-                        continue
-                    m = compare_ocr_page(pa, pb)
-                    for k in keys:
-                        totals[k] += m[k]
-                out["url"].append(url)
-                for k in keys:
-                    out[k].append(totals[k])
-            yield pd.DataFrame(out)
+                totals[k] += m[k]
+        return [(url, *totals.values())]
 
-    return df.select("url", cand_col, truth_col).mapInPandas(
-        fn, schema=EVAL_SCHEMA)
+    return per_document(
+        df.select("url", cand_col, truth_col), rows, EVAL_SCHEMA)
 
 
 def consensus_vote(df: DataFrame, base_col: str = "html_ocr_a",
                    comp_cols: tuple = ("html_truth", "html_ocr_b")) -> DataFrame:
     """Per-word consensus decisions for base vs N comparator layers."""
 
-    def fn(batches: Iterator) -> Iterator:
-        import pandas as pd
-
+    def rows(url, base, *comps):
         from .operators.compare import build_consensus_page
 
-        for pdf in batches:
-            out = {"url": [], "word_id": [], "text": [], "conf": []}
-            for row in pdf.itertuples(index=False):
-                url = row.url
-                base_pages = _pages_of(getattr(row, base_col))
-                comp_layers = [
-                    _pages_of(getattr(row, c)) for c in comp_cols]
-                for i, base_page in enumerate(base_pages):
-                    comps = [
-                        (layer[i] if i < len(layer) else None)
-                        for layer in comp_layers]
-                    res = build_consensus_page(base_page, comps)
-                    for d in res["decisions"]:
-                        out["url"].append(url)
-                        out["word_id"].append(d["word_id"])
-                        out["text"].append(d["text"])
-                        out["conf"].append(d["conf"])
-            yield pd.DataFrame(out)
+        base_pages = _pages_of(base)
+        comp_layers = [_pages_of(c) for c in comps]
+        for i, base_page in enumerate(base_pages):
+            res = build_consensus_page(base_page, [
+                (layer[i] if i < len(layer) else None)
+                for layer in comp_layers])
+            for d in res["decisions"]:
+                yield url, d["word_id"], d["text"], d["conf"]
 
-    return df.select("url", base_col, *comp_cols).mapInPandas(
-        fn, schema=CONSENSUS_SCHEMA)
+    return per_document(
+        df.select("url", base_col, *comp_cols), rows, CONSENSUS_SCHEMA)
 
 
 def merge_comb_layers(df: DataFrame, col_a: str = "html_legacy",
@@ -140,7 +115,8 @@ def merge_comb_layers(df: DataFrame, col_a: str = "html_legacy",
                       image_col: str = "page_image") -> DataFrame:
     """Comb-mode merge of two engine layers per document: page-pairwise
     comb_merge_page (compareOCRModule.js comb branch), emitting the
-    merged word stream. Zero-shuffle mapInPandas keyed by document.
+    merged word stream. Zero-shuffle ``per_document`` map keyed by
+    document.
 
     When the input carries ``image_col`` (PNG bytes of the binarized
     page scan, nullable), conflicts are additionally scored with the
@@ -148,41 +124,28 @@ def merge_comb_layers(df: DataFrame, col_a: str = "html_legacy",
     reference's visual comparison path."""
     has_image = image_col in df.columns
 
-    def fn(batches: Iterator) -> Iterator:
-        import pandas as pd
-
+    def rows(url, html_a, html_b, raw=None):
         from .operators.comb import comb_merge_page
 
-        for pdf in batches:
-            out = {f.name: [] for f in COMB_SCHEMA.fields}
-            for row in pdf.itertuples(index=False):
-                pages_a = _pages_of(getattr(row, col_a))
-                pages_b = _pages_of(getattr(row, col_b))
-                image = None
-                raw = getattr(row, image_col, None) if has_image else None
-                if raw is not None and len(raw) > 0:
-                    from .textops.multimodal import decode_png
+        pages_a = _pages_of(html_a)
+        pages_b = _pages_of(html_b)
+        image = None
+        if raw is not None and len(raw) > 0:
+            from .textops.multimodal import decode_png
 
-                    _w, _h, _c, px = decode_png(bytes(raw))
-                    image = px[:, :, 0]
-                for i, pa in enumerate(pages_a):
-                    if i >= len(pages_b):
-                        break
-                    merged = comb_merge_page(
-                        pa, pages_b[i],
-                        legacy_lstm_comb=legacy_lstm_comb,
-                        page_image=image if i == 0 else None)
-                    for line_n, line in enumerate(merged.lines):
-                        for word_n, w in enumerate(line.words):
-                            out["url"].append(row.url)
-                            out["line_n"].append(line_n)
-                            out["word_n"].append(word_n)
-                            out["word_id"].append(w.id)
-                            out["text"].append(w.text)
-                            out["conf"].append(int(w.conf))
-                            out["left"].append(int(w.bbox.left))
-                            out["right"].append(int(w.bbox.right))
-            yield pd.DataFrame(out)
+            _w, _h, _c, px = decode_png(bytes(raw))
+            image = px[:, :, 0]
+        for i, pa in enumerate(pages_a):
+            if i >= len(pages_b):
+                break
+            merged = comb_merge_page(
+                pa, pages_b[i],
+                legacy_lstm_comb=legacy_lstm_comb,
+                page_image=image if i == 0 else None)
+            for line_n, line in enumerate(merged.lines):
+                for word_n, w in enumerate(line.words):
+                    yield (url, line_n, word_n, w.id, w.text, int(w.conf),
+                           int(w.bbox.left), int(w.bbox.right))
 
     cols = ["url", col_a, col_b] + ([image_col] if has_image else [])
-    return df.select(*cols).mapInPandas(fn, schema=COMB_SCHEMA)
+    return per_document(df.select(*cols), rows, COMB_SCHEMA)

@@ -17,7 +17,6 @@ matching the reference's sorted-index quantile without
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 from ..functions.stats import quantile, round6
 from ..model import OcrPage
@@ -182,6 +181,8 @@ def font_observations_df(df, spark=None):
     from pyspark.sql.types import (
         DoubleType, StringType, StructField, StructType)
 
+    from ..pipeline import per_document
+
     schema = StructType([
         StructField("url", StringType()),
         StructField("family", StringType()),
@@ -190,25 +191,18 @@ def font_observations_df(df, spark=None):
         StructField("key", StringType()),
         StructField("value", DoubleType()),
     ])
+    keys = schema.names[1:]
 
-    def fn(batches: Iterator) -> Iterator:
-        import pandas as pd
-
+    def rows(url, html):
         from ..extract import extract_document
 
-        for pdf in batches:
-            out = {f.name: [] for f in schema.fields}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None:
-                    continue
-                for r in char_observations(res.pages):
-                    out["url"].append(url)
-                    for k in ("family", "style", "kind", "key", "value"):
-                        out[k].append(r[k])
-            yield pd.DataFrame(out)
+        res = extract_document(bytes(html))
+        if res.error is not None:
+            return []
+        return [(url, *(r[k] for k in keys))
+                for r in char_observations(res.pages)]
 
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def font_metrics_df(df):

@@ -116,25 +116,18 @@ def warc_to_table(df, bytes_col: str = "warc"):
         StructType,
     )
 
+    from ..pipeline import per_document
+
     schema = StructType([
         StructField("url", StringType()),
         StructField("warc_ts", StringType()),
         StructField("html", BinaryType()),
     ])
 
-    def fn(batches):
-        import pandas as pd
+    def rows(blob):
+        try:
+            yield from warc_records(bytes(blob))
+        except ValueError:
+            return  # malformed archive: skip the rest, never fatal
 
-        for pdf in batches:
-            out = {"url": [], "warc_ts": [], "html": []}
-            for blob in pdf[bytes_col]:
-                try:
-                    for uri, date, payload in warc_records(bytes(blob)):
-                        out["url"].append(uri)
-                        out["warc_ts"].append(date)
-                        out["html"].append(payload)
-                except ValueError:
-                    continue  # malformed archive: skip, never fatal
-            yield pd.DataFrame(out)
-
-    return df.select(bytes_col).mapInPandas(fn, schema=schema)
+    return per_document(df.select(bytes_col), rows, schema)

@@ -6,7 +6,7 @@ per-document extraction, per-file errors never abort the batch):
 
     input df (url, warc_ts, html, text, lang)
       -> [optional salt repartition by size bucket]     # skew handling
-      -> mapInPandas(extract)                           # one row = one doc,
+      -> per_document(extract)                          # one row = one doc,
                                                         # zero shuffles in the
                                                         # hot path
       -> (url, text, format, page_count, word_count, error[, spans])
@@ -36,7 +36,7 @@ Design notes for 100 TB scale:
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import pyspark.sql.functions as F
 from pyspark.errors import AnalysisException
@@ -46,6 +46,7 @@ from pyspark.sql.types import (
     BooleanType,
     DoubleType,
     IntegerType,
+    LongType,
     StringType,
     StructField,
     StructType,
@@ -117,29 +118,50 @@ def session_conf(builder):
     )
 
 
-def _extract_batches(batches, with_spans: bool):
-    import pandas as pd
+def per_document(df: DataFrame, rows_fn, schema: StructType) -> DataFrame:
+    """The one per-document adapter: every Python operator that maps
+    input rows to output rows goes through this Arrow-batched
+    ``mapInPandas``.
 
-    from .extract import extract_with_spans
+    ``rows_fn(*row)`` runs on each row of ``df``, its columns in order,
+    and returns an iterable of tuples in ``schema`` field order (none
+    to skip the row). Each batch's output frame is built from one list
+    per column, so pandas infers dtypes as it would from a list, except
+    that ``LongType`` columns become nullable ``Int64``:
+    ``pd.DataFrame({"a": [2**63 - 1, None]})`` goes through float64
+    and rounds the integer. A tuple of the wrong width raises
+    ValueError. Exceptions are not caught: a never-fatal operator
+    catches its own."""
+    names = schema.names
+    longs = {f.name for f in schema.fields if isinstance(f.dataType, LongType)}
 
-    for pdf in batches:
-        out = {
-            "url": [], "text": [], "format": [], "error": [],
-            "page_count": [], "word_count": [],
-        }
-        if with_spans:
-            out["spans"] = []
-        for url, html in zip(pdf["url"], pdf["html"]):
-            rec = extract_with_spans(bytes(html), with_spans=with_spans)
-            out["url"].append(url)
-            out["text"].append(rec["text"])
-            out["format"].append(rec["format"])
-            out["error"].append(rec["error"])
-            out["page_count"].append(rec["page_count"])
-            out["word_count"].append(rec["word_count"])
-            if with_spans:
-                out["spans"].append(rec["spans"])
-        yield pd.DataFrame(out)
+    def fn(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [out for row in zip(*(col for _, col in pdf.items()))
+                    for out in rows_fn(*row)]
+            cols = zip(*rows, strict=True) if rows else [()] * len(names)
+            yield pd.DataFrame({
+                name: pd.array(col, dtype="Int64") if name in longs
+                else list(col)
+                for name, col in zip(names, cols, strict=True)})
+
+    return df.mapInPandas(fn, schema=schema)
+
+
+def _extract_rows(with_spans: bool):
+    """``per_document`` row function of the extraction hot path."""
+    schema = EXTRACT_SPANS_SCHEMA if with_spans else EXTRACT_SCHEMA
+    keys = schema.names[1:]
+
+    def rows(url, html):
+        from .extract import extract_with_spans
+
+        rec = extract_with_spans(bytes(html), with_spans=with_spans)
+        return [(url, *(rec[k] for k in keys))]
+
+    return rows
 
 
 def salt_by_size(df: DataFrame, num_partitions: Optional[int] = None) -> DataFrame:
@@ -212,13 +234,11 @@ def extract_text(
     # parallelism gain; fine-grained row groups in the input file give
     # the scan its parallelism without moving bytes (round 6).
 
-    schema = EXTRACT_SPANS_SCHEMA if with_spans else EXTRACT_SCHEMA
-
-    # mapInArrow measured 22% slower than this (A/B: 16.3 s vs 13.3 s).
-    def fn(batches: Iterator) -> Iterator:
-        return _extract_batches(batches, with_spans)
-
-    small_res = small.mapInPandas(fn, schema=schema)
+    # mapInArrow measured 22% slower than mapInPandas (A/B: 16.3 s vs
+    # 13.3 s).
+    small_res = per_document(
+        small, _extract_rows(with_spans),
+        EXTRACT_SPANS_SCHEMA if with_spans else EXTRACT_SCHEMA)
     if big is None:
         return small_res
     big_res = _extract_paged(big, with_spans, num_partitions)
@@ -235,8 +255,6 @@ def _extract_paged(big: DataFrame, with_spans: bool,
     parse per page -> reassemble per url. Page texts concatenate with
     '\\n' (a page boundary is always a paragraph boundary in the reflow
     fold), so the result is byte-identical to the whole-document path."""
-    import pandas as pd
-
     split_schema = StructType([
         StructField("url", StringType()),
         StructField("format", StringType()),
@@ -246,33 +264,16 @@ def _extract_paged(big: DataFrame, with_spans: bool,
         StructField("error", StringType()),
     ])
 
-    def split_fn(batches: Iterator) -> Iterator:
+    def split_rows(url, html):
         from .extract import split_document_pages
 
-        for pdf in batches:
-            out = {"url": [], "format": [], "page_n": [], "page_str": [],
-                   "html": [], "error": []}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                fmt, pages, err = split_document_pages(bytes(html))
-                if err is not None or pages is None:
-                    # non-splittable or failed: single whole-doc row
-                    out["url"].append(url)
-                    out["format"].append(fmt)
-                    out["page_n"].append(-1)
-                    out["page_str"].append(None)
-                    out["html"].append(bytes(html))
-                    out["error"].append(err)
-                    continue
-                for i, p in enumerate(pages):
-                    out["url"].append(url)
-                    out["format"].append(fmt)
-                    out["page_n"].append(i)
-                    out["page_str"].append(p)
-                    out["html"].append(None)
-                    out["error"].append(None)
-            yield pd.DataFrame(out)
+        fmt, pages, err = split_document_pages(bytes(html))
+        if err is not None or pages is None:
+            # non-splittable or failed: single whole-doc row
+            return [(url, fmt, -1, None, bytes(html), err)]
+        return [(url, fmt, i, p, None, None) for i, p in enumerate(pages)]
 
-    pages_df = big.mapInPandas(split_fn, schema=split_schema)
+    pages_df = per_document(big, split_rows, split_schema)
     # The page shuffle: spread one document's pages across the cluster.
     pages_df = pages_df.repartition(
         *( [num_partitions] if num_partitions else [] ), "url", "page_n")
@@ -289,45 +290,25 @@ def _extract_paged(big: DataFrame, with_spans: bool,
         page_fields.append(StructField("spans", ArrayType(SPAN_STRUCT)))
     page_schema = StructType(page_fields)
 
-    def parse_fn(batches: Iterator) -> Iterator:
+    def parse_rows(url, fmt, page_n, page_str, html, err):
         from .extract import extract_single_page, extract_with_spans
 
-        for pdf in batches:
-            out = {"url": [], "format": [], "page_n": [], "text": [],
-                   "error": [], "word_count": []}
-            if with_spans:
-                out["spans"] = []
-            for url, fmt, page_n, page_str, html, err in zip(
-                    pdf["url"], pdf["format"], pdf["page_n"],
-                    pdf["page_str"], pdf["html"], pdf["error"]):
-                if err is not None:
-                    rec = {"text": None, "error": err, "word_count": 0,
-                           "spans": []}
-                    fmt_out = fmt
-                elif page_n == -1:
-                    whole = extract_with_spans(
-                        bytes(html), with_spans=with_spans)
-                    rec = {"text": whole["text"], "error": whole["error"],
-                           "word_count": whole["word_count"],
-                           "spans": whole["spans"]}
-                    fmt_out = whole["format"]
-                    # encode page_count via page_n for whole-doc rows
-                    page_n = -1 - whole["page_count"]
-                else:
-                    rec = extract_single_page(
-                        fmt, page_str, int(page_n), with_spans=with_spans)
-                    fmt_out = fmt
-                out["url"].append(url)
-                out["format"].append(fmt_out)
-                out["page_n"].append(int(page_n))
-                out["text"].append(rec["text"])
-                out["error"].append(rec["error"])
-                out["word_count"].append(rec["word_count"])
-                if with_spans:
-                    out["spans"].append(rec["spans"])
-            yield pd.DataFrame(out)
+        if err is not None:
+            rec = {"text": None, "error": err, "word_count": 0,
+                   "spans": []}
+        elif page_n == -1:
+            rec = extract_with_spans(bytes(html), with_spans=with_spans)
+            fmt = rec["format"]
+            # encode page_count via page_n for whole-doc rows
+            page_n = -1 - rec["page_count"]
+        else:
+            rec = extract_single_page(
+                fmt, page_str, int(page_n), with_spans=with_spans)
+        row = (url, fmt, int(page_n), rec["text"], rec["error"],
+               rec["word_count"])
+        return [row + (rec["spans"],) if with_spans else row]
 
-    parsed = pages_df.mapInPandas(parse_fn, schema=page_schema)
+    parsed = per_document(pages_df, parse_rows, page_schema)
 
     # Reassemble per document. Page texts sort by page_n; empty pages
     # (no lines) contribute nothing, matching writeText's skip.
@@ -396,10 +377,6 @@ def extract_par_roles(df: DataFrame) -> DataFrame:
     one row, so the cross-page pass (recurring header keys, folio
     sequences) needs no shuffle — the grouped-pass analog of the
     reference's main-thread analyzeLayout join (SURVEY.md §3.1 step 3)."""
-    import pandas as pd
-
-    from pyspark.sql.types import IntegerType
-
     schema = StructType([
         StructField("url", StringType()),
         StructField("page_n", IntegerType()),
@@ -407,25 +384,18 @@ def extract_par_roles(df: DataFrame) -> DataFrame:
         StructField("par_type", StringType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
+    def rows(url, html):
         from .extract import extract_document
         from .operators.layout_doc import analyze_layout_doc, collect_par_roles
 
-        for pdf in batches:
-            out = {"url": [], "page_n": [], "par_n": [], "par_type": []}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                res = extract_document(bytes(html))
-                if res.error is not None:
-                    continue
-                analyze_layout_doc(res.pages)
-                for r in collect_par_roles(res.pages):
-                    out["url"].append(url)
-                    out["page_n"].append(r["page_n"])
-                    out["par_n"].append(r["par_n"])
-                    out["par_type"].append(r["par_type"])
-            yield pd.DataFrame(out)
+        res = extract_document(bytes(html))
+        if res.error is not None:
+            return []
+        analyze_layout_doc(res.pages)
+        return [(url, r["page_n"], r["par_n"], r["par_type"])
+                for r in collect_par_roles(res.pages)]
 
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def _metric_aggs() -> list:
@@ -592,33 +562,25 @@ def write_searchable_pdfs(df: DataFrame, text_mode: str = "invis",
         StructField("error", StringType()),
     ])
 
-    def fn(batches: Iterator) -> Iterator:
-        import pandas as pd
-
+    def rows(url, html):
         from .export.pdf import write_text_pdf
         from .extract import extract_document
 
-        for pdf_batch in batches:
-            out = {"url": [], "pdf": [], "error": []}
-            for url, html in zip(pdf_batch["url"], pdf_batch["html"]):
-                blob = None
-                err = None
-                try:
-                    res = extract_document(bytes(html))
-                    if res.error is not None:
-                        err = res.error
-                    else:
-                        blob = write_text_pdf(
-                            res.pages, text_mode=text_mode,
-                            on_unencodable=on_unencodable)
-                except Exception as e:  # noqa: BLE001 — never-fatal
-                    err = f"write_failure: {e}"
-                out["url"].append(url)
-                out["pdf"].append(blob)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
+        blob = None
+        err = None
+        try:
+            res = extract_document(bytes(html))
+            if res.error is not None:
+                err = res.error
+            else:
+                blob = write_text_pdf(
+                    res.pages, text_mode=text_mode,
+                    on_unencodable=on_unencodable)
+        except Exception as e:  # noqa: BLE001 — never-fatal
+            err = f"write_failure: {e}"
+        return [(url, blob, err)]
 
-    return df.select("url", "html").mapInPandas(fn, schema=schema)
+    return per_document(df.select("url", "html"), rows, schema)
 
 
 def register_sql_functions(spark: SparkSession) -> None:

@@ -6,7 +6,7 @@ Spark-native analog of re-running `extractTextDir` over a growing
 directory:
 
 - ``stream_extract_text``: ``readStream`` over a corpus directory ->
-  the identical mapInPandas extraction -> ``writeStream`` with
+  the identical ``per_document`` extraction -> ``writeStream`` with
   checkpointing. With ``Trigger.AvailableNow`` this is an incremental
   batch: each invocation processes only files added since the last
   checkpoint (the Iceberg-snapshot incremental pattern from SURVEY.md
@@ -21,7 +21,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from .pipeline import EXTRACT_SCHEMA, _extract_batches
+from .pipeline import EXTRACT_SCHEMA, _extract_rows, per_document
 
 CORPUS_SCHEMA = ("url string, warc_ts timestamp, html binary, "
                  "text string, lang string")
@@ -42,10 +42,7 @@ def stream_extract_text(spark: SparkSession, input_dir: str,
         .select("url", "html")
     )
 
-    def fn(batches):
-        return _extract_batches(batches, with_spans=False)
-
-    extracted = stream.mapInPandas(fn, schema=EXTRACT_SCHEMA)
+    extracted = per_document(stream, _extract_rows(False), EXTRACT_SCHEMA)
     writer = (
         extracted.writeStream
         .format("parquet")

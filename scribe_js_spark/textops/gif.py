@@ -27,8 +27,10 @@ GIF_MAGICS = (b"GIF87a", b"GIF89a")
 _INTERLACE = [(0, 8), (4, 8), (2, 4), (1, 2)]
 
 
-def _lzw_decode_lsb(data: bytes, min_code_size: int) -> bytes:
-    """GIF LZW: LSB-first packing, clear = 2^n, EOI = 2^n + 1."""
+def _lzw_decode_lsb(data: bytes, min_code_size: int, limit: int) -> bytes:
+    """GIF LZW: LSB-first packing, clear = 2^n, EOI = 2^n + 1. Stops
+    once ``limit`` bytes are out: LZW expands up to about 2,700 times,
+    so a small stream could otherwise inflate to gigabytes."""
     clear = 1 << min_code_size
     eoi = clear + 1
     base = {i: bytes([i]) for i in range(clear)}
@@ -71,6 +73,8 @@ def _lzw_decode_lsb(data: bytes, min_code_size: int) -> bytes:
                     if next_code == (1 << width) and width < 12:
                         width += 1
             out += entry
+            if len(out) >= limit:
+                return bytes(out)
             prev = entry
     return bytes(out)
 
@@ -124,6 +128,16 @@ def _lzw_encode_lsb(data: bytes, min_code_size: int) -> bytes:
     return bytes(out)
 
 
+def _check_budget(w: int, h: int) -> None:
+    """Refuse a screen or frame whose RGB array would pass the shared
+    decode budget, before anything is allocated for it."""
+    from .multimodal import DECODE_BUDGET
+
+    if w * h * 3 > DECODE_BUDGET:
+        raise ValueError(f"gif: {w}x{h} exceeds the decode budget of "
+                         f"{DECODE_BUDGET} bytes")
+
+
 def decode_gif(data: bytes):
     """GIF -> (width, height, frames, delays_cs) where frames is a
     list of (h, w, 3) uint8 RGB ndarrays (palette-resolved;
@@ -137,6 +151,7 @@ def decode_gif(data: bytes):
     if len(data) < 13:
         raise ValueError("gif: truncated header")
     width, height, flags, _bg, _aspect = struct.unpack_from("<HHBBB", data, 6)
+    _check_budget(width, height)
     pos = 13
     gct = None
     if flags & 0x80:
@@ -163,6 +178,7 @@ def decode_gif(data: bytes):
         if block != 0x2C:
             raise ValueError(f"gif: unexpected block 0x{block:02x}")
         fx, fy, fw, fh, iflags = struct.unpack_from("<HHHHB", data, pos)
+        _check_budget(fw, fh)
         pos += 9
         pal = gct
         if iflags & 0x80:
@@ -181,7 +197,7 @@ def decode_gif(data: bytes):
             pos += 1 + sz
         pos += 1  # block terminator
         idx = np.frombuffer(
-            _lzw_decode_lsb(bytes(lzw), min_code), dtype=np.uint8)
+            _lzw_decode_lsb(bytes(lzw), min_code, fw * fh), dtype=np.uint8)
         if len(idx) < fw * fh:
             raise ValueError("gif: truncated image data")
         idx = idx[: fw * fh].reshape(fh, fw)

@@ -26,6 +26,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..pipeline import per_document
+
 PHASH_SCHEMA = StructType([
     StructField("media_id", LongType()),
     StructField("phash", LongType()),
@@ -69,41 +71,25 @@ def phash_images(df: DataFrame, id_col: str = "media_id",
                  bytes_col: str = "data") -> DataFrame:
     """binary image column -> 64-bit pHash per row (Arrow-batched)."""
 
-    def fn(batches):
-        import pandas as pd
-
+    def rows(mid, data):
         from .multimodal import _decode_pixels
 
-        for pdf in batches:
-            out = {"media_id": [], "phash": [], "error": []}
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                ph = None
-                err = None
-                try:
-                    ph = phash64_pixels(_decode_pixels(bytes(data)))
-                    # store as signed 64-bit
-                    if ph >= 1 << 63:
-                        ph -= 1 << 64
-                except NotImplementedError as e:
-                    err = f"not_implemented: {e}"
-                except Exception as e:  # noqa: BLE001 — never-fatal contract
-                    err = f"decode_failure: {e}"
-                out["media_id"].append(int(mid))
-                out["phash"].append(ph)
-                out["error"].append(err)
-            # the phash column must be built as nullable Int64 UP
-            # FRONT: pd.DataFrame([int, None]) coerces to float64 in
-            # the constructor and silently rounds 63-bit hashes to
-            # multiples of 1024
-            yield pd.DataFrame({
-                "media_id": out["media_id"],
-                "phash": pd.array(out["phash"], dtype="Int64"),
-                "error": out["error"],
-            })
+        ph = None
+        err = None
+        try:
+            ph = phash64_pixels(_decode_pixels(bytes(data)))
+            # store as signed 64-bit
+            if ph >= 1 << 63:
+                ph -= 1 << 64
+        except NotImplementedError as e:
+            err = f"not_implemented: {e}"
+        except Exception as e:  # noqa: BLE001 — never-fatal contract
+            err = f"decode_failure: {e}"
+        return [(int(mid), ph, err)]
 
-    return df.select(
+    return per_document(df.select(
         df[id_col].alias("media_id"), df[bytes_col].alias("data")
-    ).mapInPandas(fn, schema=PHASH_SCHEMA)
+    ), rows, PHASH_SCHEMA)
 
 
 def image_near_dups(df: DataFrame, max_distance: int = 3,

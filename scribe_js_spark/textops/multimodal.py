@@ -1,9 +1,9 @@
 """Multimodal column plumbing: opaque binary media + typed metadata.
 
 Images/audio/video ride as ``binary`` columns with a struct of metadata;
-decode / feature-extract run as Arrow-batched pandas UDFs over
-``mapInPandas`` — schema, batching and partition behavior are real and
-tested, and so is the PNG path: a from-scratch decoder (IHDR/IDAT
+decode / feature-extract run as Arrow-batched pandas UDFs through
+``pipeline.per_document`` — schema, batching and partition behavior are
+real and tested, and so is the PNG path: a from-scratch decoder (IHDR/IDAT
 chunk walk, zlib inflate, the five scanline filters vectorized with
 numpy) produces true pixel statistics with no imaging library, as is
 the JPEG path (textops/jpeg.py: sequential + progressive, grayscale
@@ -34,7 +34,6 @@ from __future__ import annotations
 import math
 import struct
 import zlib
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -45,6 +44,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..pipeline import per_document
 
 MEDIA_META_SCHEMA = StructType([
     StructField("media_id", LongType()),
@@ -68,12 +69,13 @@ _RIFF_MAGIC = b"RIFF"
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
-#: Most bytes one PNG may decode to, as filtered scanlines or as its
-#: pixel array. Both sizes follow from the IHDR alone, so a small file
-#: could otherwise claim gigabytes: past the budget decode_png raises
-#: ValueError before it inflates or allocates anything. A 600 dpi
-#: letter-size RGBA page is about 135 MB.
-PNG_DECODE_BUDGET = 256 * 1024 * 1024
+#: Most bytes one image may decode to. PNG (filtered scanlines or pixel
+#: array), RLE BMP and GIF (screen or frame, as RGB) take their sizes
+#: from the header alone, so a small file could otherwise claim
+#: gigabytes: past the budget the decoder raises ValueError before it
+#: inflates or allocates anything. A 600 dpi letter-size RGBA page is
+#: about 135 MB.
+DECODE_BUDGET = 256 * 1024 * 1024
 
 # Adam7 pass geometry: (x0, y0, dx, dy) per pass (PNG spec 4.5.2).
 _ADAM7 = [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
@@ -186,9 +188,9 @@ def decode_png(data: bytes):
         if pw > 0 and ph > 0:
             passes.append((x0, y0, dx, dy, pw, ph))
     expected = sum(ph * (rowbytes(pw) + 1) for *_, pw, ph in passes)
-    if max(expected, width * height * channels * sb) > PNG_DECODE_BUDGET:
+    if max(expected, width * height * channels * sb) > DECODE_BUDGET:
         raise ValueError(f"PNG {width}x{height} exceeds the decode "
-                         f"budget of {PNG_DECODE_BUDGET} bytes")
+                         f"budget of {DECODE_BUDGET} bytes")
     # Inflate only the bytes the scanlines take. A stream that ends
     # before its terminator is truncated, as zlib.decompress reports.
     inflater = zlib.decompressobj()
@@ -537,6 +539,10 @@ def decode_bmp(data: bytes):
     if compression in (1, 2):  # RLE8 / RLE4
         if bpp != (8 if compression == 1 else 4):
             raise ValueError(f"bmp: RLE{compression} with {bpp} bpp")
+        # RLE runs can claim any size: bound the index and RGB arrays
+        if w * h * 3 > DECODE_BUDGET:
+            raise ValueError(f"bmp: {w}x{h} exceeds the decode budget "
+                             f"of {DECODE_BUDGET} bytes")
         idx = _bmp_rle_indices(data, px_off, w, h,
                                four_bit=compression == 2)
         return w, h, 3, palette()[idx[::-1]]  # RLE is bottom-up only
@@ -982,31 +988,23 @@ def decode_media(df: DataFrame, id_col: str = "media_id",
                  bytes_col: str = "data") -> DataFrame:
     """binary column -> typed metadata rows via Arrow-batched pandas UDF."""
 
-    def fn(batches: Iterator) -> Iterator:
-        import pandas as pd
+    keys = MEDIA_META_SCHEMA.names[1:]
 
-        for pdf in batches:
-            out = {f.name: [] for f in MEDIA_META_SCHEMA.fields}
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    rec = _decode_one(bytes(data))
-                except NotImplementedError as e:
-                    rec = _media_rec(n_bytes=len(bytes(data)),
-                                     error=f"not_implemented: {e}")
-                except (ValueError, struct.error, IndexError,
-                        zlib.error, KeyError, OverflowError) as e:
-                    rec = _media_rec(n_bytes=len(bytes(data)),
-                                     error=f"decode_failure: {e}")
-                out["media_id"].append(int(mid))
-                for key in ("kind", "width", "height", "n_bytes",
-                            "mean_byte", "sample_rate", "duration_ms",
-                            "n_frames", "error"):
-                    out[key].append(rec[key])
-            yield pd.DataFrame(out)
+    def rows(mid, data):
+        try:
+            rec = _decode_one(bytes(data))
+        except NotImplementedError as e:
+            rec = _media_rec(n_bytes=len(bytes(data)),
+                             error=f"not_implemented: {e}")
+        except (ValueError, struct.error, IndexError,
+                zlib.error, KeyError, OverflowError) as e:
+            rec = _media_rec(n_bytes=len(bytes(data)),
+                             error=f"decode_failure: {e}")
+        return [(int(mid), *(rec[k] for k in keys))]
 
-    return df.select(
+    return per_document(df.select(
         df[id_col].alias("media_id"), df[bytes_col].alias("data")
-    ).mapInPandas(fn, schema=MEDIA_META_SCHEMA)
+    ), rows, MEDIA_META_SCHEMA)
 
 
 RESIZE_SCHEMA = StructType([
@@ -1053,47 +1051,38 @@ def resize_images(df: DataFrame, target_w: int, target_h: int,
     if method not in ("nearest", "box"):
         raise ValueError(f"resize method {method}")
 
-    def fn(batches: Iterator) -> Iterator:
+    def rows(mid, data):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            out = {f.name: [] for f in RESIZE_SCHEMA.fields}
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                err = None
-                mean = None
-                try:
-                    px = _decode_pixels(bytes(data))
-                    h, w = px.shape[:2]
-                    if method == "nearest":
-                        ys = (np.arange(target_h) * h) // target_h
-                        xs = (np.arange(target_w) * w) // target_w
-                        res = px[ys][:, xs]
-                    else:
-                        fy, fx = h // target_h, w // target_w
-                        if fy < 1 or fx < 1 or h % target_h or w % target_w:
-                            raise ValueError(
-                                "box resize needs integer downscale")
-                        res = px[: fy * target_h, : fx * target_w]
-                        res = res.reshape(
-                            target_h, fy, target_w, fx, -1).mean(
-                            axis=(1, 3))
-                    mean = float(res.mean())
-                except NotImplementedError as e:
-                    err = f"not_implemented: {e}"
-                except (ValueError, struct.error, IndexError,
-                        zlib.error, KeyError, OverflowError) as e:
-                    err = f"decode_failure: {e}"
-                out["media_id"].append(int(mid))
-                out["width"].append(target_w if err is None else None)
-                out["height"].append(target_h if err is None else None)
-                out["mean_byte"].append(mean)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
+        err = None
+        mean = None
+        try:
+            px = _decode_pixels(bytes(data))
+            h, w = px.shape[:2]
+            if method == "nearest":
+                ys = (np.arange(target_h) * h) // target_h
+                xs = (np.arange(target_w) * w) // target_w
+                res = px[ys][:, xs]
+            else:
+                fy, fx = h // target_h, w // target_w
+                if fy < 1 or fx < 1 or h % target_h or w % target_w:
+                    raise ValueError("box resize needs integer downscale")
+                res = px[: fy * target_h, : fx * target_w]
+                res = res.reshape(
+                    target_h, fy, target_w, fx, -1).mean(axis=(1, 3))
+            mean = float(res.mean())
+        except NotImplementedError as e:
+            err = f"not_implemented: {e}"
+        except (ValueError, struct.error, IndexError,
+                zlib.error, KeyError, OverflowError) as e:
+            err = f"decode_failure: {e}"
+        ok = err is None
+        return [(int(mid), target_w if ok else None,
+                 target_h if ok else None, mean, err)]
 
-    return df.select(
+    return per_document(df.select(
         df[id_col].alias("media_id"), df[bytes_col].alias("data")
-    ).mapInPandas(fn, schema=RESIZE_SCHEMA)
+    ), rows, RESIZE_SCHEMA)
 
 
 EXIF_SCHEMA = StructType([
@@ -1122,61 +1111,40 @@ def image_exif(df: DataFrame, id_col: str = "media_id",
     each scrubbed stream is re-decoded and compared against the
     original's pixels (1 = byte-identical pixels, 0 = not, NULL =
     either side failed to decode) — the audit used by the fixture
-    oracle; leave it off in bulk runs. Same Arrow/mapInPandas shape
+    oracle; leave it off in bulk runs. Same ``per_document`` shape
     and never-fatal contract as :func:`decode_media`."""
 
-    def fn(batches: Iterator) -> Iterator:
+    def rows(mid, data):
         import numpy as np
-        import pandas as pd
 
         from .exif import parse_exif, strip_exif
 
-        for pdf in batches:
-            out = {f.name: [] for f in EXIF_SCHEMA.fields}
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                data = bytes(data)
+        data = bytes(data)
+        try:
+            info = parse_exif(data)
+            scrubbed = strip_exif(data)
+            equal = None
+            if verify_scrub:
                 try:
-                    info = parse_exif(data)
-                    scrubbed = strip_exif(data)
+                    from .jpeg import decode_jpeg
+
+                    equal = int(np.array_equal(
+                        decode_jpeg(data), decode_jpeg(scrubbed)))
+                except (NotImplementedError, ValueError,
+                        struct.error, IndexError, KeyError):
                     equal = None
-                    if verify_scrub:
-                        try:
-                            from .jpeg import decode_jpeg
+            lat, lon = info["gps_lat"], info["gps_lon"]
+            return [(
+                int(mid), int(info["has_exif"]), info["orientation"],
+                info["make"], info["model"], info["datetime"],
+                int(info["has_gps"]),
+                int(math.floor(lat * 1e6)) if lat is not None else None,
+                int(math.floor(lon * 1e6)) if lon is not None else None,
+                len(data), len(scrubbed), equal)]
+        except (ValueError, struct.error, IndexError,
+                KeyError, zlib.error, OverflowError):
+            return [(int(mid), *[None] * 8, len(data), None, None)]
 
-                            equal = int(np.array_equal(
-                                decode_jpeg(data),
-                                decode_jpeg(scrubbed)))
-                        except (NotImplementedError, ValueError,
-                                struct.error, IndexError, KeyError):
-                            equal = None
-                    rec = {
-                        "has_exif": int(info["has_exif"]),
-                        "orientation": info["orientation"],
-                        "make": info["make"],
-                        "model": info["model"],
-                        "datetime": info["datetime"],
-                        "has_gps": int(info["has_gps"]),
-                        "gps_lat_e6": (
-                            int(math.floor(info["gps_lat"] * 1e6))
-                            if info["gps_lat"] is not None else None),
-                        "gps_lon_e6": (
-                            int(math.floor(info["gps_lon"] * 1e6))
-                            if info["gps_lon"] is not None else None),
-                        "n_bytes": len(data),
-                        "n_bytes_scrubbed": len(scrubbed),
-                        "scrub_decodes_equal": equal,
-                    }
-                except (ValueError, struct.error, IndexError,
-                        KeyError, zlib.error, OverflowError):
-                    rec = {f.name: None for f in EXIF_SCHEMA.fields
-                           if f.name != "media_id"}
-                    rec["n_bytes"] = len(data)
-                out["media_id"].append(int(mid))
-                for f in EXIF_SCHEMA.fields:
-                    if f.name != "media_id":
-                        out[f.name].append(rec[f.name])
-            yield pd.DataFrame(out)
-
-    return df.select(
+    return per_document(df.select(
         df[id_col].alias("media_id"), df[bytes_col].alias("data")
-    ).mapInPandas(fn, schema=EXIF_SCHEMA)
+    ), rows, EXIF_SCHEMA)

@@ -396,7 +396,7 @@ def test_decode_media_net_catches_all_codec_mutations():
     import struct
     import zlib
 
-    from scribe_js_spark.textops.gif import encode_gif
+    from scribe_js_spark.textops.gif import _lzw_encode_lsb, encode_gif
     from scribe_js_spark.textops.jpeg import encode_jpeg_gray
     from scribe_js_spark.textops.jpx_encode import encode_jpx
     from scribe_js_spark.textops.multimodal import (
@@ -464,6 +464,22 @@ def test_decode_media_net_catches_all_codec_mutations():
     huge = png((65535, 65535, 8, 0, 0, 0, 1), zlib.compress(bytes(12)))
     with pytest.raises(ValueError, match="decode budget"):
         _decode_one(huge)
+
+    # A 1,080-byte RLE8 BMP whose header claims 65535x65535 (12 GiB of
+    # RGB) over a lone end-of-bitmap escape, and a 35-byte GIF whose
+    # 65535x65535 logical screen would be the canvas of its 1x1 frame.
+    rle_bmp = (b"BM" + struct.pack("<IHHI", 1080, 0, 0, 1078)
+               + struct.pack("<IiiHHIIiiII", 40, 65535, 65535, 1, 8, 1,
+                             0, 0, 0, 0, 0)
+               + bytes(1024) + b"\x00\x01")
+    lzw = _lzw_encode_lsb(b"\x00", 2)
+    gif = (b"GIF89a" + struct.pack("<HHBBB", 65535, 65535, 0x80, 0, 0)
+           + bytes(6) + b"\x2c" + struct.pack("<HHHHB", 0, 0, 1, 1, 0)
+           + bytes([2, len(lzw)]) + lzw + b"\x00\x3b")
+    assert (len(rle_bmp), len(gif)) == (1080, 35)
+    for bomb in (rle_bmp, gif):
+        with pytest.raises(ValueError, match="decode budget"):
+            _decode_one(bomb)
 
 
 @_capped

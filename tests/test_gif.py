@@ -20,7 +20,17 @@ def test_lsb_lzw_roundtrip_width_growth():
     rng = np.random.RandomState(9)
     for mcs in (2, 4, 8):
         data = rng.randint(0, 1 << mcs, size=60000).astype(np.uint8).tobytes()
-        assert _lzw_decode_lsb(_lzw_encode_lsb(data, mcs), mcs) == data
+        assert _lzw_decode_lsb(
+            _lzw_encode_lsb(data, mcs), mcs, len(data) + 1) == data
+
+
+def test_lsb_lzw_decode_stops_at_limit():
+    """A run of zeros expands one table entry longer per code: the
+    decoder stops within one entry of the limit, not at the end."""
+    enc = _lzw_encode_lsb(bytes(1 << 20), 8)
+    assert _lzw_decode_lsb(enc, 8, 1 << 20) == bytes(1 << 20)
+    out = _lzw_decode_lsb(enc, 8, 100)
+    assert 100 <= len(out) < 100 + 4096 and not any(out)
 
 
 @pytest.mark.parametrize("interlace", [False, True])

@@ -9,6 +9,7 @@ import sys
 import pandas as pd
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from scribe_js_spark.fixtures import make_corpus_pandas, make_corrupt_rows
 from scribe_js_spark.pipeline import (
@@ -16,6 +17,7 @@ from scribe_js_spark.pipeline import (
     extract_spans,
     extract_text,
     extraction_metrics,
+    per_document,
     run_extraction_job,
 )
 
@@ -256,6 +258,59 @@ def test_daemon_import_starts_no_manager(monkeypatch):
     importlib.import_module("scribe_js_spark.daemon")
     assert started == []
     assert gc.get_freeze_count() == frozen
+
+
+_KV = StructType([StructField("k", StringType()),
+                  StructField("v", LongType())])
+
+
+def test_per_document_long_columns_round_trip_exactly(spark):
+    # One call yields all three rows, so they share a batch: a float64
+    # column would read 2**63 - 1 back as 9223372036854775808.
+    vals = [2**63 - 1, -2**63, None]
+    df = spark.createDataFrame([("a",)], "k string")
+    out = per_document(df, lambda k: [(k, v) for v in vals], _KV).collect()
+    assert [r.v for r in out] == vals
+
+
+def test_per_document_rejects_wrong_width_tuple(spark):
+    df = spark.createDataFrame([("a",)], "k string")
+    with pytest.raises(Exception, match="ValueError"):
+        per_document(df, lambda k: [(k,)], _KV).collect()
+
+
+def test_per_document_empty_batch_keeps_schema_columns(spark):
+    df = spark.createDataFrame([("a",), ("b",)], "k string").coalesce(1)
+    out = per_document(df, lambda k: [], _KV).toPandas()
+    assert len(out) == 0 and list(out.columns) == ["k", "v"]
+
+
+def test_per_document_passes_columns_positionally(spark):
+    df = spark.createDataFrame([(7, "x", b"\x01\x02")],
+                               "id long, name string, blob binary")
+    out = per_document(
+        df, lambda i, n, b: [(f"{i}:{n}:{bytes(b).hex()}", i)], _KV)
+    assert [tuple(r) for r in out.collect()] == [("7:x:0102", 7)]
+
+
+def test_per_document_is_the_only_map_in_pandas():
+    """Every per-row Python operator goes through pipeline.per_document:
+    a hand-written mapInPandas batch loop anywhere else fails here."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    found = []
+    for path in [root / "__spark_entry__.py",
+                 *sorted((root / "scribe_js_spark").rglob("*.py"))]:
+        for top in ast.parse(path.read_text()).body:
+            found += [
+                (path.relative_to(root).as_posix(), getattr(top, "name", None))
+                for node in ast.walk(top)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "mapInPandas"]
+    assert found == [("scribe_js_spark/pipeline.py", "per_document")]
 
 
 def test_page_split_path_byte_identical(spark, corpus_df):
