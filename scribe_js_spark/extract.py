@@ -21,14 +21,13 @@ from .operators.abbyy import convert_page_abbyy
 from .operators.alto import convert_page_alto
 from .operators.detect import detect_document_format, split_pages
 from .operators.hocr import convert_page_hocr
-from .operators.paragraphs import assign_paragraphs
 from .operators.plaintext import convert_doc_text
 from .operators.stext import convert_page_stext
 
 #: Page converters by format: the one dispatch for formats that split
-#: into per-page strings, in whole-document and single-page extraction
-#: alike. Custom-recognition-model analog of the reference's pluggable
-#: ``convertPage`` registry (recognizeConvert.js:786-817).
+#: into per-page strings. Custom-recognition-model analog of the
+#: reference's pluggable ``convertPage`` registry
+#: (recognizeConvert.js:786-817).
 PAGE_CONVERTERS = {
     "hocr": convert_page_hocr,
     "abbyy": convert_page_abbyy,
@@ -40,7 +39,7 @@ PAGE_CONVERTERS = {
 def register_converter(fmt: str, fn) -> None:
     """Register ``fn(page_str, n) -> (OcrPage, lang_set)`` for ``fmt``.
     A built-in format name (hocr, abbyy, alto, stext) replaces the
-    built-in converter in whole-document and single-page extraction."""
+    built-in converter."""
     PAGE_CONVERTERS[fmt] = fn
 
 
@@ -166,63 +165,6 @@ def collect_spans(pages: list[OcrPage]) -> list[dict]:
                     "par_type": par_type,
                 })
     return rows
-
-
-#: Formats whose documents split into independent per-page strings —
-#: the page-level fan-out path for huge documents (the reference
-#: parallelizes page parse jobs the same way, extractPDFText.js:36-48).
-PAGE_SPLITTABLE = ("hocr", "abbyy", "alto", "stext")
-
-
-def split_document_pages(data: bytes) -> tuple:
-    """(fmt, [page_str, ...], error) — cheap narrow pre-stage for the
-    page-fan-out path. Non-splittable formats return pages=None."""
-    try:
-        if data[:2] == b"\x1f\x8b":
-            import gzip as _gzip
-
-            try:
-                data = _gzip.decompress(data)
-            except Exception:
-                return None, None, "parse_failure: bad gzip wrapper"
-        fmt = detect_document_format(data)
-        if fmt is None:
-            return None, None, "unsupported_format"
-        if fmt not in PAGE_SPLITTABLE:
-            return fmt, None, None
-        s = data.decode("utf-8", errors="replace")
-        return fmt, split_pages(s, fmt), None
-    except Exception:
-        tb = traceback.format_exc(limit=2)
-        return None, None, f"parse_failure: {tb.splitlines()[-1][:200]}"
-
-
-def extract_single_page(fmt: str, page_str: str, page_n: int,
-                        with_spans: bool = True) -> dict:
-    """Extract one page (true page index preserved for positional word
-    ids); page text uses reflow semantics — concatenating non-empty page
-    texts with '\\n' reproduces the whole-document writeText fold, since
-    a page boundary is always a paragraph boundary."""
-    try:
-        if fmt not in PAGE_SPLITTABLE:
-            raise ValueError(f"not page-splittable: {fmt}")
-        page, _ = PAGE_CONVERTERS[fmt](page_str, page_n)
-        if not page.pars and page.lines:
-            assign_paragraphs(page, page.angle or 0)
-        pars_text = [
-            " ".join(w.text for line in par.lines for w in line.words)
-            for par in page.pars
-        ]
-        text = "\n".join(pars_text)
-        n_words = sum(len(line.words) for line in page.lines)
-        spans = collect_spans([page]) if with_spans else []
-        return {"text": text, "error": None,
-                "word_count": n_words, "spans": spans}
-    except Exception:
-        tb = traceback.format_exc(limit=2)
-        return {"text": None,
-                "error": f"parse_failure: {tb.splitlines()[-1][:200]}",
-                "word_count": 0, "spans": []}
 
 
 @contextmanager

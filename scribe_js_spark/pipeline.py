@@ -184,48 +184,24 @@ def salt_by_size(df: DataFrame, num_partitions: Optional[int] = None) -> DataFra
     return salted.drop("_size_bucket")
 
 
-# Page-level fan-out is opt-in: the two-branch plan scans the input
-# twice (a byte-length filter cannot push into parquet), so it only pays
-# off when single-document parse time rivals a whole partition's budget
-# (multi-thousand-page documents). Measured on the bench corpus the
-# whole-doc path wins up to ~5MB/doc.
-PAGE_SPLIT_BYTES_DEFAULT = None
-
-
 def extract_text(
     df: DataFrame,
     with_spans: bool = False,
     salt: bool = True,
     num_partitions: Optional[int] = None,
     resume_against: Optional[DataFrame] = None,
-    page_split_bytes: Optional[int] = PAGE_SPLIT_BYTES_DEFAULT,
 ) -> DataFrame:
     """Run the extraction pipeline over an input DataFrame.
 
     ``resume_against``: a DataFrame of already-committed output (must
     contain ``url``); those documents are skipped via a left-anti join —
     the checkpoint/resume contract of the north rule.
-
-    ``page_split_bytes``: documents larger than this take the page-level
-    fan-out path — split into per-page strings (narrow), shuffle pages
-    across the cluster, parse per page, reassemble per url. This bounds
-    the straggler tail at one *page*, not one 500-page document, which
-    is what makes N->4N scaling hold on skewed corpora. Small documents
-    keep the zero-shuffle whole-document path. None disables splitting.
     """
     work = df.select("url", "html")
     if resume_against is not None:
         work = work.join(resume_against.select("url"), on="url", how="left_anti")
-
-    if page_split_bytes is None:
-        small, big = work, None
-    else:
-        size = F.length("html")
-        small = work.filter(size <= page_split_bytes)
-        big = work.filter(size > page_split_bytes)
-
     if salt:
-        small = salt_by_size(small, num_partitions)
+        work = salt_by_size(work, num_partitions)
     # Unsalted path stays zero-shuffle on purpose: an A/B with a
     # round-robin spread_input() here measured 2.3x SLOWER on the
     # bench corpus (19-20 s vs 8 s) — repartitioning multi-MB binary
@@ -236,128 +212,9 @@ def extract_text(
 
     # mapInArrow measured 22% slower than mapInPandas (A/B: 16.3 s vs
     # 13.3 s).
-    small_res = per_document(
-        small, _extract_rows(with_spans),
+    return per_document(
+        work, _extract_rows(with_spans),
         EXTRACT_SPANS_SCHEMA if with_spans else EXTRACT_SCHEMA)
-    if big is None:
-        return small_res
-    big_res = _extract_paged(big, with_spans, num_partitions)
-    return small_res.unionByName(big_res)
-
-
-def _span_free(fields):
-    return [f for f in fields if f.name != "spans"]
-
-
-def _extract_paged(big: DataFrame, with_spans: bool,
-                   num_partitions: Optional[int]) -> DataFrame:
-    """Page-level fan-out for huge documents: split -> shuffle pages ->
-    parse per page -> reassemble per url. Page texts concatenate with
-    '\\n' (a page boundary is always a paragraph boundary in the reflow
-    fold), so the result is byte-identical to the whole-document path."""
-    split_schema = StructType([
-        StructField("url", StringType()),
-        StructField("format", StringType()),
-        StructField("page_n", IntegerType()),
-        StructField("page_str", StringType()),
-        StructField("html", df_binary_type()),
-        StructField("error", StringType()),
-    ])
-
-    def split_rows(url, html):
-        from .extract import split_document_pages
-
-        fmt, pages, err = split_document_pages(bytes(html))
-        if err is not None or pages is None:
-            # non-splittable or failed: single whole-doc row
-            return [(url, fmt, -1, None, bytes(html), err)]
-        return [(url, fmt, i, p, None, None) for i, p in enumerate(pages)]
-
-    pages_df = per_document(big, split_rows, split_schema)
-    # The page shuffle: spread one document's pages across the cluster.
-    pages_df = pages_df.repartition(
-        *( [num_partitions] if num_partitions else [] ), "url", "page_n")
-
-    page_fields = [
-        StructField("url", StringType()),
-        StructField("format", StringType()),
-        StructField("page_n", IntegerType()),
-        StructField("text", StringType()),
-        StructField("error", StringType()),
-        StructField("word_count", IntegerType()),
-    ]
-    if with_spans:
-        page_fields.append(StructField("spans", ArrayType(SPAN_STRUCT)))
-    page_schema = StructType(page_fields)
-
-    def parse_rows(url, fmt, page_n, page_str, html, err):
-        from .extract import extract_single_page, extract_with_spans
-
-        if err is not None:
-            rec = {"text": None, "error": err, "word_count": 0,
-                   "spans": []}
-        elif page_n == -1:
-            rec = extract_with_spans(bytes(html), with_spans=with_spans)
-            fmt = rec["format"]
-            # encode page_count via page_n for whole-doc rows
-            page_n = -1 - rec["page_count"]
-        else:
-            rec = extract_single_page(
-                fmt, page_str, int(page_n), with_spans=with_spans)
-        row = (url, fmt, int(page_n), rec["text"], rec["error"],
-               rec["word_count"])
-        return [row + (rec["spans"],) if with_spans else row]
-
-    parsed = per_document(pages_df, parse_rows, page_schema)
-
-    # Reassemble per document. Page texts sort by page_n; empty pages
-    # (no lines) contribute nothing, matching writeText's skip.
-    aggs = [
-        F.max("format").alias("format"),
-        F.min("error").alias("error"),
-        F.array_join(
-            F.filter(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("page_n", "text"))),
-                    lambda s: s["text"]),
-                lambda t: t != ""),
-            "\n").alias("text"),
-        F.when(F.min("page_n") < -1, (-F.min("page_n") - 1))
-        .otherwise(F.count("*")).cast("int").alias("page_count"),
-        F.sum("word_count").cast("int").alias("word_count"),
-    ]
-    if with_spans:
-        aggs.append(
-            F.flatten(
-                F.array_sort(F.collect_list(F.struct("page_n", "spans")))
-                .getField("spans")).alias("spans"))
-    assembled = parsed.groupBy("url").agg(*aggs)
-    assembled = assembled.withColumn(
-        "text", F.when(F.col("error").isNotNull(), F.lit(None)).otherwise(F.col("text"))
-    ).withColumn(
-        "page_count",
-        F.when(F.col("error").isNotNull(), F.lit(0)).otherwise(F.col("page_count"))
-    ).withColumn(
-        "word_count",
-        F.when(F.col("error").isNotNull(), F.lit(0)).otherwise(F.col("word_count"))
-    )
-    if with_spans:
-        assembled = assembled.withColumn(
-            "spans",
-            F.when(F.col("error").isNotNull(),
-                   F.array().cast(ArrayType(SPAN_STRUCT)))
-            .otherwise(F.col("spans")))
-
-    cols = ["url", "text", "format", "error", "page_count", "word_count"]
-    if with_spans:
-        cols.append("spans")
-    return assembled.select(*cols)
-
-
-def df_binary_type():
-    from pyspark.sql.types import BinaryType
-
-    return BinaryType()
 
 
 def extract_spans(df: DataFrame, **kwargs) -> DataFrame:

@@ -79,8 +79,8 @@ def render_docx(model: dict) -> bytes:
 
     def _entry(name: str) -> zipfile.ZipInfo:
         # Fixed timestamp: ZipFile defaults to wall-clock mtime, which
-        # makes fixture bytes differ run-to-run (breaks the cached-corpus
-        # byte-equivalence checks in tools/bench_parity.py).
+        # makes fixture bytes differ run-to-run (breaks byte-equivalence
+        # checks against a cached corpus).
         zi = zipfile.ZipInfo(name, date_time=(2026, 1, 1, 0, 0, 0))
         zi.compress_type = zipfile.ZIP_DEFLATED
         return zi

@@ -14,7 +14,7 @@ optimizer's size estimate instead.
 
 ``spread_input`` round-robin-repartitions the (already projected)
 input to the cluster's default parallelism when the whole input is
-estimated under ``SPARK_GRAFT_SPREAD_MAX_BYTES`` (default 256 MB):
+estimated under :data:`SPREAD_MAX_BYTES` (256 MiB):
 small enough that the one-off shuffle is negligible next to the
 per-row work it parallelizes, and far below anything a real corpus
 scan produces — at scale inputs arrive in hundreds of genuinely
@@ -30,25 +30,22 @@ from __future__ import annotations
 
 import functools
 import logging
-import os
 
 from pyspark.sql import DataFrame
 
 _log = logging.getLogger(__name__)
 
 #: Inputs estimated smaller than this are spread to default
-#: parallelism; env-overridable for other deployments.
-SPREAD_MAX_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_SPREAD_MAX_BYTES", str(256 * 1024 * 1024)))
+#: parallelism.
+SPREAD_MAX_BYTES = 256 * 1024 * 1024
 
 
 @functools.cache
 def _warn_no_estimate() -> None:
     """Log the first missing size estimate of the process, with the
     exception being handled; later calls are no-ops."""
-    _log.warning("no optimizer size estimate; size-gated plans "
-                 "(spread_input, embedding verify) take their unsized "
-                 "path", exc_info=True)
+    _log.warning("no optimizer size estimate; spread_input leaves "
+                 "the input as it is", exc_info=True)
 
 
 def _estimated_bytes(df: DataFrame) -> int | None:

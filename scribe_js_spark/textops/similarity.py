@@ -13,33 +13,30 @@
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as _F  # noqa: F401
-
-#: Corpus-size gate (optimizer estimate, bytes) under which the exact
-#: cosine verify of :func:`embedding_near_dups` runs as a numpy
-#: broadcast-gather instead of shipping both vectors through the pair
-#: join. At corpus scale the estimate exceeds this and the JVM join
-#: path runs unchanged; env-overridable for other deployments.
-EMB_BCAST_MAX_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_EMB_BCAST_MAX_BYTES", str(64 * 1024 * 1024)))
-
-#: Floor below which the broadcast-gather verify is not worth its
-#: fixed setup (one driver collect + broadcast + an extra job):
-#: measured interleaved at a 2k-vector corpus (~150k candidates) the
-#: JVM fold wins by ~0.13 s, while at 20k vectors (~15.2M candidates)
-#: the gather wins 2.3x — candidate count grows ~quadratically with
-#: corpus rows, so a small size floor routes only the corpora where
-#: the verify dominates.
-EMB_BCAST_MIN_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_EMB_BCAST_MIN_BYTES", str(2 * 1024 * 1024)))
 
 
-def _dot(a, b):
-    """Left-fold dot product over the full arrays (zip_with + aggregate).
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _double_sql(v: float) -> str:
+    """SQL text of a double literal: repr() round-trips doubles exactly
+    and the string-to-double cast constant-folds to the identical
+    Literal."""
+    return f"CAST('{float(v)!r}' AS DOUBLE)"
+
+
+def _dot_sql(a: str, b: str) -> str:
+    """SQL text of the left-fold dot product of two named array
+    columns over float64 casts (zip_with + aggregate).
+
+    Emitting the fold as ONE parsed expression instead of the
+    Column-API lambda plumbing cuts ~25 ms of py4j round trips per
+    fold at DataFrame-construction time (the same driver-side cost
+    class as lsh_bucket's literal arrays — see its docstring) for the
+    same analyzed expression.
 
     Round-6 note (negative result, kept for the record): a fully
     unrolled ``a[0]*b[0] + ... + a[63]*b[63]`` codegen expression was
@@ -53,42 +50,23 @@ def _dot(a, b):
     The round-6 wins here are structural instead: norms computed once
     per vector (not per pair) and the superfluous pair-``distinct``
     exchanges removed (see embedding_near_dups)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a):
-    return F.sqrt(_dot(a, a))
-
-
-def cosine(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def _ident(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _dot_sql(a: str, b: str) -> str:
-    """SQL text of the exact :func:`_dot` fold over named columns.
-
-    Emitting the fold as ONE parsed expression instead of the
-    Column-API lambda plumbing cuts ~25 ms of py4j round trips per
-    fold at DataFrame-construction time (the same driver-side cost
-    class as lsh_bucket's literal arrays — see its docstring); the
-    analyzed expression, and therefore every result bit, is
-    identical."""
     return (f"aggregate(zip_with({_ident(a)}, {_ident(b)}, "
             "(x, y) -> cast(x as double) * cast(y as double)), "
             "cast(0.0 as double), (acc, v) -> acc + v)")
 
 
 def _norm_sql(a: str) -> str:
-    """SQL text of the exact :func:`_norm` (sqrt of the _dot fold)."""
+    """SQL text of the Euclidean norm (sqrt of the _dot_sql fold)."""
     return f"sqrt({_dot_sql(a, a)})"
+
+
+def _dist2_sql(a: str, point) -> str:
+    """SQL text of the left-fold squared distance from a named array
+    column to a constant point, over float64 casts."""
+    arr = "array(" + ",".join(_double_sql(v) for v in point) + ")"
+    return (f"aggregate(zip_with({_ident(a)}, {arr}, "
+            "(x, c) -> (cast(x as double) - c) * (cast(x as double) - c)), "
+            "cast(0.0 as double), (acc, v) -> acc + v)")
 
 
 def ann_topk_bruteforce(df: DataFrame, queries: DataFrame, k: int = 5,
@@ -102,9 +80,9 @@ def ann_topk_bruteforce(df: DataFrame, queries: DataFrame, k: int = 5,
     to micro-units as int for cross-engine stability.
 
     Round 6: each side's norm is computed ONCE per vector below the
-    broadcast join — the corpus norm was previously re-derived inside
-    cosine() for every (query, corpus) pair, |Q| times the needed
-    work — so the per-pair cost drops from 3 fold evaluations to 1.
+    broadcast join — re-deriving the corpus norm for every
+    (query, corpus) pair costs |Q| times the needed work — so the
+    per-pair cost drops from 3 fold evaluations to 1.
     sqrt(dot(v,v)) is the same expression either way: bit-identical.
     """
     from .partitioning import spread_input
@@ -145,9 +123,6 @@ def ann_topk_ivf(df: DataFrame, queries: DataFrame, k: int = 5,
     broadcast everywhere; the corpus partitions by cell, so a query
     touches ``nprobe`` cells instead of the full corpus.
     """
-    import pyspark.sql.functions as F
-
-    spark = df.sparkSession
     base = df.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
         lsh_bucket(vec_col, dim, n_planes_coarse).alias("bucket"))
@@ -167,28 +142,18 @@ def ann_topk_ivf(df: DataFrame, queries: DataFrame, k: int = 5,
     )
     centroids = [(int(r["bucket"]), list(r["centroid"])) for r in cent_rows]
 
-    def dist2_to(c_vals):
-        arr = F.array([F.lit(float(v)) for v in c_vals])
-        return F.aggregate(
-            F.zip_with(F.col("vec"), arr,
-                       lambda x, c: (x.cast("double") - c)
-                       * (x.cast("double") - c)),
-            F.lit(0.0), lambda acc, v: acc + v)
-
-    dists = F.array(*[
-        F.struct(dist2_to(c).alias("d"), F.lit(b).alias("cell"))
-        for b, c in centroids])
-    assigned = base.withColumn(
-        "cell", F.array_min(dists).getField("cell"))
+    dists = "array(" + ", ".join(
+        f"struct({_dist2_sql('vec', c)} AS d, {b} AS cell)"
+        for b, c in centroids) + ")"
+    assigned = base.withColumn("cell", F.expr(f"array_min({dists}).cell"))
 
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("vec"))
     q_cells = (
         q.withColumn(
             "probe_cells",
-            F.slice(
-                F.transform(F.array_sort(dists), lambda s: s["cell"]),
-                1, nprobe))
+            F.expr(f"slice(transform(array_sort({dists}), s -> s.cell), "
+                   f"1, {int(nprobe)})"))
         .select("query_id", F.col("vec").alias("q_vec"),
                 F.explode("probe_cells").alias("cell"))
     )
@@ -197,7 +162,9 @@ def ann_topk_ivf(df: DataFrame, queries: DataFrame, k: int = 5,
         assigned.join(F.broadcast(q_cells),
                       (assigned["cell"] == q_cells["cell"])
                       & (F.col("vid") != F.col("query_id")))
-        .withColumn("sim", cosine(F.col("q_vec"), F.col("vec")))
+        .withColumn("sim", F.expr(
+            f"{_dot_sql('q_vec', 'vec')} / "
+            f"({_norm_sql('q_vec')} * {_norm_sql('vec')})"))
         .select("query_id", F.col("vid").alias("neighbor_id"), "sim")
         .distinct()
     )
@@ -222,55 +189,37 @@ def _plane_coeff(plane: int, dim: int) -> float:
     return (h / (1 << 31)) - 1.0
 
 
-def lsh_bucket(vec_col, dim: int, n_planes: int = _N_PLANES_DEFAULT):
-    """Sign-of-projection bucket id (0 .. 2^n_planes-1) as a column.
+def lsh_bucket(vec_col: str, dim: int, n_planes: int = _N_PLANES_DEFAULT):
+    """Sign-of-projection bucket id (0 .. 2^n_planes-1) of the named
+    array column, as a column.
 
     Stays the aggregate(zip_with(...)) fold at EXECUTION time: the
     round-6 unrolled rewrite (8 planes x 64 terms in one projection)
     exceeded janino's 64 KB method limit, fell back to interpreting a
-    512-node tree and benched 3-6x SLOWER (see _dot). For corpora
+    512-node tree and benched 3-6x SLOWER (see _dot_sql). For corpora
     queried repeatedly the real fix is :func:`with_lsh_bucket`:
     materialize the id once and read it from the scan.
 
-    CONSTRUCTION, however, was the hidden cost (round 6, late):
-    building this expression through the Column API issues ~70 py4j
-    round trips per plane (64 ``F.lit`` coefficient literals plus the
-    lambda plumbing) — measured 0.56 s of driver-side Python per call,
-    more than the query's whole execution at bench scale, and
-    ``ann_topk_lsh`` pays it twice per invocation. When the vector is
-    identified by NAME the same expression is emitted as ONE SQL
-    string (1.3 ms, 400x cheaper): coefficient literals ride as
-    ``CAST('<repr>' AS DOUBLE)`` — repr() round-trips doubles exactly
-    and the string-to-double cast constant-folds to the identical
-    Literal — and the fold text ``(x, w) -> cast(x as double) * w``
-    resolves to the same analyzed expression as the Column-API
-    lambdas, so the bucket ids are bit-identical (verified: 0
-    mismatches over 20k x 8 plane signs, and the plan is unchanged).
-    Pass a column NAME to get the fast path; Column inputs keep the
-    legacy construction."""
-    if isinstance(vec_col, str):
-        ident = "`" + vec_col.replace("`", "``") + "`"
-        parts = []
-        for p in range(n_planes):
-            arr = "array(" + ",".join(
-                f"CAST('{_plane_coeff(p, d)!r}' AS DOUBLE)"
-                for d in range(dim)) + ")"
-            proj = (f"aggregate(zip_with({ident}, {arr}, "
-                    "(x, w) -> cast(x as double) * w), "
-                    "cast(0.0 as double), (acc, v) -> acc + v)")
-            parts.append(
-                f"(CASE WHEN {proj} >= 0 THEN {1 << p} ELSE 0 END)")
-        return F.expr("CAST(0 AS BIGINT) + " + " + ".join(parts))
-    bucket = F.lit(0).cast("long")
+    CONSTRUCTION is emitted as ONE SQL string (1.3 ms): building the
+    same expression through the Column API issued ~70 py4j round trips
+    per plane (64 ``F.lit`` coefficient literals plus the lambda
+    plumbing), measured at 0.56 s of driver-side Python per call, more
+    than the query's whole execution at bench scale. Coefficient
+    literals ride as ``CAST('<repr>' AS DOUBLE)`` (see _double_sql),
+    so the bucket ids are bit-identical to the Column-API formulation
+    (verified: 0 mismatches over 20k x 8 plane signs, and the plan is
+    unchanged)."""
+    ident = _ident(vec_col)
+    parts = []
     for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.array([F.lit(_plane_coeff(p, d)) for d in range(dim)]),
-                lambda x, w: x.cast("double") * w),
-            F.lit(0.0), lambda acc, v: acc + v)
-        bucket = bucket + F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return bucket
+        arr = "array(" + ",".join(
+            _double_sql(_plane_coeff(p, d)) for d in range(dim)) + ")"
+        proj = (f"aggregate(zip_with({ident}, {arr}, "
+                "(x, w) -> cast(x as double) * w), "
+                "cast(0.0 as double), (acc, v) -> acc + v)")
+        parts.append(
+            f"(CASE WHEN {proj} >= 0 THEN {1 << p} ELSE 0 END)")
+    return F.expr("CAST(0 AS BIGINT) + " + " + ".join(parts))
 
 
 def with_lsh_bucket(df: DataFrame, vec_col: str = "embedding",
@@ -301,137 +250,6 @@ def _corpus_bucket(df: DataFrame, vec_col: str, dim: int,
     if bucket_col is not None:
         return F.col(bucket_col).cast("long")
     return lsh_bucket(vec_col, dim, n_planes)
-
-
-_I64MAX = (1 << 63) - 1
-_I64MIN = -(1 << 63)
-
-
-def _verify_pairs_bcast(cand: DataFrame, base: DataFrame,
-                        threshold: float):
-    """Exact-cosine verify of candidate pairs via a numpy
-    broadcast-gather, bit-identical to the JVM join + ``_dot`` fold.
-
-    The JVM formulation ships BOTH 64-float vectors through the pair
-    join for every candidate (15.2M pairs x ~540 B at the benchmark's
-    20k-vector scale) and then runs one interpreted ``aggregate``
-    lambda per element per pair. Guide §8's rule — decide with small
-    rows, move big rows once — applies: the pair join only needs ids,
-    and the whole vector table is a few MB. So: broadcast
-    (ids, vectors, norms) once, send ONLY the 16-byte id pairs across
-    the Arrow boundary, and gather + fold in numpy with the exact
-    left-fold order (``acc += A[:, i] * B[:, i]`` per position over
-    float64 casts — the same IEEE ops the JVM fold performs, verified
-    output-identical on 262,801 pairs). Measured at that scale:
-    4.5-4.9 s (JVM join+fold) -> 2.4-3.1 s.
-
-    Returns None when any exactness precondition fails — the caller
-    then uses the JVM path:
-    - corpus estimate outside [:data:`EMB_BCAST_MIN_BYTES`,
-      :data:`EMB_BCAST_MAX_BYTES`) (scale gate above, fixed-setup
-      amortization floor below),
-    - non-long ids (output column type must match the join's),
-    - NULL/duplicate ids, NULL vectors/elements, ragged lengths
-      (the JVM fold's zip_with NULL semantics are row-specific there).
-
-    Semantics replicated from the JVM path (measured on this Spark,
-    ANSI mode): sim NULL is impossible here (gate excludes NULLs),
-    sim NaN is KEPT with sim_e6 = 0 (Spark orders NaN above any
-    threshold and floor-casts it to 0), +/-inf saturate the long cast,
-    a zero norm product raises (ANSI division by zero), and a pair
-    whose id was cap-filtered out of ``base`` is dropped exactly like
-    the inner join dropped it (membership check after searchsorted).
-    """
-    import numpy as np
-
-    from pyspark.sql.types import LongType
-
-    from .partitioning import _estimated_bytes
-
-    spark = base.sparkSession
-    est = _estimated_bytes(base)
-    if est is None or not (EMB_BCAST_MIN_BYTES <= est < EMB_BCAST_MAX_BYTES):
-        return None
-    schema = dict((f.name, f.dataType) for f in base.schema.fields)
-    if not isinstance(schema["vid"], LongType):
-        return None
-    try:
-        tbl = base.select("vid", "vec", "nrm").toArrow()
-    except Exception:
-        return None
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    vid = tbl["vid"].combine_chunks()
-    vec = tbl["vec"].combine_chunks()
-    nrm = tbl["nrm"].combine_chunks()
-    n = len(tbl)
-    if n == 0 or vid.null_count or vec.null_count or nrm.null_count:
-        return None
-    flat = vec.flatten()
-    if flat.null_count:
-        return None
-    lens = pc.list_value_length(vec).to_numpy()
-    if lens.min() != lens.max():
-        return None
-    dim = int(lens[0])
-    ids = vid.to_numpy()
-    if np.unique(ids).size != ids.size:
-        return None
-    order = np.argsort(ids)
-    ids = ids[order]
-    V = flat.to_numpy().reshape(n, dim)[order]
-    norms = nrm.to_numpy()[order].astype(np.float64)
-    bc = spark.sparkContext.broadcast((ids, V, norms))
-    thr = float(threshold)
-
-    def verify(it):
-        import numpy as np
-        import pyarrow as pa
-
-        ids_, V_, nrm_ = bc.value
-        Vd = V_.astype(np.float64)
-        hi = len(ids_) - 1
-        for batch in it:
-            nrows = batch.num_rows
-            if nrows == 0:
-                continue
-            a = batch.column("vec_a").to_numpy(zero_copy_only=False)
-            b = batch.column("vec_b").to_numpy(zero_copy_only=False)
-            ia = np.clip(np.searchsorted(ids_, a), 0, hi)
-            ib = np.clip(np.searchsorted(ids_, b), 0, hi)
-            # inner-join semantics: drop pairs whose id is not in the
-            # (possibly cap-filtered) base table
-            member = (ids_[ia] == a) & (ids_[ib] == b)
-            if not member.all():
-                a, b = a[member], b[member]
-                ia, ib = ia[member], ib[member]
-                nrows = a.size
-                if nrows == 0:
-                    continue
-            A, B = Vd[ia], Vd[ib]
-            acc = np.zeros(nrows, dtype=np.float64)
-            for i in range(A.shape[1]):  # exact left-fold order
-                acc += A[:, i] * B[:, i]
-            denom = nrm_[ia] * nrm_[ib]
-            if (denom == 0).any():
-                raise ArithmeticError(
-                    "[DIVIDE_BY_ZERO] Division by zero (zero-norm "
-                    "embedding in a candidate pair)")
-            with np.errstate(all="ignore"):
-                sim = acc / denom
-                keep = (sim >= thr) | np.isnan(sim)
-                f = np.floor(sim * 1e6)
-            f = np.where(np.isnan(f), 0.0, np.clip(f, _I64MIN, _I64MAX))
-            e6 = f.astype(np.int64)
-            idx = np.nonzero(keep)[0]
-            yield pa.record_batch({
-                "vec_a": pa.array(a[idx], type=pa.int64()),
-                "vec_b": pa.array(b[idx], type=pa.int64()),
-                "sim_e6": pa.array(e6[idx], type=pa.int64()),
-            })
-
-    return cand.mapInArrow(verify, "vec_a long, vec_b long, sim_e6 long")
 
 
 def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
@@ -509,13 +327,6 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
         .select(F.col("a.vid").alias("vec_a"),
                 F.col("b.vid").alias("vec_b"))
     )
-    # Small-corpus verify: numpy broadcast-gather over id-only pair
-    # rows (bit-identical fold; see _verify_pairs_bcast). Falls through
-    # to the JVM join + fold — the unchanged corpus-scale path — when
-    # the size gate or any exactness precondition fails.
-    fast = _verify_pairs_bcast(cand, base, threshold)
-    if fast is not None:
-        return fast
     va = base.select(F.col("vid").alias("vec_a"),
                      F.col("vec").alias("va"), F.col("nrm").alias("na"))
     vb = base.select(F.col("vid").alias("vec_b"),

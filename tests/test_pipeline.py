@@ -313,29 +313,23 @@ def test_per_document_is_the_only_map_in_pandas():
     assert found == [("scribe_js_spark/pipeline.py", "per_document")]
 
 
-def test_page_split_path_byte_identical(spark, corpus_df):
-    # Force every document through the page-level fan-out path and
-    # compare with the zero-shuffle whole-document path.
-    whole = extract_text(corpus_df, salt=False, page_split_bytes=None)
-    paged = extract_text(corpus_df, salt=False, page_split_bytes=1)
-    w = {r["url"]: r for r in whole.collect()}
-    p = {r["url"]: r for r in paged.collect()}
-    assert set(w) == set(p)
-    for url in w:
-        assert p[url]["error"] is None, f"{url}: {p[url]['error']}"
-        assert p[url]["text"] == w[url]["text"], url
-        assert p[url]["page_count"] == w[url]["page_count"], url
-        assert p[url]["word_count"] == w[url]["word_count"], url
+def test_package_reads_no_environment_variable():
+    """Every value the package runs with is a constant or a parameter:
+    no module reads os.environ or os.getenv."""
+    import ast
+    from pathlib import Path
 
-
-def test_page_split_spans_identical(spark, corpus_df):
-    whole = extract_spans(corpus_df, salt=False, page_split_bytes=None)
-    paged = extract_spans(corpus_df, salt=False, page_split_bytes=1)
-    cols = whole.columns
-    w = sorted(map(tuple, whole.collect()))
-    p = sorted(map(tuple, paged.collect()))
-    assert len(w) == len(p)
-    assert w == p
+    root = Path(__file__).resolve().parent.parent
+    found = []
+    for path in [root / "__spark_entry__.py",
+                 *sorted((root / "scribe_js_spark").rglob("*.py"))]:
+        found += [
+            (path.relative_to(root).as_posix(), node.lineno)
+            for node in ast.walk(ast.parse(path.read_text()))
+            if isinstance(node, ast.Attribute)
+            and node.attr in ("environ", "getenv")
+            and isinstance(node.value, ast.Name) and node.value.id == "os"]
+    assert found == []
 
 
 def test_ann_ivf_recall(spark):

@@ -151,6 +151,64 @@ def _vecs(spark, rows):
         ]))
 
 
+def _cosine(a, b):
+    """The round-5 Column-API cosine: left-fold dot products over
+    float64 casts (zip_with + aggregate)."""
+    def dot(x, y):
+        return F.aggregate(
+            F.zip_with(x, y,
+                       lambda p, q: p.cast("double") * q.cast("double")),
+            F.lit(0.0), lambda acc, v: acc + v)
+
+    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+
+
+def _ref_near_dup_rows(df, threshold, dim, n_planes,
+                       max_bucket_size=None):
+    """Round-5 embedding_near_dups: distinct-ful multiprobe candidates,
+    then the Column-API cosine join. Under a cap only vectors whose own
+    bucket holds at most ``max_bucket_size`` rows take part."""
+    from scribe_js_spark.textops.similarity import with_lsh_bucket
+
+    b = with_lsh_bucket(df, dim=dim, n_planes=n_planes)
+    if max_bucket_size is not None:
+        ok = (b.groupBy("lsh_bucket").count()
+              .filter(F.col("count") <= max_bucket_size))
+        b = b.join(ok.select("lsh_bucket"), "lsh_bucket")
+    probes = b.select(
+        F.col("vec_id").alias("vid"),
+        F.explode(F.array(
+            F.col("lsh_bucket"),
+            *[F.col("lsh_bucket").bitwiseXOR(F.lit(1 << p))
+              for p in range(n_planes)])).alias("probe"))
+    cand = (
+        probes.alias("a")
+        .join(b.alias("b"), F.col("a.probe") == F.col("b.lsh_bucket"))
+        .filter(F.col("a.vid") < F.col("b.vec_id"))
+        .select(F.col("a.vid").alias("vec_a"),
+                F.col("b.vec_id").alias("vec_b"))
+        .distinct()
+    )
+    va = b.select(F.col("vec_id").alias("vec_a"),
+                  F.col("embedding").alias("va"))
+    vb = b.select(F.col("vec_id").alias("vec_b"),
+                  F.col("embedding").alias("vb"))
+    ref = (
+        cand.join(va, "vec_a").join(vb, "vec_b")
+        .withColumn("sim", _cosine(F.col("va"), F.col("vb")))
+        .filter(F.col("sim") >= threshold)
+        .select("vec_a", "vec_b",
+                F.floor(F.col("sim") * 1e6).cast("long").alias("sim_e6"))
+    )
+    return sorted(map(tuple, ref.collect()))
+
+
+def _near_dup_rows(df, **kw):
+    from scribe_js_spark.textops.similarity import embedding_near_dups
+
+    return sorted(map(tuple, embedding_near_dups(df, **kw).collect()))
+
+
 def test_embedding_near_dups_pairs_unique_without_distinct(spark):
     """The removed pair-.distinct() relied on the multiprobe join
     emitting each ordered pair at most once. Build a corpus with
@@ -158,7 +216,7 @@ def test_embedding_near_dups_pairs_unique_without_distinct(spark):
     near-identical vectors, and assert (a) no duplicate pairs in the
     output, (b) output identical to the round-5 distinct-ful shape."""
     from scribe_js_spark.textops.similarity import (
-        embedding_near_dups, lsh_bucket, with_lsh_bucket)
+        embedding_near_dups, lsh_bucket)
 
     dim = 8
     base = [1.0, 0.5, -0.25, 2.0, 0.75, -1.0, 0.1, 0.3]
@@ -180,72 +238,19 @@ def test_embedding_near_dups_pairs_unique_without_distinct(spark):
     pairs = [(r["vec_a"], r["vec_b"]) for r in got]
     assert len(pairs) == len(set(pairs)), "duplicate pair emitted"
     assert all(a < b for a, b in pairs)
-
-    # round-5 reference: distinct-ful candidates -> cosine verify
-    from scribe_js_spark.textops.similarity import cosine
-
-    b = with_lsh_bucket(df, dim=dim, n_planes=4)
-    probes = b.select(
-        F.col("vec_id").alias("vid"),
-        F.explode(F.array(
-            F.col("lsh_bucket"),
-            *[F.col("lsh_bucket").bitwiseXOR(F.lit(1 << p))
-              for p in range(4)])).alias("probe"))
-    cand = (
-        probes.alias("a")
-        .join(b.alias("b"), F.col("a.probe") == F.col("b.lsh_bucket"))
-        .filter(F.col("a.vid") < F.col("b.vec_id"))
-        .select(F.col("a.vid").alias("vec_a"),
-                F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
-    va = df.select(F.col("vec_id").alias("vec_a"),
-                   F.col("embedding").alias("va"))
-    vb = df.select(F.col("vec_id").alias("vec_b"),
-                   F.col("embedding").alias("vb"))
-    ref = (
-        cand.join(va, "vec_a").join(vb, "vec_b")
-        .withColumn("sim", cosine(F.col("va"), F.col("vb")))
-        .filter(F.col("sim") >= 0.5)
-        .select("vec_a", "vec_b",
-                F.floor(F.col("sim") * 1e6).cast("long").alias("sim_e6"))
-    )
-    want = sorted((r["vec_a"], r["vec_b"], r["sim_e6"])
-                  for r in ref.collect())
     have = sorted((r["vec_a"], r["vec_b"], r["sim_e6"]) for r in got)
-    assert have == want
+    assert have == _ref_near_dup_rows(df, 0.5, dim, 4)
     # sanity: the fixture actually produced pairs and spread buckets
     assert len(pairs) >= 10
     nb = df.select(lsh_bucket(
-        F.col("embedding"), dim, 4).alias("b")).distinct().count()
+        "embedding", dim, 4).alias("b")).distinct().count()
     assert nb >= 2
 
 
-def _with_gate(gate, fn):
-    """Run fn with the broadcast-verify gate window set to [0, gate):
-    gate=0 forces the JVM join + fold fallback; a large gate forces
-    the numpy broadcast-gather path for tiny fixtures."""
-    from scribe_js_spark.textops import similarity as S
-
-    old = (S.EMB_BCAST_MIN_BYTES, S.EMB_BCAST_MAX_BYTES)
-    S.EMB_BCAST_MIN_BYTES, S.EMB_BCAST_MAX_BYTES = 0, gate
-    try:
-        return fn()
-    finally:
-        S.EMB_BCAST_MIN_BYTES, S.EMB_BCAST_MAX_BYTES = old
-
-
-def _near_dup_rows(df, **kw):
-    from scribe_js_spark.textops.similarity import embedding_near_dups
-
-    return sorted(map(tuple, embedding_near_dups(df, **kw).collect()))
-
-
 def test_embedding_verify_bcast_matches_jvm_fold(spark):
-    """The numpy broadcast-gather verify must be bit-identical to the
-    JVM join + aggregate-fold path: same pairs, same sim_e6 (exact
-    left-fold order), NaN rows kept with sim_e6 = 0 (Spark orders NaN
-    above any threshold and floor-casts it to 0)."""
+    """Same pairs and sim_e6 as the round-5 cosine join, including a
+    NaN row, which is kept with sim_e6 = 0 (Spark orders NaN above any
+    threshold and floor-casts it to 0)."""
     base = [1.0, 0.5, -0.25, 2.0, 0.75, -1.0, 0.1, 0.3]
     rows = []
     for i in range(40):
@@ -258,19 +263,17 @@ def test_embedding_verify_bcast_matches_jvm_fold(spark):
     nanv[2] = float("nan")
     rows.append((200, nanv))
     df = _vecs(spark, rows)
-    kw = dict(threshold=0.5, dim=8, n_planes=4)
-    fast = _with_gate(1 << 30, lambda: _near_dup_rows(df, **kw))
-    jvm = _with_gate(0, lambda: _near_dup_rows(df, **kw))
-    assert fast == jvm
-    nan_rows = [r for r in fast if 200 in r[:2]]
+    got = _near_dup_rows(df, threshold=0.5, dim=8, n_planes=4)
+    assert got == _ref_near_dup_rows(df, 0.5, 8, 4)
+    nan_rows = [r for r in got if 200 in r[:2]]
     assert nan_rows and all(r[2] == 0 for r in nan_rows)
-    assert (100, 101, 1000000) in fast
+    assert (100, 101, 1000000) in got
 
 
 def test_embedding_verify_bcast_cap_membership(spark):
-    """With max_bucket_size, a pair whose a-side id was cap-filtered
-    out of base must be dropped exactly like the JVM inner join drops
-    it (searchsorted membership check)."""
+    """With max_bucket_size, a pair whose a-side vector sits in a
+    capped bucket is dropped, as the inner join against the capped
+    table drops it."""
     base = [1.0, 0.5, -0.25, 2.0, 0.75, -1.0, 0.1, 0.3]
     rows = []
     for i in range(48):
@@ -281,29 +284,59 @@ def test_embedding_verify_bcast_cap_membership(spark):
     # a hot bucket: many exact copies
     rows += [(500 + j, list(base)) for j in range(9)]
     df = _vecs(spark, rows)
-    kw = dict(threshold=0.5, dim=8, n_planes=4, max_bucket_size=4)
-    fast = _with_gate(1 << 30, lambda: _near_dup_rows(df, **kw))
-    jvm = _with_gate(0, lambda: _near_dup_rows(df, **kw))
-    assert fast == jvm
-    uncapped = _with_gate(
-        1 << 30,
-        lambda: _near_dup_rows(df, threshold=0.5, dim=8, n_planes=4))
-    assert len(fast) < len(uncapped)  # the cap actually bound
+    capped = _near_dup_rows(
+        df, threshold=0.5, dim=8, n_planes=4, max_bucket_size=4)
+    assert capped == _ref_near_dup_rows(
+        df, 0.5, 8, 4, max_bucket_size=4)
+    uncapped = _near_dup_rows(df, threshold=0.5, dim=8, n_planes=4)
+    assert len(capped) < len(uncapped)  # the cap actually bound
 
 
 def test_embedding_verify_bcast_falls_back_on_ragged(spark):
-    """Ragged / NULL vectors fail the gate's preconditions; the JVM
-    fold's zip_with NULL semantics then apply — outputs must still be
-    identical (both drop those rows)."""
+    """Ragged and NULL vectors: zip_with pads with NULL, so their
+    similarity is NULL and the threshold filter drops every pair with
+    them, as in the round-5 cosine join."""
     base = [1.0, 0.5, -0.25, 2.0, 0.75, -1.0, 0.1, 0.3]
     rows = [(i, [x + i * 0.1 for x in base]) for i in range(12)]
     rows += [(300, [1.0, 2.0]), (301, None)]
     df = _vecs(spark, rows)
-    kw = dict(threshold=0.5, dim=8, n_planes=4)
-    fast = _with_gate(1 << 30, lambda: _near_dup_rows(df, **kw))
-    jvm = _with_gate(0, lambda: _near_dup_rows(df, **kw))
-    assert fast == jvm
-    assert all(300 not in r[:2] and 301 not in r[:2] for r in fast)
+    got = _near_dup_rows(df, threshold=0.5, dim=8, n_planes=4)
+    assert got == _ref_near_dup_rows(df, 0.5, 8, 4)
+    assert got
+    assert all(300 not in r[:2] and 301 not in r[:2] for r in got)
+
+
+def test_embedding_near_dups_builds_lazily(spark, tmp_path):
+    """Building the query starts no Spark job: vectors are read when
+    the result is collected. 5,000 unit 64-dim vectors are large enough
+    that the optimizer estimate of the verify input is in the megabytes;
+    a size-gated verify that collects its input at build time fails
+    here."""
+    import numpy as np
+    import pandas as pd
+
+    from scribe_js_spark.textops.similarity import embedding_near_dups
+
+    n, dim = 5000, 64
+    v = np.random.default_rng(11).standard_normal((n, dim))
+    v = (v / np.linalg.norm(v, axis=1, keepdims=True)).astype(np.float32)
+    path = str(tmp_path / "emb.parquet")
+    pd.DataFrame({"vec_id": np.arange(n, dtype=np.int64),
+                  "embedding": list(v)}).to_parquet(path)
+    df = spark.read.parquet(path)
+
+    sc = spark.sparkContext
+    group = "embedding_near_dups_build"
+    sc.setJobGroup(group, "embedding_near_dups construction")
+    try:
+        res = embedding_near_dups(df, threshold=0.3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    got = sorted(map(tuple, res.collect()))
+    assert got == _ref_near_dup_rows(df, 0.3, dim, 8)
+    assert len(got) > 100
 
 
 def test_exact_dups_window_matches_join_shape(spark):

@@ -466,8 +466,7 @@ def test_gzip_wrapped_documents_unwrap_transparently():
     surface as an error, not a crash."""
     import gzip
 
-    from scribe_js_spark.extract import (
-        extract_document, split_document_pages)
+    from scribe_js_spark.extract import extract_document
     from scribe_js_spark.fixtures import build_doc_model, render_hocr
 
     model = build_doc_model(9, n_pages=2)
@@ -477,7 +476,6 @@ def test_gzip_wrapped_documents_unwrap_transparently():
     wrapped = extract_document(gzip.compress(raw))
     assert wrapped.error is None
     assert wrapped.text == base.text
-    fmt, pages, err = split_document_pages(gzip.compress(raw))
-    assert err is None and fmt == "hocr"
+    assert wrapped.fmt == "hocr"
     bad = extract_document(b"\x1f\x8b" + b"garbage!")
     assert bad.error is not None and "gzip" in bad.error

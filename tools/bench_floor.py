@@ -10,7 +10,8 @@ job-framework overhead; the Spark job's efficiency is judged against
 it ("within X of the same-session floor").
 
 Usage: python tools/bench_floor.py [n_docs] [N]
-Prints one JSON line {"floor_n": .., "floor_4n": .., "efficiency": ..}.
+Prints one JSON line {"floor_n": .., "floor_4n": .., "efficiency": ..};
+to record a run, redirect it to BENCH/floor_<N>_<4N>.json.
 """
 
 from __future__ import annotations
@@ -83,12 +84,6 @@ def main():
     eff = (r4n["docs_per_sec"] / rn["docs_per_sec"]) / 4
     out = {"n": rn, "n4": r4n, "efficiency": round(eff, 4),
            "pinned": True}
-    # Persist only on request: quick watcher probes must not clobber
-    # the canonical BENCH/floor_*.json records cited by BASELINE.md.
-    if os.environ.get("BENCH_FLOOR_PERSIST") == "1":
-        with open(os.path.join(REPO, "BENCH", f"floor_{n}_{4 * n}.json"),
-                  "w") as f:
-            f.write(json.dumps(out))
     print(json.dumps(out))
 
 

@@ -6,7 +6,9 @@ separate spark-submit processes, and writes docs/sec at both plus
 efficiency = (throughput_32 / throughput_8) / 4 to BENCH/BASELINE.md.
 Target: >= 0.8.
 
-Usage: python tools/bench_scaling.py [n_docs]
+Usage: python tools/bench_scaling.py [n_docs] [N]
+Prints one JSON line {"n": .., "n4": .., "efficiency": ..}; to record a
+run, redirect it to BENCH/scaling_<N>_<4N>.json.
 """
 
 from __future__ import annotations
@@ -29,9 +31,6 @@ N_CORES = 4
 
 
 def run_level(cpus: int, corpus_path: str) -> dict:
-    env = dict(os.environ)
-    env["SPARK_GRAFT_CPUS"] = str(cpus)
-    env["SPARK_GRAFT_CORPUS"] = corpus_path
     # Pin the whole process tree (JVM + Python workers) to exactly
     # `cpus` hardware threads. Unpinned local[N] on a 32-thread box
     # lets JVM GC/IO/Arrow threads spill onto the 32-N idle cores,
@@ -45,8 +44,8 @@ def run_level(cpus: int, corpus_path: str) -> dict:
          # the Python worker daemon imports the package before any task
          "--conf", "spark.executorEnv.PYTHONPATH="
          + os.path.join(REPO, "scribe_js_spark.zip"),
-         "--driver-memory", "48g", WORKER],
-        capture_output=True, text=True, env=env, timeout=3600)
+         "--driver-memory", "48g", WORKER, str(cpus), corpus_path],
+        capture_output=True, text=True, timeout=3600)
     for line in out.stdout.splitlines():
         if line.startswith("{"):
             return json.loads(line)
@@ -100,15 +99,6 @@ Timing excludes JVM/py4j startup (a warmup extraction runs before the
 measured window). Parse-failure count at both levels: {rn['failed']} /
 {r4n['failed']} (expected 0).
 """
-    # BENCH/BASELINE.md is hand-curated (it accumulates every recorded
-    # run); the raw-result file next to it is only rewritten on
-    # request so ad-hoc probes can't clobber the recorded runs.
-    if os.environ.get("BENCH_SCALING_PERSIST") == "1":
-        with open(os.path.join(REPO, "BENCH",
-                               f"scaling_{N_CORES}_{4 * N_CORES}.json"),
-                  "w") as f:
-            f.write(json.dumps({
-                "n": rn, "n4": r4n, "efficiency": round(efficiency, 4)}))
     _ = md
     print(json.dumps({
         "n": rn, "n4": r4n, "efficiency": round(efficiency, 4)}))

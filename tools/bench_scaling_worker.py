@@ -1,10 +1,13 @@
 """One scaling-run worker: extraction over the bench corpus at the
-parallelism of the enclosing spark-submit. Prints one JSON line."""
+parallelism of the enclosing spark-submit. Prints one JSON line.
+
+Usage: spark-submit ... tools/bench_scaling_worker.py <cpus> <corpus_parquet>
+"""
 
 from __future__ import annotations
 
 import json
-import os
+import sys
 import time
 
 
@@ -14,17 +17,13 @@ def main():
 
     from scribe_js_spark.pipeline import extract_text, session_conf
 
-    cpus = int(os.environ["SPARK_GRAFT_CPUS"])
-    corpus_path = os.environ["SPARK_GRAFT_CORPUS"]
+    cpus = int(sys.argv[1])
+    corpus_path = sys.argv[2]
 
     spark = session_conf(
         SparkSession.builder
         .appName(f"scaling-{cpus}")
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        # Documents are compute-heavy relative to their bytes: target
-        # ~0.1-1s tasks so the scheduler can balance the tail.
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MPB", str(1024 * 1024)))
         .config("spark.ui.enabled", "false")
     ).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -44,9 +43,8 @@ def main():
         t0 = time.time()
         # Zero-shuffle path: fine-grained input splits give the
         # scheduler ~700 balanced tasks without moving any document
-        # bytes; the biggest doc parses in ~1.3s so no page fan-out is
-        # needed at this mix.
-        res = extract_text(corpus, salt=False, page_split_bytes=None)
+        # bytes.
+        res = extract_text(corpus, salt=False)
         agg = res.agg(
             F.count("*").alias("docs"),
             F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))

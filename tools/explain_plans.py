@@ -58,7 +58,7 @@ def main():
 
     summarize(
         "extract_text (whole-doc path, no salt)",
-        extract_text(corpus, salt=False, page_split_bytes=None)
+        extract_text(corpus, salt=False)
         .filter(F.col("error").isNull()),
         "One mapInPandas over the scan: ZERO shuffles — the hot path "
         "moves no bytes between executors. Error filter stays above the "
@@ -69,11 +69,10 @@ def main():
         "row-group granularity in the corpus file instead (rg8).",
         out)
     summarize(
-        "extract_text (salted + page fan-out)",
+        "extract_text (salted)",
         extract_text(corpus, salt=True, num_partitions=64),
         "Salting adds exactly one round-robin-by-key Exchange before the "
-        "parse; the huge-doc branch adds the page shuffle + the "
-        "reassembly aggregation. This is the opt-in skew path.",
+        "parse. This is the opt-in skew path.",
         out)
     summarize(
         "doc_stats (+ pushdown probe: doc_id < 100)",
