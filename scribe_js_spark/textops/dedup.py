@@ -4,8 +4,8 @@ Scale design (10^12 documents):
 - **exact**: md5 hash-groupBy — one shuffle on a 32-byte key, AQE
   handles residual skew. Never shuffles document text.
 - **jaccard_pairs**: exact all-pairs similarity via token inverted
-  index; ``max_token_df`` caps the document frequency of index tokens
-  so no single hot token (stopword) makes the self-join quadratic.
+  index, for oracle-sized subsets (``max_doc_id``); at scale, generate
+  candidates with minhash_lsh and verify with jaccard_for_pairs.
 - **jaccard_for_pairs**: exact Jaccard restricted to a candidate-pair
   table — the verification stage after LSH; joins only |candidates|
   rows against the token sets, never all-pairs.
@@ -21,10 +21,11 @@ the correctness oracles — the hash family is an implementation detail;
 verifiability is the requirement. Signatures are computed ONCE per
 plan side: band/block buckets come from ``posexplode`` over an array
 built from the materialized signature columns, never from per-band
-unions that would re-evaluate the signature — and since round 4 the
-band/block tables are ``persist()``-ed so the self-join's two sides
-(plus the hot-bucket cap count) share one computation; at corpus
-scale you would checkpoint the signature table instead.
+unions that would re-evaluate the signature. The band/block table is
+hash-partitioned once on the join key (``partitioning.bucket_rows``):
+both self-join sides and the hot-bucket cap read that one exchange,
+so the signature runs once per query and no query leaves cached
+state behind.
 
 All built-in column expressions / higher-order functions — no Python in
 the hot path.
@@ -97,7 +98,6 @@ def token_sets(df: DataFrame, text_col: str = "text") -> DataFrame:
 def jaccard_pairs(df: DataFrame, text_col: str = "text",
                   threshold: float = 0.8,
                   max_doc_id: int | None = None,
-                  max_token_df: int | None = None,
                   ngram: int | None = None) -> DataFrame:
     """Exact Jaccard pairs >= threshold over token sets, or over word
     n-gram shingle sets when ``ngram`` is given (n-gram Jaccard —
@@ -105,13 +105,7 @@ def jaccard_pairs(df: DataFrame, text_col: str = "text",
 
     All-pairs via token inverted index (explode + self-join on token,
     groupBy pair). ``max_doc_id`` bounds the subset for oracle-checked
-    runs. ``max_token_df`` drops tokens whose document frequency
-    exceeds the cap from the index (the Zipf head) — without it a
-    single hot token makes the self-join quadratic on one key at
-    corpus scale; with it, n_inter undercounts pairs whose only
-    overlap is capped tokens, so at full scale use this as candidate
-    generation and re-verify with :func:`jaccard_for_pairs`.
-    Returns exact integer (intersection, union) so the result is
+    runs. Returns exact integer (intersection, union) so the result is
     bit-stable across engines.
     """
     base = df
@@ -128,11 +122,6 @@ def jaccard_pairs(df: DataFrame, text_col: str = "text",
             "shingles", "toks")
     sizes = ts.select("doc_id", F.size("toks").alias("sz"))
     inv = ts.select("doc_id", F.explode("toks").alias("tok"))
-    if max_token_df is not None:
-        hot = (
-            inv.groupBy("tok").agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_token_df).select("tok"))
-        inv = inv.join(F.broadcast(hot), "tok", "left_anti")
     pairs = (
         inv.alias("a")
         .join(inv.alias("b"), on="tok")
@@ -266,6 +255,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     empty-document bucket) whose size would make the bucket self-join
     quadratic at corpus scale.
     """
+    from .partitioning import bucket_rows
+
     rows_per_band = num_hashes // bands
     sig = minhash_signatures(df, text_col, num_hashes, shingle_n)
     # one parsed SQL expression for the 8-band bucket array (the
@@ -278,21 +269,9 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
             f"CAST(mh_{band * rows_per_band + r} AS STRING)"
             for r in range(rows_per_band)) + "))"
         for band in range(bands)) + ")")
-    # persisted: the bucket self-join otherwise recomputes the full
-    # shingle+md5 signature pipeline once per join side (plus once for
-    # the cap count). State is (doc_id, band, bucket) only — at corpus
-    # scale you would checkpoint the signature table instead.
-    from pyspark import StorageLevel
-
-    band_rows = sig.select(
-        "doc_id", F.posexplode(buckets).alias("band", "bucket")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    if max_bucket_size is not None:
-        ok = (band_rows.groupBy("band", "bucket")
-              .agg(F.count("*").alias("_n"))
-              .filter(F.col("_n") <= max_bucket_size)
-              .drop("_n"))
-        band_rows = band_rows.join(ok, ["band", "bucket"])
+    band_rows = bucket_rows(
+        sig.select("doc_id", F.posexplode(buckets).alias("band", "bucket")),
+        ["band", "bucket"], max_bucket_size)
     pairs = (
         band_rows.alias("a")
         .join(band_rows.alias("b"), on=["band", "bucket"])
@@ -366,24 +345,18 @@ def simhash_candidates(df: DataFrame, text_col: str = "text",
     thousands of near-empty documents collapsing to signature 0 —
     the same hot-bucket guard as minhash_lsh_pairs /
     embedding_near_dups / image_near_dups."""
+    from .partitioning import bucket_rows
+
     sh = simhash(df, text_col)
     blk_vals = F.array(*[
         F.shiftrightunsigned(F.col("simhash"), blk * 15)
         .bitwiseAND(F.lit(0x7FFF)).cast("long")
         for blk in range(SIMHASH_BLOCKS)
     ])
-    from pyspark import StorageLevel
-
-    blocks = sh.select(
-        "doc_id", "simhash",
-        F.posexplode(blk_vals).alias("blk", "blk_val")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    if max_bucket_size is not None:
-        ok = (blocks.groupBy("blk", "blk_val")
-              .agg(F.count("*").alias("_n"))
-              .filter(F.col("_n") <= max_bucket_size)
-              .drop("_n"))
-        blocks = blocks.join(ok, ["blk", "blk_val"])
+    blocks = bucket_rows(
+        sh.select("doc_id", "simhash",
+                  F.posexplode(blk_vals).alias("blk", "blk_val")),
+        ["blk", "blk_val"], max_bucket_size)
     xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
     hamming = F.bit_count(xor).cast("int")
     # Hamming filter BEFORE any dedup: the popcount is a cheap

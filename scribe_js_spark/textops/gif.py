@@ -128,16 +128,6 @@ def _lzw_encode_lsb(data: bytes, min_code_size: int) -> bytes:
     return bytes(out)
 
 
-def _check_budget(w: int, h: int) -> None:
-    """Refuse a screen or frame whose RGB array would pass the shared
-    decode budget, before anything is allocated for it."""
-    from .multimodal import DECODE_BUDGET
-
-    if w * h * 3 > DECODE_BUDGET:
-        raise ValueError(f"gif: {w}x{h} exceeds the decode budget of "
-                         f"{DECODE_BUDGET} bytes")
-
-
 def decode_gif(data: bytes):
     """GIF -> (width, height, frames, delays_cs) where frames is a
     list of (h, w, 3) uint8 RGB ndarrays (palette-resolved;
@@ -146,12 +136,16 @@ def decode_gif(data: bytes):
     graphic-control frame delays in centiseconds."""
     import numpy as np
 
+    from .multimodal import check_decode_budget
+
     if data[:6] not in GIF_MAGICS:
         raise ValueError("not a GIF")
     if len(data) < 13:
         raise ValueError("gif: truncated header")
     width, height, flags, _bg, _aspect = struct.unpack_from("<HHBBB", data, 6)
-    _check_budget(width, height)
+    # the screen and each frame, as RGB, are refused past the shared
+    # decode budget before anything is allocated for them
+    check_decode_budget(width * height * 3, f"gif: {width}x{height}")
     pos = 13
     gct = None
     if flags & 0x80:
@@ -178,7 +172,7 @@ def decode_gif(data: bytes):
         if block != 0x2C:
             raise ValueError(f"gif: unexpected block 0x{block:02x}")
         fx, fy, fw, fh, iflags = struct.unpack_from("<HHHHB", data, pos)
-        _check_budget(fw, fh)
+        check_decode_budget(fw * fh * 3, f"gif: {fw}x{fh}")
         pos += 9
         pal = gct
         if iflags & 0x80:

@@ -106,28 +106,21 @@ def image_near_dups(df: DataFrame, max_distance: int = 3,
     at corpus scale — same guard as minhash_lsh_pairs /
     embedding_near_dups; the self-join stays output-bound.
 
-    The pHash table is persisted before the self-join: the plan
-    otherwise re-runs the Arrow decode+DCT UDF once per join side
-    (plus once for the cap count) — 3x the dominant cost. The
-    persisted state is only (media_id, phash) — 16 bytes a row; at
-    corpus scale you would checkpoint it to a table instead."""
-    from pyspark import StorageLevel
+    The block table is hash-partitioned once on the join key, and both
+    join sides and the cap read that one exchange: the Arrow
+    decode+DCT UDF, the dominant cost, runs once per query, and only
+    (media_id, phash, block_n, block) rows shuffle."""
+    from .partitioning import bucket_rows
 
     hashed = (phash_images(df, id_col, bytes_col)
               .filter(F.col("error").isNull())
-              .select("media_id", "phash")
-              .persist(StorageLevel.MEMORY_AND_DISK))
-    blocks = hashed.select(
+              .select("media_id", "phash"))
+    blocks = bucket_rows(hashed.select(
         "media_id", "phash",
         F.posexplode(F.array(*[
             F.shiftrightunsigned("phash", 16 * i).bitwiseAND(F.lit(0xFFFF))
-            for i in range(4)])).alias("block_n", "block"))
-    if max_bucket_size is not None:
-        ok = (blocks.groupBy("block_n", "block")
-              .agg(F.count("*").alias("_n"))
-              .filter(F.col("_n") <= max_bucket_size)
-              .drop("_n"))
-        blocks = blocks.join(ok, ["block_n", "block"])
+            for i in range(4)])).alias("block_n", "block")),
+        ["block_n", "block"], max_bucket_size)
     pairs = (
         blocks.alias("a")
         .join(blocks.alias("b"),

@@ -473,6 +473,14 @@ def decode_jpeg(data: bytes, decode_invert: bool = False) -> np.ndarray:
                     ch = (h * c["vs"] + vmax - 1) // vmax
                     c["cbw"] = (cw + 7) // 8
                     c["cbh"] = (ch + 7) // 8
+                # the SOF header alone sizes these buffers: refuse
+                # them past the shared decode budget, counted in
+                # samples as for the other codecs, before allocating
+                from .multimodal import check_decode_budget
+
+                check_decode_budget(
+                    sum(mcuy * c["vs"] * mcux * c["hs"] * 64
+                        for c in comps), f"jpeg: {w}x{h}")
                 coefs = [np.zeros((mcuy * c["vs"], mcux * c["hs"], 64),
                                   dtype=np.int32) for c in comps]
             ns = seg[0]

@@ -69,13 +69,23 @@ _RIFF_MAGIC = b"RIFF"
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
-#: Most bytes one image may decode to. PNG (filtered scanlines or pixel
-#: array), RLE BMP and GIF (screen or frame, as RGB) take their sizes
-#: from the header alone, so a small file could otherwise claim
-#: gigabytes: past the budget the decoder raises ValueError before it
-#: inflates or allocates anything. A 600 dpi letter-size RGBA page is
-#: about 135 MB.
+#: Most bytes one image may decode to, at one byte per 8-bit sample.
+#: PNG (filtered scanlines or pixel array), RLE BMP, GIF (screen or
+#: frame, as RGB) and JPEG (coefficient samples) take their sizes from
+#: the header alone, so a small file could otherwise claim gigabytes:
+#: past the budget the decoder raises ValueError before it inflates or
+#: allocates anything. A 600 dpi letter-size RGBA page is about 135 MB.
 DECODE_BUDGET = 256 * 1024 * 1024
+
+
+def check_decode_budget(n: int, what: str) -> None:
+    """Refuse an image whose header claims ``n`` decoded bytes (one per
+    8-bit sample) past DECODE_BUDGET. ``what`` names the codec and the
+    claimed size in the error."""
+    if n > DECODE_BUDGET:
+        raise ValueError(f"{what} exceeds the decode budget of "
+                         f"{DECODE_BUDGET} bytes")
+
 
 # Adam7 pass geometry: (x0, y0, dx, dy) per pass (PNG spec 4.5.2).
 _ADAM7 = [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
@@ -188,9 +198,8 @@ def decode_png(data: bytes):
         if pw > 0 and ph > 0:
             passes.append((x0, y0, dx, dy, pw, ph))
     expected = sum(ph * (rowbytes(pw) + 1) for *_, pw, ph in passes)
-    if max(expected, width * height * channels * sb) > DECODE_BUDGET:
-        raise ValueError(f"PNG {width}x{height} exceeds the decode "
-                         f"budget of {DECODE_BUDGET} bytes")
+    check_decode_budget(max(expected, width * height * channels * sb),
+                        f"PNG {width}x{height}")
     # Inflate only the bytes the scanlines take. A stream that ends
     # before its terminator is truncated, as zlib.decompress reports.
     inflater = zlib.decompressobj()
@@ -540,9 +549,7 @@ def decode_bmp(data: bytes):
         if bpp != (8 if compression == 1 else 4):
             raise ValueError(f"bmp: RLE{compression} with {bpp} bpp")
         # RLE runs can claim any size: bound the index and RGB arrays
-        if w * h * 3 > DECODE_BUDGET:
-            raise ValueError(f"bmp: {w}x{h} exceeds the decode budget "
-                             f"of {DECODE_BUDGET} bytes")
+        check_decode_budget(w * h * 3, f"bmp: {w}x{h}")
         idx = _bmp_rle_indices(data, px_off, w, h,
                                four_bit=compression == 2)
         return w, h, 3, palette()[idx[::-1]]  # RLE is bottom-up only

@@ -24,6 +24,10 @@ round-robin distribution — ``spark.sql.execution.sortBeforeRepartition``
 — so retried tasks reproduce the same assignment), and every operator
 using it computes per-row / order-independent aggregates, so results
 are identical under any partitioning.
+
+``bucket_rows`` is the other half: the table a bucket self-join reads
+on both sides, hash-partitioned once on the join key, with the
+optional hot-bucket cap computed on that same partitioning.
 """
 
 from __future__ import annotations
@@ -31,7 +35,8 @@ from __future__ import annotations
 import functools
 import logging
 
-from pyspark.sql import DataFrame
+import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, Window
 
 _log = logging.getLogger(__name__)
 
@@ -72,3 +77,23 @@ def spread_input(df: DataFrame, columns: list[str] | None = None,
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(target)
+
+
+def bucket_rows(df: DataFrame, keys: list[str],
+                max_bucket_size: int | None = None) -> DataFrame:
+    """Hash-partition ``df`` on ``keys`` for a self-join on them.
+
+    Both join sides then read one exchange (the second is planned as a
+    ``ReusedExchange``), so whatever computed ``df`` runs once per
+    query and nothing is cached. ``max_bucket_size`` drops every row
+    of a key holding more than that many rows; the count is a window
+    over the same partitioning, so the cap adds no exchange. A hot
+    key's rows still all reach one task, which sorts them for the
+    window before dropping them: the cap bounds the join, not the
+    exchange."""
+    df = df.repartition(*keys)
+    if max_bucket_size is None:
+        return df
+    n = F.count("*").over(Window.partitionBy(*keys))
+    return (df.withColumn("_n", n)
+            .filter(F.col("_n") <= max_bucket_size).drop("_n"))

@@ -60,15 +60,6 @@ def _norm_sql(a: str) -> str:
     return f"sqrt({_dot_sql(a, a)})"
 
 
-def _dist2_sql(a: str, point) -> str:
-    """SQL text of the left-fold squared distance from a named array
-    column to a constant point, over float64 casts."""
-    arr = "array(" + ",".join(_double_sql(v) for v in point) + ")"
-    return (f"aggregate(zip_with({_ident(a)}, {arr}, "
-            "(x, c) -> (cast(x as double) - c) * (cast(x as double) - c)), "
-            "cast(0.0 as double), (acc, v) -> acc + v)")
-
-
 def ann_topk_bruteforce(df: DataFrame, queries: DataFrame, k: int = 5,
                         id_col: str = "vec_id",
                         vec_col: str = "embedding") -> DataFrame:
@@ -120,8 +111,10 @@ def ann_topk_ivf(df: DataFrame, queries: DataFrame, k: int = 5,
     nearest cells and exact-rerank within them.
 
     Scale path: the centroid table is tiny (2^n_planes_coarse rows) and
-    broadcast everywhere; the corpus partitions by cell, so a query
-    touches ``nprobe`` cells instead of the full corpus.
+    broadcast everywhere as one row; the corpus partitions by cell, so
+    a query touches ``nprobe`` cells instead of the full corpus.
+    Building the query starts no Spark job: the centroids stay in the
+    plan.
     """
     base = df.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
@@ -130,27 +123,33 @@ def ann_topk_ivf(df: DataFrame, queries: DataFrame, k: int = 5,
     # Centroids: per-dimension means of each coarse LSH bucket, rounded
     # to 6 decimals so the value is reproducible across engines (the
     # raw avg's last ulp depends on summation order; the SQL oracle
-    # computes round(avg(...), 6) too).
-    cent_rows = (
+    # computes round(avg(...), 6) too). They ride as ONE row, _cents:
+    # the (bucket, centroid) structs sorted by bucket.
+    cents = (
         base.select("bucket", F.posexplode(
             F.transform(F.col("vec"), lambda x: x.cast("double"))))
         .groupBy("bucket", "pos").agg(F.round(F.avg("col"), 6).alias("v"))
         .groupBy("bucket")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("pv"))
-        .select("bucket", F.col("pv.v").alias("centroid"))
-        .collect()
+        .agg(F.array_sort(F.collect_list(F.struct(
+            "bucket", F.col("pv.v").alias("centroid")))).alias("_cents"))
     )
-    centroids = [(int(r["bucket"]), list(r["centroid"])) for r in cent_rows]
-
-    dists = "array(" + ", ".join(
-        f"struct({_dist2_sql('vec', c)} AS d, {b} AS cell)"
-        for b, c in centroids) + ")"
-    assigned = base.withColumn("cell", F.expr(f"array_min({dists}).cell"))
+    # (squared distance to the cell's centroid, cell) per cell: a left
+    # fold over float64 casts, ordered by distance then cell
+    dists = ("transform(_cents, c -> struct(aggregate(zip_with(vec, "
+             "c.centroid, (x, y) -> (cast(x as double) - y) * "
+             "(cast(x as double) - y)), cast(0.0 as double), "
+             "(acc, v) -> acc + v) AS d, c.bucket AS cell))")
+    assigned = (
+        base.crossJoin(F.broadcast(cents))
+        .withColumn("cell", F.expr(f"array_min({dists}).cell"))
+        .drop("_cents"))
 
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("vec"))
     q_cells = (
-        q.withColumn(
+        q.crossJoin(F.broadcast(cents))
+        .withColumn(
             "probe_cells",
             F.expr(f"slice(transform(array_sort({dists}), s -> s.cell), "
                    f"1, {int(nprobe)})"))
@@ -275,65 +274,56 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
     cross-engine stability. With a pre-materialized bucket column
     (``bucket_col``, or an ``lsh_bucket`` column auto-detected on the
     input — see :func:`with_lsh_bucket`) the per-row hyperplane
-    projection is skipped entirely and the bucket rides the scan."""
-    from pyspark import StorageLevel
+    projection is skipped entirely and the bucket rides the scan.
 
-    from .partitioning import spread_input
+    ``base`` is hash-partitioned once on the bucket, and both sides of
+    the probe join read that one exchange, so the projection runs once
+    per query and nothing is cached. Under the cap a hot-bucket vector
+    is neither a probe nor a match."""
+    from .partitioning import bucket_rows, spread_input
 
     # spread the (one-row-group) corpus scan BEFORE the bucket/norm
-    # projection and the fused probe-join pipeline: with the pair
-    # .distinct() gone this query is one map-side pipeline whose
-    # parallelism is the scan's — a single-row-group parquet file
-    # would run it on one task (guide 2.5)
+    # projection: its parallelism is otherwise the scan's — a
+    # single-row-group parquet file would run it on one task
+    # (guide 2.5)
     df = spread_input(df)
-    base = df.select(
+    base = bucket_rows(df.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
         _corpus_bucket(df, vec_col, dim, n_planes, bucket_col)
         .alias("bucket"),
-        # norm computed ONCE per vector at persist time — the verify
-        # stage previously re-derived both norms for every candidate
-        # pair (3 fold evaluations per pair; now 1)
-        F.expr(_norm_sql(vec_col)).alias("nrm")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        # norm computed ONCE per vector below the exchange, not per
+        # candidate pair. Never NULL: a vector with a NULL norm has a
+        # NULL dot product, so its pairs fail the threshold either
+        # way, and Spark infers no isnotnull(nrm) filter that it would
+        # push into the scan and fold the norm a second time for
+        F.coalesce(F.expr(_norm_sql(vec_col)), F.lit(0.0)).alias("nrm")),
+        ["bucket"], max_bucket_size)
     probes = base.select(
-        "vid", "vec",
+        F.col("vid").alias("vec_a"), F.col("vec").alias("va"),
+        F.col("nrm").alias("na"),
         F.explode(F.array(
             F.col("bucket"),
             *[F.col("bucket").bitwiseXOR(F.lit(1 << p))
               for p in range(n_planes)])).alias("probe"))
-    if max_bucket_size is not None:
-        ok = (base.groupBy("bucket")
-              .agg(F.count("*").alias("_n"))
-              .filter(F.col("_n") <= max_bucket_size)
-              .drop("_n"))
-        base = base.join(ok, "bucket")
-        probes = probes.join(
-            ok.withColumnRenamed("bucket", "probe"), "probe")
+    matches = base.select(
+        F.col("vid").alias("vec_b"), F.col("vec").alias("vb"),
+        F.col("nrm").alias("nb"), "bucket")
     # No pair-dedup needed (round 6): the multiprobe join emits each
     # ORDERED pair at most once — a's probe list {bucket ^ m : m in
     # {0, 1<<0..1<<(n_planes-1)}} has pairwise-distinct values, so
     # bucket_b appears in it at most once (exactly when
     # bucket_a XOR bucket_b is 0 or a single probed bit), and the
     # strict vid-order filter then keeps exactly one orientation of
-    # each unordered pair. The .distinct() this replaces was the ONLY
-    # Exchange in the query (15.2M pair rows shuffled at sf1.0, for a
-    # provably-already-unique set); without it the whole query is one
-    # fused broadcast-join pipeline. tests/test_r06_codegen_equiv.py
-    # asserts the no-duplicate property on a Hamming-0/1/2 fixture.
-    cand = (
-        probes.alias("a")
-        .join(base.alias("b"), F.col("a.probe") == F.col("b.bucket"))
-        .filter(F.col("a.vid") < F.col("b.vid"))
-        .select(F.col("a.vid").alias("vec_a"),
-                F.col("b.vid").alias("vec_b"))
-    )
-    va = base.select(F.col("vid").alias("vec_a"),
-                     F.col("vec").alias("va"), F.col("nrm").alias("na"))
-    vb = base.select(F.col("vid").alias("vec_b"),
-                     F.col("vec").alias("vb"), F.col("nrm").alias("nb"))
+    # each unordered pair, so no .distinct() shuffles the candidates.
+    # tests/test_r06_codegen_equiv.py asserts the no-duplicate
+    # property on a Hamming-0/1/2 fixture. Both sides carry the vector
+    # and its norm: they read the same columns of the one exchange
+    # (column pruning would otherwise split it in two), and the verify
+    # needs no join back to base.
     sim = F.expr(_dot_sql("va", "vb") + " / (na * nb)")
     return (
-        cand.join(va, "vec_a").join(vb, "vec_b")
+        probes.join(matches, (F.col("probe") == F.col("bucket"))
+                    & (F.col("vec_a") < F.col("vec_b")))
         .withColumn("sim", sim)
         .filter(F.col("sim") >= threshold)
         .select("vec_a", "vec_b",

@@ -5,10 +5,30 @@ bucket self-join quadratic on that key at corpus scale. minhash has had
 ``max_bucket_size`` since r2; these fixtures prove the same guard on
 the embedding and image paths: with the cap the degenerate bucket's
 pairs vanish while genuine near-dup pairs elsewhere survive.
+
+Each cap is a window count over the one hash partitioning both join
+sides read (``partitioning.bucket_rows``); the tests at the end hold it
+equal to the groupBy + join cap it replaced, and hold the operators to
+leaving no cached state behind.
 """
 
+import random
+
 import numpy as np
+import pyspark.sql.functions as F
 import pytest
+
+# identical documents form one degenerate band bucket per band
+MINHASH_DOCS = [
+    (i, "the same exact document text repeated verbatim here")
+    for i in range(40)] + [
+    (1000, "an unrelated quick brown fox jumps over lazy dog"),
+    (1001, "an unrelated quick brown fox jumps over lazy dogs")]
+# near-empty docs collapse to one signature -> one degenerate block
+# bucket per block
+SIMHASH_DOCS = [(i, "x") for i in range(40)] + [
+    (1000, "the quick brown fox jumps over the lazy dog"),
+    (1001, "the quick brown fox jumps over the lazy dogs")]
 
 
 def _photo(seed=0, h=64, w=96):
@@ -55,18 +75,22 @@ def test_embedding_cap_drops_degenerate_bucket(emb_df):
     assert got == {(1000, 1001)}
 
 
-def test_image_cap_drops_degenerate_bucket(spark):
-    from scribe_js_spark.textops.imagehash import image_near_dups
+def _image_rows():
     from scribe_js_spark.textops.jpeg import encode_jpeg_gray
     from scribe_js_spark.textops.multimodal import encode_png_gray
 
     img = _photo(2)
     mono = np.full((32, 32), 128, dtype=np.uint8)
-    rows = [(i, encode_png_gray(mono)) for i in range(40)] + [
+    return [(i, encode_png_gray(mono)) for i in range(40)] + [
         (1000, encode_png_gray(img)),
         (1001, encode_jpeg_gray(img)),   # re-encoded duplicate of 1000
     ]
-    df = spark.createDataFrame(rows, ["media_id", "data"])
+
+
+def test_image_cap_drops_degenerate_bucket(spark):
+    from scribe_js_spark.textops.imagehash import image_near_dups
+
+    df = spark.createDataFrame(_image_rows(), ["media_id", "data"])
 
     uncapped = image_near_dups(df).collect()
     assert len(uncapped) == 40 * 39 // 2 + 1
@@ -81,11 +105,7 @@ def test_minhash_cap_reference_behavior(spark):
     # documents form one degenerate band bucket per band.
     from scribe_js_spark.textops.dedup import minhash_lsh_pairs
 
-    docs = [(i, "the same exact document text repeated verbatim here")
-            for i in range(40)]
-    docs += [(1000, "an unrelated quick brown fox jumps over lazy dog"),
-             (1001, "an unrelated quick brown fox jumps over lazy dogs")]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
+    df = spark.createDataFrame(MINHASH_DOCS, ["doc_id", "text"])
     capped = minhash_lsh_pairs(df, max_bucket_size=10)
     got = {(r["doc_a"], r["doc_b"]) for r in capped.collect()}
     assert (1000, 1001) in got
@@ -97,10 +117,7 @@ def test_simhash_cap_drops_degenerate_block(spark):
     # block bucket per block; the cap keeps the join output-bound
     from scribe_js_spark.textops.dedup import simhash_candidates
 
-    docs = [(i, "x") for i in range(40)]
-    docs += [(1000, "the quick brown fox jumps over the lazy dog"),
-             (1001, "the quick brown fox jumps over the lazy dogs")]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
+    df = spark.createDataFrame(SIMHASH_DOCS, ["doc_id", "text"])
     capped = simhash_candidates(df, max_bucket_size=10)
     got = {(r["doc_a"], r["doc_b"]) for r in capped.collect()}
     assert not any(a < 40 and b < 40 for a, b in got)
@@ -154,3 +171,160 @@ def test_prebucketed_corpus_rides_the_scan(spark, tmp_path):
     plain_plan = plain_ann._jdf.queryExecution().executedPlan().toString()
     assert "lsh_bucket" in pre_plan
     assert pre_plan.count("zip_with") < plain_plan.count("zip_with")
+
+
+def _ref_cap(df, keys, max_bucket_size):
+    """The hot-bucket cap before the window: a second groupBy over the
+    table, joined back on the keys."""
+    if max_bucket_size is None:
+        return df
+    ok = (df.groupBy(*keys).agg(F.count("*").alias("_n"))
+          .filter(F.col("_n") <= max_bucket_size).drop("_n"))
+    return df.join(ok, keys)
+
+
+def _sorted_rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_window_cap_matches_groupby_join_cap(spark):
+    """bucket_rows' window cap keeps exactly the rows the groupBy +
+    join cap kept, on seeded skewed keys. A NULL key is compared as
+    the self-join sees it: the join cap dropped it (a NULL key joins
+    nothing) and the self-join drops it under either cap."""
+    from scribe_js_spark.textops.partitioning import bucket_rows
+
+    rng = random.Random(17)
+    rows = []
+    for i in range(600):
+        k1 = rng.choice([0, 0, 0, 1, 2, None])
+        k2 = int(rng.paretovariate(1.2)) % 40
+        rows.append((i, k1, k2))
+    df = spark.createDataFrame(rows, "id long, k1 int, k2 long")
+    keys = ["k1", "k2"]
+    sizes = {}
+    for _, k1, k2 in rows:
+        sizes[(k1, k2)] = sizes.get((k1, k2), 0) + 1
+    for cap in (1, 3, 10, 100, None):
+        got = _sorted_rows(bucket_rows(df, keys, cap).dropna(subset=keys))
+        want = _sorted_rows(
+            _ref_cap(df, keys, cap).select("id", *keys).dropna(subset=keys))
+        assert got == want, cap
+        # these caps split the fixture: some buckets kept, some dropped
+        if cap in (3, 10):
+            assert 0 < len(got) < sum(1 for r in rows if r[1] is not None)
+    assert max(sizes.values()) > 100
+
+
+def _cap_cases(spark, emb_df):
+    """(name, input, build) per operator: the fixtures above, then a
+    seeded random table whose buckets have many sizes (repeated
+    document texts, clustered 8-dim vectors, re-encoded images)."""
+    from scribe_js_spark.textops.dedup import (
+        minhash_lsh_pairs, simhash_candidates)
+    from scribe_js_spark.textops.imagehash import image_near_dups
+    from scribe_js_spark.textops.jpeg import encode_jpeg_gray
+    from scribe_js_spark.textops.multimodal import encode_png_gray
+    from scribe_js_spark.textops.similarity import embedding_near_dups
+
+    rng = random.Random(23)
+    words = "alpha beta gamma delta eps zeta eta theta iota kappa".split()
+    texts = [" ".join(rng.choice(words) for _ in range(rng.randint(1, 9)))
+             for _ in range(12)]
+    docs = spark.createDataFrame(
+        [(i, rng.choice(texts)) for i in range(120)], ["doc_id", "text"])
+    centers = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(6)]
+    vecs = spark.createDataFrame(
+        [(i, [c + rng.uniform(-0.02, 0.02)
+              for c in centers[int(rng.paretovariate(1.0)) % 6]])
+         for i in range(150)], ["vec_id", "embedding"])
+    images = spark.createDataFrame(
+        [(i, (encode_png_gray if i % 2 else encode_jpeg_gray)(
+            _photo(rng.randrange(4)))) for i in range(24)]
+        + [(100 + i, encode_png_gray(
+            np.full((16, 16), 40 * (i % 2), np.uint8))) for i in range(9)],
+        ["media_id", "data"])
+
+    def minhash(df, cap):
+        return minhash_lsh_pairs(df, max_bucket_size=cap)
+
+    def simhash(df, cap):
+        return simhash_candidates(df, max_bucket_size=cap)
+
+    def embedding(df, cap):
+        return embedding_near_dups(df, threshold=0.9, dim=8,
+                                   max_bucket_size=cap)
+
+    def image(df, cap):
+        return image_near_dups(df, max_bucket_size=cap)
+
+    return [
+        ("minhash", spark.createDataFrame(
+            MINHASH_DOCS, ["doc_id", "text"]), minhash),
+        ("minhash", docs, minhash),
+        ("simhash", spark.createDataFrame(
+            SIMHASH_DOCS, ["doc_id", "text"]), simhash),
+        ("simhash", docs, simhash),
+        ("embedding", emb_df, embedding),
+        ("embedding", vecs, embedding),
+        ("image", spark.createDataFrame(
+            _image_rows(), ["media_id", "data"]), image),
+        ("image", images, image),
+    ]
+
+
+def test_operator_window_caps_match_groupby_join_caps(
+        spark, emb_df, monkeypatch):
+    """Each operator returns the same rows under the window cap as
+    under the groupBy + join cap, swapped in for bucket_rows."""
+    from scribe_js_spark.textops import partitioning
+
+    for name, df, build in _cap_cases(spark, emb_df):
+        for cap in (2, 10):
+            got = _sorted_rows(build(df, cap))
+            with monkeypatch.context() as m:
+                m.setattr(partitioning, "bucket_rows", _ref_cap)
+                want = _sorted_rows(build(df, cap))
+            assert got == want, (name, cap)
+
+
+def _cached_tables(spark):
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+def test_sweeps_leave_no_cached_state(spark, emb_df):
+    """Building and collecting the four bucket self-join operators,
+    capped and uncapped, over fresh frames leaves the persistent-RDD
+    and cached-table counts where they were."""
+    sc = spark.sparkContext
+    before = (sc._jsc.getPersistentRDDs().size(), _cached_tables(spark))
+    for sweep in range(3):
+        for name, df, build in _cap_cases(spark, emb_df)[sweep % 2::2]:
+            for cap in (None, 10):
+                build(df, cap).collect()
+        after = (sc._jsc.getPersistentRDDs().size(), _cached_tables(spark))
+        assert after == before, (sweep, before, after)
+
+
+def test_self_join_sides_share_one_exchange(spark, emb_df):
+    """In each operator's final adaptive plan the second join side is a
+    ReusedExchange of the first, nothing is read from cache, and the
+    work below the exchange (band/block explode, bucket projection and
+    norm fold, pHash UDF) is planned once: no inferred filter evaluates
+    the norm again in the scan."""
+    marker = {"minhash": ["posexplode"], "simhash": ["posexplode"],
+              "embedding": ["AS nrm#", "SQRT("], "image": ["MapInPandas"]}
+    for name, df, build in _cap_cases(spark, emb_df)[1::2]:
+        for cap in (None, 10):
+            res = build(df, cap)
+            res.collect()
+            plan = res._jdf.queryExecution().executedPlan().toString()
+            final = plan.split("== Initial Plan ==")[0]
+            assert "isFinalPlan=true" in final, name
+            assert "ReusedExchange" in final, (name, cap)
+            assert "InMemoryTableScan" not in final, (name, cap)
+            for m in marker[name]:
+                assert final.count(m) == 1, (name, cap, m)

@@ -476,10 +476,45 @@ def test_decode_media_net_catches_all_codec_mutations():
     gif = (b"GIF89a" + struct.pack("<HHBBB", 65535, 65535, 0x80, 0, 0)
            + bytes(6) + b"\x2c" + struct.pack("<HHHHB", 0, 0, 1, 1, 0)
            + bytes([2, len(lzw)]) + lzw + b"\x00\x3b")
-    assert (len(rle_bmp), len(gif)) == (1080, 35)
-    for bomb in (rle_bmp, gif):
+    # A 317-byte baseline JPEG of a 16x16 image whose SOF claims
+    # 65535x65535: 4.3 G coefficient samples (16 GiB as int32).
+    jpeg = bytearray(encode_jpeg_gray(np.zeros((16, 16), np.uint8)))
+    sof = jpeg.index(b"\xff\xc0")
+    jpeg[sof + 5:sof + 9] = struct.pack(">HH", 65535, 65535)
+    assert (len(rle_bmp), len(gif), len(jpeg)) == (1080, 35, 317)
+    for bomb in (rle_bmp, gif, bytes(jpeg)):
         with pytest.raises(ValueError, match="decode budget"):
             _decode_one(bomb)
+
+
+def test_jpeg_budget_admits_a_600dpi_letter_page(monkeypatch):
+    """The JPEG budget counts coefficient samples, as the other codecs
+    count decoded bytes: a 4:4:4 SOF claiming a 600 dpi letter page
+    (5100x6600, 101 M samples; 404 MB as int32) passes it. The decode
+    stops right after the check, so nothing is allocated."""
+    import struct
+
+    from scribe_js_spark.textops import multimodal
+    from scribe_js_spark.textops.jpeg import decode_jpeg, encode_jpeg_ycbcr
+
+    class Admitted(Exception):
+        pass
+
+    real, seen = multimodal.check_decode_budget, []
+
+    def check(n, what):
+        real(n, what)
+        seen.append((n, what))
+        raise Admitted
+
+    monkeypatch.setattr(multimodal, "check_decode_budget", check)
+    plane = np.zeros((16, 16), np.uint8)
+    jpeg = bytearray(encode_jpeg_ycbcr(plane, plane, plane, sampling=(1, 1)))
+    sof = jpeg.index(b"\xff\xc0")
+    jpeg[sof + 5:sof + 9] = struct.pack(">HH", 6600, 5100)
+    with pytest.raises(Admitted):
+        decode_jpeg(bytes(jpeg))
+    assert seen == [(3 * 825 * 638 * 64, "jpeg: 5100x6600")]
 
 
 @_capped

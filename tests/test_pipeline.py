@@ -313,22 +313,44 @@ def test_per_document_is_the_only_map_in_pandas():
     assert found == [("scribe_js_spark/pipeline.py", "per_document")]
 
 
-def test_package_reads_no_environment_variable():
-    """Every value the package runs with is a constant or a parameter:
-    no module reads os.environ or os.getenv."""
+def _package_nodes():
+    """(path, node) for every syntax node of the package and of
+    __spark_entry__.py."""
     import ast
     from pathlib import Path
 
     root = Path(__file__).resolve().parent.parent
-    found = []
     for path in [root / "__spark_entry__.py",
                  *sorted((root / "scribe_js_spark").rglob("*.py"))]:
-        found += [
-            (path.relative_to(root).as_posix(), node.lineno)
-            for node in ast.walk(ast.parse(path.read_text()))
-            if isinstance(node, ast.Attribute)
-            and node.attr in ("environ", "getenv")
-            and isinstance(node.value, ast.Name) and node.value.id == "os"]
+        for node in ast.walk(ast.parse(path.read_text())):
+            yield path.relative_to(root).as_posix(), node
+
+
+def test_package_reads_no_environment_variable():
+    """Every value the package runs with is a constant or a parameter:
+    no module reads os.environ or os.getenv."""
+    import ast
+
+    found = [
+        (path, node.lineno) for path, node in _package_nodes()
+        if isinstance(node, ast.Attribute)
+        and node.attr in ("environ", "getenv")
+        and isinstance(node.value, ast.Name) and node.value.id == "os"]
+    assert found == []
+
+
+def test_package_caches_nothing():
+    """No query leaves executor state behind: nothing in the package
+    persists, caches or checkpoints a DataFrame or RDD, since nothing
+    would release it."""
+    import ast
+
+    found = [
+        (path, node.lineno) for path, node in _package_nodes()
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("persist", "cache", "checkpoint",
+                               "localCheckpoint")]
     assert found == []
 
 

@@ -339,6 +339,100 @@ def test_embedding_near_dups_builds_lazily(spark, tmp_path):
     assert len(got) > 100
 
 
+def _ref_ann_topk_ivf(df, queries, k, dim, n_planes_coarse, nprobe):
+    """ann_topk_ivf as it was before the centroids stayed in the plan:
+    collect the centroids on the driver and write each one into the
+    SQL text as a literal point."""
+    from pyspark.sql import Window
+
+    from scribe_js_spark.textops.similarity import (
+        _double_sql, _dot_sql, _norm_sql, lsh_bucket)
+
+    base = df.select(
+        F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"),
+        lsh_bucket("embedding", dim, n_planes_coarse).alias("bucket"))
+    cent_rows = (
+        base.select("bucket", F.posexplode(
+            F.transform(F.col("vec"), lambda x: x.cast("double"))))
+        .groupBy("bucket", "pos").agg(F.round(F.avg("col"), 6).alias("v"))
+        .groupBy("bucket")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("pv"))
+        .select("bucket", F.col("pv.v").alias("centroid"))
+        .collect())
+
+    def dist2(point):
+        arr = "array(" + ",".join(_double_sql(v) for v in point) + ")"
+        return (f"aggregate(zip_with(vec, {arr}, "
+                "(x, c) -> (cast(x as double) - c) * "
+                "(cast(x as double) - c)), "
+                "cast(0.0 as double), (acc, v) -> acc + v)")
+
+    dists = "array(" + ", ".join(
+        f"struct({dist2(list(r['centroid']))} AS d, {int(r['bucket'])} "
+        "AS cell)" for r in cent_rows) + ")"
+    assigned = base.withColumn("cell", F.expr(f"array_min({dists}).cell"))
+    q_cells = (
+        queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("vec"))
+        .withColumn("probe_cells", F.expr(
+            f"slice(transform(array_sort({dists}), s -> s.cell), "
+            f"1, {nprobe})"))
+        .select("query_id", F.col("vec").alias("q_vec"),
+                F.explode("probe_cells").alias("cell")))
+    scored = (
+        assigned.join(F.broadcast(q_cells),
+                      (assigned["cell"] == q_cells["cell"])
+                      & (F.col("vid") != F.col("query_id")))
+        .withColumn("sim", F.expr(
+            f"{_dot_sql('q_vec', 'vec')} / "
+            f"({_norm_sql('q_vec')} * {_norm_sql('vec')})"))
+        .select("query_id", F.col("vid").alias("neighbor_id"), "sim")
+        .distinct())
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("neighbor_id"))
+    ref = (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", F.col("rank").cast("int"), "neighbor_id",
+                F.floor(F.col("sim") * 1e6).cast("long").alias("sim_e6")))
+    return sorted(map(tuple, ref.collect()))
+
+
+def test_ann_topk_ivf_builds_lazily(spark, tmp_path):
+    """Building the IVF query starts no Spark job: the centroids ride
+    in the plan as one broadcast row. The rows equal the formulation
+    that collected the centroids into literal points, for a partial
+    and a full probe."""
+    import numpy as np
+    import pandas as pd
+
+    from scribe_js_spark.textops.similarity import ann_topk_ivf
+
+    n, dim = 2000, 64
+    v = np.random.default_rng(5).standard_normal((n, dim))
+    v = v.astype(np.float32)
+    path = str(tmp_path / "ivf.parquet")
+    pd.DataFrame({"vec_id": np.arange(n, dtype=np.int64),
+                  "embedding": list(v)}).to_parquet(path)
+    df = spark.read.parquet(path)
+    queries = df.filter(F.col("vec_id") < 12)
+
+    sc = spark.sparkContext
+    group = "ann_topk_ivf_build"
+    sc.setJobGroup(group, "ann_topk_ivf construction")
+    try:
+        built = {nprobe: ann_topk_ivf(df, queries, k=5, nprobe=nprobe)
+                 for nprobe in (2, 8)}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    for nprobe, res in built.items():
+        got = sorted(map(tuple, res.collect()))
+        assert got == _ref_ann_topk_ivf(df, queries, 5, dim, 3, nprobe)
+        assert len(got) == 12 * 5
+
+
 def test_exact_dups_window_matches_join_shape(spark):
     """The window rewrite must keep the groupBy+join shape's exact
     semantics, including the subtle one: a NULL text row has a NULL

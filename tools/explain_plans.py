@@ -54,7 +54,12 @@ def main():
 
     out = ["# PLANS — physical-plan audit of the headline queries\n",
            "Generated by tools/explain_plans.py; properties asserted here "
-           "are what the 100 TB design depends on (SURVEY.md §4).\n"]
+           "are what the 100 TB design depends on (SURVEY.md §4).\n",
+           "Counts are of the formatted plan before execution. Where a "
+           "self-join's second side reads the first side's exchange "
+           "(the bucket self-joins below), that subtree is printed and "
+           "counted on both sides; at run time AQE plans the second "
+           "copy as a ReusedExchange.\n"]
 
     summarize(
         "extract_text (whole-doc path, no salt)",
@@ -115,9 +120,11 @@ def main():
         "minima come from explode_outer + one codegen hash-aggregate "
         "with K min() columns (8x faster than the interpreted "
         "transform/array_min passes; md5 per shingle is a per-row "
-        "codegen expression). Band buckets still come from one "
-        "posexplode over the materialized mh_i columns, persisted so "
-        "the self-join's two sides share one computation.",
+        "codegen expression). Band buckets come from one posexplode "
+        "over the materialized mh_i columns, hash-partitioned once on "
+        "(band, bucket): the self-join's second side is a "
+        "ReusedExchange of the first, so the signature aggregate runs "
+        "once per query and nothing is cached.",
         out)
     from scribe_js_spark.textops.dedup import jaccard_for_pairs
     summarize(
@@ -166,13 +173,15 @@ def main():
         "scale shape as the MinHash text path. Round 6: the pair "
         ".distinct() is gone — the multiprobe XOR list is pairwise-"
         "distinct, so the join provably emits each ordered pair at "
-        "most once and the whole query is one fused broadcast-join "
-        "pipeline (the distinct was its only Exchange: 15.2M pair "
-        "rows shuffled at 20k vectors); norms are computed once per "
-        "vector at persist time (was 3 fold evaluations per pair); "
+        "most once (the distinct shuffled 15.2M pair rows at 20k "
+        "vectors); norms are computed once per vector below one hash "
+        "partitioning on the bucket, which both sides of the probe "
+        "join read (the second is a ReusedExchange) and which carries "
+        "each vector and its norm, so the verify joins nothing back; "
         "spread_input parallelizes the one-row-group scan. Round 4: "
         "max_bucket_size drops degenerate buckets (all-identical "
-        "embeddings) from the join key, bounding output by rows x "
+        "embeddings) from the join key — a window count over that "
+        "same partitioning — bounding output by rows x "
         "(n_planes+1) x cap instead of quadratic in the hottest "
         "bucket. The image path (image_near_dups, below) and simhash "
         "carry the identical cap; all are exercised by "
@@ -188,10 +197,12 @@ def main():
         image_near_dups(imgdocs, max_bucket_size=8)
         .select("id_a", "id_b"),
         "Arrow-batched pHash (mapInPandas) -> 4x16-bit block "
-        "self-join -> exact Hamming verify. The hot-bucket cap "
-        "(count + semi-join on the block key) keeps monochrome "
-        "degenerate buckets from going quadratic; document bytes "
-        "never join — only (media_id, phash).",
+        "self-join -> exact Hamming verify. Both join sides read one "
+        "hash partitioning on (block_n, block) — the second is a "
+        "ReusedExchange — so the pHash UDF runs once per query. The "
+        "hot-bucket cap (a window count over that partitioning) keeps "
+        "monochrome degenerate buckets from going quadratic; document "
+        "bytes never join — only (media_id, phash).",
         out)
     webdocs = spark.read.parquet("fixtures/t2/webhtml_docs.parquet")
     summarize(
