@@ -1786,7 +1786,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 _TOKS = "list_distinct(string_split_regex(trim(text), '\\s+'))"
 
 # 60-bit md5-derived hash — the same definition as
-# scribe_js_spark.textops.dedup.md5_60 (Spark: conv(substr(md5,1,15),16,10)).
+# scribe_js_spark.textops.dedup._md5_60 (the top 60 bits of the digest).
 _MD5_60 = "CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"
 
 

@@ -150,6 +150,26 @@ def per_document(df: DataFrame, rows_fn, schema: StructType) -> DataFrame:
     return df.mapInPandas(fn, schema=schema)
 
 
+def per_batch(df: DataFrame, kernel, schema: StructType) -> DataFrame:
+    """The one Arrow batch adapter: every columnar Python operator,
+    whose per-row work is numpy over whole columns, goes through this
+    ``mapInArrow``.
+
+    ``kernel(batch)`` runs on each ``pyarrow.RecordBatch`` of ``df`` and
+    returns one ``pyarrow.Array`` per ``schema`` field, in field order
+    and of the batch's length. A field declared NOT NULL must get no
+    null: Spark trusts the declaration and plans on it."""
+    names = schema.names
+
+    def fn(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            yield pa.RecordBatch.from_arrays(kernel(batch), names=names)
+
+    return df.mapInArrow(fn, schema)
+
+
 def _extract_rows(with_spans: bool):
     """``per_document`` row function of the extraction hot path."""
     schema = EXTRACT_SPANS_SCHEMA if with_spans else EXTRACT_SCHEMA

@@ -18,38 +18,45 @@ Scale design (10^12 documents):
 All hashes are md5-derived (first 15 hex digits -> 60-bit integer), so
 every operator here is exactly reproducible in ANSI SQL / DuckDB for
 the correctness oracles — the hash family is an implementation detail;
-verifiability is the requirement. Signatures are computed ONCE per
-plan side: band/block buckets come from ``posexplode`` over an array
-built from the materialized signature columns, never from per-band
-unions that would re-evaluate the signature. The band/block table is
-hash-partitioned once on the join key (``partitioning.bucket_rows``):
-both self-join sides and the hot-bucket cap read that one exchange,
-so the signature runs once per query and no query leaves cached
-state behind.
+verifiability is the requirement. The minhash and simhash signatures
+are computed once per Arrow batch in numpy (``pipeline.per_batch``),
+with the integer arithmetic and the tokenisation Spark's SQL gives
+them; everything after the signatures — band md5, bucket self-joins,
+the Hamming and Jaccard verifies — is Catalyst expressions. Band/block
+buckets come from one ``posexplode`` over the signature row. The
+band/block table is hash-partitioned once on the join key
+(``partitioning.bucket_rows``): both self-join sides and the
+hot-bucket cap read that one exchange, so the signature kernel runs
+once per query and no query leaves cached state behind.
 
-All built-in column expressions / higher-order functions — no Python in
-the hot path.
-
-Input contract (relied on by the round-6 explode + hash-aggregate
-signature builds, and by every oracle): ``doc_id`` is a non-NULL
-unique key. A NULL or duplicated doc_id would merge what the round-5
-per-row array formulations computed per row.
+Input contract (relied on by every oracle): ``doc_id`` is a non-NULL
+unique key. The signatures are computed per row, the oracles' per
+doc_id; with a duplicated doc_id the two would differ.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import re
+
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import LongType, StructField, StructType
 
 # Fixed odd 61-bit constants for the universal hash family
 # h_i(x) = ((a_i * x + b_i) mod M); deterministic across runs.
 _M = (1 << 61) - 1
 # 31-bit domain for coefficients and rehash inputs: a*h stays < 2^62,
-# no signed-long overflow inside the JVM expression.
+# no signed-long overflow in int64 (nor in the oracles' BIGINT).
 _M31 = (1 << 31) - 1
 
 SIMHASH_BITS = 60          # 15 hex digits of md5 -> fits a signed long
 SIMHASH_BLOCKS = 4         # 4 x 15-bit blocks; pigeonhole for dist <= 3
+
+#: Java's ``\s``, the class Spark's ``split(..., '\\s+')`` splits on
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
 def _hash_coeffs(k: int):
@@ -57,12 +64,6 @@ def _hash_coeffs(k: int):
     a = [(2654435761 * (2 * i + 1)) % _M31 or 1 for i in range(k)]
     b = [(40503 * (i * i + i + 1)) % _M31 for i in range(k)]
     return a, b
-
-
-def md5_60(col):
-    """SQL-reproducible 60-bit non-negative hash: first 15 hex digits of
-    md5. DuckDB equivalent: CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def exact_dups(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -201,43 +202,83 @@ def shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     return base.select("doc_id", F.array_distinct(sh).alias("shingles"))
 
 
+def _tokens(text: str) -> list[str]:
+    """``split(trim(text), '\\s+')`` as Spark evaluates it: ``trim``
+    strips ASCII spaces only, Java's ``\\s`` is ``[ \\t\\n\\x0B\\f\\r]``,
+    and a leading or trailing separator leaves an empty token."""
+    return _JAVA_WS.split(text.strip(" "))
+
+
+def _md5_60(strings) -> np.ndarray:
+    """int64 md5_60 of each string: the first 15 hex digits of its
+    UTF-8 md5, i.e. the digest's top 60 bits. Spark:
+    ``conv(substring(md5(x), 1, 15), 16, 10)``; DuckDB:
+    ``CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)``."""
+    digests = b"".join(hashlib.md5(s.encode()).digest() for s in strings)
+    return (np.frombuffer(digests, ">u8")[::2] >> 4).astype(np.int64)
+
+
+def _hashed(docs: list) -> tuple[np.ndarray, np.ndarray]:
+    """(md5_60 of every string of every document, documents in order;
+    each document's string count). Each distinct string of the batch
+    is hashed once."""
+    index: dict[str, int] = {}
+    ids = [index.setdefault(s, len(index)) for d in docs for s in d]
+    lens = np.fromiter(map(len, docs), np.int64, len(docs))
+    return _md5_60(index)[np.array(ids, np.int64)], lens
+
+
+def _per_doc(ufunc, values: np.ndarray, lens: np.ndarray, **kw):
+    """``ufunc`` reduced over each non-empty document's run of
+    ``values``; documents with no values are left out (``reduceat``
+    would give them the next document's first value)."""
+    starts = np.cumsum(lens) - lens
+    return ufunc.reduceat(values, starts[lens > 0], axis=0, **kw)
+
+
+def _minhash_kernel(num_hashes: int, shingle_n: int, batch) -> list:
+    """(doc_id, text) batch -> doc_id and the ``num_hashes`` minhashes:
+    min over the distinct shingles s of ``(md5_60(s) % M31 * a_i + b_i)
+    % M``. Every product stays below 2^62, so int64 holds it exactly. A
+    document with no shingle (NULL text, fewer than ``shingle_n``
+    tokens) gets NULL minhashes."""
+    import pyarrow as pa
+
+    docs = []
+    for text in batch.column(1).to_pylist():
+        toks = [] if text is None else _tokens(text)
+        docs.append({" ".join(toks[i:i + shingle_n])
+                     for i in range(len(toks) - shingle_n + 1)})
+    h, lens = _hashed(docs)
+    h %= _M31
+    has = lens > 0
+    out = [batch.column(0)]
+    for a, b in zip(*_hash_coeffs(num_hashes)):
+        mh = np.zeros(len(lens), np.int64)
+        if has.any():
+            mh[has] = _per_doc(np.minimum, (h * a + b) % _M, lens)
+        out.append(pa.array(mh, mask=~has))
+    return out
+
+
 def minhash_signatures(df: DataFrame, text_col: str = "text",
                        num_hashes: int = 32, shingle_n: int = 3) -> DataFrame:
-    """K minhash values per doc: shingle -> md5-60bit -> K universal
-    rehashes -> min per hash.
+    """K minhash values per doc: word ``shingle_n``-gram shingles ->
+    md5-60bit -> K universal rehashes -> min per hash, as ``mh_0`` ..
+    ``mh_{K-1}``. A document with no shingle gets an all-NULL row.
 
-    Round 6: shingles are ``explode_outer``-ed and the K minima come
-    from one hash-aggregate with K ``min((h*a_i + b_i) % M)`` columns.
-    The prior shape — a ``transform`` materializing the md5 array plus
-    K ``array_min(transform(...))`` rehash passes — ran every element
-    visit through interpreted CodegenFallback lambda evaluation; the
-    explode form runs md5 and all K rehashes inside WholeStageCodegen
-    with map-side partial aggregation (each doc's shingles combine
-    locally; the added Exchange carries one 32-long row per doc). min
-    is order-independent and the per-shingle integer math is unchanged,
-    so signatures are bit-identical; ``explode_outer`` keeps
-    empty/null shingle sets as an all-NULL signature row, exactly what
-    ``array_min`` over an empty/NULL array produced.
-    """
+    The signatures are computed per Arrow batch in numpy
+    (:func:`_minhash_kernel`): a K-term Catalyst aggregate cost more
+    to parse, optimise, generate and JIT than to run."""
+    from ..pipeline import per_batch
     from .partitioning import spread_input
 
-    a, b = _hash_coeffs(num_hashes)
-    sh = shingles(spread_input(df, ["doc_id", text_col]), text_col,
-                  shingle_n)
-    exploded = sh.select(
-        "doc_id", F.explode_outer("shingles").alias("_s"),
-    ).select(
-        "doc_id", (md5_60(F.col("_s")) % F.lit(_M31)).alias("_h"))
-    # Each minimum as one parsed SQL expression (integer-identical to
-    # the Column-API form; int literals below 2^31 parse as INT and _M
-    # as BIGINT exactly as F.lit typed them) — 32 Column builds cost
-    # ~0.4 s of py4j round trips per invocation, the strings ~25 ms.
-    # See simhash/lsh_bucket for the construction-cost measurements.
-    cols = [
-        F.expr(f"min((_h * {a[i]} + {b[i]}) % {_M}) AS mh_{i}")
-        for i in range(num_hashes)
-    ]
-    return exploded.groupBy("doc_id").agg(*cols)
+    base = spread_input(df, ["doc_id", text_col])
+    schema = StructType([base.schema["doc_id"]] + [
+        StructField(f"mh_{i}", LongType()) for i in range(num_hashes)])
+    return per_batch(
+        base, functools.partial(_minhash_kernel, num_hashes, shingle_n),
+        schema)
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
@@ -261,8 +302,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     sig = minhash_signatures(df, text_col, num_hashes, shingle_n)
     # one parsed SQL expression for the 8-band bucket array (the
     # Column-API build of 8 x md5(concat_ws(4 casts)) cost ~0.15 s of
-    # py4j per invocation; same construction-cost class as the
-    # signature aggregates above — identical analyzed tree, verified
+    # py4j per invocation — identical analyzed tree, verified
     # row-identical at sf0.1)
     buckets = F.expr("array(" + ", ".join(
         "md5(concat_ws('_', " + ", ".join(
@@ -283,54 +323,42 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     return pairs
 
 
+def _simhash_kernel(batch) -> list:
+    """(doc_id, text) batch -> doc_id and the 60-bit SimHash of the
+    distinct tokens: bit b is set iff 2 * (tokens whose md5_60 has bit
+    b) > (distinct tokens). NULL text has no token and signature 0."""
+    import pyarrow as pa
+
+    docs = [() if text is None else set(_tokens(text))
+            for text in batch.column(1).to_pylist()]
+    h, lens = _hashed(docs)
+    bits = np.unpackbits(h.astype("<u8").view(np.uint8).reshape(-1, 8),
+                         axis=1, bitorder="little")[:, :SIMHASH_BITS]
+    sig = np.zeros(len(lens), np.int64)
+    has = lens > 0
+    if has.any():
+        vote = 2 * _per_doc(np.add, bits, lens, dtype=np.int64) \
+            > lens[has, None]
+        sig[has] = (vote.astype(np.int64)
+                    << np.arange(SIMHASH_BITS, dtype=np.int64)).sum(axis=1)
+    return [batch.column(0), pa.array(sig)]
+
+
 def simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
     """60-bit SimHash over distinct tokens: per-bit majority vote of the
     token hashes; bit b is set iff strictly more than half the token
     hashes have bit b set (2*pop > n, identical to the +1/-1 vote being
-    positive).
+    positive). NULL text gets signature 0.
 
-    Round 6: the per-bit popcounts come from ``explode`` + one
-    hash-aggregate with 60 ``sum((h >> b) & 1)`` columns instead of 60
-    ``size(filter(...))`` scans over the per-row hash array.
-    Higher-order-function lambdas are CodegenFallback (interpreted,
-    one virtual eval per element per pass — 60 passes made this the
-    slowest query in the whole bench at 68 s / 50 k docs), while
-    explode + sum runs entirely inside WholeStageCodegen with map-side
-    partial aggregation: each doc's tokens combine locally, so the one
-    added Exchange carries a single 61-long row per document — less
-    than the document's own text. The md5 per token is likewise now a
-    codegen'd per-row expression instead of an interpreted
-    ``transform`` element call. Integer popcounts are order-independent,
-    so the signature is bit-identical to the array formulation
-    (``explode_outer`` + conditional aggregates keep the null-text
-    degenerate row at signature 0, exactly as ``size(filter(NULL))``
-    voted before)."""
+    Computed per Arrow batch in numpy (:func:`_simhash_kernel`), as the
+    minhash signatures are. ``simhash`` is declared NOT NULL."""
+    from ..pipeline import per_batch
     from .partitioning import spread_input
 
-    exploded = token_sets(
-        spread_input(df, ["doc_id", text_col]), text_col,
-    ).select(
-        "doc_id", F.explode_outer("toks").alias("_tok"),
-    ).select("doc_id", md5_60(F.col("_tok")).alias("_h"))
-    # The whole signature is ONE parsed SQL expression instead of 60
-    # Column-API sum columns plus a 60-step when-chain: building those
-    # cost ~1.0 s of driver-side py4j round trips PER INVOCATION
-    # (measured; same construction-cost class as similarity.lsh_bucket
-    # — see its docstring), against ~1 ms for the string. The analyzed
-    # aggregate is the same (60 partial sums + count, combined in the
-    # final projection), the arithmetic is all-integer, and the NULL
-    # semantics are unchanged: a NULL-text doc's single NULL-token row
-    # makes every sum NULL, each CASE falls to ELSE 0, signature 0 —
-    # exactly as before. Output equality old-vs-new is pinned by
-    # test_simhash_matches_hof and was verified row-identical at sf0.1.
-    parts = [
-        f"(CASE WHEN sum(shiftrightunsigned(_h, {bit}) & 1) * 2 "
-        f"> count(_h) THEN CAST({1 << bit} AS BIGINT) "
-        "ELSE CAST(0 AS BIGINT) END)"
-        for bit in range(SIMHASH_BITS)
-    ]
-    sig = F.expr("CAST(0 AS BIGINT) + " + " + ".join(parts))
-    return exploded.groupBy("doc_id").agg(sig.alias("simhash"))
+    base = spread_input(df, ["doc_id", text_col])
+    schema = StructType([base.schema["doc_id"],
+                         StructField("simhash", LongType(), False)])
+    return per_batch(base, _simhash_kernel, schema)
 
 
 def simhash_candidates(df: DataFrame, text_col: str = "text",
@@ -338,8 +366,8 @@ def simhash_candidates(df: DataFrame, text_col: str = "text",
     """Near-dup candidates within Hamming distance 3 of each other:
     4x15-bit block join (pigeonhole: <=3 differing bits leave one of 4
     blocks identical), then exact popcount filter. Blocks come from one
-    posexplode over the computed signature — the signature expression
-    is evaluated once per join side, not once per block.
+    posexplode over the computed signature, below the one exchange both
+    join sides read, so the signature kernel runs once per query.
 
     ``max_bucket_size`` drops degenerate (blk, blk_val) keys — e.g.
     thousands of near-empty documents collapsing to signature 0 —

@@ -240,6 +240,10 @@ def _decode_diff_lossless(standalone: bytes, refs: dict) -> None:
                 cs, tsel = seg[1 + 2 * si], seg[2 + 2 * si]
                 comps.append((cs, tsel >> 4))
             pt = seg[3 + 2 * ns] & 0xF
+            from .multimodal import check_decode_budget
+
+            check_decode_budget(h * w * len(comps),
+                                f"jpeg differential lossless: {w}x{h}")
             planes = []
             for cid, tid in comps:
                 if cid not in refs:
@@ -323,6 +327,12 @@ def _decode_diff_dct(standalone: bytes, refs: dict) -> None:
                 raise NotImplementedError(
                     "jpeg: non-interleaved differential DCT scan")
             bh, bw = (h + 7) // 8, (w + 7) // 8
+            # counted in coefficient samples over all components, which
+            # also bounds each component's dequantised copy below
+            from .multimodal import check_decode_budget
+
+            check_decode_budget(bh * bw * 64 * len(comps),
+                                f"jpeg differential DCT: {w}x{h}")
             coefs = {c["id"]: np.zeros((bh, bw, 64), dtype=np.int32)
                      for c in comps}
             reader = _BitReader(standalone, seg_end)
@@ -362,9 +372,14 @@ def _decode_diff_dct(standalone: bytes, refs: dict) -> None:
 
 def decode_jpeg_hierarchical(data: bytes) -> np.ndarray:
     """DHP-led hierarchical stream -> uint8 (h, w) gray or (h, w, 3)."""
+    from .multimodal import check_decode_budget
+
     (prec, out_h, out_w, comp_ids), frames = _split_frames(data)
     if prec != 8:
         raise NotImplementedError(f"jpeg: hierarchical precision {prec}")
+    # the DHP sizes the output planes: refuse them before any frame
+    check_decode_budget(out_h * out_w * len(comp_ids),
+                        f"jpeg hierarchical: {out_w}x{out_h}")
     refs: dict[int, np.ndarray] = {}
     for sof, exp, tables, frame in frames:
         standalone = b"\xff\xd8" + tables + frame + b"\xff\xd9"

@@ -1,31 +1,33 @@
 """Similarity search over embedding columns (array<float>).
 
 - ``ann_topk_bruteforce``: exact cosine top-k — broadcast the (small)
-  query set against the full corpus; the dot product is a JVM-side
-  ``aggregate(zip_with(...))`` so no Python runs per row. This is the
-  correctness baseline.
+  query set against the full corpus; the pair dot product is a
+  JVM-side ``aggregate(zip_with(...))``. This is the correctness
+  baseline.
 - ``ann_topk_lsh``: random-hyperplane LSH bucketing as the scale path —
   hyperplanes are deterministic (hash-derived), candidates restricted to
   same-bucket (plus Hamming-1 neighbor buckets via multi-probe), then
   exact re-rank. At 10^12 rows the bucket join replaces the full cross
   product; recall tunes with bits/probes.
+
+Per-vector values — the hyperplane bucket and the norm — are computed
+once per Arrow batch in numpy (:func:`_with_bucket_norm`), in the
+IEEE operation order of the SQL left fold; per-pair values (the dot
+product) stay JVM folds over the joined rows.
 """
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 
 def _ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
-
-
-def _double_sql(v: float) -> str:
-    """SQL text of a double literal: repr() round-trips doubles exactly
-    and the string-to-double cast constant-folds to the identical
-    Literal."""
-    return f"CAST('{float(v)!r}' AS DOUBLE)"
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -34,30 +36,19 @@ def _dot_sql(a: str, b: str) -> str:
 
     Emitting the fold as ONE parsed expression instead of the
     Column-API lambda plumbing cuts ~25 ms of py4j round trips per
-    fold at DataFrame-construction time (the same driver-side cost
-    class as lsh_bucket's literal arrays — see its docstring) for the
-    same analyzed expression.
+    fold at DataFrame-construction time for the same analyzed
+    expression.
 
-    Round-6 note (negative result, kept for the record): a fully
-    unrolled ``a[0]*b[0] + ... + a[63]*b[63]`` codegen expression was
-    measured SLOWER than this interpreted fold. One 64-term tree
-    compiles to a >8 KB-bytecode method that HotSpot refuses to JIT
-    (DontCompileHugeMethods), so it runs in the bytecode interpreter;
-    8 such trees in one projection (lsh_bucket) additionally blew
-    janino's 64 KB method limit outright, and wrapping the fold as a
-    CASE-WHEN fallback branch disqualified whole stages from codegen.
-    Measured on 2M cached pairs: unrolled 23 s vs this fold 4.4 s.
-    The round-6 wins here are structural instead: norms computed once
-    per vector (not per pair) and the superfluous pair-``distinct``
-    exchanges removed (see embedding_near_dups)."""
+    This fold runs per candidate pair, after the join, so it stays in
+    the JVM. An unrolled ``a[0]*b[0] + ... + a[63]*b[63]`` was measured
+    slower (2M cached pairs: 23 s against 4.4 s): its >8 KB method is
+    never JIT-compiled by HotSpot (DontCompileHugeMethods) and runs in
+    the bytecode interpreter. The per-vector folds — norm and
+    hyperplane projections — run in :func:`_bucket_norm_kernel`, in
+    this fold's IEEE order."""
     return (f"aggregate(zip_with({_ident(a)}, {_ident(b)}, "
             "(x, y) -> cast(x as double) * cast(y as double)), "
             "cast(0.0 as double), (acc, v) -> acc + v)")
-
-
-def _norm_sql(a: str) -> str:
-    """SQL text of the Euclidean norm (sqrt of the _dot_sql fold)."""
-    return f"sqrt({_dot_sql(a, a)})"
 
 
 def ann_topk_bruteforce(df: DataFrame, queries: DataFrame, k: int = 5,
@@ -78,12 +69,12 @@ def ann_topk_bruteforce(df: DataFrame, queries: DataFrame, k: int = 5,
     """
     from .partitioning import spread_input
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
-        F.expr(_norm_sql(vec_col)).alias("q_nrm"))
-    c = spread_input(df, [id_col, vec_col]).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
-        F.expr(_norm_sql(vec_col)).alias("c_nrm"))
+    q = _with_bucket_norm(queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
+        "q_vec", nrm="q_nrm")
+    c = _with_bucket_norm(spread_input(df, [id_col, vec_col]).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")),
+        "c_vec", nrm="c_nrm")
     scored = (
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .withColumn(
@@ -116,9 +107,10 @@ def ann_topk_ivf(df: DataFrame, queries: DataFrame, k: int = 5,
     Building the query starts no Spark job: the centroids stay in the
     plan.
     """
-    base = df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
-        lsh_bucket(vec_col, dim, n_planes_coarse).alias("bucket"))
+    base = _with_bucket_norm(df.select(
+        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")),
+        "vec", bucket="bucket", nrm="nrm", dim=dim,
+        n_planes=n_planes_coarse)
 
     # Centroids: per-dimension means of each coarse LSH bucket, rounded
     # to 6 decimals so the value is reproducible across engines (the
@@ -145,15 +137,16 @@ def ann_topk_ivf(df: DataFrame, queries: DataFrame, k: int = 5,
         .withColumn("cell", F.expr(f"array_min({dists}).cell"))
         .drop("_cents"))
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("vec"))
+    q = _with_bucket_norm(queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("vec")),
+        "vec", nrm="q_nrm")
     q_cells = (
         q.crossJoin(F.broadcast(cents))
         .withColumn(
             "probe_cells",
             F.expr(f"slice(transform(array_sort({dists}), s -> s.cell), "
                    f"1, {int(nprobe)})"))
-        .select("query_id", F.col("vec").alias("q_vec"),
+        .select("query_id", F.col("vec").alias("q_vec"), "q_nrm",
                 F.explode("probe_cells").alias("cell"))
     )
 
@@ -162,8 +155,7 @@ def ann_topk_ivf(df: DataFrame, queries: DataFrame, k: int = 5,
                       (assigned["cell"] == q_cells["cell"])
                       & (F.col("vid") != F.col("query_id")))
         .withColumn("sim", F.expr(
-            f"{_dot_sql('q_vec', 'vec')} / "
-            f"({_norm_sql('q_vec')} * {_norm_sql('vec')})"))
+            f"{_dot_sql('q_vec', 'vec')} / (q_nrm * nrm)"))
         .select("query_id", F.col("vid").alias("neighbor_id"), "sim")
         .distinct()
     )
@@ -188,37 +180,83 @@ def _plane_coeff(plane: int, dim: int) -> float:
     return (h / (1 << 31)) - 1.0
 
 
-def lsh_bucket(vec_col: str, dim: int, n_planes: int = _N_PLANES_DEFAULT):
-    """Sign-of-projection bucket id (0 .. 2^n_planes-1) of the named
-    array column, as a column.
+def _bucket_norm_kernel(vec: int, dim: int, n_planes: int, bucket: bool,
+                        nrm: bool, batch) -> list:
+    """``batch``'s columns, then (if ``bucket``) the hyperplane bucket
+    and (if ``nrm``) the Euclidean norm of its ``vec``-th column, an
+    array<float|double>.
 
-    Stays the aggregate(zip_with(...)) fold at EXECUTION time: the
-    round-6 unrolled rewrite (8 planes x 64 terms in one projection)
-    exceeded janino's 64 KB method limit, fell back to interpreting a
-    512-node tree and benched 3-6x SLOWER (see _dot_sql). For corpora
-    queried repeatedly the real fix is :func:`with_lsh_bucket`:
-    materialize the id once and read it from the scan.
+    Both are the left folds of ``_dot_sql`` in its IEEE order —
+    ``acc = acc + cast(x as double) * w`` from ``acc = 0.0``, one
+    position at a time — vectorised across rows:
+    - bit p of the bucket is set when the fold against plane p is
+      ``>= 0`` or NaN (Spark orders NaN above every number). A vector
+      that is NULL, has a NULL element or is not ``dim`` long gets
+      bucket 0: ``zip_with`` pads with NULL, the fold is NULL and the
+      ``CASE`` falls to 0.
+    - the norm is ``sqrt`` of the sum of squares over the vector's own
+      length, and 0.0 where that fold is NULL (a NULL vector or
+      element), whose dot products are NULL anyway."""
+    import pyarrow as pa
 
-    CONSTRUCTION is emitted as ONE SQL string (1.3 ms): building the
-    same expression through the Column API issued ~70 py4j round trips
-    per plane (64 ``F.lit`` coefficient literals plus the lambda
-    plumbing), measured at 0.56 s of driver-side Python per call, more
-    than the query's whole execution at bench scale. Coefficient
-    literals ride as ``CAST('<repr>' AS DOUBLE)`` (see _double_sql),
-    so the bucket ids are bit-identical to the Column-API formulation
-    (verified: 0 mismatches over 20k x 8 plane signs, and the plan is
-    unchanged)."""
-    ident = _ident(vec_col)
-    parts = []
-    for p in range(n_planes):
-        arr = "array(" + ",".join(
-            _double_sql(_plane_coeff(p, d)) for d in range(dim)) + ")"
-        proj = (f"aggregate(zip_with({ident}, {arr}, "
-                "(x, w) -> cast(x as double) * w), "
-                "cast(0.0 as double), (acc, v) -> acc + v)")
-        parts.append(
-            f"(CASE WHEN {proj} >= 0 THEN {1 << p} ELSE 0 END)")
-    return F.expr("CAST(0 AS BIGINT) + " + " + ".join(parts))
+    col = batch.column(vec)
+    off = col.offsets.to_numpy()
+    lens = np.diff(off)
+    vals = col.values
+    x = vals.to_numpy(zero_copy_only=False).astype(np.float64)
+    ok = col.is_valid().to_numpy(zero_copy_only=False)
+    if vals.null_count:
+        nulls = np.concatenate(
+            [[0], np.cumsum(vals.is_null().to_numpy(zero_copy_only=False))])
+        ok &= nulls[off[1:]] == nulls[off[:-1]]
+    out = list(batch.columns)
+    if bucket:
+        rows = np.flatnonzero(ok & (lens == dim))
+        cells = x[off[rows, None] + np.arange(dim)]
+        w = np.array([[_plane_coeff(p, d) for d in range(dim)]
+                      for p in range(n_planes)], np.float64).reshape(
+                          n_planes, dim)
+        acc = np.zeros((len(rows), n_planes))
+        for d in range(dim):
+            acc = acc + cells[:, d, None] * w[:, d]
+        bits = ((acc >= 0) | np.isnan(acc)).astype(np.int64)
+        ids = np.zeros(len(lens), np.int64)
+        ids[rows] = (bits << np.arange(n_planes, dtype=np.int64)).sum(axis=1)
+        out.append(pa.array(ids))
+    if nrm:
+        acc = np.zeros(len(lens))
+        for d in range(int(lens.max(initial=0))):
+            rows = np.flatnonzero(lens > d)
+            xd = x[off[rows] + d]
+            acc[rows] = acc[rows] + xd * xd
+        out.append(pa.array(np.where(ok, np.sqrt(acc), 0.0)))
+    return out
+
+
+def _with_bucket_norm(df: DataFrame, vec_col: str,
+                      bucket: str | None = None, nrm: str | None = None,
+                      dim: int = 0,
+                      n_planes: int = _N_PLANES_DEFAULT) -> DataFrame:
+    """``df`` plus a column named ``bucket``, the sign-of-projection id
+    (0 .. 2^n_planes-1) of ``vec_col`` over the ``n_planes`` hyperplanes
+    of :func:`_plane_coeff`, and one named ``nrm``, its Euclidean
+    norm; a None name leaves that column out. One numpy pass per Arrow
+    batch (:func:`_bucket_norm_kernel`).
+
+    Both are declared NOT NULL: with a nullable key, Spark infers an
+    ``isnotnull`` filter from the join and pushes it below one side's
+    exchange, and the self-join loses its reused exchange."""
+    from ..pipeline import per_batch
+
+    fields = list(df.schema.fields)
+    if bucket is not None:
+        fields.append(StructField(bucket, LongType(), False))
+    if nrm is not None:
+        fields.append(StructField(nrm, DoubleType(), False))
+    kernel = functools.partial(
+        _bucket_norm_kernel, df.columns.index(vec_col), dim, n_planes,
+        bucket is not None, nrm is not None)
+    return per_batch(df, kernel, StructType(fields))
 
 
 def with_lsh_bucket(df: DataFrame, vec_col: str = "embedding",
@@ -227,28 +265,36 @@ def with_lsh_bucket(df: DataFrame, vec_col: str = "embedding",
                     out_col: str = "lsh_bucket") -> DataFrame:
     """Materialize the hyperplane bucket id onto the embedding table.
 
-    The bucket expression costs O(n_planes x dim) JVM work per row;
-    for a corpus queried repeatedly (ANN serving, periodic dedup
+    For a corpus queried repeatedly (ANN serving, periodic dedup
     sweeps) compute it ONCE, persist it with the embeddings
     (``pipeline.write_bucketed(..., bucket_col=out_col)`` makes the
     self-join shuffle-free too), and let :func:`ann_topk_lsh` /
     :func:`embedding_near_dups` pick the column up from the scan.
     The stored ids are only valid for the same (dim, n_planes) —
-    the hyperplanes are deterministic in those parameters."""
-    return df.withColumn(
-        out_col, lsh_bucket(vec_col, dim, n_planes))
+    the hyperplanes are deterministic in those parameters. An
+    existing ``out_col`` is replaced and moves to the end."""
+    return _with_bucket_norm(df.drop(out_col), vec_col, bucket=out_col,
+                             dim=dim, n_planes=n_planes)
 
 
-def _corpus_bucket(df: DataFrame, vec_col: str, dim: int,
-                   n_planes: int, bucket_col: str | None):
-    """The corpus-side bucket column: a pre-materialized column when
-    present (by name, or auto-detected as ``lsh_bucket``), else the
-    inline projection."""
+def _corpus(df: DataFrame, ids: str, vec: str, nrm: str, vec_col: str,
+            id_col: str, dim: int, n_planes: int,
+            bucket_col: str | None) -> DataFrame:
+    """(``ids``, ``vec``, bucket, ``nrm``) of the spread corpus. The
+    bucket is a pre-materialized column when there is one
+    (``bucket_col``, or ``lsh_bucket`` when the input has it), and the
+    kernel then computes only the norm; else it is computed."""
+    from .partitioning import spread_input
+
+    df = spread_input(df)
     if bucket_col is None and "lsh_bucket" in df.columns:
         bucket_col = "lsh_bucket"
+    cols = [F.col(id_col).alias(ids), F.col(vec_col).alias(vec)]
     if bucket_col is not None:
-        return F.col(bucket_col).cast("long")
-    return lsh_bucket(vec_col, dim, n_planes)
+        cols.append(F.col(bucket_col).cast("long").alias("bucket"))
+    return _with_bucket_norm(
+        df.select(*cols), vec, bucket=None if bucket_col else "bucket",
+        nrm=nrm, dim=dim, n_planes=n_planes)
 
 
 def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
@@ -274,29 +320,21 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
     cross-engine stability. With a pre-materialized bucket column
     (``bucket_col``, or an ``lsh_bucket`` column auto-detected on the
     input — see :func:`with_lsh_bucket`) the per-row hyperplane
-    projection is skipped entirely and the bucket rides the scan.
+    projection is skipped and the bucket rides the scan.
 
     ``base`` is hash-partitioned once on the bucket, and both sides of
-    the probe join read that one exchange, so the projection runs once
-    per query and nothing is cached. Under the cap a hot-bucket vector
-    is neither a probe nor a match."""
-    from .partitioning import bucket_rows, spread_input
+    the probe join read that one exchange, so the bucket/norm kernel
+    runs once per query and nothing is cached. Under the cap a
+    hot-bucket vector is neither a probe nor a match."""
+    from .partitioning import bucket_rows
 
-    # spread the (one-row-group) corpus scan BEFORE the bucket/norm
-    # projection: its parallelism is otherwise the scan's — a
-    # single-row-group parquet file would run it on one task
-    # (guide 2.5)
-    df = spread_input(df)
-    base = bucket_rows(df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
-        _corpus_bucket(df, vec_col, dim, n_planes, bucket_col)
-        .alias("bucket"),
-        # norm computed ONCE per vector below the exchange, not per
-        # candidate pair. Never NULL: a vector with a NULL norm has a
-        # NULL dot product, so its pairs fail the threshold either
-        # way, and Spark infers no isnotnull(nrm) filter that it would
-        # push into the scan and fold the norm a second time for
-        F.coalesce(F.expr(_norm_sql(vec_col)), F.lit(0.0)).alias("nrm")),
+    # the corpus scan is spread before the bucket/norm kernel: its
+    # parallelism is otherwise the scan's, and a single-row-group
+    # parquet file would run it on one task (guide 2.5). The norm is
+    # computed once per vector, below the exchange, not per pair.
+    base = bucket_rows(
+        _corpus(df, "vid", "vec", "nrm", vec_col, id_col, dim, n_planes,
+                bucket_col),
         ["bucket"], max_bucket_size)
     probes = base.select(
         F.col("vid").alias("vec_a"), F.col("vec").alias("va"),
@@ -345,24 +383,17 @@ def ann_topk_lsh(df: DataFrame, queries: DataFrame, k: int = 5,
     instead of re-projecting n_planes x dim per row on every query
     batch. Query-side buckets are always computed (the probe set is
     tiny)."""
-    from .partitioning import spread_input
-
-    df = spread_input(df)
-    c = df.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
-        _corpus_bucket(df, vec_col, dim, n_planes, bucket_col)
-        .alias("bucket"),
-        F.expr(_norm_sql(vec_col)).alias("c_nrm"))
+    c = _corpus(df, "neighbor_id", "c_vec", "c_nrm", vec_col, id_col,
+                dim, n_planes, bucket_col)
     probe_buckets = F.array(
         *([F.col("q_bucket")] + [
             F.col("q_bucket").bitwiseXOR(F.lit(1 << p))
             for p in range(n_planes)
         ] if multiprobe else [F.col("q_bucket")]))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
-        lsh_bucket(vec_col, dim, n_planes).alias("q_bucket"),
-        F.expr(_norm_sql(vec_col)).alias("q_nrm"),
-    ).withColumn("probe", F.explode(probe_buckets))
+    q = _with_bucket_norm(queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
+        "q_vec", bucket="q_bucket", nrm="q_nrm", dim=dim,
+        n_planes=n_planes).withColumn("probe", F.explode(probe_buckets))
     # no distinct needed (round 6): a query's probe list
     # {q_bucket ^ m} has pairwise-distinct values, so each corpus row
     # matches a given query at most once — (query_id, neighbor_id)

@@ -482,7 +482,26 @@ def test_decode_media_net_catches_all_codec_mutations():
     sof = jpeg.index(b"\xff\xc0")
     jpeg[sof + 5:sof + 9] = struct.pack(">HH", 65535, 65535)
     assert (len(rle_bmp), len(gif), len(jpeg)) == (1080, 35, 317)
-    for bomb in (rle_bmp, gif, bytes(jpeg)):
+    # The lossless and hierarchical decoders size their planes from
+    # their own headers: a 131-byte SOF3 stream of a 16x16 image
+    # claiming 65535x65535 (8 GiB as uint16), and a 226-byte
+    # hierarchical pyramid whose DHP, or whose SOF7 differential
+    # frame, claims 65535x65535.
+    from scribe_js_spark.textops.jpeg_hier import encode_jpeg_hier_pyramid
+    from scribe_js_spark.textops.jpeg_lossless import encode_jpeg_lossless
+
+    def claim_65535(data, marker):
+        data = bytearray(data)
+        at = data.index(marker)
+        data[at + 5:at + 9] = struct.pack(">HH", 65535, 65535)
+        return bytes(data)
+
+    z16 = np.zeros((16, 16), np.uint8)
+    lossless = claim_65535(encode_jpeg_lossless(z16), b"\xff\xc3")
+    hier = encode_jpeg_hier_pyramid(z16)
+    hier_bombs = [claim_65535(hier, m) for m in (b"\xff\xde", b"\xff\xc7")]
+    assert (len(lossless), len(hier)) == (131, 226)
+    for bomb in (rle_bmp, gif, bytes(jpeg), lossless, *hier_bombs):
         with pytest.raises(ValueError, match="decode budget"):
             _decode_one(bomb)
 

@@ -293,9 +293,9 @@ def test_per_document_passes_columns_positionally(spark):
     assert [tuple(r) for r in out.collect()] == [("7:x:0102", 7)]
 
 
-def test_per_document_is_the_only_map_in_pandas():
-    """Every per-row Python operator goes through pipeline.per_document:
-    a hand-written mapInPandas batch loop anywhere else fails here."""
+def _calls_by_top_level(attr):
+    """(path, top-level definition) of every ``.<attr>(`` call in the
+    package and __spark_entry__.py."""
     import ast
     from pathlib import Path
 
@@ -309,8 +309,22 @@ def test_per_document_is_the_only_map_in_pandas():
                 for node in ast.walk(top)
                 if isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "mapInPandas"]
-    assert found == [("scribe_js_spark/pipeline.py", "per_document")]
+                and node.func.attr == attr]
+    return found
+
+
+def test_per_document_is_the_only_map_in_pandas():
+    """Every per-row Python operator goes through pipeline.per_document:
+    a hand-written mapInPandas batch loop anywhere else fails here."""
+    assert _calls_by_top_level("mapInPandas") == [
+        ("scribe_js_spark/pipeline.py", "per_document")]
+
+
+def test_per_batch_is_the_only_map_in_arrow():
+    """Every columnar Python kernel goes through pipeline.per_batch: a
+    hand-written mapInArrow batch loop anywhere else fails here."""
+    assert _calls_by_top_level("mapInArrow") == [
+        ("scribe_js_spark/pipeline.py", "per_batch")]
 
 
 def _package_nodes():

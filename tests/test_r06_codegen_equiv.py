@@ -1,9 +1,11 @@
-"""Round-6 optimization equivalence: the codegen rewrites (explode +
-hash-aggregate popcounts/minima, unrolled dot products, marker-count
-aggregation) must be bit-identical to the round-5 higher-order-function
-formulations, including the degenerate rows (NULL text, empty text,
-whitespace-only text, off-length vectors) where the HOF NULL semantics
-were subtle."""
+"""Equivalence of the optimized formulations with the ones they
+replaced, kept here as references: the round-5 higher-order-function
+forms, and the round-6 SQL signatures (explode + hash-aggregate
+minima/popcounts, the hyperplane and norm folds) that the per-batch
+numpy kernels replaced. Each must be bit-identical, including the
+degenerate rows where the NULL, tokenisation and NaN semantics are
+subtle: NULL, empty and whitespace-only text, Java-only separators,
+off-length, NULL-element and NaN vectors."""
 
 from __future__ import annotations
 
@@ -16,6 +18,16 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+# Spark's trim strips ASCII space only, and Java's \s is
+# [ \t\n\x0B\f\r]: NBSP, em space and \x1c are token characters
+EDGE_TEXTS = [
+    None, "", " ", "   ", "\t", "a", "a b", "  a b  ", "a  b c",
+    "a\tb\nc\x0bd\x0ce\rf g", "\ta b c", "a b c\t", "\ta b c\t",
+    "\n\na b c d\n", "a\u00a0b c d", "a\u2003b c d", "a\x1cb c d",
+    "héllo wörld ünïcode straße", "日本語 の テキスト です", "😀 😃 😄 😀",
+    "x y", "x y z", "x y z x y z", "x\t\ty  z",
+]
 
 EDGE_DOCS = [
     (1, "the quick brown fox the lazy dog the end"),
@@ -39,13 +51,79 @@ def _docs(spark):
         ])).withColumn("lang", F.lit("en"))
 
 
+def _ref_md5_60(col):
+    """SQL-reproducible 60-bit non-negative hash: first 15 hex digits of
+    md5. DuckDB equivalent: CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def _ref_minhash_signatures(df, text_col="text", num_hashes=32,
+                            shingle_n=3):
+    """The round-6 SQL minhash: explode_outer the shingles, then one
+    hash-aggregate with K ``min((h*a_i + b_i) % M)`` columns."""
+    from scribe_js_spark.textops.dedup import (
+        _M, _M31, _hash_coeffs, shingles)
+
+    a, b = _hash_coeffs(num_hashes)
+    exploded = shingles(df, text_col, shingle_n).select(
+        "doc_id", F.explode_outer("shingles").alias("_s"),
+    ).select("doc_id", (_ref_md5_60(F.col("_s")) % F.lit(_M31)).alias("_h"))
+    return exploded.groupBy("doc_id").agg(*[
+        F.expr(f"min((_h * {a[i]} + {b[i]}) % {_M}) AS mh_{i}")
+        for i in range(num_hashes)])
+
+
+def _ref_simhash(df, text_col="text"):
+    """The round-6 SQL simhash: explode_outer the distinct tokens, then
+    one aggregate of a 60-term CASE sum over the bit popcounts."""
+    from scribe_js_spark.textops.dedup import SIMHASH_BITS, token_sets
+
+    exploded = token_sets(df, text_col).select(
+        "doc_id", F.explode_outer("toks").alias("_tok"),
+    ).select("doc_id", _ref_md5_60(F.col("_tok")).alias("_h"))
+    parts = [
+        f"(CASE WHEN sum(shiftrightunsigned(_h, {bit}) & 1) * 2 "
+        f"> count(_h) THEN CAST({1 << bit} AS BIGINT) "
+        "ELSE CAST(0 AS BIGINT) END)"
+        for bit in range(SIMHASH_BITS)]
+    sig = F.expr("CAST(0 AS BIGINT) + " + " + ".join(parts))
+    return exploded.groupBy("doc_id").agg(sig.alias("simhash"))
+
+
+def _double_sql(v):
+    """SQL text of a double literal: repr() round-trips doubles exactly."""
+    return f"CAST('{float(v)!r}' AS DOUBLE)"
+
+
+def _ref_lsh_bucket(vec_col, dim, n_planes=8):
+    """The SQL hyperplane bucket: per plane, the aggregate(zip_with)
+    projection fold and ``CASE WHEN fold >= 0``."""
+    from scribe_js_spark.textops.similarity import _plane_coeff
+
+    parts = []
+    for p in range(n_planes):
+        arr = "array(" + ",".join(
+            _double_sql(_plane_coeff(p, d)) for d in range(dim)) + ")"
+        proj = (f"aggregate(zip_with(`{vec_col}`, {arr}, "
+                "(x, w) -> cast(x as double) * w), "
+                "cast(0.0 as double), (acc, v) -> acc + v)")
+        parts.append(f"(CASE WHEN {proj} >= 0 THEN {1 << p} ELSE 0 END)")
+    return F.expr("CAST(0 AS BIGINT) + " + " + ".join(parts))
+
+
+def _ref_norm_sql(a):
+    """SQL text of the Euclidean norm (sqrt of the _dot_sql fold)."""
+    from scribe_js_spark.textops.similarity import _dot_sql
+
+    return f"sqrt({_dot_sql(a, a)})"
+
+
 def _simhash_hof(df, text_col="text"):
     """The round-5 formulation: 60 size(filter()) scans per row."""
-    from scribe_js_spark.textops.dedup import (
-        SIMHASH_BITS, md5_60, token_sets)
+    from scribe_js_spark.textops.dedup import SIMHASH_BITS, token_sets
 
     ts = token_sets(df, text_col).select(
-        "doc_id", F.transform(F.col("toks"), md5_60).alias("_th"))
+        "doc_id", F.transform(F.col("toks"), _ref_md5_60).alias("_th"))
 
     def _bit_set(bit):
         return lambda h: (
@@ -63,7 +141,7 @@ def _simhash_hof(df, text_col="text"):
 def _minhash_hof(df, text_col="text", num_hashes=32, shingle_n=3):
     """The round-5 formulation: transform + K array_min(transform())."""
     from scribe_js_spark.textops.dedup import (
-        _M, _M31, _hash_coeffs, md5_60, shingles)
+        _M, _M31, _hash_coeffs, shingles)
 
     a, b = _hash_coeffs(num_hashes)
     sh = shingles(df, text_col, shingle_n)
@@ -71,7 +149,7 @@ def _minhash_hof(df, text_col="text", num_hashes=32, shingle_n=3):
         "doc_id",
         F.transform(
             F.col("shingles"),
-            lambda s: md5_60(s) % F.lit(_M31)).alias("_h"))
+            lambda s: _ref_md5_60(s) % F.lit(_M31)).alias("_h"))
 
     def _rehash(ai, bi):
         return lambda h: (h * F.lit(ai) + F.lit(bi)) % F.lit(_M)
@@ -136,6 +214,37 @@ def test_minhash_signatures_match_hof(spark):
     assert _rows(minhash_signatures(docs)) == _rows(_minhash_hof(docs))
 
 
+def _edge_texts(spark):
+    return spark.createDataFrame(
+        [(100 + i, t) for i, t in enumerate(EDGE_TEXTS)] + EDGE_DOCS,
+        StructType([
+            StructField("doc_id", LongType()),
+            StructField("text", StringType()),
+        ]))
+
+
+def test_signature_kernels_match_sql_on_edge_texts(spark):
+    r"""The minhash and simhash kernels equal the round-6 SQL
+    aggregates, exactly, on texts whose tokenisation is a trap: NULL,
+    empty, spaces only, tab/newline/\x0b/\f/\r separators, leading
+    and trailing tabs (empty tokens), non-ASCII whitespace (a token
+    character for Java's \s), multibyte tokens, and fewer tokens than
+    the shingle width (all-NULL signature)."""
+    from scribe_js_spark.textops.dedup import minhash_signatures, simhash
+
+    docs = _edge_texts(spark)
+    got = _rows(simhash(docs))
+    assert got == _rows(_ref_simhash(docs))
+    assert len({r[1] for r in got}) > len(EDGE_TEXTS) // 2
+    for num_hashes, shingle_n in ((32, 3), (8, 1), (4, 5)):
+        got = _rows(minhash_signatures(docs, num_hashes=num_hashes,
+                                       shingle_n=shingle_n))
+        assert got == _rows(_ref_minhash_signatures(
+            docs, num_hashes=num_hashes, shingle_n=shingle_n)), shingle_n
+        assert any(r[1] is None for r in got)
+        assert any(r[1] is not None for r in got)
+
+
 def test_lang_id_matches_hof(spark):
     from scribe_js_spark.textops.quality import lang_id
 
@@ -168,9 +277,8 @@ def _ref_near_dup_rows(df, threshold, dim, n_planes,
     """Round-5 embedding_near_dups: distinct-ful multiprobe candidates,
     then the Column-API cosine join. Under a cap only vectors whose own
     bucket holds at most ``max_bucket_size`` rows take part."""
-    from scribe_js_spark.textops.similarity import with_lsh_bucket
-
-    b = with_lsh_bucket(df, dim=dim, n_planes=n_planes)
+    b = df.withColumn("lsh_bucket",
+                      _ref_lsh_bucket("embedding", dim, n_planes))
     if max_bucket_size is not None:
         ok = (b.groupBy("lsh_bucket").count()
               .filter(F.col("count") <= max_bucket_size))
@@ -209,14 +317,75 @@ def _near_dup_rows(df, **kw):
     return sorted(map(tuple, embedding_near_dups(df, **kw).collect()))
 
 
+EDGE_VECS = [
+    [1.0, 0.5, -0.25, 2.0, 0.75, -1.0, 0.1, 0.3],
+    [float("nan")] * 8,
+    [1.0, float("nan"), -0.25, 2.0, 0.75, -1.0, 0.1, 0.3],
+    [0.0] * 8, [-0.0] * 8, [-0.0, 0.0] * 4,
+    [float("inf"), -1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0],
+    [float("inf"), float("-inf"), 0.0, 0.0, 0.0, 0.0, 0.0, 0.0],
+    [3e38, 3e38, -3e38, 3e38, 3e38, 3e38, 3e38, 3e38],
+    [1e-45, -1e-45, 1e-45, 0.0, 0.0, 0.0, 0.0, 0.0],
+    [1.0, None, -0.25, 2.0, 0.75, -1.0, 0.1, 0.3],
+    [1.0, 2.0], [1.0] * 9, [], None, [None] * 8,
+]
+
+
+def test_bucket_norm_kernel_matches_sql_on_edge_vectors(spark):
+    """The bucket and norm kernel equals the SQL folds, exactly, for
+    NaN and +-0 (Spark orders NaN above every number, so NaN >= 0
+    sets the bit; -0.0 >= 0 too), infinities, float32 extremes,
+    ragged lengths (zip_with pads with NULL: bucket 0, the norm over
+    the vector's own length), NULL elements, a NULL and an empty
+    vector (norm 0.0 where the SQL fold is NULL)."""
+    import random
+
+    from scribe_js_spark.textops.similarity import _with_bucket_norm
+
+    rng = random.Random(3)
+    rows = [(i, v) for i, v in enumerate(EDGE_VECS)]
+    rows += [(100 + i, [rng.uniform(-1, 1) for _ in range(8)])
+             for i in range(200)]
+    df = _vecs(spark, rows)
+    for dim, n_planes in ((8, 4), (8, 12), (2, 3), (9, 1)):
+        got = _with_bucket_norm(df, "embedding", bucket="b", nrm="n",
+                                dim=dim, n_planes=n_planes)
+        want = df.select(
+            "vec_id", "embedding",
+            _ref_lsh_bucket("embedding", dim, n_planes).alias("b"),
+            F.coalesce(F.expr(_ref_norm_sql("embedding")),
+                       F.lit(0.0)).alias("n"))
+        assert repr(_rows(got)) == repr(_rows(want)), (dim, n_planes)
+        assert [f.nullable for f in got.schema.fields[2:]] == [False, False]
+    buckets = {r["b"] for r in _with_bucket_norm(
+        df, "embedding", bucket="b", dim=8, n_planes=4).collect()}
+    assert len(buckets) == 16
+
+
+def test_bucket_norm_kernel_reads_sliced_batches():
+    """A batch whose list column is a slice (offsets not starting at
+    0, values beyond the slice) gives the rows of the whole column."""
+    import pyarrow as pa
+
+    from scribe_js_spark.textops.similarity import _bucket_norm_kernel
+
+    col = pa.array([[1.0, -2.0], None, [0.5, None], [3.0, 4.0], [-1.0, 0.0],
+                    [2.0]], pa.list_(pa.float32()))
+    whole = _bucket_norm_kernel(
+        0, 2, 6, True, True, pa.RecordBatch.from_arrays([col], ["v"]))
+    part = _bucket_norm_kernel(
+        0, 2, 6, True, True, pa.RecordBatch.from_arrays([col[2:]], ["v"]))
+    assert [a.to_pylist()[2:] for a in whole] == [a.to_pylist() for a in part]
+    assert part[2].to_pylist()[:2] == [0.0, 5.0]
+
+
 def test_embedding_near_dups_pairs_unique_without_distinct(spark):
     """The removed pair-.distinct() relied on the multiprobe join
     emitting each ordered pair at most once. Build a corpus with
     exact-bucket collisions, Hamming-1 and Hamming-2 bucket pairs and
     near-identical vectors, and assert (a) no duplicate pairs in the
     output, (b) output identical to the round-5 distinct-ful shape."""
-    from scribe_js_spark.textops.similarity import (
-        embedding_near_dups, lsh_bucket)
+    from scribe_js_spark.textops.similarity import embedding_near_dups
 
     dim = 8
     base = [1.0, 0.5, -0.25, 2.0, 0.75, -1.0, 0.1, 0.3]
@@ -242,7 +411,7 @@ def test_embedding_near_dups_pairs_unique_without_distinct(spark):
     assert have == _ref_near_dup_rows(df, 0.5, dim, 4)
     # sanity: the fixture actually produced pairs and spread buckets
     assert len(pairs) >= 10
-    nb = df.select(lsh_bucket(
+    nb = df.select(_ref_lsh_bucket(
         "embedding", dim, 4).alias("b")).distinct().count()
     assert nb >= 2
 
@@ -345,12 +514,11 @@ def _ref_ann_topk_ivf(df, queries, k, dim, n_planes_coarse, nprobe):
     SQL text as a literal point."""
     from pyspark.sql import Window
 
-    from scribe_js_spark.textops.similarity import (
-        _double_sql, _dot_sql, _norm_sql, lsh_bucket)
+    from scribe_js_spark.textops.similarity import _dot_sql
 
     base = df.select(
         F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"),
-        lsh_bucket("embedding", dim, n_planes_coarse).alias("bucket"))
+        _ref_lsh_bucket("embedding", dim, n_planes_coarse).alias("bucket"))
     cent_rows = (
         base.select("bucket", F.posexplode(
             F.transform(F.col("vec"), lambda x: x.cast("double"))))
@@ -385,7 +553,7 @@ def _ref_ann_topk_ivf(df, queries, k, dim, n_planes_coarse, nprobe):
                       & (F.col("vid") != F.col("query_id")))
         .withColumn("sim", F.expr(
             f"{_dot_sql('q_vec', 'vec')} / "
-            f"({_norm_sql('q_vec')} * {_norm_sql('vec')})"))
+            f"({_ref_norm_sql('q_vec')} * {_ref_norm_sql('vec')})"))
         .select("query_id", F.col("vid").alias("neighbor_id"), "sim")
         .distinct())
     w = Window.partitionBy("query_id").orderBy(

@@ -116,15 +116,15 @@ def main():
     summarize(
         "minhash_lsh_pairs", minhash_lsh_pairs(docs),
         "Banded signatures then a bucket self-join; cost is bounded by "
-        "bucket collisions (output-bound), not n^2. Round 6: the K "
-        "minima come from explode_outer + one codegen hash-aggregate "
-        "with K min() columns (8x faster than the interpreted "
-        "transform/array_min passes; md5 per shingle is a per-row "
-        "codegen expression). Band buckets come from one posexplode "
-        "over the materialized mh_i columns, hash-partitioned once on "
+        "bucket collisions (output-bound), not n^2. The K minima "
+        "come from one numpy kernel per Arrow batch (MapInArrow: md5 "
+        "per distinct shingle, K int64 rehash columns, per-document "
+        "minimum), with no Exchange before it beyond the "
+        "scale-guarded spread_input. Band buckets come from one "
+        "posexplode over the mh_i columns, hash-partitioned once on "
         "(band, bucket): the self-join's second side is a "
-        "ReusedExchange of the first, so the signature aggregate runs "
-        "once per query and nothing is cached.",
+        "ReusedExchange of the first, so the kernel runs once per "
+        "query and nothing is cached.",
         out)
     from scribe_js_spark.textops.dedup import jaccard_for_pairs
     summarize(
@@ -137,11 +137,10 @@ def main():
     summarize(
         "simhash_candidates", simhash_candidates(docs),
         "4x15-bit block join (pigeonhole for Hamming<=3 over the 60-bit "
-        "md5-derived signature) then exact popcount filter. Round 6: "
-        "the signature's 60 bit-votes come from explode + one codegen "
-        "hash-aggregate with 60 sum((h>>b)&1) columns (the round-5 "
-        "per-row size(filter()) scans ran interpreted, 68s -> 4s at "
-        "50k docs), and the uncapped path drops the candidate "
+        "md5-derived signature) then exact popcount filter. The "
+        "signature's 60 bit-votes come from one numpy kernel per "
+        "Arrow batch (MapInArrow), below the one block exchange both "
+        "join sides read; the uncapped path drops the candidate "
         ".distinct() via the first-matching-block filter — a map-side "
         "bit test that provably emits each pair exactly once.",
         out)
@@ -152,9 +151,10 @@ def main():
         "corpus side shuffles only when the scale-adaptive "
         "spread_input fires on a small/unsplittable scan (one-row-"
         "group files deliver every row to one task); the remaining "
-        "Exchange is the per-query top-k window partition. Round 6: "
-        "each side's norm is computed once per vector below the join "
-        "(was: 3 fold evaluations per pair).",
+        "Exchange is the per-query top-k window partition. Each "
+        "side's norm is computed once per vector below the join, by "
+        "the bucket/norm numpy kernel (MapInArrow); the pair dot "
+        "product stays a JVM fold.",
         out)
     from scribe_js_spark.textops.quality import token_counts
     summarize(
@@ -174,7 +174,8 @@ def main():
         ".distinct() is gone — the multiprobe XOR list is pairwise-"
         "distinct, so the join provably emits each ordered pair at "
         "most once (the distinct shuffled 15.2M pair rows at 20k "
-        "vectors); norms are computed once per vector below one hash "
+        "vectors); bucket and norm come from one numpy kernel per "
+        "Arrow batch (MapInArrow), below one hash "
         "partitioning on the bucket, which both sides of the probe "
         "join read (the second is a ReusedExchange) and which carries "
         "each vector and its norm, so the verify joins nothing back; "
