@@ -218,14 +218,14 @@ def _md5_60(strings) -> np.ndarray:
     return (np.frombuffer(digests, ">u8")[::2] >> 4).astype(np.int64)
 
 
-def _hashed(docs: list) -> tuple[np.ndarray, np.ndarray]:
+def _hashed(docs) -> tuple[np.ndarray, np.ndarray]:
     """(md5_60 of every string of every document, documents in order;
-    each document's string count). Each distinct string of the batch
-    is hashed once."""
-    index: dict[str, int] = {}
-    ids = [index.setdefault(s, len(index)) for d in docs for s in d]
-    lens = np.fromiter(map(len, docs), np.int64, len(docs))
-    return _md5_60(index)[np.array(ids, np.int64)], lens
+    each document's string count). ``docs`` yields one collection of
+    strings per document; only one document's strings are held at a
+    time."""
+    per_doc = [_md5_60(d) for d in docs]
+    lens = np.fromiter(map(len, per_doc), np.int64, len(per_doc))
+    return np.concatenate([np.zeros(0, np.int64), *per_doc]), lens
 
 
 def _per_doc(ufunc, values: np.ndarray, lens: np.ndarray, **kw):
@@ -244,12 +244,13 @@ def _minhash_kernel(num_hashes: int, shingle_n: int, batch) -> list:
     tokens) gets NULL minhashes."""
     import pyarrow as pa
 
-    docs = []
-    for text in batch.column(1).to_pylist():
-        toks = [] if text is None else _tokens(text)
-        docs.append({" ".join(toks[i:i + shingle_n])
-                     for i in range(len(toks) - shingle_n + 1)})
-    h, lens = _hashed(docs)
+    def shingle_sets():
+        for text in batch.column(1).to_pylist():
+            toks = [] if text is None else _tokens(text)
+            yield {" ".join(toks[i:i + shingle_n])
+                   for i in range(len(toks) - shingle_n + 1)}
+
+    h, lens = _hashed(shingle_sets())
     h %= _M31
     has = lens > 0
     out = [batch.column(0)]
@@ -329,9 +330,8 @@ def _simhash_kernel(batch) -> list:
     b) > (distinct tokens). NULL text has no token and signature 0."""
     import pyarrow as pa
 
-    docs = [() if text is None else set(_tokens(text))
-            for text in batch.column(1).to_pylist()]
-    h, lens = _hashed(docs)
+    h, lens = _hashed(() if text is None else set(_tokens(text))
+                      for text in batch.column(1).to_pylist())
     bits = np.unpackbits(h.astype("<u8").view(np.uint8).reshape(-1, 8),
                          axis=1, bitorder="little")[:, :SIMHASH_BITS]
     sig = np.zeros(len(lens), np.int64)

@@ -73,7 +73,7 @@ def _entropy_end(data: bytes, pos: int) -> int:
 
 def _expand_plane(plane: np.ndarray, eh: int, ev: int) -> np.ndarray:
     """EXP reference upsampling (T.81 J.1.1.2)."""
-    p = plane.astype(np.int64)
+    p = np.asarray(plane, dtype=np.int64)
     if eh:
         right = np.concatenate([p[:, 1:], p[:, -1:]], axis=1)
         out = np.empty((p.shape[0], p.shape[1] * 2), dtype=np.int64)
@@ -87,6 +87,14 @@ def _expand_plane(plane: np.ndarray, eh: int, ev: int) -> np.ndarray:
         out[1::2, :] = (p + below + 1) >> 1
         p = out
     return p
+
+
+def _check_planes(samples: int, what: str) -> None:
+    """Refuse reference planes of ``samples`` samples in all past the
+    shared decode budget. The planes are int64: 8 bytes a sample."""
+    from .multimodal import check_decode_budget
+
+    check_decode_budget(samples * 8, what)
 
 
 def _fit(plane: np.ndarray, h: int, w: int) -> np.ndarray:
@@ -240,17 +248,15 @@ def _decode_diff_lossless(standalone: bytes, refs: dict) -> None:
                 cs, tsel = seg[1 + 2 * si], seg[2 + 2 * si]
                 comps.append((cs, tsel >> 4))
             pt = seg[3 + 2 * ns] & 0xF
-            from .multimodal import check_decode_budget
-
-            check_decode_budget(h * w * len(comps),
-                                f"jpeg differential lossless: {w}x{h}")
+            _check_planes(h * w * len(comps),
+                          f"jpeg differential lossless: {w}x{h}")
             planes = []
             for cid, tid in comps:
                 if cid not in refs:
                     raise ValueError(
                         f"jpeg: differential frame component {cid} "
                         "has no reference")
-                planes.append(_fit(refs[cid], h, w).astype(np.int64))
+                planes.append(_fit(refs[cid], h, w))
             reader = _BitReader(standalone, seg_end)
             tabs = [htables[tid] for _cid, tid in comps]
             mcu = 0
@@ -327,12 +333,12 @@ def _decode_diff_dct(standalone: bytes, refs: dict) -> None:
                 raise NotImplementedError(
                     "jpeg: non-interleaved differential DCT scan")
             bh, bw = (h + 7) // 8, (w + 7) // 8
-            # counted in coefficient samples over all components, which
-            # also bounds each component's dequantised copy below
-            from .multimodal import check_decode_budget
-
-            check_decode_budget(bh * bw * 64 * len(comps),
-                                f"jpeg differential DCT: {w}x{h}")
+            # 8 bytes per coefficient over all components bounds the
+            # int32 coefficients of every component, and each
+            # component's float64 dequantised copy, IDCT output and
+            # int64 reference plane
+            _check_planes(bh * bw * 64 * len(comps),
+                          f"jpeg differential DCT: {w}x{h}")
             coefs = {c["id"]: np.zeros((bh, bw, 64), dtype=np.int32)
                      for c in comps}
             reader = _BitReader(standalone, seg_end)
@@ -364,34 +370,39 @@ def _decode_diff_dct(standalone: bytes, refs: dict) -> None:
                     raise ValueError(
                         f"jpeg: differential frame component "
                         f"{c['id']} has no reference")
-                base = _fit(refs[c["id"]], h, w).astype(np.int64)
-                refs[c["id"]] = base + np.round(corr).astype(np.int64)
+                refs[c["id"]] = _fit(refs[c["id"]], h, w) \
+                    + np.round(corr).astype(np.int64)
             return
     raise ValueError("jpeg: differential frame without a scan")
 
 
 def decode_jpeg_hierarchical(data: bytes) -> np.ndarray:
-    """DHP-led hierarchical stream -> uint8 (h, w) gray or (h, w, 3)."""
-    from .multimodal import check_decode_budget
-
+    """DHP-led hierarchical stream -> uint8 (h, w) gray or (h, w, 3).
+    The DHP, each frame header and each EXP size the int64 reference
+    planes: each is refused past the decode budget before it is
+    allocated."""
     (prec, out_h, out_w, comp_ids), frames = _split_frames(data)
     if prec != 8:
         raise NotImplementedError(f"jpeg: hierarchical precision {prec}")
-    # the DHP sizes the output planes: refuse them before any frame
-    check_decode_budget(out_h * out_w * len(comp_ids),
-                        f"jpeg hierarchical: {out_w}x{out_h}")
+    _check_planes(out_h * out_w * len(comp_ids),
+                  f"jpeg hierarchical: {out_w}x{out_h}")
     refs: dict[int, np.ndarray] = {}
     for sof, exp, tables, frame in frames:
         standalone = b"\xff\xd8" + tables + frame + b"\xff\xd9"
         if exp is not None:
             eh, ev = exp
+            _check_planes(sum(p.size for p in refs.values())
+                          * (2 if eh else 1) * (2 if ev else 1),
+                          "jpeg hierarchical EXP")
             refs = {cid: _expand_plane(p, eh, ev)
                     for cid, p in refs.items()}
         if sof in _SOF_NONDIFF:
             # a non-first non-differential frame simply replaces the
             # references for its components (J.1: frames need not all
             # be differential)
-            _fh, _fw, fcomp = _frame_header(frame)
+            fh, fw, fcomp = _frame_header(frame)
+            _check_planes(fh * fw * len(fcomp),
+                          f"jpeg hierarchical base: {fw}x{fh}")
             if sof == 0xC3:
                 px = decode_jpeg_lossless(standalone)
                 if px.ndim == 2:

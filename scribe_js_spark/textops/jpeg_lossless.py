@@ -122,11 +122,12 @@ def decode_jpeg_lossless(data: bytes) -> np.ndarray:
                     "jpeg: non-interleaved lossless scan")
             reader = _BitReader(data, pos + seg_len)
             nc = len(comps)
-            # the SOF3 header alone sizes the image: refuse it past
-            # the shared decode budget before allocating
+            # the SOF3 header alone sizes the image: refuse its
+            # uint16 samples past the shared decode budget before
+            # allocating them
             from .multimodal import check_decode_budget
 
-            check_decode_budget(h * w * nc, f"jpeg lossless: {w}x{h}")
+            check_decode_budget(h * w * nc * 2, f"jpeg lossless: {w}x{h}")
             out = np.zeros((h, w, nc), dtype=np.uint16)
             default = 1 << (precision - 1 - pt)
             mcu = 0

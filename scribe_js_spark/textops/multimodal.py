@@ -71,8 +71,10 @@ _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 #: Most bytes one image may decode to, at one byte per 8-bit sample.
 #: PNG (filtered scanlines or pixel array), RLE BMP, GIF (screen or
-#: frame, as RGB) and JPEG (coefficient samples) take their sizes from
-#: the header alone, so a small file could otherwise claim gigabytes:
+#: frame, as RGB) and JPEG (coefficient samples; the lossless decoder's
+#: uint16 and the hierarchical decoder's int64 planes in bytes) take
+#: their sizes from the header alone, so a small file could otherwise
+#: claim gigabytes:
 #: past the budget the decoder raises ValueError before it inflates or
 #: allocates anything. A 600 dpi letter-size RGBA page is about 135 MB.
 DECODE_BUDGET = 256 * 1024 * 1024

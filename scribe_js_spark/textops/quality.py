@@ -107,7 +107,7 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     # sum(when(...)) counters plus the 12-way when-chains cost ~0.55 s
     # of driver-side py4j round trips per invocation (measured; same
     # construction-cost class as dedup's band-bucket array and
-    # similarity._dot_sql — see those comments), the strings a few
+    # similarity.lsh_bucket — see those docstrings), the strings a few
     # ms. All-integer/string arithmetic, identical analyzed
     # expressions; output equality is pinned by test_lang_id_matches_hof
     # and was verified row-identical at sf0.1.

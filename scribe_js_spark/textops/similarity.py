@@ -1,19 +1,23 @@
 """Similarity search over embedding columns (array<float>).
 
 - ``ann_topk_bruteforce``: exact cosine top-k — broadcast the (small)
-  query set against the full corpus; the pair dot product is a
-  JVM-side ``aggregate(zip_with(...))``. This is the correctness
-  baseline.
+  query set against the full corpus; the dot product is a JVM-side
+  ``aggregate(zip_with(...))`` so no Python runs per row. This is the
+  correctness baseline.
 - ``ann_topk_lsh``: random-hyperplane LSH bucketing as the scale path —
   hyperplanes are deterministic (hash-derived), candidates restricted to
   same-bucket (plus Hamming-1 neighbor buckets via multi-probe), then
   exact re-rank. At 10^12 rows the bucket join replaces the full cross
   product; recall tunes with bits/probes.
 
-Per-vector values — the hyperplane bucket and the norm — are computed
-once per Arrow batch in numpy (:func:`_with_bucket_norm`), in the
-IEEE operation order of the SQL left fold; per-pair values (the dot
-product) stay JVM folds over the joined rows.
+``embedding_near_dups`` computes each vector's bucket and norm once
+per Arrow batch in numpy (:func:`_bucket_norm_kernel`), in the IEEE
+operation order of the :func:`lsh_bucket` and ``_norm_sql`` folds, so
+its bucket ids equal the ones :func:`with_lsh_bucket` stores. The ANN
+query paths keep those SQL folds: each Python stage costs a fixed
+~0.2 s per query (warm, local[4]), more than the folds cost over a
+2,000-vector corpus and its query batch. Per-pair values (the dot
+product) are JVM folds over the joined rows everywhere.
 """
 
 from __future__ import annotations
@@ -30,6 +34,13 @@ def _ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def _double_sql(v: float) -> str:
+    """SQL text of a double literal: repr() round-trips doubles exactly
+    and the string-to-double cast constant-folds to the identical
+    Literal."""
+    return f"CAST('{float(v)!r}' AS DOUBLE)"
+
+
 def _dot_sql(a: str, b: str) -> str:
     """SQL text of the left-fold dot product of two named array
     columns over float64 casts (zip_with + aggregate).
@@ -43,12 +54,18 @@ def _dot_sql(a: str, b: str) -> str:
     the JVM. An unrolled ``a[0]*b[0] + ... + a[63]*b[63]`` was measured
     slower (2M cached pairs: 23 s against 4.4 s): its >8 KB method is
     never JIT-compiled by HotSpot (DontCompileHugeMethods) and runs in
-    the bytecode interpreter. The per-vector folds — norm and
-    hyperplane projections — run in :func:`_bucket_norm_kernel`, in
-    this fold's IEEE order."""
+    the bytecode interpreter (and 8 such trees in one projection, as
+    :func:`lsh_bucket`, exceed janino's 64 KB method limit). The
+    per-vector folds of :func:`embedding_near_dups` run in
+    :func:`_bucket_norm_kernel`, in this fold's IEEE order."""
     return (f"aggregate(zip_with({_ident(a)}, {_ident(b)}, "
             "(x, y) -> cast(x as double) * cast(y as double)), "
             "cast(0.0 as double), (acc, v) -> acc + v)")
+
+
+def _norm_sql(a: str) -> str:
+    """SQL text of the Euclidean norm (sqrt of the _dot_sql fold)."""
+    return f"sqrt({_dot_sql(a, a)})"
 
 
 def ann_topk_bruteforce(df: DataFrame, queries: DataFrame, k: int = 5,
@@ -69,12 +86,12 @@ def ann_topk_bruteforce(df: DataFrame, queries: DataFrame, k: int = 5,
     """
     from .partitioning import spread_input
 
-    q = _with_bucket_norm(queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
-        "q_vec", nrm="q_nrm")
-    c = _with_bucket_norm(spread_input(df, [id_col, vec_col]).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")),
-        "c_vec", nrm="c_nrm")
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
+        F.expr(_norm_sql(vec_col)).alias("q_nrm"))
+    c = spread_input(df, [id_col, vec_col]).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
+        F.expr(_norm_sql(vec_col)).alias("c_nrm"))
     scored = (
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .withColumn(
@@ -107,10 +124,9 @@ def ann_topk_ivf(df: DataFrame, queries: DataFrame, k: int = 5,
     Building the query starts no Spark job: the centroids stay in the
     plan.
     """
-    base = _with_bucket_norm(df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")),
-        "vec", bucket="bucket", nrm="nrm", dim=dim,
-        n_planes=n_planes_coarse)
+    base = df.select(
+        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
+        lsh_bucket(vec_col, dim, n_planes_coarse).alias("bucket"))
 
     # Centroids: per-dimension means of each coarse LSH bucket, rounded
     # to 6 decimals so the value is reproducible across engines (the
@@ -137,16 +153,15 @@ def ann_topk_ivf(df: DataFrame, queries: DataFrame, k: int = 5,
         .withColumn("cell", F.expr(f"array_min({dists}).cell"))
         .drop("_cents"))
 
-    q = _with_bucket_norm(queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("vec")),
-        "vec", nrm="q_nrm")
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("vec"))
     q_cells = (
         q.crossJoin(F.broadcast(cents))
         .withColumn(
             "probe_cells",
             F.expr(f"slice(transform(array_sort({dists}), s -> s.cell), "
                    f"1, {int(nprobe)})"))
-        .select("query_id", F.col("vec").alias("q_vec"), "q_nrm",
+        .select("query_id", F.col("vec").alias("q_vec"),
                 F.explode("probe_cells").alias("cell"))
     )
 
@@ -155,7 +170,8 @@ def ann_topk_ivf(df: DataFrame, queries: DataFrame, k: int = 5,
                       (assigned["cell"] == q_cells["cell"])
                       & (F.col("vid") != F.col("query_id")))
         .withColumn("sim", F.expr(
-            f"{_dot_sql('q_vec', 'vec')} / (q_nrm * nrm)"))
+            f"{_dot_sql('q_vec', 'vec')} / "
+            f"({_norm_sql('q_vec')} * {_norm_sql('vec')})"))
         .select("query_id", F.col("vid").alias("neighbor_id"), "sim")
         .distinct()
     )
@@ -180,10 +196,77 @@ def _plane_coeff(plane: int, dim: int) -> float:
     return (h / (1 << 31)) - 1.0
 
 
-def _bucket_norm_kernel(vec: int, dim: int, n_planes: int, bucket: bool,
-                        nrm: bool, batch) -> list:
-    """``batch``'s columns, then (if ``bucket``) the hyperplane bucket
-    and (if ``nrm``) the Euclidean norm of its ``vec``-th column, an
+def lsh_bucket(vec_col: str, dim: int, n_planes: int = _N_PLANES_DEFAULT):
+    """Sign-of-projection bucket id (0 .. 2^n_planes-1) of the named
+    array column, as a column: a left fold per plane over float64
+    casts, as :func:`_dot_sql`. :func:`_bucket_norm_kernel` computes the
+    same ids per Arrow batch for :func:`embedding_near_dups`.
+
+    An unrolled 8 planes x 64 terms projection exceeds janino's 64 KB
+    method limit and runs interpreted, 3-6x slower (see _dot_sql). For
+    corpora queried repeatedly, :func:`with_lsh_bucket` materializes
+    the id once and the queries read it from the scan.
+
+    The expression is built as ONE SQL string (1.3 ms): the Column API
+    issued ~70 py4j round trips per plane (64 ``F.lit`` coefficient
+    literals plus the lambda plumbing), 0.56 s of driver-side Python
+    per call. Coefficient literals ride as ``CAST('<repr>' AS
+    DOUBLE)`` (see _double_sql), so the ids are bit-identical to the
+    Column-API formulation."""
+    ident = _ident(vec_col)
+    parts = []
+    for p in range(n_planes):
+        arr = "array(" + ",".join(
+            _double_sql(_plane_coeff(p, d)) for d in range(dim)) + ")"
+        proj = (f"aggregate(zip_with({ident}, {arr}, "
+                "(x, w) -> cast(x as double) * w), "
+                "cast(0.0 as double), (acc, v) -> acc + v)")
+        parts.append(
+            f"(CASE WHEN {proj} >= 0 THEN {1 << p} ELSE 0 END)")
+    return F.expr("CAST(0 AS BIGINT) + " + " + ".join(parts))
+
+
+def with_lsh_bucket(df: DataFrame, vec_col: str = "embedding",
+                    dim: int = 64,
+                    n_planes: int = _N_PLANES_DEFAULT,
+                    out_col: str = "lsh_bucket") -> DataFrame:
+    """Materialize the hyperplane bucket id onto the embedding table.
+
+    The bucket expression costs O(n_planes x dim) JVM work per row;
+    for a corpus queried repeatedly (ANN serving, periodic dedup
+    sweeps) compute it ONCE, persist it with the embeddings
+    (``pipeline.write_bucketed(..., bucket_col=out_col)`` makes the
+    self-join shuffle-free too), and let :func:`ann_topk_lsh` /
+    :func:`embedding_near_dups` pick the column up from the scan.
+    The stored ids are only valid for the same (dim, n_planes) —
+    the hyperplanes are deterministic in those parameters."""
+    return df.withColumn(
+        out_col, lsh_bucket(vec_col, dim, n_planes))
+
+
+def _stored_bucket(df: DataFrame, bucket_col: str | None) -> str | None:
+    """The pre-materialized bucket column: ``bucket_col``, or
+    ``lsh_bucket`` when the input has it; None when there is none."""
+    if bucket_col is None and "lsh_bucket" in df.columns:
+        return "lsh_bucket"
+    return bucket_col
+
+
+def _corpus_bucket(df: DataFrame, vec_col: str, dim: int,
+                   n_planes: int, bucket_col: str | None):
+    """The corpus-side bucket column: a pre-materialized column when
+    present (by name, or auto-detected as ``lsh_bucket``), else the
+    inline projection."""
+    bucket_col = _stored_bucket(df, bucket_col)
+    if bucket_col is not None:
+        return F.col(bucket_col).cast("long")
+    return lsh_bucket(vec_col, dim, n_planes)
+
+
+def _bucket_norm_kernel(dim: int, n_planes: int, bucket: bool,
+                        batch) -> list:
+    """A (vid, vec[, bucket]) batch's columns, then (if ``bucket``) the
+    hyperplane bucket and the Euclidean norm of ``vec``, an
     array<float|double>.
 
     Both are the left folds of ``_dot_sql`` in its IEEE order —
@@ -199,7 +282,7 @@ def _bucket_norm_kernel(vec: int, dim: int, n_planes: int, bucket: bool,
       element), whose dot products are NULL anyway."""
     import pyarrow as pa
 
-    col = batch.column(vec)
+    col = batch.column(1)
     off = col.offsets.to_numpy()
     lens = np.diff(off)
     vals = col.values
@@ -223,78 +306,43 @@ def _bucket_norm_kernel(vec: int, dim: int, n_planes: int, bucket: bool,
         ids = np.zeros(len(lens), np.int64)
         ids[rows] = (bits << np.arange(n_planes, dtype=np.int64)).sum(axis=1)
         out.append(pa.array(ids))
-    if nrm:
-        acc = np.zeros(len(lens))
-        for d in range(int(lens.max(initial=0))):
-            rows = np.flatnonzero(lens > d)
-            xd = x[off[rows] + d]
-            acc[rows] = acc[rows] + xd * xd
-        out.append(pa.array(np.where(ok, np.sqrt(acc), 0.0)))
+    acc = np.zeros(len(lens))
+    for d in range(int(lens.max(initial=0))):
+        rows = np.flatnonzero(lens > d)
+        xd = x[off[rows] + d]
+        acc[rows] = acc[rows] + xd * xd
+    out.append(pa.array(np.where(ok, np.sqrt(acc), 0.0)))
     return out
 
 
-def _with_bucket_norm(df: DataFrame, vec_col: str,
-                      bucket: str | None = None, nrm: str | None = None,
-                      dim: int = 0,
-                      n_planes: int = _N_PLANES_DEFAULT) -> DataFrame:
-    """``df`` plus a column named ``bucket``, the sign-of-projection id
-    (0 .. 2^n_planes-1) of ``vec_col`` over the ``n_planes`` hyperplanes
-    of :func:`_plane_coeff`, and one named ``nrm``, its Euclidean
-    norm; a None name leaves that column out. One numpy pass per Arrow
-    batch (:func:`_bucket_norm_kernel`).
+def _corpus(df: DataFrame, id_col: str, vec_col: str, dim: int,
+            n_planes: int, bucket_col: str | None) -> DataFrame:
+    """(vid, vec, bucket, nrm) of the spread corpus: the hyperplane
+    bucket and the norm from one numpy pass per Arrow batch
+    (:func:`_bucket_norm_kernel`). The bucket is a pre-materialized
+    column when there is one (``bucket_col``, or ``lsh_bucket`` when
+    the input has it), and the kernel then computes only the norm.
 
-    Both are declared NOT NULL: with a nullable key, Spark infers an
-    ``isnotnull`` filter from the join and pushes it below one side's
-    exchange, and the self-join loses its reused exchange."""
+    The kernel's outputs are declared NOT NULL: with a nullable key,
+    Spark infers an ``isnotnull`` filter from the join and pushes it
+    below one side's exchange, and the self-join loses its reused
+    exchange."""
     from ..pipeline import per_batch
-
-    fields = list(df.schema.fields)
-    if bucket is not None:
-        fields.append(StructField(bucket, LongType(), False))
-    if nrm is not None:
-        fields.append(StructField(nrm, DoubleType(), False))
-    kernel = functools.partial(
-        _bucket_norm_kernel, df.columns.index(vec_col), dim, n_planes,
-        bucket is not None, nrm is not None)
-    return per_batch(df, kernel, StructType(fields))
-
-
-def with_lsh_bucket(df: DataFrame, vec_col: str = "embedding",
-                    dim: int = 64,
-                    n_planes: int = _N_PLANES_DEFAULT,
-                    out_col: str = "lsh_bucket") -> DataFrame:
-    """Materialize the hyperplane bucket id onto the embedding table.
-
-    For a corpus queried repeatedly (ANN serving, periodic dedup
-    sweeps) compute it ONCE, persist it with the embeddings
-    (``pipeline.write_bucketed(..., bucket_col=out_col)`` makes the
-    self-join shuffle-free too), and let :func:`ann_topk_lsh` /
-    :func:`embedding_near_dups` pick the column up from the scan.
-    The stored ids are only valid for the same (dim, n_planes) —
-    the hyperplanes are deterministic in those parameters. An
-    existing ``out_col`` is replaced and moves to the end."""
-    return _with_bucket_norm(df.drop(out_col), vec_col, bucket=out_col,
-                             dim=dim, n_planes=n_planes)
-
-
-def _corpus(df: DataFrame, ids: str, vec: str, nrm: str, vec_col: str,
-            id_col: str, dim: int, n_planes: int,
-            bucket_col: str | None) -> DataFrame:
-    """(``ids``, ``vec``, bucket, ``nrm``) of the spread corpus. The
-    bucket is a pre-materialized column when there is one
-    (``bucket_col``, or ``lsh_bucket`` when the input has it), and the
-    kernel then computes only the norm; else it is computed."""
     from .partitioning import spread_input
 
     df = spread_input(df)
-    if bucket_col is None and "lsh_bucket" in df.columns:
-        bucket_col = "lsh_bucket"
-    cols = [F.col(id_col).alias(ids), F.col(vec_col).alias(vec)]
+    bucket_col = _stored_bucket(df, bucket_col)
+    cols = [F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")]
     if bucket_col is not None:
         cols.append(F.col(bucket_col).cast("long").alias("bucket"))
-    return _with_bucket_norm(
-        df.select(*cols), vec, bucket=None if bucket_col else "bucket",
-        nrm=nrm, dim=dim, n_planes=n_planes)
+    df = df.select(*cols)
+    fields = list(df.schema.fields)
+    if bucket_col is None:
+        fields.append(StructField("bucket", LongType(), False))
+    fields.append(StructField("nrm", DoubleType(), False))
+    kernel = functools.partial(_bucket_norm_kernel, dim, n_planes,
+                               bucket_col is None)
+    return per_batch(df, kernel, StructType(fields))
 
 
 def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
@@ -333,8 +381,7 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
     # parquet file would run it on one task (guide 2.5). The norm is
     # computed once per vector, below the exchange, not per pair.
     base = bucket_rows(
-        _corpus(df, "vid", "vec", "nrm", vec_col, id_col, dim, n_planes,
-                bucket_col),
+        _corpus(df, id_col, vec_col, dim, n_planes, bucket_col),
         ["bucket"], max_bucket_size)
     probes = base.select(
         F.col("vid").alias("vec_a"), F.col("vec").alias("va"),
@@ -383,17 +430,24 @@ def ann_topk_lsh(df: DataFrame, queries: DataFrame, k: int = 5,
     instead of re-projecting n_planes x dim per row on every query
     batch. Query-side buckets are always computed (the probe set is
     tiny)."""
-    c = _corpus(df, "neighbor_id", "c_vec", "c_nrm", vec_col, id_col,
-                dim, n_planes, bucket_col)
+    from .partitioning import spread_input
+
+    df = spread_input(df)
+    c = df.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
+        _corpus_bucket(df, vec_col, dim, n_planes, bucket_col)
+        .alias("bucket"),
+        F.expr(_norm_sql(vec_col)).alias("c_nrm"))
     probe_buckets = F.array(
         *([F.col("q_bucket")] + [
             F.col("q_bucket").bitwiseXOR(F.lit(1 << p))
             for p in range(n_planes)
         ] if multiprobe else [F.col("q_bucket")]))
-    q = _with_bucket_norm(queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
-        "q_vec", bucket="q_bucket", nrm="q_nrm", dim=dim,
-        n_planes=n_planes).withColumn("probe", F.explode(probe_buckets))
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
+        lsh_bucket(vec_col, dim, n_planes).alias("q_bucket"),
+        F.expr(_norm_sql(vec_col)).alias("q_nrm"),
+    ).withColumn("probe", F.explode(probe_buckets))
     # no distinct needed (round 6): a query's probe list
     # {q_bucket ^ m} has pairwise-distinct values, so each corpus row
     # matches a given query at most once — (query_id, neighbor_id)

@@ -135,7 +135,7 @@ def test_prebucketed_corpus_rides_the_scan(spark, tmp_path):
     import random
 
     from scribe_js_spark.textops.similarity import (
-        ann_topk_lsh, embedding_near_dups, with_lsh_bucket)
+        _corpus, ann_topk_lsh, embedding_near_dups, with_lsh_bucket)
 
     rng = random.Random(5)
     rows = []
@@ -174,6 +174,16 @@ def test_prebucketed_corpus_rides_the_scan(spark, tmp_path):
     assert embedding_near_dups(one_bucket, threshold=-2.0).count() \
         == 70 * 69 // 2
     assert embedding_near_dups(df, threshold=-2.0).count() < 70 * 69 // 4
+
+    # and the per-row hyperplane projection is off: the kernel declares
+    # a bucket it computes NOT NULL, while the stored column read from
+    # parquet stays nullable
+    def corpus_bucket(d):
+        return _corpus(d, "vec_id", "embedding", 64, 8,
+                       None).schema["bucket"]
+
+    assert corpus_bucket(pre).nullable
+    assert not corpus_bucket(df).nullable
 
 
 def _ref_cap(df, keys, max_bucket_size):

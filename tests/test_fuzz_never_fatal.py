@@ -486,20 +486,23 @@ def test_decode_media_net_catches_all_codec_mutations():
     # their own headers: a 131-byte SOF3 stream of a 16x16 image
     # claiming 65535x65535 (8 GiB as uint16), and a 226-byte
     # hierarchical pyramid whose DHP, or whose SOF7 differential
-    # frame, claims 65535x65535.
+    # frame, claims 65535x65535. Its SOF7 frame claiming 16384x16384
+    # is exactly DECODE_BUDGET samples, but the reference planes are
+    # int64: 2 GiB each, past the cap.
     from scribe_js_spark.textops.jpeg_hier import encode_jpeg_hier_pyramid
     from scribe_js_spark.textops.jpeg_lossless import encode_jpeg_lossless
 
-    def claim_65535(data, marker):
+    def claim(data, marker, side=65535):
         data = bytearray(data)
         at = data.index(marker)
-        data[at + 5:at + 9] = struct.pack(">HH", 65535, 65535)
+        data[at + 5:at + 9] = struct.pack(">HH", side, side)
         return bytes(data)
 
     z16 = np.zeros((16, 16), np.uint8)
-    lossless = claim_65535(encode_jpeg_lossless(z16), b"\xff\xc3")
+    lossless = claim(encode_jpeg_lossless(z16), b"\xff\xc3")
     hier = encode_jpeg_hier_pyramid(z16)
-    hier_bombs = [claim_65535(hier, m) for m in (b"\xff\xde", b"\xff\xc7")]
+    hier_bombs = [claim(hier, b"\xff\xde"), claim(hier, b"\xff\xc7"),
+                  claim(hier, b"\xff\xc7", 16384)]
     assert (len(lossless), len(hier)) == (131, 226)
     for bomb in (rle_bmp, gif, bytes(jpeg), lossless, *hier_bombs):
         with pytest.raises(ValueError, match="decode budget"):

@@ -79,6 +79,32 @@ def test_differential_dct_frame_corrections():
     assert np.array_equal(out, expected)
 
 
+def test_reference_planes_are_budgeted_in_bytes(monkeypatch):
+    """Each int64 reference plane counts 8 bytes a sample against the
+    decode budget before it is allocated. A 16x16 pyramid (8x8 base,
+    EXP, 16x16 SOF7) needs 2 KiB of planes: it decodes under a 2 KiB
+    budget. Under 1 KiB, with its DHP patched to claim 8x8, the 8x8
+    base (512 bytes) is admitted and the EXP that doubles it is
+    refused."""
+    import struct
+
+    from scribe_js_spark.textops import multimodal
+
+    px = _gradient(16, 16)
+    stream = encode_jpeg_hier_pyramid(px)
+    monkeypatch.setattr(multimodal, "DECODE_BUDGET", 16 * 16 * 8)
+    assert np.array_equal(decode_jpeg_hierarchical(stream), px)
+    monkeypatch.setattr(multimodal, "DECODE_BUDGET", 16 * 16 * 8 - 1)
+    with pytest.raises(ValueError, match="jpeg hierarchical: 16x16"):
+        decode_jpeg_hierarchical(stream)
+    small = bytearray(stream)
+    at = small.index(b"\xff\xde")
+    small[at + 5:at + 9] = struct.pack(">HH", 8, 8)
+    monkeypatch.setattr(multimodal, "DECODE_BUDGET", 1024)
+    with pytest.raises(ValueError, match="jpeg hierarchical EXP"):
+        decode_jpeg_hierarchical(bytes(small))
+
+
 def test_decode_jpeg_dispatches_dhp():
     px = _gradient(16, 16)
     stream = encode_jpeg_hier_pyramid(px)

@@ -1,11 +1,13 @@
 """Equivalence of the optimized formulations with the ones they
 replaced, kept here as references: the round-5 higher-order-function
 forms, and the round-6 SQL signatures (explode + hash-aggregate
-minima/popcounts, the hyperplane and norm folds) that the per-batch
-numpy kernels replaced. Each must be bit-identical, including the
-degenerate rows where the NULL, tokenisation and NaN semantics are
-subtle: NULL, empty and whitespace-only text, Java-only separators,
-off-length, NULL-element and NaN vectors."""
+minima/popcounts) that the per-batch numpy kernels replaced. The
+bucket/norm kernel of embedding_near_dups is held to the package's
+SQL folds (lsh_bucket, _norm_sql), which the ANN paths still use.
+Each must be bit-identical, including the degenerate rows where the
+NULL, tokenisation and NaN semantics are subtle: NULL, empty and
+whitespace-only text, Java-only separators, off-length, NULL-element
+and NaN vectors."""
 
 from __future__ import annotations
 
@@ -88,34 +90,6 @@ def _ref_simhash(df, text_col="text"):
         for bit in range(SIMHASH_BITS)]
     sig = F.expr("CAST(0 AS BIGINT) + " + " + ".join(parts))
     return exploded.groupBy("doc_id").agg(sig.alias("simhash"))
-
-
-def _double_sql(v):
-    """SQL text of a double literal: repr() round-trips doubles exactly."""
-    return f"CAST('{float(v)!r}' AS DOUBLE)"
-
-
-def _ref_lsh_bucket(vec_col, dim, n_planes=8):
-    """The SQL hyperplane bucket: per plane, the aggregate(zip_with)
-    projection fold and ``CASE WHEN fold >= 0``."""
-    from scribe_js_spark.textops.similarity import _plane_coeff
-
-    parts = []
-    for p in range(n_planes):
-        arr = "array(" + ",".join(
-            _double_sql(_plane_coeff(p, d)) for d in range(dim)) + ")"
-        proj = (f"aggregate(zip_with(`{vec_col}`, {arr}, "
-                "(x, w) -> cast(x as double) * w), "
-                "cast(0.0 as double), (acc, v) -> acc + v)")
-        parts.append(f"(CASE WHEN {proj} >= 0 THEN {1 << p} ELSE 0 END)")
-    return F.expr("CAST(0 AS BIGINT) + " + " + ".join(parts))
-
-
-def _ref_norm_sql(a):
-    """SQL text of the Euclidean norm (sqrt of the _dot_sql fold)."""
-    from scribe_js_spark.textops.similarity import _dot_sql
-
-    return f"sqrt({_dot_sql(a, a)})"
 
 
 def _simhash_hof(df, text_col="text"):
@@ -277,8 +251,9 @@ def _ref_near_dup_rows(df, threshold, dim, n_planes,
     """Round-5 embedding_near_dups: distinct-ful multiprobe candidates,
     then the Column-API cosine join. Under a cap only vectors whose own
     bucket holds at most ``max_bucket_size`` rows take part."""
-    b = df.withColumn("lsh_bucket",
-                      _ref_lsh_bucket("embedding", dim, n_planes))
+    from scribe_js_spark.textops.similarity import with_lsh_bucket
+
+    b = with_lsh_bucket(df, dim=dim, n_planes=n_planes)
     if max_bucket_size is not None:
         ok = (b.groupBy("lsh_bucket").count()
               .filter(F.col("count") <= max_bucket_size))
@@ -340,26 +315,30 @@ def test_bucket_norm_kernel_matches_sql_on_edge_vectors(spark):
     vector (norm 0.0 where the SQL fold is NULL)."""
     import random
 
-    from scribe_js_spark.textops.similarity import _with_bucket_norm
+    from scribe_js_spark.textops.similarity import (
+        _corpus, _norm_sql, lsh_bucket)
 
     rng = random.Random(3)
     rows = [(i, v) for i, v in enumerate(EDGE_VECS)]
     rows += [(100 + i, [rng.uniform(-1, 1) for _ in range(8)])
              for i in range(200)]
     df = _vecs(spark, rows)
+    norm = F.coalesce(F.expr(_norm_sql("embedding")), F.lit(0.0))
     for dim, n_planes in ((8, 4), (8, 12), (2, 3), (9, 1)):
-        got = _with_bucket_norm(df, "embedding", bucket="b", nrm="n",
-                                dim=dim, n_planes=n_planes)
-        want = df.select(
-            "vec_id", "embedding",
-            _ref_lsh_bucket("embedding", dim, n_planes).alias("b"),
-            F.coalesce(F.expr(_ref_norm_sql("embedding")),
-                       F.lit(0.0)).alias("n"))
+        got = _corpus(df, "vec_id", "embedding", dim, n_planes, None)
+        want = df.select("vec_id", "embedding",
+                         lsh_bucket("embedding", dim, n_planes), norm)
         assert repr(_rows(got)) == repr(_rows(want)), (dim, n_planes)
         assert [f.nullable for f in got.schema.fields[2:]] == [False, False]
-    buckets = {r["b"] for r in _with_bucket_norm(
-        df, "embedding", bucket="b", dim=8, n_planes=4).collect()}
+    buckets = {r["bucket"] for r in _corpus(
+        df, "vec_id", "embedding", 8, 4, None).collect()}
     assert len(buckets) == 16
+    # a stored bucket: the kernel appends the norm alone
+    stored = _corpus(df.withColumn("lsh_bucket", F.lit(7)), "vec_id",
+                     "embedding", 8, 4, None)
+    assert stored.columns == ["vid", "vec", "bucket", "nrm"]
+    assert repr(_rows(stored.select("vid", "nrm"))) \
+        == repr(_rows(df.select("vec_id", norm)))
 
 
 def test_bucket_norm_kernel_reads_sliced_batches():
@@ -369,14 +348,16 @@ def test_bucket_norm_kernel_reads_sliced_batches():
 
     from scribe_js_spark.textops.similarity import _bucket_norm_kernel
 
+    ids = pa.array(range(6), pa.int64())
     col = pa.array([[1.0, -2.0], None, [0.5, None], [3.0, 4.0], [-1.0, 0.0],
                     [2.0]], pa.list_(pa.float32()))
     whole = _bucket_norm_kernel(
-        0, 2, 6, True, True, pa.RecordBatch.from_arrays([col], ["v"]))
+        2, 6, True, pa.RecordBatch.from_arrays([ids, col], ["vid", "vec"]))
     part = _bucket_norm_kernel(
-        0, 2, 6, True, True, pa.RecordBatch.from_arrays([col[2:]], ["v"]))
+        2, 6, True,
+        pa.RecordBatch.from_arrays([ids[2:], col[2:]], ["vid", "vec"]))
     assert [a.to_pylist()[2:] for a in whole] == [a.to_pylist() for a in part]
-    assert part[2].to_pylist()[:2] == [0.0, 5.0]
+    assert part[3].to_pylist()[:2] == [0.0, 5.0]
 
 
 def test_embedding_near_dups_pairs_unique_without_distinct(spark):
@@ -385,7 +366,8 @@ def test_embedding_near_dups_pairs_unique_without_distinct(spark):
     exact-bucket collisions, Hamming-1 and Hamming-2 bucket pairs and
     near-identical vectors, and assert (a) no duplicate pairs in the
     output, (b) output identical to the round-5 distinct-ful shape."""
-    from scribe_js_spark.textops.similarity import embedding_near_dups
+    from scribe_js_spark.textops.similarity import (
+        embedding_near_dups, lsh_bucket)
 
     dim = 8
     base = [1.0, 0.5, -0.25, 2.0, 0.75, -1.0, 0.1, 0.3]
@@ -411,7 +393,7 @@ def test_embedding_near_dups_pairs_unique_without_distinct(spark):
     assert have == _ref_near_dup_rows(df, 0.5, dim, 4)
     # sanity: the fixture actually produced pairs and spread buckets
     assert len(pairs) >= 10
-    nb = df.select(_ref_lsh_bucket(
+    nb = df.select(lsh_bucket(
         "embedding", dim, 4).alias("b")).distinct().count()
     assert nb >= 2
 
@@ -514,11 +496,12 @@ def _ref_ann_topk_ivf(df, queries, k, dim, n_planes_coarse, nprobe):
     SQL text as a literal point."""
     from pyspark.sql import Window
 
-    from scribe_js_spark.textops.similarity import _dot_sql
+    from scribe_js_spark.textops.similarity import (
+        _double_sql, _dot_sql, _norm_sql, lsh_bucket)
 
     base = df.select(
         F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"),
-        _ref_lsh_bucket("embedding", dim, n_planes_coarse).alias("bucket"))
+        lsh_bucket("embedding", dim, n_planes_coarse).alias("bucket"))
     cent_rows = (
         base.select("bucket", F.posexplode(
             F.transform(F.col("vec"), lambda x: x.cast("double"))))
@@ -553,7 +536,7 @@ def _ref_ann_topk_ivf(df, queries, k, dim, n_planes_coarse, nprobe):
                       & (F.col("vid") != F.col("query_id")))
         .withColumn("sim", F.expr(
             f"{_dot_sql('q_vec', 'vec')} / "
-            f"({_ref_norm_sql('q_vec')} * {_ref_norm_sql('vec')})"))
+            f"({_norm_sql('q_vec')} * {_norm_sql('vec')})"))
         .select("query_id", F.col("vid").alias("neighbor_id"), "sim")
         .distinct())
     w = Window.partitionBy("query_id").orderBy(

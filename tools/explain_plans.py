@@ -151,10 +151,9 @@ def main():
         "corpus side shuffles only when the scale-adaptive "
         "spread_input fires on a small/unsplittable scan (one-row-"
         "group files deliver every row to one task); the remaining "
-        "Exchange is the per-query top-k window partition. Each "
-        "side's norm is computed once per vector below the join, by "
-        "the bucket/norm numpy kernel (MapInArrow); the pair dot "
-        "product stays a JVM fold.",
+        "Exchange is the per-query top-k window partition. Round 6: "
+        "each side's norm is computed once per vector below the join "
+        "(was: 3 fold evaluations per pair).",
         out)
     from scribe_js_spark.textops.quality import token_counts
     summarize(
