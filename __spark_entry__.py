@@ -76,8 +76,8 @@ def _q_extract_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scribe_js_spark.export.hocr import write_hocr
     from scribe_js_spark.export.html import write_html
     from scribe_js_spark.export.markdown import write_markdown
-    from scribe_js_spark.extract import extract_document
-    from scribe_js_spark.pipeline import extract_text, per_document
+    from scribe_js_spark.extract import extracted
+    from scribe_js_spark.pipeline import extract_text, per_extracted
 
     meta = extract_text(_corpus(spark, FIX_T2), salt=True).select(
         "url", "format",
@@ -96,21 +96,19 @@ def _q_extract_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     def h(s: str) -> str:
         return hashlib.md5(s.encode("utf-8")).hexdigest()
 
-    def rows(url, html):
-        res = extract_document(bytes(html))
-        if res.error is not None:
-            return
+    def text_of(blob: bytes) -> str:
+        with extracted(blob) as (rt,):
+            return rt.text
+
+    def rows(url, res):
         fam = url.split("/")[-2]
         if fam in ("docx", "text"):
             hocr_rt = alto_rt = None
         else:
-            hocr_rt = h(extract_document(
-                write_hocr(res.pages).encode()).text)
-            alto_rt = h(extract_document(
-                write_alto(res.pages).encode()).text)
-        docx_rt = h(extract_document(
-            write_docx(res.pages, reflow_text=True))
-            .text.replace("\n", " "))
+            hocr_rt = h(text_of(write_hocr(res.pages).encode()))
+            alto_rt = h(text_of(write_alto(res.pages).encode()))
+        docx_rt = h(text_of(write_docx(res.pages, reflow_text=True))
+                    .replace("\n", " "))
         folded = write_markdown(res.pages).replace(
             "\n\n---\n\n\n", "\n")
         md_fold = h(folded.replace("<sup>", "").replace("</sup>", ""))
@@ -119,7 +117,7 @@ def _q_extract_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         yield url, hocr_rt, alto_rt, docx_rt, md_fold, html_ws
 
     corpus = _corpus(spark, FIX_T2).select("url", "html")
-    return meta.join(per_document(corpus, rows, schema), "url")
+    return meta.join(per_extracted(corpus, rows, schema), "url")
 
 
 def _q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -672,14 +670,14 @@ def _q_combined_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.extract import extract_document
+    from scribe_js_spark.extract import extracted
     from scribe_js_spark.model import OcrPage
     from scribe_js_spark.operators.combine import (
         build_combined_pages, combine_ocr_page)
     from scribe_js_spark.operators.compare import ocr_adds_new_text
     from scribe_js_spark.operators.editing import (
         calc_conf, reorder_ocr_page)
-    from scribe_js_spark.pipeline import per_document
+    from scribe_js_spark.pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -693,44 +691,41 @@ def _q_combined_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("conf_high", LongType()),
     ])
 
-    def rows(url, h_truth, h_ocr):
-        truth = extract_document(bytes(h_truth))
-        ocr_a = extract_document(bytes(h_ocr))
-        if truth.error is not None or ocr_a.error is not None:
-            return
+    def rows(url, truth, ocr_a):
+        # the line edits and the reorder each work on a fresh parse
         decisions = build_combined_pages(truth.pages, ocr_a.pages)
-        donor = extract_document(bytes(h_truth))
-        mutate = extract_document(bytes(h_truth))
-        for page_n, (t_page, a_page) in enumerate(
-                zip(truth.pages, ocr_a.pages)):
-            idx = len(mutate.pages[page_n].lines) // 2
-            page_m = mutate.pages[page_n]
-            del page_m.lines[idx]
-            new_page = OcrPage(page_n, dict(page_m.dims))
-            new_page.lines = [donor.pages[page_n].lines[idx]]
-            combine_ocr_page(new_page, page_m)
-            combined_lines = "\n".join(
-                " ".join(w.text for w in ln.words)
-                for ln in page_m.lines)
+        with extracted(truth.data, truth.data) as (donor, mutate):
+            for page_n, (t_page, a_page) in enumerate(
+                    zip(truth.pages, ocr_a.pages)):
+                idx = len(mutate.pages[page_n].lines) // 2
+                page_m = mutate.pages[page_n]
+                del page_m.lines[idx]
+                new_page = OcrPage(page_n, dict(page_m.dims))
+                new_page.lines = [donor.pages[page_n].lines[idx]]
+                combine_ocr_page(new_page, page_m)
+                combined_lines = "\n".join(
+                    " ".join(w.text for w in ln.words)
+                    for ln in page_m.lines)
 
-            r_page = extract_document(bytes(h_truth)).pages[page_n]
-            m_r = min(4, len(r_page.lines))
-            boxes = {
-                i: {"coords": r_page.lines[i].bbox,
-                    "type": "order", "order": m_r - 1 - i}
-                for i in range(m_r)}
-            reorder_ocr_page(r_page, boxes)
-            reorder_key = "|".join(
-                ln.words[0].text for ln in r_page.lines if ln.words)
+                with extracted(truth.data) as (fresh,):
+                    r_page = fresh.pages[page_n]
+                    m_r = min(4, len(r_page.lines))
+                    boxes = {
+                        i: {"coords": r_page.lines[i].bbox,
+                            "type": "order", "order": m_r - 1 - i}
+                        for i in range(m_r)}
+                    reorder_ocr_page(r_page, boxes)
+                    reorder_key = "|".join(
+                        ln.words[0].text for ln in r_page.lines if ln.words)
 
-            conf = calc_conf([a_page])
-            yield (url, page_n, ocr_adds_new_text(t_page, a_page),
-                   decisions[page_n]["chosen"],
-                   decisions[page_n]["keep_ocr"], combined_lines,
-                   reorder_key, conf["total"], conf["highConf"])
+                conf = calc_conf([a_page])
+                yield (url, page_n, ocr_adds_new_text(t_page, a_page),
+                       decisions[page_n]["chosen"],
+                       decisions[page_n]["keep_ocr"], combined_lines,
+                       reorder_key, conf["total"], conf["highConf"])
 
     df = spark.read.parquet(os.path.join(FIX_T2, "layers.parquet"))
-    return per_document(
+    return per_extracted(
         df.select("url", "html_truth", "html_ocr_a"), rows, schema)
 
 
@@ -740,8 +735,7 @@ def _q_pdf_underline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.extract import extract_document
-    from scribe_js_spark.pipeline import per_document
+    from scribe_js_spark.pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -752,10 +746,7 @@ def _q_pdf_underline(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("underline", BooleanType()),
     ])
 
-    def rows(url, html):
-        res = extract_document(bytes(html))
-        if res.error is not None:
-            return
+    def rows(url, res):
         for page in res.pages:
             for line_n, line in enumerate(page.lines):
                 for word_n, w in enumerate(line.words):
@@ -763,7 +754,7 @@ def _q_pdf_underline(spark: SparkSession, sf_dir: str) -> DataFrame:
                            bool(w.style.underline))
 
     df = spark.read.parquet(os.path.join(FIX_T2, "underline_docs.parquet"))
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def _q_pdf_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -772,12 +763,11 @@ def _q_pdf_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.extract import extract_document
     from scribe_js_spark.operators.pdf.tables_pdf import (
         columns_from_separators,
     )
     from scribe_js_spark.operators.tables import extract_table_rows
-    from scribe_js_spark.pipeline import per_document
+    from scribe_js_spark.pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -787,9 +777,8 @@ def _q_pdf_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("cell", StringType()),
     ])
 
-    def rows(url, html):
-        res = extract_document(bytes(html))
-        if res.error is not None or not res.pages:
+    def rows(url, res):
+        if not res.pages:
             return
         page = res.pages[0]
         for t_n, t in enumerate(page.tables):
@@ -806,7 +795,7 @@ def _q_pdf_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
                     yield url, t_n, r, c, cell
 
     df = spark.read.parquet(os.path.join(FIX_T2, "pdf_table_docs.parquet"))
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def _q_pdf_table_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -815,8 +804,7 @@ def _q_pdf_table_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.extract import extract_document
-    from scribe_js_spark.pipeline import per_document
+    from scribe_js_spark.pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -827,9 +815,8 @@ def _q_pdf_table_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("title", StringType()),
     ])
 
-    def rows(url, html):
-        res = extract_document(bytes(html))
-        if res.error is not None or not res.pages:
+    def rows(url, res):
+        if not res.pages:
             return
         for t_n, t in enumerate(res.pages[0].tables):
             yield (url, t_n, t["method"],
@@ -838,7 +825,7 @@ def _q_pdf_table_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
                    t["title"]["text"] if t.get("title") else None)
 
     df = spark.read.parquet(os.path.join(FIX_T2, "pdf_table_docs.parquet"))
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def _q_web_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -875,8 +862,7 @@ def _q_pdf_inline_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.extract import extract_document
-    from scribe_js_spark.pipeline import per_document
+    from scribe_js_spark.pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -886,17 +872,14 @@ def _q_pdf_inline_math(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("sup", BooleanType()),
     ])
 
-    def rows(url, html):
-        res = extract_document(bytes(html))
-        if res.error is not None:
-            return
+    def rows(url, res):
         for page in res.pages:
             for line_n, line in enumerate(page.lines):
                 for word_n, w in enumerate(line.words):
                     yield (url, line_n, word_n, w.text, bool(w.style.sup))
 
     df = spark.read.parquet(os.path.join(FIX_T2, "math_docs.parquet"))
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def _q_pdf_group_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -905,8 +888,7 @@ def _q_pdf_group_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.extract import extract_document
-    from scribe_js_spark.pipeline import per_document
+    from scribe_js_spark.pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -920,10 +902,7 @@ def _q_pdf_group_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("n_style_runs", LongType()),
     ])
 
-    def rows(url, html):
-        res = extract_document(bytes(html))
-        if res.error is not None:
-            return
+    def rows(url, res):
         for page in res.pages:
             for line_n, line in enumerate(page.lines):
                 for word_n, w in enumerate(line.words):
@@ -933,7 +912,7 @@ def _q_pdf_group_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
                            len(w.styleRuns or []))
 
     df = spark.read.parquet(os.path.join(FIX_T2, "groupx_docs.parquet"))
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def _q_pdf_struct_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1027,7 +1006,7 @@ def _q_pdf_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.extract import extract_document
+    from scribe_js_spark.extract import extracted
     from scribe_js_spark.operators.pdf.metadata import (
         inspect_metadata, scrub_metadata)
     from scribe_js_spark.pipeline import per_document
@@ -1074,9 +1053,10 @@ def _q_pdf_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     def rows(url, html):
         data = bytes(html)
         rep = inspect_metadata(data)
-        before = extract_document(data)
         clean = scrub_metadata(data)
-        after = extract_document(clean)
+        with extracted(data, clean) as (before, after):
+            text_identical = (before.error is None and after.error is None
+                              and after.text == before.text)
         srep = inspect_metadata(clean)
         yield (
             url,
@@ -1101,8 +1081,7 @@ def _q_pdf_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             ",".join(sorted(rep["annotation_authors"])),
             len(rep["image_meta"]),
             rep["prior_revisions"],
-            before.error is None and after.error is None
-            and after.text == before.text,
+            text_identical,
             not srep["info"] and not srep["custom_info_keys"],
             srep["xmp_catalog_bytes"] == 0 and srep["xmp_objects"] == 0
             and srep["piece_info"] == 0,
@@ -1128,7 +1107,6 @@ def _q_outline_headings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.extract import extract_document
     from scribe_js_spark.operators.layout_doc import (
         analyze_layout_doc,
         collect_par_roles,
@@ -1136,7 +1114,7 @@ def _q_outline_headings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scribe_js_spark.operators.pdf.outline import (
         build_outline_heading_index,
     )
-    from scribe_js_spark.pipeline import per_document
+    from scribe_js_spark.pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1145,18 +1123,15 @@ def _q_outline_headings(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("par_type", StringType()),
     ])
 
-    def rows(url, html):
-        data = bytes(html)
-        res = extract_document(data)
-        if res.error is not None:
-            return
+    def rows(url, res):
         analyze_layout_doc(
-            res.pages, outline_headings=build_outline_heading_index(data))
+            res.pages,
+            outline_headings=build_outline_heading_index(res.data))
         for r in collect_par_roles(res.pages):
             yield url, r["page_n"], r["par_n"], r["par_type"]
 
     df = spark.read.parquet(os.path.join(FIX_T2, "heading_docs.parquet"))
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def _q_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1211,7 +1186,6 @@ def _q_struct_layout_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.extract import extract_document
     from scribe_js_spark.operators.layout_doc import (
         analyze_layout_doc,
         collect_par_roles,
@@ -1220,7 +1194,7 @@ def _q_struct_layout_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scribe_js_spark.operators.pdf.structtree import (
         build_struct_elem_map,
     )
-    from scribe_js_spark.pipeline import per_document
+    from scribe_js_spark.pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1229,13 +1203,9 @@ def _q_struct_layout_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("par_type", StringType()),
     ])
 
-    def rows(url, html):
-        data = bytes(html)
-        res = extract_document(data)
-        if res.error is not None:
-            return
+    def rows(url, res):
         try:
-            elem_map = build_struct_elem_map(PdfDocument(data))
+            elem_map = build_struct_elem_map(PdfDocument(res.data))
         except Exception:
             elem_map = None
         st = ({k: v["tag"] for k, v in elem_map.items()}
@@ -1245,7 +1215,7 @@ def _q_struct_layout_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield url, r["page_n"], r["par_n"], r["par_type"]
 
     df = spark.read.parquet(os.path.join(FIX_T2, "struct_docs.parquet"))
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def _q_pdf_text_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1256,8 +1226,7 @@ def _q_pdf_text_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         DoubleType, LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.extract import extract_document
-    from scribe_js_spark.pipeline import per_document
+    from scribe_js_spark.pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1270,10 +1239,7 @@ def _q_pdf_text_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("stroke_width", DoubleType()),
     ])
 
-    def rows(url, html):
-        res = extract_document(bytes(html))
-        if res.error is not None:
-            return
+    def rows(url, res):
         for page in res.pages:
             for line_n, line in enumerate(page.lines):
                 for word_n, w in enumerate(line.words):
@@ -1282,7 +1248,7 @@ def _q_pdf_text_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
                            float(w.strokeWidth))
 
     df = spark.read.parquet(os.path.join(FIX_T2, "color_docs.parquet"))
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def _q_abbyy_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1301,9 +1267,8 @@ def _q_abbyy_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from scribe_js_spark.export.xlsx import (
         matrices_digest, read_xlsx_cells, write_xlsx)
-    from scribe_js_spark.extract import extract_document
     from scribe_js_spark.operators.tables import extract_table_cells_fixed
-    from scribe_js_spark.pipeline import per_document
+    from scribe_js_spark.pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1314,10 +1279,7 @@ def _q_abbyy_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("xlsx_rt_md5", StringType()),
     ])
 
-    def rows(url, html):
-        res = extract_document(bytes(html))
-        if res.error is not None:
-            return
+    def rows(url, res):
         matrices, flat = [], []
         for page in res.pages:
             for table in page.tables:
@@ -1333,7 +1295,7 @@ def _q_abbyy_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     df = spark.read.parquet(
         os.path.join(FIX_T2, "abbyy_table_docs.parquet"))
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def _q_list_items(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1342,9 +1304,8 @@ def _q_list_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.extract import extract_document
     from scribe_js_spark.operators.layout_doc import analyze_layout_doc
-    from scribe_js_spark.pipeline import per_document
+    from scribe_js_spark.pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1354,10 +1315,7 @@ def _q_list_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("n_lines", LongType()),
     ])
 
-    def rows(url, html):
-        res = extract_document(bytes(html))
-        if res.error is not None:
-            return
+    def rows(url, res):
         analyze_layout_doc(res.pages)
         for page in res.pages:
             for pn, par in enumerate(page.pars):
@@ -1367,7 +1325,7 @@ def _q_list_items(spark: SparkSession, sf_dir: str) -> DataFrame:
                        len(par.lines))
 
     df = spark.read.parquet(os.path.join(FIX_T2, "list_docs.parquet"))
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def _q_docx_numbering(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1376,8 +1334,7 @@ def _q_docx_numbering(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.extract import extract_document
-    from scribe_js_spark.pipeline import per_document
+    from scribe_js_spark.pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1387,10 +1344,7 @@ def _q_docx_numbering(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("footnote_linked", BooleanType()),
     ])
 
-    def rows(url, html):
-        res = extract_document(bytes(html))
-        if res.error is not None:
-            return
+    def rows(url, res):
         pars = [par for page in res.pages for par in page.pars]
         for i, par in enumerate(pars):
             linked = par.footnoteRefId is not None or any(
@@ -1399,7 +1353,7 @@ def _q_docx_numbering(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield url, i, par.parNum, par.type, linked
 
     df = spark.read.parquet(os.path.join(FIX_T2, "docx_num_docs.parquet"))
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def _q_linenum_caseb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1409,9 +1363,8 @@ def _q_linenum_caseb(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.extract import extract_document
     from scribe_js_spark.operators.layout_doc import analyze_layout_doc
-    from scribe_js_spark.pipeline import per_document
+    from scribe_js_spark.pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1420,10 +1373,7 @@ def _q_linenum_caseb(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("first_word_linenum", BooleanType()),
     ])
 
-    def rows(url, html):
-        res = extract_document(bytes(html))
-        if res.error is not None:
-            return
+    def rows(url, res):
         analyze_layout_doc(res.pages)
         for page in res.pages:
             for ln, line in enumerate(page.lines):
@@ -1432,7 +1382,7 @@ def _q_linenum_caseb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     df = spark.read.parquet(
         os.path.join(FIX_T2, "linenum_b_docs.parquet"))
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def _q_toc_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1441,9 +1391,8 @@ def _q_toc_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.extract import extract_document
     from scribe_js_spark.operators.layout_doc import analyze_layout_doc
-    from scribe_js_spark.pipeline import per_document
+    from scribe_js_spark.pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1452,17 +1401,14 @@ def _q_toc_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("n_lines", LongType()),
     ])
 
-    def rows(url, html):
-        res = extract_document(bytes(html))
-        if res.error is not None:
-            return
+    def rows(url, res):
         analyze_layout_doc(res.pages)
         for page in res.pages:
             for pn, par in enumerate(page.pars):
                 yield url, page.n, pn, len(par.lines)
 
     df = spark.read.parquet(os.path.join(FIX_T2, "toc_docs.parquet"))
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def _q_layout_roles2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1561,7 +1507,7 @@ def _q_font_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Detect + extract a synthetic numeric table; cells must equal the
     analytic formula 100*(row+1)+col."""
-    from scribe_js_spark.extract import extract_document
+    from scribe_js_spark.extract import extracted
     from scribe_js_spark.fixtures import render_hocr
     from scribe_js_spark.operators.tables import (
         detect_tables_in_page,
@@ -1583,14 +1529,14 @@ def _q_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     pars.append({"lines": lines})
     model = {"doc_id": 0, "family": "base",
              "pages": [{"pars": pars, "width": 1224, "height": 1584}]}
-    page = extract_document(render_hocr(model).encode()).pages[0]
-    boxes = detect_tables_in_page(page)
     rows = []
-    for box in boxes:
-        matrix = extract_table_rows(page, box)
-        for r, row in enumerate(matrix):
-            for c, cell in enumerate(row):
-                rows.append((r, c, cell))
+    with extracted(render_hocr(model).encode()) as (res,):
+        page = res.pages[0]
+        for box in detect_tables_in_page(page):
+            matrix = extract_table_rows(page, box)
+            for r, row in enumerate(matrix):
+                for c, cell in enumerate(row):
+                    rows.append((r, c, cell))
     return spark.createDataFrame(rows, "row_n int, col_n int, cell string")
 
 
@@ -1600,9 +1546,8 @@ def _q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.extract import extract_document
     from scribe_js_spark.operators.search import get_doc_matches
-    from scribe_js_spark.pipeline import per_document
+    from scribe_js_spark.pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1610,9 +1555,8 @@ def _q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("n_matches", LongType()),
     ])
 
-    def rows(url, html):
-        res = extract_document(bytes(html))
-        if res.error is not None or not res.text:
+    def rows(url, res):
+        if not res.text:
             return
         toks = res.text.replace("\n", " ").split(" ")
         phrase = " ".join(toks[:2]).lower()
@@ -1622,7 +1566,7 @@ def _q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the oracle's text column spans page boundaries which word-window
     # search does not; single-page-safe families keep this exact.
     df = _corpus(spark, FIX_T2).filter(F.col("url").rlike("/(hocr|alto)/"))
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def _q_page_angle(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1633,8 +1577,7 @@ def _q_page_angle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
-    from scribe_js_spark.extract import extract_document
-    from scribe_js_spark.pipeline import per_document
+    from scribe_js_spark.pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1642,15 +1585,12 @@ def _q_page_angle(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("angle_e6", LongType()),
     ])
 
-    def rows(url, html):
-        res = extract_document(bytes(html))
-        if res.error is not None:
-            return
+    def rows(url, res):
         for page in res.pages:
             yield url, page.n, math.floor(page.angle * 1e6)
 
     df = _corpus(spark, FIX_T2).filter(F.col("url").rlike("/hocr_skew/"))
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def _q_column_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1659,9 +1599,8 @@ def _q_column_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     hanging first lines legitimately form a second weak peak)."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    from scribe_js_spark.extract import extract_document
     from scribe_js_spark.operators.layout_doc import detect_column_count
-    from scribe_js_spark.pipeline import per_document
+    from scribe_js_spark.pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -1669,17 +1608,14 @@ def _q_column_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("n_columns", LongType()),
     ])
 
-    def rows(url, html):
-        res = extract_document(bytes(html))
-        if res.error is not None:
-            return
+    def rows(url, res):
         for page in res.pages:
             yield url, page.n, detect_column_count(page)
 
     df = _corpus(spark, FIX_T2).filter(
         F.col("url").rlike("/(hocr|hocr_twocol)/")
         & (F.element_at(F.split("url", "/"), -1).cast("long") % 10 != 7))
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def _q_corrupt_errors(spark: SparkSession, sf_dir: str) -> DataFrame:

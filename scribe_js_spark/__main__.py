@@ -140,15 +140,14 @@ def cmd_tables(args) -> int:
 
     def rows(url, html):
         from .export.xlsx import write_xlsx
-        from .extract import extract_document
+        from .extract import extracted
         from .operators.pdf.tables_pdf import columns_from_separators
         from .operators.tables import (extract_table_rows,
                                        render_table_markdown)
 
         os.makedirs(args.output, exist_ok=True)
-        res = extract_document(bytes(html))
         matrices = []
-        if res.error is None:
+        with extracted(html) as (res,):
             for page in res.pages:
                 for t in getattr(page, "tables", []) or []:
                     cols = (columns_from_separators(

@@ -1,12 +1,14 @@
-"""Per-document extraction driver: raw bytes -> pages -> text + spans.
+"""Per-document extraction: stored bytes -> page model -> text + spans.
 
 Pure Python (no Spark imports) so every operator is unit-testable; the
-Spark wrapper lives in ``pipeline.py``. Mirrors the reference's
-document lifecycle (/root/reference/js/extractTextDir.js per-file worker:
-detect -> split pages -> convert -> paragraphs -> writeText), including
-the never-fatal per-document error contract
-(/root/reference/scribe.js:291-293): a malformed document yields an
-``error`` string, never an exception.
+Spark adapters live in ``pipeline.py``. The one road from a stored
+document to its page model, as in the reference's dispatcher convertOCR
+(js/recognizeConvert.js:428-457, 545-642) and per-file worker
+(js/extractTextDir.js): ``CONVERTERS`` is the whole format dispatch;
+``extract_document`` unwraps gzip, detects, converts and folds the
+text, and never raises (scribe.js:291-293: a malformed document yields
+an ``error`` string); ``extracted`` is the one place a document's gc
+scope is entered, and every Spark row function that extracts uses it.
 """
 
 from __future__ import annotations
@@ -19,117 +21,88 @@ from .export.text import write_text
 from .model import OcrPage
 from .operators.abbyy import convert_page_abbyy
 from .operators.alto import convert_page_alto
+from .operators.archive import gunzip
+from .operators.azure_docintel import convert_doc_azure_docintel
 from .operators.detect import detect_document_format, split_pages
+from .operators.docx import convert_doc_docx
+from .operators.epub import convert_doc_epub
+from .operators.google_docai import convert_doc_google_docai
+from .operators.google_vision import convert_doc_google_vision
 from .operators.hocr import convert_page_hocr
+from .operators.pdf import parse_pdf_document
 from .operators.plaintext import convert_doc_text
 from .operators.stext import convert_page_stext
+from .operators.textract import convert_doc_textract
+from .operators.webhtml import convert_doc_webhtml
 
-#: Page converters by format: the one dispatch for formats that split
-#: into per-page strings. Custom-recognition-model analog of the
-#: reference's pluggable ``convertPage`` registry
-#: (recognizeConvert.js:786-817).
-PAGE_CONVERTERS = {
-    "hocr": convert_page_hocr,
-    "abbyy": convert_page_abbyy,
-    "alto": convert_page_alto,
-    "stext": convert_page_stext,
+
+def _decoded(convert):
+    """A converter of the whole document string, over the bytes."""
+    return lambda data: convert(data.decode("utf-8", errors="replace"))
+
+
+def _paged(fmt: str, convert):
+    """A page converter ``convert(page_str, n) -> (OcrPage, langs)``,
+    over the pages ``split_pages`` cuts from the document string."""
+
+    def pages(data: bytes):
+        s = data.decode("utf-8", errors="replace")
+        return [convert(page, i)[0]
+                for i, page in enumerate(split_pages(s, fmt))]
+
+    return pages
+
+
+#: ``bytes -> list[OcrPage]`` converter of every format
+#: ``detect_document_format`` returns.
+CONVERTERS = {
+    "pdf": parse_pdf_document,
+    "docx": convert_doc_docx,
+    "epub": convert_doc_epub,
+    "hocr": _paged("hocr", convert_page_hocr),
+    "abbyy": _paged("abbyy", convert_page_abbyy),
+    "alto": _paged("alto", convert_page_alto),
+    "stext": _paged("stext", convert_page_stext),
+    "google_vision": _decoded(convert_doc_google_vision),
+    "textract": _decoded(convert_doc_textract),
+    "google_doc_ai": _decoded(convert_doc_google_docai),
+    "azure_doc_intel": _decoded(convert_doc_azure_docintel),
+    "webhtml": _decoded(convert_doc_webhtml),
+    "text": _decoded(convert_doc_text),
 }
 
 
-def register_converter(fmt: str, fn) -> None:
-    """Register ``fn(page_str, n) -> (OcrPage, lang_set)`` for ``fmt``.
-    A built-in format name (hocr, abbyy, alto, stext) replaces the
-    built-in converter."""
-    PAGE_CONVERTERS[fmt] = fn
-
-
-def _convert_pages(s: str, fmt: str) -> list[OcrPage]:
-    if fmt == "text":
-        return convert_doc_text(s)
-    if fmt == "webhtml":
-        from .operators.webhtml import convert_doc_webhtml
-        return convert_doc_webhtml(s)
-    if fmt == "textract":
-        from .operators.textract import convert_doc_textract
-        return convert_doc_textract(s)
-    if fmt == "google_doc_ai":
-        from .operators.google_docai import convert_doc_google_docai
-        return convert_doc_google_docai(s)
-    if fmt == "azure_doc_intel":
-        from .operators.azure_docintel import convert_doc_azure_docintel
-        return convert_doc_azure_docintel(s)
-    if fmt == "google_vision":
-        import json as _json
-
-        from .operators.google_vision import convert_page_google_vision
-
-        # Multi-page Vision output: one response per page, sorted by
-        # context.pageNumber (importOCR.js:126-133).
-        if '"responses"' in s[:500]:
-            responses = sorted(
-                _json.loads(s)["responses"],
-                key=lambda r: (r.get("context") or {}).get("pageNumber", 0))
-            pages = []
-            for i, resp in enumerate(responses):
-                page, _ = convert_page_google_vision(_json.dumps(resp), i)
-                pages.append(page)
-            return pages
-        page, _ = convert_page_google_vision(s, 0)
-        return [page]
-    convert = PAGE_CONVERTERS.get(fmt)
-    if convert is None:
-        raise ValueError(f"unsupported format: {fmt}")
-    return [convert(page_str, i)[0]
-            for i, page_str in enumerate(split_pages(s, fmt))]
-
-
 class DocResult:
-    __slots__ = ("pages", "text", "fmt", "error")
+    """One document's extraction; ``data`` is the stored bytes, for
+    consumers that also parse them (a PDF's outline, say)."""
 
-    def __init__(self, pages, text, fmt, error):
+    __slots__ = ("pages", "text", "fmt", "error", "data")
+
+    def __init__(self, pages, text, fmt, error, data):
         self.pages = pages
         self.text = text
         self.fmt = fmt
         self.error = error
+        self.data = data
 
 
 def extract_document(data: bytes) -> DocResult:
     """bytes -> extracted reflowed text + page model; never raises."""
     try:
-        if data[:2] == b"\x1f\x8b":
-            # gzip-wrapped document (crawl archives commonly store the
-            # fetched body compressed); transparently unwrap, then
-            # detect the inner format as usual
-            import gzip as _gzip
-
-            try:
-                data = _gzip.decompress(data)
-            except Exception:
-                return DocResult([], None, None,
-                                 "parse_failure: bad gzip wrapper")
-        fmt = detect_document_format(data)
+        # crawl archives commonly store the fetched body gzipped
+        body = gunzip(data) if data[:2] == b"\x1f\x8b" else data
+        fmt = detect_document_format(body)
         if fmt is None:
-            return DocResult([], None, None, "unsupported_format")
-        if fmt == "pdf":
-            from .operators.pdf import parse_pdf_document
-            pages = parse_pdf_document(data)
-        elif fmt == "docx":
-            from .operators.docx import convert_doc_docx
-            pages = convert_doc_docx(data)
-        elif fmt == "epub":
-            from .operators.epub import convert_doc_epub
-            pages = convert_doc_epub(data)
-        else:
-            s = data.decode("utf-8", errors="replace")
-            pages = _convert_pages(s, fmt)
+            return DocResult([], None, None, "unsupported_format", data)
+        pages = CONVERTERS[fmt](body)
         # Paragraphs: formats that ship paragraph structure (abbyy, alto,
         # text) keep it; others are assigned by the reflow heuristics —
         # exactly writeText's lazy assignParagraphs (writeText.js:48).
         text = write_text(pages, reflow_text=True)
-        return DocResult(pages, text, fmt, None)
+        return DocResult(pages, text, fmt, None, data)
     except Exception:
-        tb = traceback.format_exc(limit=3)
-        return DocResult([], None, None, f"parse_failure: {tb.splitlines()[-1][:200]}")
+        tb = traceback.format_exc(limit=3).splitlines()[-1][:200]
+        return DocResult([], None, None, f"parse_failure: {tb}", data)
 
 
 def collect_spans(pages: list[OcrPage]) -> list[dict]:
@@ -167,6 +140,11 @@ def collect_spans(pages: list[OcrPage]) -> list[dict]:
     return rows
 
 
+#: Open ``document_gc_scope``s: a nested one (a consumer re-extracting
+#: what it wrote) leaves the collection to the outermost.
+_open_scopes = 0
+
+
 @contextmanager
 def document_gc_scope():
     """Cyclic-collector policy for one document's extraction.
@@ -179,34 +157,48 @@ def document_gc_scope():
     young-generation pass walks what the document allocated, which
     frees its model once the caller no longer holds it, and
     ``gc.isenabled()`` is restored. Thresholds are left as they are."""
+    global _open_scopes
     enabled = gc.isenabled()
     gc.disable()
+    _open_scopes += 1
     try:
         yield
     finally:
-        gc.collect(0)
+        _open_scopes -= 1
+        if not _open_scopes:
+            gc.collect(0)
         if enabled:
             gc.enable()
 
 
-def extract_with_spans(data: bytes, with_spans: bool = True) -> dict:
-    """Full extraction record for one document (pipeline row shape).
-    The page model is built and dropped inside ``document_gc_scope``."""
+@contextmanager
+def extracted(*blobs):
+    """Yield the ``DocResult`` of each blob, in order, inside
+    ``document_gc_scope``: the extractions, and whatever the caller
+    builds from their page models, are cyclic garbage of this one
+    document, and the scope's exit frees them. On exit each result lets
+    go of its page model (``pages`` becomes empty), so a caller must be
+    done with the pages, and materialise what it derives from them,
+    before the block ends."""
     with document_gc_scope():
-        return _extraction_record(data, with_spans)
+        results = [extract_document(bytes(b)) for b in blobs]
+        try:
+            yield results
+        finally:
+            for res in results:
+                res.pages = []
 
 
-def _extraction_record(data: bytes, with_spans: bool) -> dict:
-    res = extract_document(data)
-    spans = (collect_spans(res.pages)
-             if (with_spans and res.error is None) else [])
-    n_words = sum(
-        len(line.words) for page in res.pages for line in page.lines)
-    return {
-        "text": res.text,
-        "format": res.fmt,
-        "error": res.error,
-        "page_count": len(res.pages),
-        "word_count": n_words if res.error is None else 0,
-        "spans": spans,
-    }
+def extract_with_spans(data: bytes, with_spans: bool = True) -> dict:
+    """Full extraction record for one document (pipeline row shape)."""
+    with extracted(data) as (res,):
+        ok = res.error is None
+        return {
+            "text": res.text,
+            "format": res.fmt,
+            "error": res.error,
+            "page_count": len(res.pages),
+            "word_count": sum(len(line.words) for page in res.pages
+                              for line in page.lines) if ok else 0,
+            "spans": collect_spans(res.pages) if with_spans and ok else [],
+        }

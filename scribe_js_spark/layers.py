@@ -1,7 +1,8 @@
 """Spark wrappers for multi-layer comparison / consensus.
 
 The grouping key is the document (all pages of both layers live in one
-row), so the comparison is a zero-shuffle ``per_document`` map — the
+row), so the comparison is a zero-shuffle ``per_extracted`` map, in
+which a document with a layer that fails to extract yields no rows — the
 distributed analog of compareOCR's per-page worker jobs
 (/root/reference/js/recognizeConvert.js:221-276) with doc-level metric
 reduction (calcEvalStatsDoc, :139-160).
@@ -18,7 +19,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .pipeline import per_document
+from .pipeline import per_extracted
 
 EVAL_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -50,15 +51,6 @@ COMB_SCHEMA = StructType([
 ])
 
 
-def _pages_of(data: bytes):
-    from .extract import extract_document
-
-    res = extract_document(bytes(data))
-    if res.error is not None:
-        raise ValueError(res.error)
-    return res.pages
-
-
 def compare_layers(df: DataFrame, cand_col: str = "html_ocr_a",
                    truth_col: str = "html_truth") -> DataFrame:
     """Per-url eval metrics of a candidate layer vs a ground-truth
@@ -69,8 +61,7 @@ def compare_layers(df: DataFrame, cand_col: str = "html_ocr_a",
     def rows(url, cand, truth):
         from .operators.compare import compare_ocr_page
 
-        pages_a = _pages_of(cand)
-        pages_b = _pages_of(truth)
+        pages_a, pages_b = cand.pages, truth.pages
         totals = dict.fromkeys(keys, 0)
         for i in range(max(len(pages_a), len(pages_b))):
             pa = pages_a[i] if i < len(pages_a) else None
@@ -85,7 +76,7 @@ def compare_layers(df: DataFrame, cand_col: str = "html_ocr_a",
                 totals[k] += m[k]
         return [(url, *totals.values())]
 
-    return per_document(
+    return per_extracted(
         df.select("url", cand_col, truth_col), rows, EVAL_SCHEMA)
 
 
@@ -96,16 +87,15 @@ def consensus_vote(df: DataFrame, base_col: str = "html_ocr_a",
     def rows(url, base, *comps):
         from .operators.compare import build_consensus_page
 
-        base_pages = _pages_of(base)
-        comp_layers = [_pages_of(c) for c in comps]
-        for i, base_page in enumerate(base_pages):
+        comp_layers = [c.pages for c in comps]
+        for i, base_page in enumerate(base.pages):
             res = build_consensus_page(base_page, [
                 (layer[i] if i < len(layer) else None)
                 for layer in comp_layers])
             for d in res["decisions"]:
                 yield url, d["word_id"], d["text"], d["conf"]
 
-    return per_document(
+    return per_extracted(
         df.select("url", base_col, *comp_cols), rows, CONSENSUS_SCHEMA)
 
 
@@ -115,7 +105,7 @@ def merge_comb_layers(df: DataFrame, col_a: str = "html_legacy",
                       image_col: str = "page_image") -> DataFrame:
     """Comb-mode merge of two engine layers per document: page-pairwise
     comb_merge_page (compareOCRModule.js comb branch), emitting the
-    merged word stream. Zero-shuffle ``per_document`` map keyed by
+    merged word stream. Zero-shuffle ``per_extracted`` map keyed by
     document.
 
     When the input carries ``image_col`` (PNG bytes of the binarized
@@ -124,11 +114,10 @@ def merge_comb_layers(df: DataFrame, col_a: str = "html_legacy",
     reference's visual comparison path."""
     has_image = image_col in df.columns
 
-    def rows(url, html_a, html_b, raw=None):
+    def rows(url, doc_a, doc_b, raw=None):
         from .operators.comb import comb_merge_page
 
-        pages_a = _pages_of(html_a)
-        pages_b = _pages_of(html_b)
+        pages_a, pages_b = doc_a.pages, doc_b.pages
         image = None
         if raw is not None and len(raw) > 0:
             from .textops.multimodal import decode_png
@@ -148,4 +137,5 @@ def merge_comb_layers(df: DataFrame, col_a: str = "html_legacy",
                            int(w.bbox.left), int(w.bbox.right))
 
     cols = ["url", col_a, col_b] + ([image_col] if has_image else [])
-    return per_document(df.select(*cols), rows, COMB_SCHEMA)
+    return per_extracted(df.select(*cols), rows, COMB_SCHEMA,
+                         raw=int(has_image))

@@ -16,12 +16,14 @@ departures for a distributed engine:
 
 Those backrefs (``word.line`` <-> ``line.words``, ``line.par`` <->
 ``par.lines``, ``line.page`` <-> ``page.lines``) make a document's model
-cyclic, so reference counting never frees it. In the extraction job it
-is released at the end of each document: ``extract.extract_with_spans``
-builds and drops the model inside ``extract.document_gc_scope``, whose
-exit runs one young-generation collection over what the document
-allocated. A model returned to other callers (``extract_document``)
-lives until the cyclic collector finds it.
+cyclic, so reference counting never frees it. In every Spark row
+function it is released at the end of each document: the row function
+extracts through ``extract.extracted`` (directly or through
+``pipeline.per_extracted``), which builds the model, and runs the
+consumer, inside ``extract.document_gc_scope``; the scope's exit runs
+one young-generation collection over what the document allocated. A
+model returned by ``extract_document`` outside that scope lives until
+the cyclic collector finds it.
 """
 
 from __future__ import annotations

@@ -24,6 +24,7 @@ import zipfile
 
 from ..functions.textnorm import unescape_xml
 from ..model import OcrPage
+from .archive import read_member
 from .plaintext import convert_doc_text
 
 _PAR_RE = re.compile(r"<w:p[ >](.*?)</w:p>", re.S)
@@ -174,7 +175,7 @@ def parse_docx_paragraphs(data: bytes) -> list[str]:
     """DOCX bytes -> ordered paragraph texts."""
     with zipfile.ZipFile(io.BytesIO(data)) as zf:
         try:
-            doc_xml = zf.read("word/document.xml").decode("utf-8")
+            doc_xml = read_member(zf, "word/document.xml").decode("utf-8")
         except KeyError:
             raise ValueError("No word/document.xml found in docx file")
     paragraphs = []
@@ -230,17 +231,19 @@ def parse_docx_paragraphs_numbered(data: bytes):
     first-reference order with parNum = str(index)
     (convertDocDocx.js:495-595)."""
     with zipfile.ZipFile(io.BytesIO(data)) as zf:
-        doc_xml = zf.read("word/document.xml").decode("utf-8")
+        doc_xml = read_member(zf, "word/document.xml").decode("utf-8")
         try:
-            numbering_xml = zf.read("word/numbering.xml").decode("utf-8")
+            numbering_xml = read_member(
+                zf, "word/numbering.xml").decode("utf-8")
         except KeyError:
             numbering_xml = ""
         try:
-            styles_xml = zf.read("word/styles.xml").decode("utf-8")
+            styles_xml = read_member(zf, "word/styles.xml").decode("utf-8")
         except KeyError:
             styles_xml = ""
         try:
-            footnotes_xml = zf.read("word/footnotes.xml").decode("utf-8")
+            footnotes_xml = read_member(
+                zf, "word/footnotes.xml").decode("utf-8")
         except KeyError:
             footnotes_xml = ""
     numbering = parse_numbering(numbering_xml) if numbering_xml else None

@@ -18,6 +18,8 @@ import posixpath
 import re
 import zipfile
 
+from .archive import read_member
+
 _FULLPATH_RE = re.compile(r'full-path="([^"]+)"')
 _ITEM_RE = re.compile(r"<item\b[^>]*>", re.I)
 _ITEMREF_RE = re.compile(r'<itemref\b[^>]*idref="([^"]+)"', re.I)
@@ -34,7 +36,7 @@ def convert_doc_epub(data: bytes, page_dims: dict | None = None) -> list:
     names = set(zf.namelist())
     if "META-INF/container.xml" not in names:
         raise ValueError("epub: missing META-INF/container.xml")
-    container = zf.read("META-INF/container.xml").decode(
+    container = read_member(zf, "META-INF/container.xml").decode(
         "utf-8", "replace")
     m = _FULLPATH_RE.search(container)
     if not m:
@@ -42,7 +44,7 @@ def convert_doc_epub(data: bytes, page_dims: dict | None = None) -> list:
     opf_path = m.group(1)
     if opf_path not in names:
         raise ValueError(f"epub: missing package file {opf_path}")
-    opf = zf.read(opf_path).decode("utf-8", "replace")
+    opf = read_member(zf, opf_path).decode("utf-8", "replace")
 
     items: dict[str, str] = {}
     for tag in _ITEM_RE.findall(opf):
@@ -60,7 +62,7 @@ def convert_doc_epub(data: bytes, page_dims: dict | None = None) -> list:
         path = posixpath.normpath(posixpath.join(base, href))
         if path not in names:
             continue
-        xhtml = zf.read(path).decode("utf-8", "replace")
+        xhtml = read_member(zf, path).decode("utf-8", "replace")
         paras = extract_main_content(xhtml)
         for page in convert_doc_text("\n\n".join(paras),
                                      page_dims=page_dims):

@@ -181,7 +181,7 @@ def font_observations_df(df, spark=None):
     from pyspark.sql.types import (
         DoubleType, StringType, StructField, StructType)
 
-    from ..pipeline import per_document
+    from ..pipeline import per_extracted
 
     schema = StructType([
         StructField("url", StringType()),
@@ -193,16 +193,11 @@ def font_observations_df(df, spark=None):
     ])
     keys = schema.names[1:]
 
-    def rows(url, html):
-        from ..extract import extract_document
-
-        res = extract_document(bytes(html))
-        if res.error is not None:
-            return []
+    def rows(url, res):
         return [(url, *(r[k] for k in keys))
                 for r in char_observations(res.pages)]
 
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def font_metrics_df(df):

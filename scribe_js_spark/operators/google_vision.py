@@ -110,3 +110,16 @@ def convert_page_google_vision(ocr_str: str, n: int,
     page_obj.angle = 0.0
     lang_set = pass3(page_obj)
     return page_obj, lang_set
+
+
+def convert_doc_google_vision(ocr_str: str) -> list[OcrPage]:
+    """A Vision document: one response, or a ``responses`` list with one
+    response per page, sorted by context.pageNumber
+    (importOCR.js:126-133)."""
+    if '"responses"' not in ocr_str[:500]:
+        return [convert_page_google_vision(ocr_str, 0)[0]]
+    responses = sorted(
+        json.loads(ocr_str)["responses"],
+        key=lambda r: (r.get("context") or {}).get("pageNumber", 0))
+    return [convert_page_google_vision(json.dumps(r), i)[0]
+            for i, r in enumerate(responses)]

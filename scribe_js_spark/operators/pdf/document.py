@@ -13,6 +13,7 @@ from __future__ import annotations
 import re
 import zlib
 
+from ..archive import STREAM_DECODE_BUDGET
 from .lexer import Lexer, Name, Ref, StreamObj
 
 _STARTXREF_RE = re.compile(rb"startxref\s+(\d+)", re.S)
@@ -21,15 +22,6 @@ _OBJ_SCAN_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
 
 class PdfError(ValueError):
     pass
-
-
-#: Most bytes one stream may decode to through FlateDecode or
-#: LZWDecode. Both filters can expand their input about a thousandfold,
-#: so a few MB of hostile stream could otherwise claim gigabytes; a
-#: stream past the budget raises PdfError instead. It sits above the
-#: largest legitimate stream expected (a 600 dpi CMYK letter-size page
-#: image is about 135 MB).
-STREAM_DECODE_BUDGET = 256 * 1024 * 1024
 
 
 def _over_budget(fname: str) -> PdfError:

@@ -7,8 +7,8 @@ table. Covers the layouts crawls actually ship:
 - WARC/1.0 and /1.1 records: header block (terminated by a blank
   line), ``Content-Length``-framed body, two-CRLF record separator;
 - record-wise gzip members concatenated into a ``.warc.gz`` (each
-  record its own member — the Common-Crawl layout; Python's gzip
-  module walks concatenated members natively) as well as plain
+  record its own member — the Common-Crawl layout; ``archive.gunzip``
+  walks the members, up to its decode budget) as well as plain
   ``.warc`` bytes;
 - ``response`` records: the body is an HTTP/1.x message — the status
   line and headers are stripped to yield the payload; chunked
@@ -22,9 +22,10 @@ explodes into `(url, warc_ts, html)` rows via one Arrow-batched UDF.
 
 from __future__ import annotations
 
-import gzip
 import re
 from typing import Iterator
+
+from .archive import gunzip
 
 _WARC_MAGIC_RE = re.compile(rb"^WARC/\d+\.\d+\r?\n")
 
@@ -51,7 +52,7 @@ def warc_records(data: bytes) -> Iterator[tuple[str, str, bytes]]:
     """Yield (target_uri, warc_date, http_payload) for every response
     record. Raises ValueError on a malformed container."""
     if data[:2] == b"\x1f\x8b":
-        data = gzip.decompress(data)  # walks concatenated members
+        data = gunzip(data)  # walks concatenated members
     pos = 0
     n = len(data)
     saw_record = False

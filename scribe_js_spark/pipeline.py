@@ -11,6 +11,9 @@ per-document extraction, per-file errors never abort the batch):
                                                         # hot path
       -> (url, text, format, page_count, word_count, error[, spans])
 
+Python runs through ``per_document`` (rows), ``per_extracted`` (its form
+for consumers of the page model) and ``per_batch`` (columnar kernels).
+
 Design notes for 100 TB scale:
 - One row = one document end-to-end: the parse, paragraph assignment and
   text fold all happen inside a single Arrow-batched UDF, so the only
@@ -170,6 +173,29 @@ def per_batch(df: DataFrame, kernel, schema: StructType) -> DataFrame:
     return df.mapInArrow(fn, schema)
 
 
+def per_extracted(df: DataFrame, rows_fn, schema: StructType,
+                  raw: int = 0) -> DataFrame:
+    """``per_document`` for every consumer of the page model. The first
+    column of ``df`` is the key; the others hold stored documents,
+    except the last ``raw`` columns, which pass through as they are (a
+    page image, say). A row's documents are extracted inside one
+    ``extract.extracted`` scope, and a row with a failed document yields
+    nothing. Otherwise ``rows_fn(key, *results, *raw_values)`` runs on
+    the ``DocResult``s and its rows are materialised before the scope
+    closes; ``DocResult.data`` holds the stored bytes."""
+
+    def rows(key, *cols):
+        from .extract import extracted
+
+        n_docs = len(cols) - raw
+        with extracted(*cols[:n_docs]) as results:
+            if any(res.error is not None for res in results):
+                return []
+            return list(rows_fn(key, *results, *cols[n_docs:]))
+
+    return per_document(df, rows, schema)
+
+
 def _extract_rows(with_spans: bool):
     """``per_document`` row function of the extraction hot path."""
     schema = EXTRACT_SPANS_SCHEMA if with_spans else EXTRACT_SCHEMA
@@ -178,7 +204,7 @@ def _extract_rows(with_spans: bool):
     def rows(url, html):
         from .extract import extract_with_spans
 
-        rec = extract_with_spans(bytes(html), with_spans=with_spans)
+        rec = extract_with_spans(html, with_spans=with_spans)
         return [(url, *(rec[k] for k in keys))]
 
     return rows
@@ -261,18 +287,14 @@ def extract_par_roles(df: DataFrame) -> DataFrame:
         StructField("par_type", StringType()),
     ])
 
-    def rows(url, html):
-        from .extract import extract_document
+    def rows(url, res):
         from .operators.layout_doc import analyze_layout_doc, collect_par_roles
 
-        res = extract_document(bytes(html))
-        if res.error is not None:
-            return []
         analyze_layout_doc(res.pages)
         return [(url, r["page_n"], r["par_n"], r["par_type"])
                 for r in collect_par_roles(res.pages)]
 
-    return per_document(df.select("url", "html"), rows, schema)
+    return per_extracted(df.select("url", "html"), rows, schema)
 
 
 def _metric_aggs() -> list:
@@ -441,20 +463,18 @@ def write_searchable_pdfs(df: DataFrame, text_mode: str = "invis",
 
     def rows(url, html):
         from .export.pdf import write_text_pdf
-        from .extract import extract_document
+        from .extract import extracted
 
         blob = None
-        err = None
-        try:
-            res = extract_document(bytes(html))
-            if res.error is not None:
-                err = res.error
-            else:
-                blob = write_text_pdf(
-                    res.pages, text_mode=text_mode,
-                    on_unencodable=on_unencodable)
-        except Exception as e:  # noqa: BLE001 — never-fatal
-            err = f"write_failure: {e}"
+        with extracted(html) as (res,):
+            err = res.error
+            if err is None:
+                try:
+                    blob = write_text_pdf(
+                        res.pages, text_mode=text_mode,
+                        on_unencodable=on_unencodable)
+                except Exception as e:  # noqa: BLE001 — never-fatal
+                    err = f"write_failure: {e}"
         return [(url, blob, err)]
 
     return per_document(df.select("url", "html"), rows, schema)
@@ -473,19 +493,19 @@ def register_sql_functions(spark: SparkSession) -> None:
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    def _text(html):
-        from .extract import extract_document
+    def _extracted(field):
+        def column(html):
+            from .extract import extracted
 
-        def one(b):
-            r = extract_document(bytes(b))
-            return r.text if r.error is None else None
+            def one(b):
+                with extracted(b) as (res,):
+                    return getattr(res, field)
 
-        return html.map(one)
+            return html.map(one)
 
-    def _error(html):
-        from .extract import extract_document
+        return column
 
-        return html.map(lambda b: extract_document(bytes(b)).error)
+    _text, _error = _extracted("text"), _extracted("error")
 
     def _format(html):
         from .operators.detect import detect_document_format

@@ -6,8 +6,10 @@ Every sweep runs in a forked child whose address space is capped
 (``_capped``), so an allocation bomb fails that one test with a
 MemoryError instead of exhausting the machine and killing the run."""
 
+import gzip
 import os
 import resource
+import struct
 import traceback
 import zlib
 
@@ -15,6 +17,7 @@ import numpy as np
 import pytest
 
 from scribe_js_spark.extract import extract_document, extract_with_spans
+from scribe_js_spark.operators.archive import STREAM_DECODE_BUDGET
 
 try:
     from hypothesis import given, settings
@@ -86,11 +89,12 @@ def _capped(sweep):
     return test
 
 
-def _deflate_bomb(inflated: int) -> bytes:
-    """A zlib stream that inflates to ``inflated`` zero bytes from about
-    a thousandth of that."""
+def _deflate_bomb(inflated: int, wbits: int = zlib.MAX_WBITS) -> bytes:
+    """A zlib stream (a gzip member with ``wbits=31``, cut off before
+    its trailer) that inflates to ``inflated`` zero bytes from about a
+    thousandth of that."""
     chunk = bytes(1 << 20)
-    z = zlib.compressobj(9)
+    z = zlib.compressobj(9, zlib.DEFLATED, wbits)
     head = z.compress(chunk) + z.flush(zlib.Z_FULL_FLUSH)
     # a full flush resets the compressor, so each further chunk
     # compresses to the same bytes
@@ -165,6 +169,46 @@ def test_extract_never_raises_on_mutations():
     assert "decode budget" in (res.error or ""), res.error
     rec = extract_with_spans(bomb, with_spans=False)
     assert rec["error"] == res.error
+
+
+def _claims_past_budget(zip_bytes: bytes) -> bytes:
+    """The zip with every central-directory entry's uncompressed size set
+    one past the decode budget; the members' data is left as it is."""
+    b = bytearray(zip_bytes)
+    i = b.find(b"PK\x01\x02")
+    while i >= 0:
+        struct.pack_into("<I", b, i + 24, STREAM_DECODE_BUDGET + 1)
+        i = b.find(b"PK\x01\x02", i + 46)
+    return bytes(b)
+
+
+@_capped
+def test_whole_input_bombs_stop_at_the_budget():
+    """A gzip-wrapped document, a .warc.gz archive and a zip container
+    member are decompressed up to the decode budget and no further: a
+    bomb inflating past the sweep's whole memory headroom, or a member
+    that declares more, is refused before it is inflated in full."""
+    from scribe_js_spark.fixtures import build_doc_model, build_epub_models
+    from scribe_js_spark.operators.warc import warc_records
+    from scribe_js_spark.render_docx import render_docx
+
+    bomb = _deflate_bomb(SWEEP_AS_HEADROOM + (1 << 30), wbits=31)
+    res = extract_document(bomb)
+    assert res.error.startswith("parse_failure"), res.error
+    assert "decode budget" in res.error, res.error
+    assert extract_with_spans(bomb, with_spans=False)["error"] == res.error
+
+    # a .warc.gz holds one member per record: a good one, then the bomb
+    record = (b"WARC/1.0\r\nWARC-Type: warcinfo\r\n"
+              b"Content-Length: 2\r\n\r\nok\r\n\r\n")
+    with pytest.raises(ValueError, match="decode budget"):
+        list(warc_records(gzip.compress(record) + bomb))
+
+    for container in (render_docx(build_doc_model(3, n_pages=1)),
+                      build_epub_models(1)["epub"]):
+        assert extract_document(container).error is None
+        res = extract_document(_claims_past_budget(container))
+        assert "decode budget" in (res.error or ""), res.error
 
 
 if HAVE_HYP:

@@ -294,8 +294,8 @@ def test_per_document_passes_columns_positionally(spark):
 
 
 def _calls_by_top_level(attr):
-    """(path, top-level definition) of every ``.<attr>(`` call in the
-    package and __spark_entry__.py."""
+    """(path, top-level definition) of every ``<attr>(`` or
+    ``.<attr>(`` call in the package and __spark_entry__.py."""
     import ast
     from pathlib import Path
 
@@ -308,8 +308,8 @@ def _calls_by_top_level(attr):
                 (path.relative_to(root).as_posix(), getattr(top, "name", None))
                 for node in ast.walk(top)
                 if isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr == attr]
+                and attr in (getattr(node.func, "attr", None),
+                             getattr(node.func, "id", None))]
     return found
 
 
@@ -318,6 +318,30 @@ def test_per_document_is_the_only_map_in_pandas():
     a hand-written mapInPandas batch loop anywhere else fails here."""
     assert _calls_by_top_level("mapInPandas") == [
         ("scribe_js_spark/pipeline.py", "per_document")]
+
+
+#: The calls of ``extract_document`` outside extract.py, each with the
+#: reason it needs no ``extract.extracted`` scope.
+_DIRECT_EXTRACTIONS = {
+    ("scribe_js_spark/fixtures.py", "_build_comb_image_models"):
+        "fixture generation, outside any Spark job: it parses its own "
+        "rendered hOCR once for the word boxes it draws into the page image",
+}
+
+
+def test_extraction_goes_through_extracted():
+    """Every row function that extracts goes through extract.extracted,
+    directly or through pipeline.per_extracted, and so runs inside the
+    document's gc scope: a direct extract_document call anywhere but the
+    named fixture code, or a document_gc_scope entered anywhere but
+    extracted, fails here."""
+    direct = _calls_by_top_level("extract_document")
+    assert [c for c in direct if c[0] == "scribe_js_spark/extract.py"] == [
+        ("scribe_js_spark/extract.py", "extracted")]
+    assert {c for c in direct if c[0] != "scribe_js_spark/extract.py"} \
+        == set(_DIRECT_EXTRACTIONS)
+    assert _calls_by_top_level("document_gc_scope") == [
+        ("scribe_js_spark/extract.py", "extracted")]
 
 
 def test_per_batch_is_the_only_map_in_arrow():
