@@ -12,16 +12,16 @@ scribeocr/scribe.js (reference at /root/reference) on Apache Spark:
 - multi-layer OCR comparison / consensus,
 - deterministic text + span exports,
 
-all executed as vectorized pandas/Arrow UDFs over a DataFrame of
+all executed as vectorized Arrow UDFs over a DataFrame of
 Common-Crawl-style rows ``(url, warc_ts, html, text, lang)``, with
 explicit salting for skewed document sizes, per-partition
 checkpoint/resume, and extraction metrics.
 
 The heavy per-document operators are pure-Python functions (unit
-testable without Spark); ``pipeline.per_document`` is the one
-Arrow-batched adapter that maps them over a DataFrame. Parallelism is
-across documents, matching the reference's worker-pool design
-(/root/reference/js/extractTextDir.js).
+testable without Spark); ``pipeline.per_document`` maps them over a
+DataFrame through ``pipeline.per_batch``, the one Python map.
+Parallelism is across documents, matching the reference's worker-pool
+design (/root/reference/js/extractTextDir.js).
 """
 
 __version__ = "0.1.0"

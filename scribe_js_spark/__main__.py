@@ -46,14 +46,16 @@ def cmd_type(args) -> int:
     spark = _spark("scribe-type")
 
     def rows(url, html):
-        from .operators.detect import detect_document_format
+        from .extract import unwrapped
         from .operators.pdf.parse import pdf_document_type
 
-        data = bytes(html)
-        fmt = detect_document_format(data)
+        try:
+            body, fmt = unwrapped(bytes(html))
+        except Exception:  # a NULL cell or a failed unwrap has no format
+            return [(url, None)]
         if fmt == "pdf":
             try:
-                fmt = f"pdf:{pdf_document_type(data)}"
+                fmt = f"pdf:{pdf_document_type(body)}"
             except Exception:
                 fmt = "pdf:error"
         return [(url, fmt)]

@@ -86,12 +86,19 @@ class DocResult:
         self.data = data
 
 
+def unwrapped(data: bytes) -> tuple[bytes, str | None]:
+    """(body, format) of a stored document, gzip unwrapped first as
+    crawl archives store it; a failed unwrap raises ValueError."""
+    body = gunzip(data) if data[:2] == b"\x1f\x8b" else data
+    return body, detect_document_format(body)
+
+
 def extract_document(data: bytes) -> DocResult:
-    """bytes -> extracted reflowed text + page model; never raises."""
+    """bytes -> extracted reflowed text + page model; never raises,
+    not even on a NULL cell (``None``)."""
     try:
-        # crawl archives commonly store the fetched body gzipped
-        body = gunzip(data) if data[:2] == b"\x1f\x8b" else data
-        fmt = detect_document_format(body)
+        data = bytes(data)
+        body, fmt = unwrapped(data)
         if fmt is None:
             return DocResult([], None, None, "unsupported_format", data)
         pages = CONVERTERS[fmt](body)
@@ -181,7 +188,7 @@ def extracted(*blobs):
     done with the pages, and materialise what it derives from them,
     before the block ends."""
     with document_gc_scope():
-        results = [extract_document(bytes(b)) for b in blobs]
+        results = [extract_document(b) for b in blobs]
         try:
             yield results
         finally:

@@ -111,7 +111,8 @@ def merge_comb_layers(df: DataFrame, col_a: str = "html_legacy",
     When the input carries ``image_col`` (PNG bytes of the binarized
     page scan, nullable), conflicts are additionally scored with the
     image-based evalWords metric against page 0's image — the
-    reference's visual comparison path."""
+    reference's visual comparison path. An undecodable image drops the
+    document's rows, as a failed layer does."""
     has_image = image_col in df.columns
 
     def rows(url, doc_a, doc_b, raw=None):
@@ -119,10 +120,13 @@ def merge_comb_layers(df: DataFrame, col_a: str = "html_legacy",
 
         pages_a, pages_b = doc_a.pages, doc_b.pages
         image = None
-        if raw is not None and len(raw) > 0:
+        if raw:
             from .textops.multimodal import decode_png
 
-            _w, _h, _c, px = decode_png(bytes(raw))
+            try:
+                _w, _h, _c, px = decode_png(raw)
+            except Exception:  # noqa: BLE001 — like a failed layer
+                return
             image = px[:, :, 0]
         for i, pa in enumerate(pages_a):
             if i >= len(pages_b):

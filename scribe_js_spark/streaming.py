@@ -6,7 +6,7 @@ Spark-native analog of re-running `extractTextDir` over a growing
 directory:
 
 - ``stream_extract_text``: ``readStream`` over a corpus directory ->
-  the identical ``per_document`` extraction -> ``writeStream`` with
+  the identical ``extract_text`` extraction -> ``writeStream`` with
   checkpointing. With ``Trigger.AvailableNow`` this is an incremental
   batch: each invocation processes only files added since the last
   checkpoint (the Iceberg-snapshot incremental pattern from SURVEY.md
@@ -21,7 +21,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from .pipeline import EXTRACT_SCHEMA, _extract_rows, per_document
+from .pipeline import extract_text
 
 CORPUS_SCHEMA = ("url string, warc_ts timestamp, html binary, "
                  "text string, lang string")
@@ -39,12 +39,9 @@ def stream_extract_text(spark: SparkSession, input_dir: str,
         spark.readStream.schema(CORPUS_SCHEMA)
         .option("maxFilesPerTrigger", 16)
         .parquet(input_dir)
-        .select("url", "html")
     )
-
-    extracted = per_document(stream, _extract_rows(False), EXTRACT_SCHEMA)
     writer = (
-        extracted.writeStream
+        extract_text(stream, salt=False).writeStream
         .format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)

@@ -32,7 +32,7 @@ context-label tables and lifting constants are T.800 normative content
 Throughput: EBCOT Tier-1 is a scalar per-bit loop (like the
 reference's), ~100 kpx/s on incompressible data — fine for the
 embedded-image inventory sizes this pipeline meets, and parallel
-across documents inside mapInPandas partitions with per-document
+across documents inside ``per_document`` partitions with per-document
 error isolation; ``reduce_levels`` gives a cheap thumbnail path when
 full resolution isn't needed.
 """

@@ -1,7 +1,7 @@
 """Multimodal column plumbing: opaque binary media + typed metadata.
 
 Images/audio/video ride as ``binary`` columns with a struct of metadata;
-decode / feature-extract run as Arrow-batched pandas UDFs through
+decode / feature-extract run as Arrow-batched Python maps through
 ``pipeline.per_document`` — schema, batching and partition behavior are
 real and tested, and so is the PNG path: a from-scratch decoder (IHDR/IDAT
 chunk walk, zlib inflate, the five scanline filters vectorized with
@@ -995,7 +995,7 @@ def _decode_one(data: bytes) -> dict:
 
 def decode_media(df: DataFrame, id_col: str = "media_id",
                  bytes_col: str = "data") -> DataFrame:
-    """binary column -> typed metadata rows via Arrow-batched pandas UDF."""
+    """binary column -> typed metadata rows via ``per_document``."""
 
     keys = MEDIA_META_SCHEMA.names[1:]
 
@@ -1050,8 +1050,8 @@ def _decode_pixels(data: bytes):
 def resize_images(df: DataFrame, target_w: int, target_h: int,
                   method: str = "nearest", id_col: str = "media_id",
                   bytes_col: str = "data") -> DataFrame:
-    """Resize every decodable image to (target_w, target_h) via an
-    Arrow-batched pandas UDF and report the resized mean.
+    """Resize every decodable image to (target_w, target_h) via
+    ``per_document`` and report the resized mean.
     ``method='nearest'`` samples with the standard floor mapping
     (src = dst * src_dim // dst_dim); ``method='box'`` (downscale by
     integer factors only) averages each factor-sized window — for

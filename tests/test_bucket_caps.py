@@ -330,7 +330,7 @@ def test_self_join_sides_share_one_exchange(spark, emb_df):
     on a kernel output splits the exchange and runs the kernel twice."""
     marker = {"minhash": ["MapInArrow", "posexplode"],
               "simhash": ["MapInArrow", "posexplode"],
-              "embedding": ["MapInArrow"], "image": ["MapInPandas"]}
+              "embedding": ["MapInArrow"], "image": ["MapInArrow"]}
     for name, df, build in _cap_cases(spark, emb_df)[1::2]:
         for cap in (None, 10):
             res = build(df, cap)

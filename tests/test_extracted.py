@@ -54,6 +54,27 @@ def test_a_raising_converter_gives_a_parse_failure_row(monkeypatch):
         ("u", None, None, "parse_failure: RuntimeError: converter bug", 0, 0)]
 
 
+def test_a_null_document_gives_an_error_row(spark):
+    """A NULL ``html`` cell is that document's ``parse_failure``; the
+    job completes and every other url's row is unchanged."""
+    docs = [fixtures.render_hocr(fixtures.build_doc_model(i, n_pages=1))
+            .encode() for i in range(3)]
+    rows = [(f"u{i}", doc) for i, doc in enumerate(docs)]
+
+    def extract(rows):
+        df = spark.createDataFrame(rows, "url string, html binary")
+        return {r.url: r for r in
+                pipeline.extract_text(df, salt=False).collect()}
+
+    clean = extract(rows)
+    rows[1] = ("u1", None)
+    got = extract(rows)
+    assert got.keys() == clean.keys()
+    assert got["u0"] == clean["u0"] and got["u2"] == clean["u2"]
+    assert got["u1"].text is None and got["u1"].format is None
+    assert got["u1"].error.startswith("parse_failure: TypeError")
+
+
 @pytest.mark.parametrize("enabled", [True, False])
 def test_per_extracted_consumer_runs_with_gc_off(enabled, monkeypatch):
     """The consumer runs inside the document's scope, with automatic
@@ -105,20 +126,24 @@ def _layer_frames(spark, name, cols, corrupt_col):
     return clean, spark.createDataFrame(pdf[cols], ddl), pdf.at[1, "url"]
 
 
-@pytest.mark.parametrize("op", ["compare_layers", "consensus_vote",
-                                "merge_comb_layers"])
-def test_layer_operators_skip_a_corrupt_document(spark, op):
-    """One corrupt layer drops its document's rows and nothing else: the
-    job completes and every other url's rows are unchanged."""
+@pytest.mark.parametrize("op, corrupt_col", [
+    ("compare_layers", "html_ocr_a"),
+    ("consensus_vote", "html_ocr_a"),
+    ("merge_comb_layers", "html_legacy"),
+    ("merge_comb_layers", "page_image"),
+], ids=["compare_layers", "consensus_vote", "merge_comb_layers",
+        "merge_comb_layers-page_image"])
+def test_layer_operators_skip_a_corrupt_document(spark, op, corrupt_col):
+    """One corrupt layer, or a corrupt page image, drops its document's
+    rows and nothing else: the job completes and every other url's rows
+    are unchanged."""
     from scribe_js_spark import layers
 
     if op == "merge_comb_layers":
         cols = ["url", "html_legacy", "html_lstm", "page_image"]
-        corrupt_col = "html_legacy"
         name = "comb_layers"
     else:
         cols = ["url", "html_truth", "html_ocr_a", "html_ocr_b"]
-        corrupt_col = "html_ocr_a"
         name = "layers"
     clean, corrupt, bad_url = _layer_frames(spark, name, cols, corrupt_col)
     run = getattr(layers, op)

@@ -9,7 +9,13 @@ import sys
 import pandas as pd
 import pyspark.sql.functions as F
 import pytest
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from scribe_js_spark.fixtures import make_corpus_pandas, make_corrupt_rows
 from scribe_js_spark.pipeline import (
@@ -273,6 +279,17 @@ def test_per_document_long_columns_round_trip_exactly(spark):
     assert [r.v for r in out] == vals
 
 
+def test_per_document_reads_nan_and_none_back_as_null(spark):
+    # pandas' null semantics, as when this adapter went through pandas:
+    # a float NaN is a null, not a NaN.
+    schema = StructType([StructField("k", StringType()),
+                         StructField("x", DoubleType())])
+    df = spark.createDataFrame([("a",)], "k string")
+    out = per_document(
+        df, lambda k: [(k, 1.5), (k, float("nan")), (k, None)], schema)
+    assert [r.x for r in out.collect()] == [1.5, None, None]
+
+
 def test_per_document_rejects_wrong_width_tuple(spark):
     df = spark.createDataFrame([("a",)], "k string")
     with pytest.raises(Exception, match="ValueError"):
@@ -313,13 +330,6 @@ def _calls_by_top_level(attr):
     return found
 
 
-def test_per_document_is_the_only_map_in_pandas():
-    """Every per-row Python operator goes through pipeline.per_document:
-    a hand-written mapInPandas batch loop anywhere else fails here."""
-    assert _calls_by_top_level("mapInPandas") == [
-        ("scribe_js_spark/pipeline.py", "per_document")]
-
-
 #: The calls of ``extract_document`` outside extract.py, each with the
 #: reason it needs no ``extract.extracted`` scope.
 _DIRECT_EXTRACTIONS = {
@@ -345,10 +355,30 @@ def test_extraction_goes_through_extracted():
 
 
 def test_per_batch_is_the_only_map_in_arrow():
-    """Every columnar Python kernel goes through pipeline.per_batch: a
-    hand-written mapInArrow batch loop anywhere else fails here."""
+    """Every Python operator, columnar kernel or per_document row
+    function, goes through pipeline.per_batch: a hand-written mapInArrow
+    batch loop anywhere else fails here."""
     assert _calls_by_top_level("mapInArrow") == [
         ("scribe_js_spark/pipeline.py", "per_batch")]
+
+
+def test_per_document_is_the_only_map_in_pandas():
+    """pipeline.per_document now runs through per_batch's mapInArrow, so
+    the package has no pandas map left: any mapInPandas, applyInPandas
+    or pandas_udf fails here. streaming.stream_dedup_exact keeps
+    applyInPandasWithState: its Arrow counterpart, transformWithState,
+    needs a StatefulProcessor class, which is more code, not less."""
+    import ast
+
+    assert _calls_by_top_level("applyInPandasWithState") == [
+        ("scribe_js_spark/streaming.py", "stream_dedup_exact")]
+    named = {ast.Attribute: "attr", ast.Name: "id", ast.alias: "name"}
+    found = [
+        (path, getattr(node, named[type(node)]))
+        for path, node in _package_nodes() if type(node) in named
+        and getattr(node, named[type(node)]) in (
+            "mapInPandas", "applyInPandas", "pandas_udf")]
+    assert found == []
 
 
 def _package_nodes():

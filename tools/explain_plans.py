@@ -65,7 +65,7 @@ def main():
         "extract_text (whole-doc path, no salt)",
         extract_text(corpus, salt=False)
         .filter(F.col("error").isNull()),
-        "One mapInPandas over the scan: ZERO shuffles — the hot path "
+        "One mapInArrow over the scan: ZERO shuffles — the hot path "
         "moves no bytes between executors. Error filter stays above the "
         "UDF (cannot push through Python), scan reads only (url, html). "
         "Round 6 A/B: a round-robin spread of the input measured 2.3x "
@@ -196,7 +196,7 @@ def main():
         "image_near_dups (pHash pigeonhole, capped)",
         image_near_dups(imgdocs, max_bucket_size=8)
         .select("id_a", "id_b"),
-        "Arrow-batched pHash (mapInPandas) -> 4x16-bit block "
+        "Arrow-batched pHash (mapInArrow) -> 4x16-bit block "
         "self-join -> exact Hamming verify. Both join sides read one "
         "hash partitioning on (block_n, block) — the second is a "
         "ReusedExchange — so the pHash UDF runs once per query. The "
@@ -208,7 +208,7 @@ def main():
     summarize(
         "web_extract (raw web HTML main-content)",
         extract_text(webdocs, salt=False).select("url", "text"),
-        "Same zero-shuffle mapInPandas plan as extract_text — the "
+        "Same zero-shuffle mapInArrow plan as extract_text — the "
         "boilerplate strip runs inside the per-document UDF; the scan "
         "reads only (url, html).",
         out)
