@@ -1,42 +1,27 @@
-"""Decompression of whole inputs (gzip wrappers, zip members), capped
-at STREAM_DECODE_BUDGET like every stream decode."""
+"""Decompression of whole inputs: gzip wrappers (a gzipped document, a
+``.warc.gz`` archive) and zip members (DOCX, EPUB), each capped at the
+decode budget of ``budget.py``."""
 
 from __future__ import annotations
 
 import zipfile
 import zlib
 
-#: Most bytes one decompression may produce: a PDF stream through
-#: FlateDecode or LZWDecode, a gzip-wrapped document or archive, or a
-#: zip member. Deflate can expand its input about a thousandfold, so a
-#: few MB of hostile input could otherwise claim gigabytes. It sits
-#: above the largest legitimate stream expected (a 600 dpi CMYK
-#: letter-size page image is about 135 MB).
-STREAM_DECODE_BUDGET = 256 * 1024 * 1024
-
-
-def _over_budget(what: str) -> ValueError:
-    return ValueError(
-        f"{what} exceeds the decode budget of {STREAM_DECODE_BUDGET} bytes")
+from ..budget import check_budget, inflate
 
 
 def gunzip(data: bytes) -> bytes:
-    """``gzip.decompress`` with the output capped at STREAM_DECODE_BUDGET.
+    """``gzip.decompress`` with the output capped at the decode budget.
     Like it, this walks concatenated members (a ``.warc.gz`` holds one
     per record) and skips zero padding between them. A corrupt or
     truncated member, or output past the budget, raises ValueError."""
     parts, total = [], 0
     try:
         while data:
-            d = zlib.decompressobj(wbits=31)
-            part = d.decompress(data, STREAM_DECODE_BUDGET + 1 - total)
+            part, data = inflate(data, 31, "gzip output", total)
             parts.append(part)
             total += len(part)
-            if total > STREAM_DECODE_BUDGET:
-                raise _over_budget("gzip output")
-            if not d.eof:
-                raise ValueError("gzip: truncated member")
-            data = d.unused_data.lstrip(b"\x00")
+            data = data.lstrip(b"\x00")
     except zlib.error as e:
         raise ValueError(f"gzip: bad member: {e}") from None
     return b"".join(parts)
@@ -44,8 +29,7 @@ def gunzip(data: bytes) -> bytes:
 
 def read_member(zf: zipfile.ZipFile, name: str) -> bytes:
     """``zf.read(name)``, refused before anything is inflated when the
-    member declares more than STREAM_DECODE_BUDGET bytes. The read stops
-    at the declared size, so the declaration bounds it."""
-    if zf.getinfo(name).file_size > STREAM_DECODE_BUDGET:
-        raise _over_budget(f"zip member {name}")
+    member declares more than the decode budget. The read stops at the
+    declared size, so the declaration bounds it."""
+    check_budget(zf.getinfo(name).file_size, f"zip member {name}")
     return zf.read(name)

@@ -13,7 +13,7 @@ from __future__ import annotations
 import re
 import zlib
 
-from ..archive import STREAM_DECODE_BUDGET
+from ... import budget
 from .lexer import Lexer, Name, Ref, StreamObj
 
 _STARTXREF_RE = re.compile(rb"startxref\s+(\d+)", re.S)
@@ -22,25 +22,6 @@ _OBJ_SCAN_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
 
 class PdfError(ValueError):
     pass
-
-
-def _over_budget(fname: str) -> PdfError:
-    return PdfError(
-        f"{fname}: stream exceeds the decode budget "
-        f"of {STREAM_DECODE_BUDGET} bytes")
-
-
-def _inflate(data: bytes) -> bytes:
-    """``zlib.decompress`` with the output capped at
-    STREAM_DECODE_BUDGET; a truncated stream raises as it does there."""
-    d = zlib.decompressobj()
-    out = d.decompress(data, STREAM_DECODE_BUDGET + 1)
-    if len(out) > STREAM_DECODE_BUDGET:
-        raise _over_budget("FlateDecode")
-    if not d.eof:
-        raise zlib.error("Error -5 while decompressing data: "
-                         "incomplete or truncated stream")
-    return out
 
 
 class PdfDocument:
@@ -299,7 +280,8 @@ class PdfDocument:
             fname = str(self.resolve(f))
             parm = self.resolve(parms[i]) if i < len(parms) else None
             if fname in ("FlateDecode", "Fl"):
-                out = _inflate(out)
+                out, _ = budget.inflate(out, zlib.MAX_WBITS,
+                                        "FlateDecode stream")
                 if isinstance(parm, dict) and int(
                         self.resolve(parm.get("Predictor", 1))) >= 10:
                     out = _png_predictor(
@@ -398,6 +380,7 @@ def _lzw_decode(data: bytes, early_change: int = 1) -> bytes:
     default) the code width grows one entry early. Content streams in
     pre-Flate-era PDFs use this filter."""
     out = bytearray()
+    limit = budget.DECODE_BUDGET
     base = {i: bytes([i]) for i in range(256)}
     table = dict(base)
     next_code = 258
@@ -433,8 +416,8 @@ def _lzw_decode(data: bytes, early_change: int = 1) -> bytes:
                 table[next_code] = prev + entry[:1]
                 next_code += 1
             out += entry
-            if len(out) > STREAM_DECODE_BUDGET:
-                raise _over_budget("LZWDecode")
+            if len(out) > limit:
+                budget.check_budget(len(out), "LZWDecode stream")
             prev = entry
             if (next_code + early_change >= (1 << code_bits)
                     and code_bits < 12):

@@ -130,20 +130,31 @@ def per_document(df: DataFrame, rows_fn, schema: StructType) -> DataFrame:
     as Python values, and returns an iterable of tuples in ``schema``
     field order (none to skip the row). Each output column is one
     ``pyarrow.array`` of its field's type, where a float NaN becomes
-    null, as in pandas. A tuple of the wrong width raises ValueError.
+    null, as in pandas. A tuple of the wrong width raises ValueError,
+    and a float or a bool in an integer field raises TypeError.
     Exceptions are not caught: a never-fatal operator catches its own."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     types = to_arrow_schema(schema).types
 
-    def kernel(batch):
+    def column(values, t):
         import pyarrow as pa
 
+        if not pa.types.is_integer(t):
+            return pa.array(values, type=t, from_pandas=True)
+        # pa.array(type=int32) would truncate 3.5 to 3: infer, refuse
+        # anything but integers and nulls, then cast (which refuses an
+        # overflow)
+        col = pa.array(values, from_pandas=True)
+        if not (pa.types.is_integer(col.type) or pa.types.is_null(col.type)):
+            raise TypeError(f"{col.type} values in an integer field")
+        return col.cast(t)
+
+    def kernel(batch):
         rows = [out for row in zip(*(col.to_pylist() for col in batch.columns))
                 for out in rows_fn(*row)]
         cols = zip(*rows, strict=True) if rows else [[]] * len(types)
-        return [pa.array(col, type=t, from_pandas=True)
-                for col, t in zip(cols, types, strict=True)]
+        return [column(col, t) for col, t in zip(cols, types, strict=True)]
 
     return per_batch(df, kernel, schema)
 
@@ -485,7 +496,7 @@ def register_sql_functions(spark: SparkSession) -> None:
     - scribe_extract_error(binary) -> string (NULL on success)
     - scribe_detect_format(binary) -> string (NULL when undetected)
     """
-    from pyspark.sql.functions import ArrowUDFType, arrow_udf
+    from pyspark.sql.functions import arrow_udf
 
     def register(name, one):
         def column(html):
@@ -493,8 +504,9 @@ def register_sql_functions(spark: SparkSession) -> None:
 
             return pa.array([one(b) for b in html.to_pylist()], pa.string())
 
-        spark.udf.register(
-            name, arrow_udf(column, "string", ArrowUDFType.SCALAR))
+        # no function type and no type hints: a scalar arrow_udf, and no
+        # warning that type hints are preferred
+        spark.udf.register(name, arrow_udf(column, "string"))
 
     def extracted_field(field):
         def one(b):

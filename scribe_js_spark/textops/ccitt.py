@@ -21,6 +21,8 @@ tables, so every code path is exercised bidirectionally.
 
 from __future__ import annotations
 
+from ..budget import check_budget
+
 # --------------------------------------------------------- code tables
 
 _WHITE_TERM = [
@@ -248,6 +250,7 @@ def decode_g4(data: bytes, width: int, height: int,
 
     ``byte_align`` is PDF /EncodedByteAlign: each coded line begins on
     a byte boundary (decodeCCITT.js:477 honors the same flag)."""
+    check_budget(width * height, f"ccitt: {width}x{height}")
     br = _BitReader(data)
     ref = [0] * width
     rows = []
@@ -277,6 +280,7 @@ def decode_g3_2d(data: bytes, width: int, height: int,
     followed by one tag bit — 1 selects a 1-D line, 0 a 2-D line
     coded against the previous line. ``byte_align`` (/EncodedByteAlign)
     realigns to a byte boundary before each EOL scan."""
+    check_budget(width * height, f"ccitt: {width}x{height}")
     br = _BitReader(data)
     ref = [0] * width
     rows = []
@@ -408,6 +412,7 @@ def decode_mh(data: bytes, width: int, height: int,
     false, preserving the historical behavior), while PDF
     CCITTFaxDecode K=0 is a continuous bitstream unless
     /EncodedByteAlign is set (decodeCCITT.js:477 default false)."""
+    check_budget(width * height, f"ccitt: {width}x{height}")
     br = _BitReader(data)
     if byte_align is None:
         byte_align = not eols

@@ -21,6 +21,8 @@ from __future__ import annotations
 
 import struct
 
+from ..budget import check_budget
+
 GIF_MAGICS = (b"GIF87a", b"GIF89a")
 
 # Interlace pass row offsets/strides (GIF89a spec appendix E).
@@ -136,8 +138,6 @@ def decode_gif(data: bytes):
     graphic-control frame delays in centiseconds."""
     import numpy as np
 
-    from .multimodal import check_decode_budget
-
     if data[:6] not in GIF_MAGICS:
         raise ValueError("not a GIF")
     if len(data) < 13:
@@ -145,7 +145,7 @@ def decode_gif(data: bytes):
     width, height, flags, _bg, _aspect = struct.unpack_from("<HHBBB", data, 6)
     # the screen and each frame, as RGB, are refused past the shared
     # decode budget before anything is allocated for them
-    check_decode_budget(width * height * 3, f"gif: {width}x{height}")
+    check_budget(width * height * 3, f"gif: {width}x{height}")
     pos = 13
     gct = None
     if flags & 0x80:
@@ -172,7 +172,7 @@ def decode_gif(data: bytes):
         if block != 0x2C:
             raise ValueError(f"gif: unexpected block 0x{block:02x}")
         fx, fy, fw, fh, iflags = struct.unpack_from("<HHHHB", data, pos)
-        check_decode_budget(fw * fh * 3, f"gif: {fw}x{fh}")
+        check_budget(fw * fh * 3, f"gif: {fw}x{fh}")
         pos += 9
         pal = gct
         if iflags & 0x80:

@@ -72,7 +72,7 @@ def phash_images(df: DataFrame, id_col: str = "media_id",
     """binary image column -> 64-bit pHash per row (Arrow-batched)."""
 
     def rows(mid, data):
-        from .multimodal import _decode_pixels
+        from .multimodal import _decode_pixels, image_error
 
         ph = None
         err = None
@@ -81,10 +81,8 @@ def phash_images(df: DataFrame, id_col: str = "media_id",
             # store as signed 64-bit
             if ph >= 1 << 63:
                 ph -= 1 << 64
-        except NotImplementedError as e:
-            err = f"not_implemented: {e}"
         except Exception as e:  # noqa: BLE001 — never-fatal contract
-            err = f"decode_failure: {e}"
+            err = image_error(e)
         return [(int(mid), ph, err)]
 
     return per_document(df.select(

@@ -30,6 +30,8 @@ import struct
 
 import numpy as np
 
+from ..budget import check_budget
+
 # Zigzag order: index i of the scan -> (row, col) flattened offset.
 ZIGZAG = np.array([
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -474,11 +476,9 @@ def decode_jpeg(data: bytes, decode_invert: bool = False) -> np.ndarray:
                     c["cbw"] = (cw + 7) // 8
                     c["cbh"] = (ch + 7) // 8
                 # the SOF header alone sizes these buffers: refuse
-                # them past the shared decode budget, counted in
-                # samples as for the other codecs, before allocating
-                from .multimodal import check_decode_budget
-
-                check_decode_budget(
+                # them past the decode budget, counted in coefficient
+                # samples, before allocating
+                check_budget(
                     sum(mcuy * c["vs"] * mcux * c["hs"] * 64
                         for c in comps), f"jpeg: {w}x{h}")
                 coefs = [np.zeros((mcuy * c["vs"], mcux * c["hs"], 64),

@@ -41,6 +41,7 @@ import struct
 
 import numpy as np
 
+from ..budget import check_budget
 from .jpeg import (AC_BITS, AC_VALS, DC_BITS, DC_VALS, ZIGZAG, _DCT,
                    _IDCT, _BitReader, _BitWriter, _build_decode_table,
                    _build_encode_table, _decode_block_zz,
@@ -87,14 +88,6 @@ def _expand_plane(plane: np.ndarray, eh: int, ev: int) -> np.ndarray:
         out[1::2, :] = (p + below + 1) >> 1
         p = out
     return p
-
-
-def _check_planes(samples: int, what: str) -> None:
-    """Refuse reference planes of ``samples`` samples in all past the
-    shared decode budget. The planes are int64: 8 bytes a sample."""
-    from .multimodal import check_decode_budget
-
-    check_decode_budget(samples * 8, what)
 
 
 def _fit(plane: np.ndarray, h: int, w: int) -> np.ndarray:
@@ -248,8 +241,8 @@ def _decode_diff_lossless(standalone: bytes, refs: dict) -> None:
                 cs, tsel = seg[1 + 2 * si], seg[2 + 2 * si]
                 comps.append((cs, tsel >> 4))
             pt = seg[3 + 2 * ns] & 0xF
-            _check_planes(h * w * len(comps),
-                          f"jpeg differential lossless: {w}x{h}")
+            check_budget(h * w * len(comps) * 8,
+                         f"jpeg differential lossless: {w}x{h}")
             planes = []
             for cid, tid in comps:
                 if cid not in refs:
@@ -337,8 +330,8 @@ def _decode_diff_dct(standalone: bytes, refs: dict) -> None:
             # int32 coefficients of every component, and each
             # component's float64 dequantised copy, IDCT output and
             # int64 reference plane
-            _check_planes(bh * bw * 64 * len(comps),
-                          f"jpeg differential DCT: {w}x{h}")
+            check_budget(bh * bw * 64 * len(comps) * 8,
+                         f"jpeg differential DCT: {w}x{h}")
             coefs = {c["id"]: np.zeros((bh, bw, 64), dtype=np.int32)
                      for c in comps}
             reader = _BitReader(standalone, seg_end)
@@ -379,21 +372,21 @@ def _decode_diff_dct(standalone: bytes, refs: dict) -> None:
 def decode_jpeg_hierarchical(data: bytes) -> np.ndarray:
     """DHP-led hierarchical stream -> uint8 (h, w) gray or (h, w, 3).
     The DHP, each frame header and each EXP size the int64 reference
-    planes: each is refused past the decode budget before it is
-    allocated."""
+    planes: each is refused past the decode budget, at 8 bytes a
+    sample, before it is allocated."""
     (prec, out_h, out_w, comp_ids), frames = _split_frames(data)
     if prec != 8:
         raise NotImplementedError(f"jpeg: hierarchical precision {prec}")
-    _check_planes(out_h * out_w * len(comp_ids),
-                  f"jpeg hierarchical: {out_w}x{out_h}")
+    check_budget(out_h * out_w * len(comp_ids) * 8,
+                 f"jpeg hierarchical: {out_w}x{out_h}")
     refs: dict[int, np.ndarray] = {}
     for sof, exp, tables, frame in frames:
         standalone = b"\xff\xd8" + tables + frame + b"\xff\xd9"
         if exp is not None:
             eh, ev = exp
-            _check_planes(sum(p.size for p in refs.values())
-                          * (2 if eh else 1) * (2 if ev else 1),
-                          "jpeg hierarchical EXP")
+            check_budget(sum(p.size for p in refs.values())
+                         * (2 if eh else 1) * (2 if ev else 1) * 8,
+                         "jpeg hierarchical EXP")
             refs = {cid: _expand_plane(p, eh, ev)
                     for cid, p in refs.items()}
         if sof in _SOF_NONDIFF:
@@ -401,8 +394,8 @@ def decode_jpeg_hierarchical(data: bytes) -> np.ndarray:
             # references for its components (J.1: frames need not all
             # be differential)
             fh, fw, fcomp = _frame_header(frame)
-            _check_planes(fh * fw * len(fcomp),
-                          f"jpeg hierarchical base: {fw}x{fh}")
+            check_budget(fh * fw * len(fcomp) * 8,
+                         f"jpeg hierarchical base: {fw}x{fh}")
             if sof == 0xC3:
                 px = decode_jpeg_lossless(standalone)
                 if px.ndim == 2:

@@ -28,6 +28,7 @@ import struct
 
 import numpy as np
 
+from ..budget import check_budget
 from .jpeg import (_BitReader, _BitWriter, _build_decode_table,
                    _build_encode_table, _encode_magnitude, _extend, _seg)
 
@@ -123,11 +124,9 @@ def decode_jpeg_lossless(data: bytes) -> np.ndarray:
             reader = _BitReader(data, pos + seg_len)
             nc = len(comps)
             # the SOF3 header alone sizes the image: refuse its
-            # uint16 samples past the shared decode budget before
+            # uint16 samples past the decode budget before
             # allocating them
-            from .multimodal import check_decode_budget
-
-            check_decode_budget(h * w * nc * 2, f"jpeg lossless: {w}x{h}")
+            check_budget(h * w * nc * 2, f"jpeg lossless: {w}x{h}")
             out = np.zeros((h, w, nc), dtype=np.uint16)
             default = 1 << (precision - 1 - pt)
             mcu = 0

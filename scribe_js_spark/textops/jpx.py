@@ -43,6 +43,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
+from ..budget import BudgetExceeded, check_budget
 from .mq import MQDecoder
 
 
@@ -478,6 +479,13 @@ def _calculate_tile_grids(context: dict, components: list[dict]) -> None:
     tiles = []
     num_x = _ceil_div(siz["Xsiz"] - siz["XTOsiz"], siz["XTsiz"])
     num_y = _ceil_div(siz["Ysiz"] - siz["YTOsiz"], siz["YTsiz"])
+    # the SIZ header alone sizes the image, the tiles and the
+    # code-blocks: refuse its samples, or its tiles at 1 KiB a component
+    # (the dicts that describe one), before building them
+    check_budget(max(sum(c["width"] * c["height"] for c in components),
+                     num_x * num_y * siz["Csiz"] * 1024),
+                 f"jpx: {siz['Xsiz'] - siz['XOsiz']}x"
+                 f"{siz['Ysiz'] - siz['YOsiz']} in {num_x * num_y} tiles")
     for q in range(num_y):
         for p in range(num_x):
             tile = {
@@ -1494,6 +1502,8 @@ def _parse_codestream(data: bytes, start: int, end: int,
             else:
                 raise JpxError(f"Unknown codestream code: {code:x}")
             position += length
+    except BudgetExceeded:
+        raise
     except Exception as exc:
         # Recover with whatever decoded so far (the reference's behaviour,
         # decodeJPX.js:506-512) unless recovery would mask wrong pixels.

@@ -45,6 +45,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..budget import check_budget
 from ..pipeline import per_document
 
 MEDIA_META_SCHEMA = StructType([
@@ -67,26 +68,6 @@ _RIFF_MAGIC = b"RIFF"
 
 # PNG color type -> samples per pixel
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-
-
-#: Most bytes one image may decode to, at one byte per 8-bit sample.
-#: PNG (filtered scanlines or pixel array), RLE BMP, GIF (screen or
-#: frame, as RGB) and JPEG (coefficient samples; the lossless decoder's
-#: uint16 and the hierarchical decoder's int64 planes in bytes) take
-#: their sizes from the header alone, so a small file could otherwise
-#: claim gigabytes:
-#: past the budget the decoder raises ValueError before it inflates or
-#: allocates anything. A 600 dpi letter-size RGBA page is about 135 MB.
-DECODE_BUDGET = 256 * 1024 * 1024
-
-
-def check_decode_budget(n: int, what: str) -> None:
-    """Refuse an image whose header claims ``n`` decoded bytes (one per
-    8-bit sample) past DECODE_BUDGET. ``what`` names the codec and the
-    claimed size in the error."""
-    if n > DECODE_BUDGET:
-        raise ValueError(f"{what} exceeds the decode budget of "
-                         f"{DECODE_BUDGET} bytes")
 
 
 # Adam7 pass geometry: (x0, y0, dx, dy) per pass (PNG spec 4.5.2).
@@ -200,8 +181,8 @@ def decode_png(data: bytes):
         if pw > 0 and ph > 0:
             passes.append((x0, y0, dx, dy, pw, ph))
     expected = sum(ph * (rowbytes(pw) + 1) for *_, pw, ph in passes)
-    check_decode_budget(max(expected, width * height * channels * sb),
-                        f"PNG {width}x{height}")
+    check_budget(max(expected, width * height * channels * sb),
+                 f"PNG {width}x{height}")
     # Inflate only the bytes the scanlines take. A stream that ends
     # before its terminator is truncated, as zlib.decompress reports.
     inflater = zlib.decompressobj()
@@ -551,7 +532,7 @@ def decode_bmp(data: bytes):
         if bpp != (8 if compression == 1 else 4):
             raise ValueError(f"bmp: RLE{compression} with {bpp} bpp")
         # RLE runs can claim any size: bound the index and RGB arrays
-        check_decode_budget(w * h * 3, f"bmp: {w}x{h}")
+        check_budget(w * h * 3, f"bmp: {w}x{h}")
         idx = _bmp_rle_indices(data, px_off, w, h,
                                four_bit=compression == 2)
         return w, h, 3, palette()[idx[::-1]]  # RLE is bottom-up only
@@ -993,6 +974,16 @@ def _decode_one(data: bytes) -> dict:
     return _media_rec(n_bytes=len(data), error="unknown_media_format")
 
 
+def image_error(e: Exception) -> str:
+    """The ``error`` value of an image whose decode raised ``e``: the
+    never-fatal net of every per-image operator. An unsupported shape is
+    ``not_implemented``; anything else, from a malformed header to a
+    decoder's own RecursionError, is ``decode_failure``."""
+    kind = ("not_implemented" if isinstance(e, NotImplementedError)
+            else "decode_failure")
+    return f"{kind}: {e}"
+
+
 def decode_media(df: DataFrame, id_col: str = "media_id",
                  bytes_col: str = "data") -> DataFrame:
     """binary column -> typed metadata rows via ``per_document``."""
@@ -1002,13 +993,8 @@ def decode_media(df: DataFrame, id_col: str = "media_id",
     def rows(mid, data):
         try:
             rec = _decode_one(bytes(data))
-        except NotImplementedError as e:
-            rec = _media_rec(n_bytes=len(bytes(data)),
-                             error=f"not_implemented: {e}")
-        except (ValueError, struct.error, IndexError,
-                zlib.error, KeyError, OverflowError) as e:
-            rec = _media_rec(n_bytes=len(bytes(data)),
-                             error=f"decode_failure: {e}")
+        except Exception as e:  # noqa: BLE001 — never-fatal contract
+            rec = _media_rec(n_bytes=len(bytes(data)), error=image_error(e))
         return [(int(mid), *(rec[k] for k in keys))]
 
     return per_document(df.select(
@@ -1080,11 +1066,8 @@ def resize_images(df: DataFrame, target_w: int, target_h: int,
                 res = res.reshape(
                     target_h, fy, target_w, fx, -1).mean(axis=(1, 3))
             mean = float(res.mean())
-        except NotImplementedError as e:
-            err = f"not_implemented: {e}"
-        except (ValueError, struct.error, IndexError,
-                zlib.error, KeyError, OverflowError) as e:
-            err = f"decode_failure: {e}"
+        except Exception as e:  # noqa: BLE001 — never-fatal contract
+            err = image_error(e)
         ok = err is None
         return [(int(mid), target_w if ok else None,
                  target_h if ok else None, mean, err)]
@@ -1139,8 +1122,7 @@ def image_exif(df: DataFrame, id_col: str = "media_id",
 
                     equal = int(np.array_equal(
                         decode_jpeg(data), decode_jpeg(scrubbed)))
-                except (NotImplementedError, ValueError,
-                        struct.error, IndexError, KeyError):
+                except Exception:  # noqa: BLE001 — NULL: failed to decode
                     equal = None
             lat, lon = info["gps_lat"], info["gps_lon"]
             return [(
@@ -1150,8 +1132,7 @@ def image_exif(df: DataFrame, id_col: str = "media_id",
                 int(math.floor(lat * 1e6)) if lat is not None else None,
                 int(math.floor(lon * 1e6)) if lon is not None else None,
                 len(data), len(scrubbed), equal)]
-        except (ValueError, struct.error, IndexError,
-                KeyError, zlib.error, OverflowError):
+        except Exception:  # noqa: BLE001 — never-fatal contract
             return [(int(mid), *[None] * 8, len(data), None, None)]
 
     return per_document(df.select(

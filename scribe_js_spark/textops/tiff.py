@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import struct
 
+from ..budget import check_budget
+
 TAG_WIDTH = 256
 TAG_HEIGHT = 257
 TAG_BPS = 258
@@ -154,6 +156,8 @@ def decode_tiff(data: bytes):
         if len(offsets) < ntx * nty or len(counts) < ntx * nty:
             raise ValueError("tiff: short tile tables")
         predictor = one(TAG_PREDICTOR, 1)
+        check_budget(nty * th * ntx * tw * spp,
+                     f"tiff: {ntx}x{nty} tiles of {tw}x{th}")
         mosaic = np.zeros((nty * th, ntx * tw, spp), dtype=np.uint8)
         for ti in range(ntx * nty):
             chunk = data[offsets[ti] : offsets[ti] + counts[ti]]

@@ -16,8 +16,8 @@ import zlib
 import numpy as np
 import pytest
 
+from scribe_js_spark import budget
 from scribe_js_spark.extract import extract_document, extract_with_spans
-from scribe_js_spark.operators.archive import STREAM_DECODE_BUDGET
 
 try:
     from hypothesis import given, settings
@@ -177,7 +177,7 @@ def _claims_past_budget(zip_bytes: bytes) -> bytes:
     b = bytearray(zip_bytes)
     i = b.find(b"PK\x01\x02")
     while i >= 0:
-        struct.pack_into("<I", b, i + 24, STREAM_DECODE_BUDGET + 1)
+        struct.pack_into("<I", b, i + 24, budget.DECODE_BUDGET + 1)
         i = b.find(b"PK\x01\x02", i + 46)
     return bytes(b)
 
@@ -548,7 +548,28 @@ def test_decode_media_net_catches_all_codec_mutations():
     hier_bombs = [claim(hier, b"\xff\xde"), claim(hier, b"\xff\xc7"),
                   claim(hier, b"\xff\xc7", 16384)]
     assert (len(lossless), len(hier)) == (131, 226)
-    for bomb in (rle_bmp, gif, bytes(jpeg), lossless, *hier_bombs):
+    # A 110-byte JPEG 2000 codestream of an 8x8 image whose SIZ claims a
+    # 60000x60000 image in one tile: its code-blocks alone would take
+    # minutes and gigabytes to build. The same SIZ claiming 16000x16000
+    # in 1x1 tiles: 256 M tile dicts.
+    jpx = bytearray(encode_jpx(np.zeros((8, 8), np.uint8)))
+    siz = jpx.index(b"\xff\x51")
+
+    def jpx_claim(side, tile):
+        data = bytearray(jpx)
+        struct.pack_into(">II", data, siz + 6, side, side)
+        struct.pack_into(">II", data, siz + 22, tile, tile)
+        return bytes(data)
+
+    # A 139-byte G4 fax TIFF whose width tag claims 10**9 pixels: its
+    # first row alone would be a 10**9-element list.
+    fax = bytearray(encode_tiff((g >> 7) * 255, compression=4))
+    ifd = struct.unpack_from("<I", fax, 4)[0]
+    assert struct.unpack_from("<HH", fax, ifd + 2) == (256, 4)  # width
+    struct.pack_into("<I", fax, ifd + 10, 10**9)
+    assert (len(jpx), len(fax)) == (110, 139)
+    for bomb in (rle_bmp, gif, bytes(jpeg), lossless, *hier_bombs,
+                 jpx_claim(60000, 60000), jpx_claim(16000, 1), bytes(fax)):
         with pytest.raises(ValueError, match="decode budget"):
             _decode_one(bomb)
 
@@ -560,20 +581,20 @@ def test_jpeg_budget_admits_a_600dpi_letter_page(monkeypatch):
     stops right after the check, so nothing is allocated."""
     import struct
 
-    from scribe_js_spark.textops import multimodal
+    from scribe_js_spark.textops import jpeg
     from scribe_js_spark.textops.jpeg import decode_jpeg, encode_jpeg_ycbcr
 
     class Admitted(Exception):
         pass
 
-    real, seen = multimodal.check_decode_budget, []
+    real, seen = jpeg.check_budget, []
 
     def check(n, what):
         real(n, what)
         seen.append((n, what))
         raise Admitted
 
-    monkeypatch.setattr(multimodal, "check_decode_budget", check)
+    monkeypatch.setattr(jpeg, "check_budget", check)
     plane = np.zeros((16, 16), np.uint8)
     jpeg = bytearray(encode_jpeg_ycbcr(plane, plane, plane, sampling=(1, 1)))
     sof = jpeg.index(b"\xff\xc0")

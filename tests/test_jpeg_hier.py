@@ -88,19 +88,19 @@ def test_reference_planes_are_budgeted_in_bytes(monkeypatch):
     refused."""
     import struct
 
-    from scribe_js_spark.textops import multimodal
+    from scribe_js_spark import budget
 
     px = _gradient(16, 16)
     stream = encode_jpeg_hier_pyramid(px)
-    monkeypatch.setattr(multimodal, "DECODE_BUDGET", 16 * 16 * 8)
+    monkeypatch.setattr(budget, "DECODE_BUDGET", 16 * 16 * 8)
     assert np.array_equal(decode_jpeg_hierarchical(stream), px)
-    monkeypatch.setattr(multimodal, "DECODE_BUDGET", 16 * 16 * 8 - 1)
+    monkeypatch.setattr(budget, "DECODE_BUDGET", 16 * 16 * 8 - 1)
     with pytest.raises(ValueError, match="jpeg hierarchical: 16x16"):
         decode_jpeg_hierarchical(stream)
     small = bytearray(stream)
     at = small.index(b"\xff\xde")
     small[at + 5:at + 9] = struct.pack(">HH", 8, 8)
-    monkeypatch.setattr(multimodal, "DECODE_BUDGET", 1024)
+    monkeypatch.setattr(budget, "DECODE_BUDGET", 1024)
     with pytest.raises(ValueError, match="jpeg hierarchical EXP"):
         decode_jpeg_hierarchical(bytes(small))
 

@@ -59,6 +59,20 @@ def test_decode_media_mixed_modalities(spark):
     assert rows[4]["error"] is not None  # truncated container, no crash
 
 
+def test_any_decoder_exception_is_an_error_row(spark):
+    """Each SVID frame is decoded as a media blob of its own, so a video
+    whose one frame is a video, 2,000 deep, recurses until Python raises
+    RecursionError. decode_media's net catches every Exception, not a
+    list of types: that is one decode_failure row, not a failed job."""
+    data = encode_synth_image(1, 1, b"\x00")
+    for _ in range(2000):
+        data = encode_synth_video([data], fps=1)
+    df = spark.createDataFrame([(1, data)], ["media_id", "data"])
+    [row] = decode_media(df).collect()
+    assert row["error"].startswith("decode_failure: maximum recursion")
+    assert row["n_bytes"] == len(data) and row["kind"] is None
+
+
 def test_svid_sampling_stride():
     """Every max(1, n//4)-th frame is decoded; mean over sampled frames."""
     from scribe_js_spark.textops.multimodal import _decode_one

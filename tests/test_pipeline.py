@@ -290,6 +290,14 @@ def test_per_document_reads_nan_and_none_back_as_null(spark):
     assert [r.x for r in out.collect()] == [1.5, None, None]
 
 
+def test_per_document_refuses_a_float_or_bool_in_an_integer_field(spark):
+    # pa.array(type=int64) alone would store 3.5 as 3
+    df = spark.createDataFrame([("a",)], "k string")
+    for v in (3.5, 3.0, True):
+        with pytest.raises(Exception, match="TypeError"):
+            per_document(df, lambda k: [(k, 1), (k, v)], _KV).collect()
+
+
 def test_per_document_rejects_wrong_width_tuple(spark):
     df = spark.createDataFrame([("a",)], "k string")
     with pytest.raises(Exception, match="ValueError"):
@@ -405,6 +413,27 @@ def test_package_reads_no_environment_variable():
         and node.attr in ("environ", "getenv")
         and isinstance(node.value, ast.Name) and node.value.id == "os"]
     assert found == []
+
+
+def test_decode_budget_has_one_home():
+    """budget.py is the one home of the decode budget: no other module
+    assigns a ``*_BUDGET`` constant or imports DECODE_BUDGET by name, so
+    every site reads budget.DECODE_BUDGET when it runs and one
+    monkeypatch of it reaches them all."""
+    import ast
+
+    found = []
+    for path, node in _package_nodes():
+        if isinstance(node, ast.Assign):
+            names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+        elif isinstance(node, ast.AnnAssign) and isinstance(
+                node.target, ast.Name):
+            names = [node.target.id]
+        else:
+            names = [node.name] if isinstance(node, ast.alias) else []
+        found += [(path, name) for name in names
+                  if name.endswith("_BUDGET") or name == "DECODE_BUDGET"]
+    assert found == [("scribe_js_spark/budget.py", "DECODE_BUDGET")]
 
 
 def test_package_caches_nothing():

@@ -420,9 +420,9 @@ def test_lzw_and_runlength_content_streams():
 
 
 def test_lzw_decoder_edge_cases(monkeypatch):
-    from scribe_js_spark.operators.pdf import document
+    from scribe_js_spark import budget
     from scribe_js_spark.operators.pdf.document import (
-        PdfError, _lzw_decode, _rle_decode)
+        _lzw_decode, _rle_decode)
     from scribe_js_spark.render_pdf import _lzw_encode, _rle_encode
 
     # table growth past the 512/1024 width boundaries and a mid-stream
@@ -431,8 +431,8 @@ def test_lzw_decoder_edge_cases(monkeypatch):
     encoded = _lzw_encode(data)
     assert _lzw_decode(encoded) == data
     # one byte past the per-stream decode budget is refused
-    monkeypatch.setattr(document, "STREAM_DECODE_BUDGET", len(data) - 1)
-    with pytest.raises(PdfError, match="decode budget"):
+    monkeypatch.setattr(budget, "DECODE_BUDGET", len(data) - 1)
+    with pytest.raises(budget.BudgetExceeded, match="decode budget"):
         _lzw_decode(encoded)
     monkeypatch.undo()
     # RLE: runs, literals, 128-literal cap, EOD
@@ -446,7 +446,10 @@ def test_bounded_inflate_matches_zlib():
     truncated stream is an error."""
     import zlib
 
-    from scribe_js_spark.operators.pdf.document import _inflate
+    from scribe_js_spark.budget import inflate
+
+    def flate(data):
+        return inflate(data, zlib.MAX_WBITS, "FlateDecode stream")[0]
 
     good = zlib.compress(b"BT /F1 12 Tf (x) Tj ET\n" * 200)
 
@@ -457,7 +460,7 @@ def test_bounded_inflate_matches_zlib():
             return repr(e)
 
     for data in (good, good + b"junk", good[:-3], good[:5], b""):
-        assert outcome(_inflate, data) == outcome(zlib.decompress, data)
+        assert outcome(flate, data) == outcome(zlib.decompress, data)
 
 
 def test_gzip_wrapped_documents_unwrap_transparently():

@@ -2,6 +2,8 @@
 
 
 def test_sql_extraction_matches_dataframe_api(spark, tmp_path):
+    import warnings
+
     from scribe_js_spark.fixtures import write_corpus_parquet
     from scribe_js_spark.pipeline import (
         extract_text, register_sql_functions)
@@ -9,7 +11,10 @@ def test_sql_extraction_matches_dataframe_api(spark, tmp_path):
     write_corpus_parquet(str(tmp_path), n_docs=10)
     df = spark.read.parquet(str(tmp_path / "corpus.parquet"))
     df.createOrReplaceTempView("corpus")
-    register_sql_functions(spark)
+    # registration is silent: no "type hints are preferred" warning
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        register_sql_functions(spark)
     sql_rows = {r["url"]: r for r in spark.sql(
         "SELECT url, scribe_extract_text(html) AS text,"
         "       scribe_extract_error(html) AS error,"
