@@ -8,7 +8,7 @@ Scale design (10^12 documents):
   candidates with minhash_lsh and verify with jaccard_for_pairs.
 - **jaccard_for_pairs**: exact Jaccard restricted to a candidate-pair
   table — the verification stage after LSH; joins only |candidates|
-  rows against the token sets, never all-pairs.
+  rows against the document texts, never all-pairs.
 - **minhash_lsh**: shingle -> K minhashes -> B bands; candidate pairs
   come from banded bucket joins so cost is output-bound, not O(n^2).
 - **simhash**: 60-bit signature via per-token hash bit-voting,
@@ -18,16 +18,21 @@ Scale design (10^12 documents):
 All hashes are md5-derived (first 15 hex digits -> 60-bit integer), so
 every operator here is exactly reproducible in ANSI SQL / DuckDB for
 the correctness oracles — the hash family is an implementation detail;
-verifiability is the requirement. The minhash and simhash signatures
-are computed once per Arrow batch in numpy (``pipeline.per_batch``),
-with the integer arithmetic and the tokenisation Spark's SQL gives
-them; everything after the signatures — band md5, bucket self-joins,
-the Hamming and Jaccard verifies — is Catalyst expressions. Band/block
-buckets come from one ``posexplode`` over the signature row. The
-band/block table is hash-partitioned once on the join key
-(``partitioning.bucket_rows``): both self-join sides and the
+verifiability is the requirement. The per-document and per-pair work
+runs in numpy and Python kernels, one call per Arrow batch
+(``pipeline.per_batch``), with the integer arithmetic, md5 text and
+tokenisation Spark's SQL gives it: the minhash and simhash signatures,
+the band and block rows the signature kernels emit (one row per
+document and band or block), and the Jaccard verify over the joined
+candidate texts. Catalyst keeps the joins, the Hamming filter and the
+dedup of pairs. The band/block table is hash-partitioned once on the
+join key (``partitioning.bucket_rows``): both self-join sides and the
 hot-bucket cap read that one exchange, so the signature kernel runs
-once per query and no query leaves cached state behind.
+once per query and no query leaves cached state behind. With a
+Python stage's fixed cost down to a fork-inherited worker and no
+per-task zip re-read (``scribe_js_spark.daemon``), a kernel costs less
+than the Catalyst expressions it replaced: their generated code was
+mostly JIT time.
 
 Input contract (relied on by every oracle): ``doc_id`` is a non-NULL
 unique key. The signatures are computed per row, the oracles' per
@@ -43,7 +48,13 @@ import re
 import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 # Fixed odd 61-bit constants for the universal hash family
 # h_i(x) = ((a_i * x + b_i) mod M); deterministic across runs.
@@ -154,37 +165,59 @@ def jaccard_for_pairs(df: DataFrame, candidates: DataFrame,
     the verify stage of the LSH -> exact composition.
 
     ``candidates`` has (doc_a, doc_b). The plan joins candidates to the
-    token sets twice (shuffle keyed on doc ids only — text shuffles as
-    the token arrays of candidate docs, never the full corpus
-    cross-product), so cost is O(|candidates|), the scale-safe shape.
-    ``ngram`` switches the sets to word n-gram shingles.
+    (doc_id, text) rows twice (shuffle keyed on doc ids only, never the
+    full corpus cross-product), so cost is O(|candidates|), the
+    scale-safe shape. One kernel per Arrow batch of joined pairs
+    (:func:`_jaccard_kernel`) then builds both sets, counts them and
+    applies the threshold. ``ngram`` switches the sets to word n-gram
+    shingles.
     """
-    from .partitioning import spread_input
+    from ..pipeline import per_batch
 
-    # spread: the token-array build otherwise runs at the scan's
-    # (possibly single-task) parallelism, and an identical repartition
-    # in both join branches lets ReusedExchange compute the token
-    # arrays ONCE for the a- and b-sides (round 6)
-    base = spread_input(df, ["doc_id", text_col])
-    ts = (token_sets(base, text_col) if ngram is None
-          else shingles(base, text_col, ngram).withColumnRenamed(
-              "shingles", "toks"))
-    a = ts.select(F.col("doc_id").alias("doc_a"),
-                  F.col("toks").alias("_toks_a"))
-    b = ts.select(F.col("doc_id").alias("doc_b"),
-                  F.col("toks").alias("_toks_b"))
-    inter = F.size(F.array_intersect("_toks_a", "_toks_b")).cast("long")
-    return (
-        candidates.select("doc_a", "doc_b")
-        .join(a, "doc_a").join(b, "doc_b")
-        .withColumn("n_inter", inter)
-        .withColumn(
-            "n_union",
-            (F.size("_toks_a") + F.size("_toks_b")
-             - F.col("n_inter")).cast("long"))
-        .filter(F.col("n_inter") >= F.lit(threshold) * F.col("n_union"))
-        .select("doc_a", "doc_b", "n_inter", "n_union")
-    )
+    base = df.select("doc_id", text_col)
+    a = base.select(F.col("doc_id").alias("doc_a"),
+                    F.col(text_col).alias("_text_a"))
+    b = base.select(F.col("doc_id").alias("doc_b"),
+                    F.col(text_col).alias("_text_b"))
+    pairs = (candidates.select("doc_a", "doc_b")
+             .join(a, "doc_a").join(b, "doc_b")
+             .select("doc_a", "doc_b", "_text_a", "_text_b"))
+    schema = StructType([pairs.schema["doc_a"], pairs.schema["doc_b"],
+                         StructField("n_inter", LongType()),
+                         StructField("n_union", LongType())])
+    return per_batch(
+        pairs, functools.partial(_jaccard_kernel, threshold, ngram), schema)
+
+
+def _jaccard_kernel(threshold: float, ngram: int | None, batch) -> list:
+    """(doc_a, doc_b, text_a, text_b) batch -> (doc_a, doc_b, n_inter,
+    n_union) of the pairs with ``n_inter >= threshold * n_union``.
+
+    The sets are :func:`token_sets`' (``_tokens``, distinct) or, under
+    ``ngram``, :func:`shingles`'. A NULL text has no token set, so its
+    pairs are dropped (SQL's ``size(array_intersect(NULL, ...))`` is
+    NULL); under ``ngram`` it has the empty shingle set, so two of them
+    pass with 0 >= 0."""
+    import pyarrow as pa
+
+    def toks(text):
+        if ngram is not None:
+            return _shingle_set(text, ngram)
+        return None if text is None else set(_tokens(text))
+
+    keep, inters, unions = [], [], []
+    pairs = zip(batch.column(2).to_pylist(), batch.column(3).to_pylist())
+    for ta, tb in pairs:  # one pair's sets at a time
+        sa, sb = toks(ta), toks(tb)
+        inter = None if sa is None or sb is None else len(sa & sb)
+        union = None if inter is None else len(sa) + len(sb) - inter
+        keep.append(inter is not None and inter >= threshold * union)
+        if keep[-1]:
+            inters.append(inter)
+            unions.append(union)
+    mask = pa.array(keep, pa.bool_())
+    return [batch.column(0).filter(mask), batch.column(1).filter(mask),
+            pa.array(inters, pa.int64()), pa.array(unions, pa.int64())]
 
 
 def shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
@@ -236,30 +269,62 @@ def _per_doc(ufunc, values: np.ndarray, lens: np.ndarray, **kw):
     return ufunc.reduceat(values, starts[lens > 0], axis=0, **kw)
 
 
-def _minhash_kernel(num_hashes: int, shingle_n: int, batch) -> list:
-    """(doc_id, text) batch -> doc_id and the ``num_hashes`` minhashes:
-    min over the distinct shingles s of ``(md5_60(s) % M31 * a_i + b_i)
-    % M``. Every product stays below 2^62, so int64 holds it exactly. A
-    document with no shingle (NULL text, fewer than ``shingle_n``
-    tokens) gets NULL minhashes."""
-    import pyarrow as pa
+def _shingle_set(text: str | None, n: int) -> set[str]:
+    """The distinct word ``n``-gram shingles of ``text``, as
+    :func:`shingles` builds them: empty for NULL text and for fewer
+    than ``n`` tokens."""
+    toks = [] if text is None else _tokens(text)
+    return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
 
-    def shingle_sets():
-        for text in batch.column(1).to_pylist():
-            toks = [] if text is None else _tokens(text)
-            yield {" ".join(toks[i:i + shingle_n])
-                   for i in range(len(toks) - shingle_n + 1)}
 
-    h, lens = _hashed(shingle_sets())
+def _minhashes(num_hashes: int, shingle_n: int, texts) -> tuple:
+    """(``num_hashes`` x texts) int64 minhashes, and the mask of texts
+    with a shingle: hash i of a text is the min over its distinct
+    shingles s of ``(md5_60(s) % M31 * a_i + b_i) % M``. Every product
+    stays below 2^62, so int64 holds it exactly. A text with no
+    shingle (NULL, fewer than ``shingle_n`` tokens) is left 0."""
+    h, lens = _hashed(_shingle_set(t, shingle_n) for t in texts)
     h %= _M31
     has = lens > 0
-    out = [batch.column(0)]
-    for a, b in zip(*_hash_coeffs(num_hashes)):
-        mh = np.zeros(len(lens), np.int64)
-        if has.any():
-            mh[has] = _per_doc(np.minimum, (h * a + b) % _M, lens)
-        out.append(pa.array(mh, mask=~has))
-    return out
+    mh = np.zeros((num_hashes, len(lens)), np.int64)
+    if has.any():
+        for row, a, b in zip(mh, *_hash_coeffs(num_hashes)):
+            row[has] = _per_doc(np.minimum, (h * a + b) % _M, lens)
+    return mh, has
+
+
+def _minhash_kernel(num_hashes: int, shingle_n: int, batch) -> list:
+    """(doc_id, text) batch -> doc_id and the ``num_hashes`` minhashes;
+    a document with no shingle gets NULL minhashes."""
+    import pyarrow as pa
+
+    mh, has = _minhashes(num_hashes, shingle_n, batch.column(1).to_pylist())
+    return [batch.column(0)] + [pa.array(row, mask=~has) for row in mh]
+
+
+def _band_kernel(bands: int, rows_per_band: int, shingle_n: int,
+                 batch) -> list:
+    """(doc_id, text) batch -> one (doc_id, band, bucket) row per
+    document and band: the bucket is the md5 hex of the band's
+    minhashes joined with ``'_'`` (Spark's ``md5(concat_ws('_',
+    CAST(mh AS STRING), ...))``). A document with no shingle joins
+    nothing, so its bucket is ``md5('')`` in every band, as
+    ``concat_ws`` over NULLs gives."""
+    import pyarrow as pa
+
+    mh, has = _minhashes(bands * rows_per_band, shingle_n,
+                         batch.column(1).to_pylist())
+    empty = hashlib.md5(b"").hexdigest()
+    buckets = []
+    for sig, ok in zip(mh.T.tolist(), has.tolist()):
+        for band in range(bands):
+            cells = sig[band * rows_per_band:(band + 1) * rows_per_band]
+            buckets.append(hashlib.md5("_".join(map(str, cells)).encode())
+                           .hexdigest() if ok else empty)
+    n = len(has)
+    return [batch.column(0).take(np.repeat(np.arange(n), bands)),
+            pa.array(np.tile(np.arange(bands, dtype=np.int32), n)),
+            pa.array(buckets, pa.string())]
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text",
@@ -282,6 +347,22 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
         schema)
 
 
+def _band_rows(df: DataFrame, text_col: str, num_hashes: int, bands: int,
+               shingle_n: int) -> DataFrame:
+    """(doc_id, band, bucket) rows of the spread input, from
+    :func:`_band_kernel`."""
+    from ..pipeline import per_batch
+    from .partitioning import spread_input
+
+    base = spread_input(df, ["doc_id", text_col])
+    schema = StructType([base.schema["doc_id"],
+                         StructField("band", IntegerType(), False),
+                         StructField("bucket", StringType(), False)])
+    kernel = functools.partial(_band_kernel, bands, num_hashes // bands,
+                               shingle_n)
+    return per_batch(base, kernel, schema)
+
+
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       num_hashes: int = 32, bands: int = 8,
                       shingle_n: int = 3,
@@ -290,28 +371,16 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
 
     bands * rows_per_band == num_hashes. Candidates are pairs sharing
     at least one band bucket; downstream exact verification is
-    :func:`jaccard_for_pairs` on the output. Band buckets come from ONE
-    posexplode over the signature row (no per-band union — the round-1
-    union re-derived the shingle array on every branch of both join
-    sides). ``max_bucket_size`` drops degenerate buckets (e.g. the
-    empty-document bucket) whose size would make the bucket self-join
-    quadratic at corpus scale.
+    :func:`jaccard_for_pairs` on the output. The band rows come
+    straight out of the signature kernel (:func:`_band_kernel`), one
+    per document and band. ``max_bucket_size`` drops degenerate
+    buckets (e.g. the empty-document bucket) whose size would make the
+    bucket self-join quadratic at corpus scale.
     """
     from .partitioning import bucket_rows
 
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, text_col, num_hashes, shingle_n)
-    # one parsed SQL expression for the 8-band bucket array (the
-    # Column-API build of 8 x md5(concat_ws(4 casts)) cost ~0.15 s of
-    # py4j per invocation — identical analyzed tree, verified
-    # row-identical at sf0.1)
-    buckets = F.expr("array(" + ", ".join(
-        "md5(concat_ws('_', " + ", ".join(
-            f"CAST(mh_{band * rows_per_band + r} AS STRING)"
-            for r in range(rows_per_band)) + "))"
-        for band in range(bands)) + ")")
     band_rows = bucket_rows(
-        sig.select("doc_id", F.posexplode(buckets).alias("band", "bucket")),
+        _band_rows(df, text_col, num_hashes, bands, shingle_n),
         ["band", "bucket"], max_bucket_size)
     pairs = (
         band_rows.alias("a")
@@ -324,14 +393,12 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     return pairs
 
 
-def _simhash_kernel(batch) -> list:
-    """(doc_id, text) batch -> doc_id and the 60-bit SimHash of the
-    distinct tokens: bit b is set iff 2 * (tokens whose md5_60 has bit
-    b) > (distinct tokens). NULL text has no token and signature 0."""
-    import pyarrow as pa
-
+def _simhashes(texts) -> np.ndarray:
+    """int64 60-bit SimHash of each text's distinct tokens: bit b is
+    set iff 2 * (tokens whose md5_60 has bit b) > (distinct tokens).
+    NULL text has no token and signature 0."""
     h, lens = _hashed(() if text is None else set(_tokens(text))
-                      for text in batch.column(1).to_pylist())
+                      for text in texts)
     bits = np.unpackbits(h.astype("<u8").view(np.uint8).reshape(-1, 8),
                          axis=1, bitorder="little")[:, :SIMHASH_BITS]
     sig = np.zeros(len(lens), np.int64)
@@ -341,7 +408,29 @@ def _simhash_kernel(batch) -> list:
             > lens[has, None]
         sig[has] = (vote.astype(np.int64)
                     << np.arange(SIMHASH_BITS, dtype=np.int64)).sum(axis=1)
-    return [batch.column(0), pa.array(sig)]
+    return sig
+
+
+def _simhash_kernel(batch) -> list:
+    """(doc_id, text) batch -> doc_id and the SimHash."""
+    import pyarrow as pa
+
+    return [batch.column(0), pa.array(_simhashes(batch.column(1).to_pylist()))]
+
+
+def _block_kernel(batch) -> list:
+    """(doc_id, text) batch -> one (doc_id, simhash, blk, blk_val) row
+    per document and 15-bit block: ``blk_val`` is bits
+    ``15 * blk`` .. ``15 * blk + 14`` of the SimHash."""
+    import pyarrow as pa
+
+    sig = _simhashes(batch.column(1).to_pylist())
+    n = len(sig)
+    shifts = 15 * np.arange(SIMHASH_BLOCKS, dtype=np.int64)
+    return [batch.column(0).take(np.repeat(np.arange(n), SIMHASH_BLOCKS)),
+            pa.array(np.repeat(sig, SIMHASH_BLOCKS)),
+            pa.array(np.tile(np.arange(SIMHASH_BLOCKS, dtype=np.int32), n)),
+            pa.array(((sig[:, None] >> shifts) & 0x7FFF).ravel())]
 
 
 def simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -361,13 +450,28 @@ def simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
     return per_batch(base, _simhash_kernel, schema)
 
 
+def _block_rows(df: DataFrame, text_col: str) -> DataFrame:
+    """(doc_id, simhash, blk, blk_val) rows of the spread input, from
+    :func:`_block_kernel`."""
+    from ..pipeline import per_batch
+    from .partitioning import spread_input
+
+    base = spread_input(df, ["doc_id", text_col])
+    schema = StructType([base.schema["doc_id"],
+                         StructField("simhash", LongType(), False),
+                         StructField("blk", IntegerType(), False),
+                         StructField("blk_val", LongType(), False)])
+    return per_batch(base, _block_kernel, schema)
+
+
 def simhash_candidates(df: DataFrame, text_col: str = "text",
                        max_bucket_size: int | None = None) -> DataFrame:
     """Near-dup candidates within Hamming distance 3 of each other:
     4x15-bit block join (pigeonhole: <=3 differing bits leave one of 4
-    blocks identical), then exact popcount filter. Blocks come from one
-    posexplode over the computed signature, below the one exchange both
-    join sides read, so the signature kernel runs once per query.
+    blocks identical), then exact popcount filter. The block rows come
+    straight out of the signature kernel (:func:`_block_kernel`), below
+    the one exchange both join sides read, so the kernel runs once per
+    query.
 
     ``max_bucket_size`` drops degenerate (blk, blk_val) keys — e.g.
     thousands of near-empty documents collapsing to signature 0 —
@@ -375,16 +479,8 @@ def simhash_candidates(df: DataFrame, text_col: str = "text",
     embedding_near_dups / image_near_dups."""
     from .partitioning import bucket_rows
 
-    sh = simhash(df, text_col)
-    blk_vals = F.array(*[
-        F.shiftrightunsigned(F.col("simhash"), blk * 15)
-        .bitwiseAND(F.lit(0x7FFF)).cast("long")
-        for blk in range(SIMHASH_BLOCKS)
-    ])
-    blocks = bucket_rows(
-        sh.select("doc_id", "simhash",
-                  F.posexplode(blk_vals).alias("blk", "blk_val")),
-        ["blk", "blk_val"], max_bucket_size)
+    blocks = bucket_rows(_block_rows(df, text_col), ["blk", "blk_val"],
+                         max_bucket_size)
     xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
     hamming = F.bit_count(xor).cast("int")
     # Hamming filter BEFORE any dedup: the popcount is a cheap

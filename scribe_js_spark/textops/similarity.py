@@ -10,14 +10,16 @@
   exact re-rank. At 10^12 rows the bucket join replaces the full cross
   product; recall tunes with bits/probes.
 
-``embedding_near_dups`` computes each vector's bucket and norm once
-per Arrow batch in numpy (:func:`_bucket_norm_kernel`), in the IEEE
-operation order of the :func:`lsh_bucket` and ``_norm_sql`` folds, so
-its bucket ids equal the ones :func:`with_lsh_bucket` stores. The ANN
-query paths keep those SQL folds: each Python stage costs a fixed
-~0.2 s per query (warm, local[4]), more than the folds cost over a
-2,000-vector corpus and its query batch. Per-pair values (the dot
-product) are JVM folds over the joined rows everywhere.
+``embedding_near_dups`` runs its per-vector and per-pair work in
+numpy, one call per Arrow batch: each vector's bucket and norm
+(:func:`_bucket_norm_kernel`), in the IEEE operation order of the
+:func:`lsh_bucket` and ``_norm_sql`` folds, so its bucket ids equal
+the ones :func:`with_lsh_bucket` stores; then the cosine of each
+candidate pair (:func:`_cosine_kernel`), in the order of the
+:func:`_dot_sql` fold. The ANN query paths keep the SQL folds (see
+ROADMAP, item 1, for their re-timing on the kernels). Their cosine is
+``try_divide``: a zero vector has a NULL similarity, as in the DuckDB
+oracles, where a plain ``/`` raises DIVIDE_BY_ZERO under ANSI.
 """
 
 from __future__ import annotations
@@ -50,14 +52,15 @@ def _dot_sql(a: str, b: str) -> str:
     fold at DataFrame-construction time for the same analyzed
     expression.
 
-    This fold runs per candidate pair, after the join, so it stays in
-    the JVM. An unrolled ``a[0]*b[0] + ... + a[63]*b[63]`` was measured
-    slower (2M cached pairs: 23 s against 4.4 s): its >8 KB method is
-    never JIT-compiled by HotSpot (DontCompileHugeMethods) and runs in
-    the bytecode interpreter (and 8 such trees in one projection, as
-    :func:`lsh_bucket`, exceed janino's 64 KB method limit). The
-    per-vector folds of :func:`embedding_near_dups` run in
-    :func:`_bucket_norm_kernel`, in this fold's IEEE order."""
+    The ANN paths run this fold per (query, candidate) pair. An
+    unrolled ``a[0]*b[0] + ... + a[63]*b[63]`` was measured slower (2M
+    cached pairs: 23 s against 4.4 s): its >8 KB method is never
+    JIT-compiled by HotSpot (DontCompileHugeMethods) and runs in the
+    bytecode interpreter (and 8 such trees in one projection, as
+    :func:`lsh_bucket`, exceed janino's 64 KB method limit).
+    :func:`embedding_near_dups` computes the same folds in numpy, in
+    this fold's IEEE order: per vector in :func:`_bucket_norm_kernel`,
+    per pair in :func:`_cosine_kernel`."""
     return (f"aggregate(zip_with({_ident(a)}, {_ident(b)}, "
             "(x, y) -> cast(x as double) * cast(y as double)), "
             "cast(0.0 as double), (acc, v) -> acc + v)")
@@ -96,7 +99,8 @@ def ann_topk_bruteforce(df: DataFrame, queries: DataFrame, k: int = 5,
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .withColumn(
             "sim",
-            F.expr(_dot_sql("q_vec", "c_vec") + " / (q_nrm * c_nrm)"))
+            F.expr(f"try_divide({_dot_sql('q_vec', 'c_vec')}, "
+                   "q_nrm * c_nrm)"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id"))
@@ -170,8 +174,8 @@ def ann_topk_ivf(df: DataFrame, queries: DataFrame, k: int = 5,
                       (assigned["cell"] == q_cells["cell"])
                       & (F.col("vid") != F.col("query_id")))
         .withColumn("sim", F.expr(
-            f"{_dot_sql('q_vec', 'vec')} / "
-            f"({_norm_sql('q_vec')} * {_norm_sql('vec')})"))
+            f"try_divide({_dot_sql('q_vec', 'vec')}, "
+            f"{_norm_sql('q_vec')} * {_norm_sql('vec')})"))
         .select("query_id", F.col("vid").alias("neighbor_id"), "sim")
         .distinct()
     )
@@ -263,6 +267,23 @@ def _corpus_bucket(df: DataFrame, vec_col: str, dim: int,
     return lsh_bucket(vec_col, dim, n_planes)
 
 
+def _list_values(col) -> tuple:
+    """(values, offsets, lengths, valid) of a list<float|double> Arrow
+    array, possibly a slice: row i is ``values[off[i]:off[i] +
+    lens[i]]``, and it is valid when neither it nor any of its elements
+    is NULL. The values keep the element type; a caller casts what it
+    gathers to float64, as SQL's ``cast(x as double)``."""
+    off = col.offsets.to_numpy()
+    vals = col.values
+    x = vals.to_numpy(zero_copy_only=False)
+    ok = col.is_valid().to_numpy(zero_copy_only=False)
+    if vals.null_count:
+        nulls = np.concatenate(
+            [[0], np.cumsum(vals.is_null().to_numpy(zero_copy_only=False))])
+        ok &= nulls[off[1:]] == nulls[off[:-1]]
+    return x, off, np.diff(off), ok
+
+
 def _bucket_norm_kernel(dim: int, n_planes: int, bucket: bool,
                         batch) -> list:
     """A (vid, vec[, bucket]) batch's columns, then (if ``bucket``) the
@@ -282,20 +303,11 @@ def _bucket_norm_kernel(dim: int, n_planes: int, bucket: bool,
       element), whose dot products are NULL anyway."""
     import pyarrow as pa
 
-    col = batch.column(1)
-    off = col.offsets.to_numpy()
-    lens = np.diff(off)
-    vals = col.values
-    x = vals.to_numpy(zero_copy_only=False).astype(np.float64)
-    ok = col.is_valid().to_numpy(zero_copy_only=False)
-    if vals.null_count:
-        nulls = np.concatenate(
-            [[0], np.cumsum(vals.is_null().to_numpy(zero_copy_only=False))])
-        ok &= nulls[off[1:]] == nulls[off[:-1]]
+    x, off, lens, ok = _list_values(batch.column(1))
     out = list(batch.columns)
     if bucket:
         rows = np.flatnonzero(ok & (lens == dim))
-        cells = x[off[rows, None] + np.arange(dim)]
+        cells = x[off[rows, None] + np.arange(dim)].astype(np.float64)
         w = np.array([[_plane_coeff(p, d) for d in range(dim)]
                       for p in range(n_planes)], np.float64).reshape(
                           n_planes, dim)
@@ -309,7 +321,7 @@ def _bucket_norm_kernel(dim: int, n_planes: int, bucket: bool,
     acc = np.zeros(len(lens))
     for d in range(int(lens.max(initial=0))):
         rows = np.flatnonzero(lens > d)
-        xd = x[off[rows] + d]
+        xd = x[off[rows] + d].astype(np.float64)
         acc[rows] = acc[rows] + xd * xd
     out.append(pa.array(np.where(ok, np.sqrt(acc), 0.0)))
     return out
@@ -405,15 +417,61 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
     # and its norm: they read the same columns of the one exchange
     # (column pruning would otherwise split it in two), and the verify
     # needs no join back to base.
-    sim = F.expr(_dot_sql("va", "vb") + " / (na * nb)")
-    return (
+    return _verified(
         probes.join(matches, (F.col("probe") == F.col("bucket"))
-                    & (F.col("vec_a") < F.col("vec_b")))
-        .withColumn("sim", sim)
-        .filter(F.col("sim") >= threshold)
-        .select("vec_a", "vec_b",
-                F.floor(F.col("sim") * 1e6).cast("long").alias("sim_e6"))
-    )
+                    & (F.col("vec_a") < F.col("vec_b"))),
+        threshold)
+
+
+def _verified(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(vec_a, vec_b, sim_e6) of the candidate pairs whose cosine is at
+    least ``threshold``, from :func:`_cosine_kernel`."""
+    from ..pipeline import per_batch
+
+    pairs = pairs.select("vec_a", "va", "na", "vec_b", "vb", "nb")
+    schema = StructType([pairs.schema["vec_a"], pairs.schema["vec_b"],
+                         StructField("sim_e6", LongType())])
+    return per_batch(pairs, functools.partial(_cosine_kernel, threshold),
+                     schema)
+
+
+def _cosine_kernel(threshold: float, batch) -> list:
+    """(vec_a, va, na, vec_b, vb, nb) batch of candidate pairs ->
+    (vec_a, vec_b, sim_e6) of the pairs whose cosine
+    ``dot(va, vb) / (na * nb)`` is ``>= threshold``, with ``sim_e6 =
+    floor(sim * 1e6)``.
+
+    The dot product is :func:`_dot_sql`'s left fold in its IEEE order,
+    one position at a time and vectorised across pairs, as
+    :func:`_bucket_norm_kernel` computes the norms. A pair whose fold
+    is NULL in SQL (a NULL vector or element, or two different
+    lengths, which ``zip_with`` pads with NULL) or whose denominator is
+    zero (a zero vector; SQL's ``try_divide`` gives NULL) is dropped. A
+    NaN similarity is kept, with ``sim_e6`` 0: Spark orders NaN above
+    every threshold and casts its floor to 0."""
+    import pyarrow as pa
+
+    xa, offa, la, oka = _list_values(batch.column(1))
+    xb, offb, lb, okb = _list_values(batch.column(4))
+    denom = (batch.column(2).to_numpy(zero_copy_only=False)
+             * batch.column(5).to_numpy(zero_copy_only=False))
+    rows = np.flatnonzero(oka & okb & (la == lb) & (denom != 0))
+    lens = la[rows]
+    dot = np.zeros(len(rows))
+    with np.errstate(invalid="ignore"):
+        for d in range(int(lens.max(initial=0))):
+            live = np.flatnonzero(lens > d)
+            r = rows[live]
+            dot[live] = dot[live] + (xa[offa[r] + d].astype(np.float64)
+                                     * xb[offb[r] + d])
+        sim = dot / denom[rows]
+    hit = (sim >= threshold) | np.isnan(sim)
+    rows, sim = rows[hit], sim[hit]
+    # a non-zero denominator keeps |sim| near 1 or NaN, so the floor
+    # fits a long
+    e6 = np.where(np.isnan(sim), 0.0, np.floor(sim * 1e6)).astype(np.int64)
+    return [batch.column(0).take(rows), batch.column(3).take(rows),
+            pa.array(e6)]
 
 
 def ann_topk_lsh(df: DataFrame, queries: DataFrame, k: int = 5,
@@ -458,7 +516,8 @@ def ann_topk_lsh(df: DataFrame, queries: DataFrame, k: int = 5,
                & (F.col("neighbor_id") != F.col("query_id")))
         .withColumn(
             "sim",
-            F.expr(_dot_sql("q_vec", "c_vec") + " / (q_nrm * c_nrm)"))
+            F.expr(f"try_divide({_dot_sql('q_vec', 'c_vec')}, "
+                   "q_nrm * c_nrm)"))
         .select("query_id", "neighbor_id", "sim")
     )
     w = Window.partitionBy("query_id").orderBy(

@@ -5,6 +5,8 @@ import gc
 import importlib
 import os
 import sys
+import zipfile
+import zipimport
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -261,9 +263,86 @@ def test_daemon_import_starts_no_manager(monkeypatch):
                         lambda: started.append(True))
     monkeypatch.delitem(sys.modules, "scribe_js_spark.daemon", raising=False)
     frozen = gc.get_freeze_count()
+    invalidate = zipimport.zipimporter.invalidate_caches
     importlib.import_module("scribe_js_spark.daemon")
     assert started == []
     assert gc.get_freeze_count() == frozen
+    assert zipimport.zipimporter.invalidate_caches is invalidate
+
+
+def test_worker_tasks_reread_no_unchanged_zip(spark):
+    # Each task's set-up calls importlib.invalidate_caches(); the
+    # daemon's zipimporter re-reads an archive only when it changed.
+    # The probe counts zip directory reads in its worker from the
+    # worker's first probe on, so each read counted was made by the
+    # set-up of a later task.
+    def count_reads(batches):
+        import os
+        import zipimport
+
+        import pyarrow as pa
+
+        if not hasattr(zipimport, "_reads_seen"):
+            zipimport._reads_seen = []
+            read = zipimport._read_directory
+
+            def counted(path):
+                zipimport._reads_seen.append(path)
+                return read(path)
+
+            zipimport._read_directory = counted
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {"pid": [os.getpid()], "reads": [len(zipimport._reads_seen)]})
+
+    rows = [spark.range(1, numPartitions=1)
+            .mapInArrow(count_reads, "pid long, reads long").collect()[0]
+            for _ in range(10)]
+    pids = [r.pid for r in rows]
+    assert max(pids.count(p) for p in pids) > 1, pids
+    assert [r.reads for r in rows] == [0] * 10
+
+
+def test_worker_rereads_a_rewritten_zip(spark, tmp_path):
+    # A zip on the workers' path (addPyFile) that is rewritten between
+    # tasks is read again, so a module added to it imports.
+    from pyspark import SparkFiles
+
+    def write_zip(path, modules):
+        with zipfile.ZipFile(path, "w") as z:
+            for name in modules:
+                z.writestr(f"{name}.py", f"NAME = {name!r}\n")
+
+    src = tmp_path / "zip_reread_probe.zip"
+    write_zip(src, ["zip_reread_old"])
+    spark.sparkContext.addPyFile(str(src))
+
+    def probe(module):
+        def fn(batches):
+            import os
+
+            import pyarrow as pa
+
+            mod = importlib.import_module(module)
+            for _ in batches:
+                pass
+            yield pa.RecordBatch.from_pydict({"pid": [os.getpid()],
+                                              "name": [mod.NAME]})
+        return fn
+
+    def run(module):
+        return (spark.range(8, numPartitions=8)
+                .mapInArrow(probe(module), "pid long, name string").collect())
+
+    before = run("zip_reread_old")
+    assert {r.name for r in before} == {"zip_reread_old"}
+    # the copy the workers put on sys.path
+    write_zip(os.path.join(SparkFiles.getRootDirectory(), src.name),
+              ["zip_reread_old", "zip_reread_new"])
+    after = run("zip_reread_new")
+    assert {r.name for r in after} == {"zip_reread_new"}
+    assert {r.pid for r in before} & {r.pid for r in after}
 
 
 _KV = StructType([StructField("k", StringType()),

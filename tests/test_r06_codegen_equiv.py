@@ -1,13 +1,16 @@
 """Equivalence of the optimized formulations with the ones they
 replaced, kept here as references: the round-5 higher-order-function
-forms, and the round-6 SQL signatures (explode + hash-aggregate
-minima/popcounts) that the per-batch numpy kernels replaced. The
-bucket/norm kernel of embedding_near_dups is held to the package's
-SQL folds (lsh_bucket, _norm_sql), which the ANN paths still use.
-Each must be bit-identical, including the degenerate rows where the
-NULL, tokenisation and NaN semantics are subtle: NULL, empty and
-whitespace-only text, Java-only separators, off-length, NULL-element
-and NaN vectors."""
+forms, the round-6 SQL signatures (explode + hash-aggregate
+minima/popcounts) that the per-batch numpy kernels replaced, and the
+SQL that followed the signatures until the kernels took it over too:
+the band md5 and block shift arrays with their ``posexplode``, the
+``array_intersect`` Jaccard verify and the ``_dot_sql`` cosine
+verify. The bucket/norm kernel of embedding_near_dups is held to the
+package's SQL folds (lsh_bucket, _norm_sql), which the ANN paths still
+use. Each must be bit-identical, including the degenerate rows where
+the NULL, tokenisation and NaN semantics are subtle: NULL, empty and
+whitespace-only text, Java-only separators, off-length, NULL-element,
+NaN, infinite and zero vectors."""
 
 from __future__ import annotations
 
@@ -219,6 +222,98 @@ def test_signature_kernels_match_sql_on_edge_texts(spark):
         assert any(r[1] is not None for r in got)
 
 
+def _ref_band_rows(df, num_hashes, bands, shingle_n):
+    """The replaced band buckets: one SQL array of ``bands``
+    ``md5(concat_ws('_', CAST(mh AS STRING), ...))`` over the signature
+    row, and its ``posexplode``."""
+    r = num_hashes // bands
+    sig = _ref_minhash_signatures(df, num_hashes=num_hashes,
+                                  shingle_n=shingle_n)
+    buckets = F.expr("array(" + ", ".join(
+        "md5(concat_ws('_', " + ", ".join(
+            f"CAST(mh_{band * r + j} AS STRING)" for j in range(r)) + "))"
+        for band in range(bands)) + ")")
+    return sig.select("doc_id", F.posexplode(buckets).alias("band", "bucket"))
+
+
+def _ref_block_rows(df):
+    """The replaced simhash blocks: an array of four 15-bit
+    shift-and-mask values of the signature, and its ``posexplode``."""
+    from scribe_js_spark.textops.dedup import SIMHASH_BLOCKS
+
+    blk_vals = F.array(*[
+        F.shiftrightunsigned(F.col("simhash"), blk * 15)
+        .bitwiseAND(F.lit(0x7FFF)).cast("long")
+        for blk in range(SIMHASH_BLOCKS)])
+    return _ref_simhash(df).select(
+        "doc_id", "simhash", F.posexplode(blk_vals).alias("blk", "blk_val"))
+
+
+def test_band_and_block_kernels_match_posexplode(spark):
+    """The band and block rows of the signature kernels equal the SQL
+    arrays they replaced, row for row, on the edge texts: a document
+    with no shingle has bucket md5('') in every band, a NULL text
+    signature 0 in every block."""
+    from scribe_js_spark.textops.dedup import _band_rows, _block_rows
+
+    docs = _edge_texts(spark)
+    for num_hashes, bands, shingle_n in ((32, 8, 3), (8, 4, 1), (12, 5, 2)):
+        got = _rows(_band_rows(docs, "text", num_hashes, bands, shingle_n))
+        assert got == _rows(_ref_band_rows(
+            docs, num_hashes, bands, shingle_n)), (num_hashes, bands)
+        assert len(got) == bands * docs.count()
+    got = _rows(_block_rows(docs, "text"))
+    assert got == _rows(_ref_block_rows(docs))
+    assert len({r[3] for r in got}) > 8
+
+
+def _ref_jaccard_for_pairs(df, candidates, threshold, ngram):
+    """The replaced verify: the candidates joined twice to the
+    token_sets (or shingles) arrays, then ``array_intersect`` sizes and
+    the threshold in SQL."""
+    from scribe_js_spark.textops.dedup import shingles, token_sets
+
+    ts = (token_sets(df) if ngram is None
+          else shingles(df, "text", ngram).withColumnRenamed(
+              "shingles", "toks"))
+    a = ts.select(F.col("doc_id").alias("doc_a"),
+                  F.col("toks").alias("_toks_a"))
+    b = ts.select(F.col("doc_id").alias("doc_b"),
+                  F.col("toks").alias("_toks_b"))
+    inter = F.size(F.array_intersect("_toks_a", "_toks_b")).cast("long")
+    return (
+        candidates.join(a, "doc_a").join(b, "doc_b")
+        .withColumn("n_inter", inter)
+        .withColumn("n_union", (F.size("_toks_a") + F.size("_toks_b")
+                                - F.col("n_inter")).cast("long"))
+        .filter(F.col("n_inter") >= F.lit(threshold) * F.col("n_union"))
+        .select("doc_a", "doc_b", "n_inter", "n_union"))
+
+
+def test_jaccard_kernel_matches_array_intersect(spark):
+    """jaccard_for_pairs equals the array_intersect verify on every
+    pair of the edge texts, over token sets and 1-, 2- and 3-gram
+    shingles: a NULL text's token set is NULL and drops its pairs, its
+    shingle set is empty, and two empty sets pass with 0 >= 0."""
+    from scribe_js_spark.textops.dedup import jaccard_for_pairs
+
+    docs = _edge_texts(spark)
+    ids = docs.select("doc_id")
+    cands = (ids.alias("a").join(ids.alias("b"),
+                                 F.col("a.doc_id") < F.col("b.doc_id"))
+             .select(F.col("a.doc_id").alias("doc_a"),
+                     F.col("b.doc_id").alias("doc_b")))
+    for ngram in (None, 1, 2, 3):
+        for threshold in (0.0, 0.5):
+            got = _rows(jaccard_for_pairs(docs, cands, threshold=threshold,
+                                          ngram=ngram))
+            assert got == _rows(_ref_jaccard_for_pairs(
+                docs, cands, threshold, ngram)), (ngram, threshold)
+            # doc 2 and doc 100 have NULL text
+            assert ((2, 100, 0, 0) in got) == (ngram is not None)
+            assert any(100 in r[:2] for r in got) == (ngram is not None)
+
+
 def test_lang_id_matches_hof(spark):
     from scribe_js_spark.textops.quality import lang_id
 
@@ -339,6 +434,44 @@ def test_bucket_norm_kernel_matches_sql_on_edge_vectors(spark):
     assert stored.columns == ["vid", "vec", "bucket", "nrm"]
     assert repr(_rows(stored.select("vid", "nrm"))) \
         == repr(_rows(df.select("vec_id", norm)))
+
+
+def test_cosine_kernel_matches_dot_sql_on_edge_vectors(spark):
+    """The verify kernel of embedding_near_dups equals the ``_dot_sql``
+    verify it replaced, over every pair of the edge vectors and some
+    near copies: a NaN similarity is kept with sim_e6 0; a NULL or
+    ragged pair is dropped, as its NULL fold is; a zero vector's pair is
+    dropped, as ``try_divide``'s NULL is (the plain ``/`` raises
+    DIVIDE_BY_ZERO under ANSI)."""
+    import random
+
+    from scribe_js_spark.textops.similarity import (
+        _corpus, _dot_sql, _verified)
+
+    rng = random.Random(5)
+    rows = [(i, v) for i, v in enumerate(EDGE_VECS)]
+    for i in range(30):
+        v = [rng.uniform(-1, 1) for _ in range(8)]
+        rows += [(100 + i, v), (200 + i, [x + rng.uniform(-0.1, 0.1)
+                                          for x in v])]
+    base = _corpus(_vecs(spark, rows), "vec_id", "embedding", 8, 4, None)
+    a = base.select(F.col("vid").alias("vec_a"), F.col("vec").alias("va"),
+                    F.col("nrm").alias("na"))
+    b = base.select(F.col("vid").alias("vec_b"), F.col("vec").alias("vb"),
+                    F.col("nrm").alias("nb"))
+    pairs = a.join(b, F.col("vec_a") < F.col("vec_b"))
+    sim = F.expr(f"try_divide({_dot_sql('va', 'vb')}, na * nb)")
+    for threshold in (0.9, -1.0):
+        got = _rows(_verified(pairs, threshold))
+        want = _rows(pairs.withColumn("sim", sim)
+                     .filter(F.col("sim") >= threshold)
+                     .select("vec_a", "vec_b", F.floor(F.col("sim") * 1e6)
+                             .cast("long").alias("sim_e6")))
+        assert got == want, threshold
+        assert any(r[:2] == (0, 2) and r[2] == 0 for r in got)
+        assert not {(0, 3), (3, 4), (4, 5)} & {r[:2] for r in got}
+        assert all(14 not in r[:2] for r in got)
+        assert len(got) >= 30
 
 
 def test_bucket_norm_kernel_reads_sliced_batches():
@@ -655,3 +788,43 @@ def test_ann_topk_lsh_rows_unique_without_distinct(spark):
     got = ann_topk_lsh(df, queries, k=50, dim=dim, n_planes=4).collect()
     keyed = [(r["query_id"], r["neighbor_id"]) for r in got]
     assert len(keyed) == len(set(keyed)), "duplicate (query, neighbor)"
+
+
+def _frame_rows(pdf):
+    """Order-insensitive rows of a pandas frame, NULL (NaN) as None."""
+    import pandas as pd
+
+    cols = sorted(pdf.columns)
+    rows = [tuple(None if pd.isna(v) else v for v in row)
+            for row in pdf[cols].itertuples(index=False)]
+    return sorted(rows, key=lambda r: [(v is None, v) for v in r])
+
+
+def test_zero_vectors_match_oracle(spark, tmp_path):
+    """A zero vector among the queries and the corpus: its cosine is
+    NULL (DuckDB's 0/0, Spark's try_divide), never DIVIDE_BY_ZERO
+    under ANSI. embedding_near_dups and the three ANN strategies of
+    the ann_topk query give the rows of their oracle_sql() queries."""
+    import duckdb
+    import numpy as np
+    import pandas as pd
+
+    import __spark_entry__ as entry
+
+    rng = np.random.default_rng(7)
+    v = rng.standard_normal((200, 64)).astype(np.float32)
+    v[100:140] = v[:40] + 0.3 * rng.standard_normal((40, 64))
+    v[[2, 7, 105, 150]] = 0.0
+    path = tmp_path / "embeddings.parquet"
+    pd.DataFrame({"vec_id": np.arange(200, dtype=np.int64),
+                  "embedding": list(v)}).to_parquet(path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{path}')")
+    sql, queries = entry.oracle_sql(), entry.queries()
+    for name in ("embedding_near_dups", "ann_topk"):
+        got = _frame_rows(queries[name](spark, str(tmp_path)).toPandas())
+        assert got == _frame_rows(con.sql(sql[name]).df()), name
+        assert got
+    # columns sorted: method, neighbor_id, query_id, rank, sim_e6
+    assert any(r[2] == 2 and r[4] is None for r in got)

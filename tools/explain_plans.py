@@ -116,13 +116,13 @@ def main():
     summarize(
         "minhash_lsh_pairs", minhash_lsh_pairs(docs),
         "Banded signatures then a bucket self-join; cost is bounded by "
-        "bucket collisions (output-bound), not n^2. The K minima "
-        "come from one numpy kernel per Arrow batch (MapInArrow: md5 "
-        "per distinct shingle, K int64 rehash columns, per-document "
-        "minimum), with no Exchange before it beyond the "
-        "scale-guarded spread_input. Band buckets come from one "
-        "posexplode over the mh_i columns, hash-partitioned once on "
-        "(band, bucket): the self-join's second side is a "
+        "bucket collisions (output-bound), not n^2. One numpy kernel "
+        "per Arrow batch (MapInArrow: md5 per distinct shingle, K "
+        "int64 rehash minima, then the md5 of each band) emits one "
+        "(doc_id, band, bucket) row per document and band, with no "
+        "Exchange before it beyond the scale-guarded spread_input and "
+        "no posexplode after it. The rows are hash-partitioned once "
+        "on (band, bucket): the self-join's second side is a "
         "ReusedExchange of the first, so the kernel runs once per "
         "query and nothing is cached.",
         out)
@@ -130,17 +130,20 @@ def main():
     summarize(
         "jaccard_verified (LSH candidates -> exact verify)",
         jaccard_for_pairs(docs, minhash_lsh_pairs(docs), threshold=0.5),
-        "The scale path for exact Jaccard: candidates join to the token "
-        "sets on doc ids only, so cost is O(|candidates|) — the corpus "
-        "cross-product never materializes.",
+        "The scale path for exact Jaccard: candidates join to the "
+        "document texts on doc ids only, so cost is O(|candidates|) — "
+        "the corpus cross-product never materializes. One kernel per "
+        "Arrow batch of joined pairs (MapInArrow) builds both token "
+        "sets, counts them and applies the threshold.",
         out)
     summarize(
         "simhash_candidates", simhash_candidates(docs),
         "4x15-bit block join (pigeonhole for Hamming<=3 over the 60-bit "
-        "md5-derived signature) then exact popcount filter. The "
-        "signature's 60 bit-votes come from one numpy kernel per "
-        "Arrow batch (MapInArrow), below the one block exchange both "
-        "join sides read; the uncapped path drops the candidate "
+        "md5-derived signature) then exact popcount filter. One numpy "
+        "kernel per Arrow batch (MapInArrow) votes the signature's 60 "
+        "bits and emits its four (blk, blk_val) rows, below the one "
+        "block exchange both join sides read; the uncapped path drops "
+        "the candidate "
         ".distinct() via the first-matching-block filter — a map-side "
         "bit test that provably emits each pair exactly once.",
         out)
@@ -153,7 +156,9 @@ def main():
         "group files deliver every row to one task); the remaining "
         "Exchange is the per-query top-k window partition. Round 6: "
         "each side's norm is computed once per vector below the join "
-        "(was: 3 fold evaluations per pair).",
+        "(was: 3 fold evaluations per pair). The cosine is a "
+        "try_divide: a zero vector's similarity is NULL, as in the "
+        "oracle.",
         out)
     from scribe_js_spark.textops.quality import token_counts
     summarize(
@@ -178,6 +183,8 @@ def main():
         "partitioning on the bucket, which both sides of the probe "
         "join read (the second is a ReusedExchange) and which carries "
         "each vector and its norm, so the verify joins nothing back; "
+        "the cosine verify is a second numpy kernel over the joined "
+        "pairs (MapInArrow), the dot product in the SQL fold's order; "
         "spread_input parallelizes the one-row-group scan. Round 4: "
         "max_bucket_size drops degenerate buckets (all-identical "
         "embeddings) from the join key — a window count over that "
